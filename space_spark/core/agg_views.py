@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 
 from space_spark.core import metadata as md
 from space_spark.core import schema as sc
+from space_spark.core.views import sync_marker_mutate
 from space_spark.errors import SpaceError, UserInputError
 
 _AGG_FNS = ("count", "sum", "avg", "min", "max")
@@ -286,35 +287,10 @@ class MaterializedAggregate:
         self._apply_snapshots(source, snaps, expected_prev=start)
         return [s.snapshot_id for s in snaps]
 
-    def _sync_mut(self, snapshot_id: int, expected_prev: int):
-        """Marker advance that REFUSES to run if another refresher got
-        there first — checked inside the commit critical section, so a
-        double-fold can never land (the commit aborts before any
-        metadata is written; the loser's shard files are uncommitted
-        orphans for vacuum)."""
-
-        def mutate(meta, _sid=snapshot_id, _prev=expected_prev):
-            cur = int(meta.logical_plan.get("source_snapshot_synced", 0))
-            if cur != _prev:
-                raise SpaceError(
-                    f"Concurrent refresh detected: expected this view "
-                    f"to be synced at source snapshot {_prev} but the "
-                    f"stored marker is {cur}; reload and refresh again"
-                )
-            meta.logical_plan["source_snapshot_synced"] = _sid
-
-        return mutate
-
     def _set_synced(self, snapshot_id: int, expected_prev: int) -> None:
         self.dataset.metadata = self.dataset.log.update_refs(
-            self._sync_mut(snapshot_id, expected_prev)
+            sync_marker_mutate(snapshot_id, expected_prev)
         )
-
-    def _apply_snapshot(self, source, snap, expected_prev: int) -> None:
-        """Single-snapshot fold — the batched fold over a one-element
-        batch (kept for callers/tests that fold one snapshot at a
-        time)."""
-        self._apply_snapshots(source, [snap], expected_prev)
 
     def _apply_snapshots(self, source, snaps, expected_prev: int) -> None:
         gb = self.view.group_by
@@ -552,7 +528,7 @@ class MaterializedAggregate:
         # ADVICE r13).
         self.dataset._apply_changes_unique(
             upserts, deletes,
-            commit_mutate=self._sync_mut(snap.snapshot_id,
-                                         expected_prev),
+            commit_mutate=sync_marker_mutate(snap.snapshot_id,
+                                             expected_prev),
             operation="MV REFRESH",
         )

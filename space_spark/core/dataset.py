@@ -1069,17 +1069,18 @@ class Dataset:
             if r[f"__nn_{i}"]
         ]
 
-    def _revalidate_after_conflict(self, rel_files, pinned_cv: int) -> int:
-        """Reverse-TOCTOU guard for row-adding commits: when a commit
-        conflicted and the reload shows the constraint set TIGHTENED
-        since this write validated (``constraints_version`` moved), re-
-        run the write-first check over the already-written (still
-        uncommitted) files against the LIVE set. Returns the live
-        version for the retry's pin. Called with the files parquet-
+    def _reload_revalidating(self, rel_files) -> None:
+        """Conflict step of row-adding commits (reverse-TOCTOU guard):
+        reload, and when the reload shows the constraint set TIGHTENED
+        since the failed attempt pinned it (``constraints_version``
+        moved), re-run the write-first check over the already-written
+        (still uncommitted) files against the LIVE set. The retry then
+        pins the live version. Called with the files parquet-
         materialized, so re-validation is one pushed-down scan — the
         input DataFrame is never re-evaluated."""
-        live_cv = self.metadata.constraints_version
-        if live_cv != pinned_cv and rel_files and (
+        pinned_cv = self.metadata.constraints_version
+        self.reload()
+        if self.metadata.constraints_version != pinned_cv and rel_files and (
                 self.metadata.constraints or self.metadata.not_null):
             violated = self._constraint_violation_names(
                 self._read_files(list(rel_files))
@@ -1091,7 +1092,6 @@ class Dataset:
                     "(the shard files are uncommitted orphans — vacuum "
                     "reclaims them)"
                 )
-        return live_cv
 
     def add_constraint(self, name: str, expr: Expr) -> "Dataset":
         """Add a CHECK constraint to an existing table. EXISTING rows
@@ -1118,9 +1118,7 @@ class Dataset:
         Validation reads with ``reference_read=True``: constraints are
         forbidden from referencing record (blob) fields, so the scan
         stays on index columns and never resolves blob values."""
-        enc = None
-        last_err: Optional[Exception] = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+        def attempt():
             self.reload()
             enc = self._encode_constraints(
                 {name: expr}, self.schema, self.record_fields
@@ -1162,12 +1160,10 @@ class Dataset:
                 # validated against the old set to re-validate.
                 meta.constraints_version += 1
 
-            try:
-                self.metadata = self.log.update_refs(mutate)
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-        raise last_err
+            self.metadata = self.log.update_refs(mutate)
+
+        md.retry_commit(attempt)
+        return self
 
     def drop_constraint(self, name: str) -> "Dataset":
         """Remove a CHECK constraint (metadata-only)."""
@@ -1189,8 +1185,7 @@ class Dataset:
         (same TOCTOU: an in-flight write validated against the old
         constraint set must force re-validation, not land NULLs after
         the constraint commits)."""
-        last_err: Optional[Exception] = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+        def attempt():
             self.reload()
             self._validate_not_null(
                 [column], self.schema, self.record_fields
@@ -1225,12 +1220,10 @@ class Dataset:
                 # add_constraint.
                 meta.constraints_version += 1
 
-            try:
-                self.metadata = self.log.update_refs(mutate)
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-        raise last_err
+            self.metadata = self.log.update_refs(mutate)
+
+        md.retry_commit(attempt)
+        return self
 
     def drop_not_null(self, column: str) -> "Dataset":
         """Remove a NOT NULL constraint (metadata-only)."""
@@ -1243,10 +1236,6 @@ class Dataset:
 
         self.metadata = self.log.update_refs(mutate)
         return self
-
-    # Concurrent appends retry the (cheap, metadata-only) commit this many
-    # times before surfacing the conflict.
-    APPEND_COMMIT_RETRIES = 5
 
     def append(
         self,
@@ -1273,15 +1262,7 @@ class Dataset:
         ``zorder_by``: Morton-interleave the named columns instead, so each
         file covers a compact hyper-rectangle and manifest pruning works
         for predicates on ANY of the columns (operators/zorder.py), not
-        just the lead one.
-
-        Appends commute: if another writer advanced the head between our
-        pin and commit, the already-written data files are still valid —
-        only the snapshot record needs rebuilding against the new parent.
-        So a conflicting append retries the METADATA commit (no data
-        rewrite) instead of aborting; delete/upsert instead re-derive
-        their affected-file probe against the new head before retrying,
-        since the new head may invalidate their reads."""
+        just the lead one."""
         df = self._align(df)
         if cluster_by is None and zorder_by is None:
             spec = self.metadata.cluster_spec
@@ -1328,54 +1309,31 @@ class Dataset:
                                    operation=operation)
 
     def _commit_append(self, manifest_rel, files, rows, nbytes, rec_rel,
-                       commit_mutate=None, retries=None,
+                       commit_mutate=None,
                        operation: str = "APPEND") -> "Dataset":
-        """Append-commit retry loop over already-written data files (the
-        files stay valid across a conflicting head advance — only the
-        snapshot record rebuilds against the new parent). ``retries=0``
-        lets a caller whose VALIDITY depends on the head (insert's clash
-        probe) surface the conflict and re-validate before re-committing
-        — a blind metadata retry is only sound for plain appends."""
-        last_err = None
-        if retries is None:
-            retries = self.APPEND_COMMIT_RETRIES
-        # Pin the constraint set these rows were validated against
-        # (_write_data_files ran under the same metadata load); a
-        # concurrent add_constraint/add_not_null bumps the version and
-        # commit_snapshot conflicts, sending us through re-validation.
-        cv = self.metadata.constraints_version
-        for _attempt in range(retries + 1):
-            pinned = self.current_snapshot_id
-            parent = self.metadata.snapshot(pinned)
-            rec_manifests = list(parent.record_manifest_files)
-            if rec_rel:
-                rec_manifests.append(rec_rel)
-            snap = md.Snapshot(
-                snapshot_id=-1,
-                parent_snapshot_id=pinned,
-                created_at="",
-                manifest_files=(parent.manifest_files + [manifest_rel]
-                                if rows > 0 else list(parent.manifest_files)),
-                num_rows=parent.num_rows + rows,
-                data_bytes=parent.data_bytes + nbytes,
-                added_files=files if rows > 0 else [],
-                record_manifest_files=rec_manifests,
-                delete_vector_files=list(parent.delete_vector_files),
-                operation=operation,
-            )
-            try:
-                self.metadata = self.log.commit_snapshot(
-                    pinned, self.branch, snap, mutate=commit_mutate,
-                    pinned_constraints_version=cv,
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-                cv = self._revalidate_after_conflict(
-                    files if rows > 0 else [], cv
-                )
-        raise last_err
+        """Commit already-written data files as an append snapshot."""
+        return md.retry_commit(
+            lambda: self._append_attempt(manifest_rel, files, rows, nbytes,
+                                         rec_rel, commit_mutate, operation),
+            lambda: self._reload_revalidating(files if rows > 0 else []),
+        )
+
+    def _append_attempt(self, manifest_rel, files, rows, nbytes, rec_rel,
+                        commit_mutate=None,
+                        operation: str = "APPEND") -> "Dataset":
+        # Pins the constraint set the rows were validated against: the
+        # loaded one (_write_data_files or _reload_revalidating ran
+        # under it).
+        pinned = self.current_snapshot_id
+        snap = md.append_snapshot(
+            self.metadata.snapshot(pinned), manifest_rel, files, rows,
+            nbytes, rec_rel, operation,
+        )
+        self.metadata = self.log.commit_snapshot(
+            pinned, self.branch, snap, mutate=commit_mutate,
+            pinned_constraints_version=self.metadata.constraints_version,
+        )
+        return self
 
     def _write_record_manifest_for(self, new_files: List[str]):
         """Record manifest for blob files referenced by freshly appended
@@ -1476,26 +1434,23 @@ class Dataset:
         if "dup" in verdicts:
             raise UserInputError("Input data has duplicate primary keys")
         rec_rel = self._write_record_manifest_for(files)
-        # The clash probe's validity is pinned to the head it read: a
-        # conflicting commit may have inserted one of OUR keys, so a
-        # conflict re-runs the probe against the new head before
-        # re-committing (a blind metadata retry here would let two
-        # concurrent inserts of the same key both land).
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             if "clash" in verdicts:
                 raise PrimaryKeyExistError(
                     "insert: input primary keys already exist (use upsert)"
                 )
-            try:
-                return self._commit_append(manifest_rel, files, rows,
-                                           nbytes, rec_rel, retries=0,
-                                           operation="INSERT")
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-                verdicts = {r["__kind"] for r in clash_branch().collect()}
-        raise last_err
+            return self._append_attempt(manifest_rel, files, rows, nbytes,
+                                        rec_rel, operation="INSERT")
+
+        def on_conflict():
+            # The clash verdict is only valid for the head it read: a
+            # conflicting commit may have inserted one of OUR keys.
+            nonlocal verdicts
+            self._reload_revalidating(files)
+            verdicts = {r["__kind"] for r in clash_branch().collect()}
+
+        return md.retry_commit(attempt, on_conflict)
 
     def _bounds_from_manifest(self, manifest_rel: str):
         """Per-PK min/max bounds aggregated from a just-written
@@ -1553,9 +1508,8 @@ class Dataset:
         self.reload()
         manifest_rel, files, rows, nbytes = self._write_data_files(df)
         rec_rel = self._write_record_manifest_for(files)
-        last_err = None
-        cv = self.metadata.constraints_version
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             pinned = self.current_snapshot_id
             parent = self.metadata.snapshot(pinned)
             deletes_rel = None
@@ -1616,19 +1570,16 @@ class Dataset:
                 record_manifest_files=[rec_rel] if rec_rel else [],
                 operation="OVERWRITE",
             )
-            try:
-                self.metadata = self.log.commit_snapshot(
-                    pinned, self.branch, snap,
-                    pinned_constraints_version=cv,
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-                cv = self._revalidate_after_conflict(
-                    files if rows > 0 else [], cv
-                )
-        raise last_err
+            self.metadata = self.log.commit_snapshot(
+                pinned, self.branch, snap,
+                pinned_constraints_version=self.metadata.constraints_version,
+            )
+            return self
+
+        return md.retry_commit(
+            attempt,
+            lambda: self._reload_revalidating(files if rows > 0 else []),
+        )
 
     def _write_all_rows_bitmaps(self, parent) -> Optional[str]:
         """Bitmap changelog for a full replacement: every surviving
@@ -1802,33 +1753,11 @@ class Dataset:
         if row["mx"] is not None and row["mx"] > 1:
             raise UserInputError("Input data has duplicate primary keys")
         n_keys = int(row["n"] or 0)
-        bounds = self._bounds_from_manifest(manifest_rel)
-        rec_rel = self._write_record_manifest_for(files)
-        last_err = None
-        cv = self.metadata.constraints_version
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
-            pinned = self.current_snapshot_id
-            affected, survivors, deletes_rel = self._matching_delete_parts(
-                new_keys, n_keys=n_keys, bounds=bounds
-            )
-            try:
-                self._commit_rewrite(
-                    pinned, affected, survivors, deletes_rel,
-                    append_manifest=manifest_rel, append_files=files,
-                    append_rows=rows, append_bytes=nbytes,
-                    append_record_manifest=rec_rel,
-                    pinned_constraints_version=cv,
-                    operation=operation,
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-                # Only the NEW rows need re-checking; survivors already
-                # existed when any concurrent add_constraint validated
-                # the table.
-                cv = self._revalidate_after_conflict(files, cv)
-        raise last_err
+        return self._apply_changes_retry(
+            new_keys, n_keys,
+            self._keys_range_expr(self._bounds_from_manifest(manifest_rel)),
+            manifest_rel, files, rows, nbytes, operation=operation,
+        )
 
     @staticmethod
     def _normalize_matched_clauses(when_matched, matched_condition,
@@ -2423,8 +2352,8 @@ class Dataset:
         1. A no-op when at most one sidecar is live. Runs automatically
         from MoR deletes once DELETE_VECTOR_FOLD_MAX sidecars accumulate;
         call it explicitly after bulk trickle-delete ingestion."""
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             self.reload()
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
@@ -2446,14 +2375,12 @@ class Dataset:
                 record_manifest_files=list(snapshot.record_manifest_files),
                 operation="COMPACT DELETE VECTORS",
             )
-            try:
-                self.metadata = self.log.commit_snapshot(
-                    snap_id, self.branch, snap
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-        raise last_err
+            self.metadata = self.log.commit_snapshot(
+                snap_id, self.branch, snap
+            )
+            return self
+
+        return md.retry_commit(attempt)
 
     def delete(self, filter_: Expr, rewrite: bool = True) -> "Dataset":
         """Delete rows matching ``filter_``.
@@ -2475,34 +2402,20 @@ class Dataset:
         if filter_ is None:
             raise UserInputError("delete requires a filter")
         self.reload()
+        # SQL DELETE semantics: only rows where the predicate is TRUE are
+        # deleted — NULL-predicate rows survive AND stay out of the
+        # change log, keeping survivors/deleted exactly complementary.
+        pred_true = F.coalesce(filter_.to_spark(), F.lit(False))
         if not rewrite:
-            return self._delete_mor(filter_.to_spark(), prune_expr=filter_)
-        return self._delete_predicate(filter_.to_spark(), prune_expr=filter_)
+            return self._delete_mor(pred_true, prune_expr=filter_)
+        return self._delete_predicate(pred_true, prune_expr=filter_)
 
-    def _delete_mor(self, pred, prune_expr: FilterType) -> "Dataset":
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+    def _delete_mor(self, pred_true, prune_expr: FilterType) -> "Dataset":
+        def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
-            candidates = mf.prune_files(
-                self.spark,
-                self._manifest_abs_paths(snapshot),
-                self._phys_expr(prune_expr),
-                self._stats_fields(),
-            )
-            if not candidates:
-                return self
-            # Mask EXISTING vectors so already-deleted rows are not
-            # re-logged (same single-job probe as the CoW path).
-            phys = self._apply_vectors(
-                self._read_files(candidates)
-                .withColumn("__file", F.input_file_name())
-                .withColumn("__pos", F.col("_metadata.row_index")),
-                snapshot,
-            )
-            pred_true = F.coalesce(pred, F.lit(False))
-            deletes_rel, affected = self._write_probe_deletes(
-                phys.where(pred_true)
+            deletes_rel, affected = self._probe_deletes(
+                snapshot, prune_expr, lambda phys: phys.where(pred_true)
             )
             if not affected:
                 return self
@@ -2552,15 +2465,12 @@ class Dataset:
                 record_manifest_files=list(snapshot.record_manifest_files),
                 operation="DELETE",
             )
-            try:
-                self.metadata = self.log.commit_snapshot(
-                    snap_id, self.branch, snap
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-        raise last_err
+            self.metadata = self.log.commit_snapshot(
+                snap_id, self.branch, snap
+            )
+            return self
+
+        return md.retry_commit(attempt, self.reload)
 
     # A key set under this many rows is broadcast to the probe side; above
     # it, a shuffle-hash join (a bulk upsert's key set can exceed executor
@@ -2574,10 +2484,10 @@ class Dataset:
             return keys_df.hint("broadcast")
         return keys_df.hint("shuffle_hash")
 
-    _DERIVE_PRUNE = object()  # sentinel: build prune_expr from bounds
+    _DERIVE_PRUNE = object()  # sentinel: build prune_expr from the keys
 
     def _matching_delete_parts(self, keys_df: DataFrame, n_keys=None,
-                               bounds=None, prune_expr=_DERIVE_PRUNE):
+                               prune_expr=_DERIVE_PRUNE):
         """CoW-delete inputs for rows whose PKs appear in ``keys_df``:
         (affected rel files, survivors df, written deletes relpath) —
         ([], None, None) when nothing matches. Computes and writes the
@@ -2586,24 +2496,43 @@ class Dataset:
         The probe is manifest-pruned by the keys' min/max range (same
         derivation as ``read_by_keys``) — a 10-row upsert into a huge
         clustered table touches the few overlapping files, never the
-        whole table. ``prune_expr`` overrides the bounds-derived range
-        (apply_changes' unique-adds path passes a union-of-boxes
-        expression; an explicit None means no pruning)."""
+        whole table. ``prune_expr`` overrides the derived range
+        (upsert passes its written files' footer bounds, apply_changes'
+        unique-adds path a union-of-boxes expression; an explicit None
+        means no pruning)."""
         pks = self.primary_keys
         if prune_expr is Dataset._DERIVE_PRUNE:
-            if bounds is None or n_keys is None:
-                row = keys_df.agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    *[F.min(k).alias(f"mn_{k}") for k in pks],
-                    *[F.max(k).alias(f"mx_{k}") for k in pks],
-                ).collect()[0]
-                bounds = row
-                if n_keys is None:
-                    n_keys = int(row["__n"] or 0)
-            prune_expr = self._keys_range_expr(bounds)
+            row = keys_df.agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[F.min(k).alias(f"mn_{k}") for k in pks],
+                *[F.max(k).alias(f"mx_{k}") for k in pks],
+            ).collect()[0]
+            if n_keys is None:
+                n_keys = int(row["__n"] or 0)
+            prune_expr = self._keys_range_expr(row)
         if n_keys == 0:
             return [], None, None
         snapshot = self.metadata.snapshot(self.current_snapshot_id)
+        keys = self._keys_join_side(keys_df, n_keys)
+        deletes_rel, affected = self._probe_deletes(
+            snapshot, prune_expr,
+            lambda phys: phys.join(keys, on=pks, how="left_semi"),
+        )
+        if not affected:
+            return [], None, None
+        survivors = self._apply_vectors(
+            self._read_files(affected), snapshot
+        ).join(keys, on=pks, how="left_anti")
+        return affected, survivors, deletes_rel
+
+    def _probe_deletes(self, snapshot, prune_expr: FilterType, match):
+        """The delete probe shared by every CoW and MoR delete path: the
+        files whose manifest stats pass ``prune_expr`` are read with
+        their existing delete vectors applied (already-deleted rows are
+        never re-logged), ``match(rows)`` selects the rows to delete,
+        and ``_write_probe_deletes`` lands them in one job. Returns
+        (deletes relpath, affected rel files) — (None, []) when nothing
+        matches."""
         files = mf.prune_files(
             self.spark,
             self._manifest_abs_paths(snapshot),
@@ -2611,7 +2540,7 @@ class Dataset:
             self._stats_fields(),
         )
         if not files:
-            return [], None, None
+            return None, []
         # Provenance columns BEFORE the vector mask: input_file_name()
         # must bind to the single parquet source, not the mask join.
         phys = self._apply_vectors(
@@ -2620,15 +2549,7 @@ class Dataset:
             .withColumn("__pos", F.col("_metadata.row_index")),
             snapshot,
         )
-        keys = self._keys_join_side(keys_df, n_keys)
-        matches = phys.join(keys, on=pks, how="left_semi")
-        deletes_rel, affected = self._write_probe_deletes(matches)
-        if not affected:
-            return [], None, None
-        survivors = self._apply_vectors(
-            self._read_files(affected), snapshot
-        ).join(keys, on=pks, how="left_anti")
-        return affected, survivors, deletes_rel
+        return self._write_probe_deletes(match(phys))
 
     def _write_probe_deletes(self, matches: DataFrame):
         """ONE distributed job materializes the probe: matched rows'
@@ -2838,29 +2759,29 @@ class Dataset:
                              operation: str = "APPLY CHANGES"
                              ) -> "Dataset":
         rec_rel = self._write_record_manifest_for(files)
-        last_err = None
-        cv = self.metadata.constraints_version
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             pinned = self.current_snapshot_id
             affected, survivors, deletes_rel = self._matching_delete_parts(
                 keys_df, n_keys=n_keys, prune_expr=prune_expr
             )
-            try:
-                self._commit_rewrite(
-                    pinned, affected, survivors, deletes_rel,
-                    append_manifest=manifest_rel, append_files=files,
-                    append_rows=rows, append_bytes=nbytes,
-                    append_record_manifest=rec_rel,
-                    pinned_constraints_version=cv,
-                    mutate=commit_mutate,
-                    operation=operation,
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-                cv = self._revalidate_after_conflict(files, cv)
-        raise last_err
+            self._commit_rewrite(
+                pinned, affected, survivors, deletes_rel,
+                append_manifest=manifest_rel, append_files=files,
+                append_rows=rows, append_bytes=nbytes,
+                append_record_manifest=rec_rel,
+                pinned_constraints_version=(
+                    self.metadata.constraints_version),
+                mutate=commit_mutate,
+                operation=operation,
+            )
+            return self
+
+        # Only the NEW rows need re-checking; survivors already existed
+        # when any concurrent add_constraint validated the table.
+        return md.retry_commit(
+            attempt, lambda: self._reload_revalidating(files)
+        )
 
     def delete_by_keys(self, keys: DataFrame) -> "Dataset":
         """Delete rows whose primary keys appear in ``keys`` (a DataFrame
@@ -2878,63 +2799,39 @@ class Dataset:
     def _delete_matching(self, keys_df: DataFrame, commit_mutate=None) -> bool:
         """Delete rows whose PKs appear in keys_df (MV refresh's delete
         half). Returns whether a snapshot was committed."""
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             snap_id = self.current_snapshot_id
             affected, survivors, deletes_rel = self._matching_delete_parts(
                 keys_df
             )
             if not affected:
                 return False
-            try:
-                self._commit_rewrite(snap_id, affected, survivors,
-                                     deletes_rel, mutate=commit_mutate,
-                                     operation="DELETE")
-                return True
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-        raise last_err
+            self._commit_rewrite(snap_id, affected, survivors,
+                                 deletes_rel, mutate=commit_mutate,
+                                 operation="DELETE")
+            return True
 
-    def _delete_predicate(self, pred, prune_expr: FilterType) -> "Dataset":
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+        return md.retry_commit(attempt, self.reload)
+
+    def _delete_predicate(self, pred_true,
+                          prune_expr: FilterType) -> "Dataset":
+        def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
-            candidates = mf.prune_files(
-                self.spark,
-                self._manifest_abs_paths(snapshot),
-                self._phys_expr(prune_expr),
-                self._stats_fields(),
-            )
-            if not candidates:
-                return self
-            phys = self._apply_vectors(
-                self._read_files(candidates)
-                .withColumn("__file", F.input_file_name())
-                .withColumn("__pos", F.col("_metadata.row_index")),
-                snapshot,
-            )
-            # SQL DELETE semantics: only rows where the predicate is TRUE
-            # are deleted — NULL-predicate rows survive AND stay out of the
-            # change log, keeping survivors/deleted exactly complementary.
-            pred_true = F.coalesce(pred, F.lit(False))
-            deletes_rel, affected = self._write_probe_deletes(
-                phys.where(pred_true)
+            deletes_rel, affected = self._probe_deletes(
+                snapshot, prune_expr, lambda phys: phys.where(pred_true)
             )
             if not affected:
                 return self
             survivors = self._apply_vectors(
                 self._read_files(affected), snapshot
             ).where(~pred_true)
-            try:
-                self._commit_rewrite(snap_id, affected, survivors,
-                                     deletes_rel, operation="DELETE")
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-        raise last_err
+            self._commit_rewrite(snap_id, affected, survivors,
+                                 deletes_rel, operation="DELETE")
+            return self
+
+        return md.retry_commit(attempt, self.reload)
 
     def _retire_vectors(self, parent, affected: List[str]):
         """Carry the parent's delete-vector list across a CoW rewrite of
@@ -3331,8 +3228,8 @@ class Dataset:
                 )
         self.reload()
         threshold = int(target_bytes * self.COMPACT_HEALTHY_RATIO)
-        last_err = None
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
             man_paths = self._manifest_abs_paths(snapshot)
@@ -3382,17 +3279,14 @@ class Dataset:
                 ).sortWithinPartitions(*cluster_by)
             else:
                 rewritten = rewritten.coalesce(int(n_out))
-            try:
-                # deletes_rel=None + no append: the snapshot carries ZERO
-                # changelog entries — diff() across it is empty by
-                # construction.
-                self._commit_rewrite(snap_id, affected, rewritten, None,
-                                     operation="COMPACT")
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-        raise last_err
+            # deletes_rel=None + no append: the snapshot carries ZERO
+            # changelog entries — diff() across it is empty by
+            # construction.
+            self._commit_rewrite(snap_id, affected, rewritten, None,
+                                 operation="COMPACT")
+            return self
+
+        return md.retry_commit(attempt, self.reload)
 
     def compact_records(
         self,
@@ -3432,10 +3326,8 @@ class Dataset:
             raise UserInputError("target_bytes must be positive")
         self.reload()
         threshold = int(target_bytes * self.COMPACT_HEALTHY_RATIO)
-        last_err = None
-        mapping: Dict[str, tuple] = {}
-        new_blobs: List[tuple] = []  # (new_rel, field, rows) for manifest
-        for _attempt in range(self.APPEND_COMMIT_RETRIES + 1):
+
+        def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
             # (1) small, internally-stored blob candidates per field.
@@ -3491,7 +3383,8 @@ class Dataset:
                 by_field.setdefault(field_of[r], []).append(r)
             import uuid as _uuid
 
-            mapping, new_blobs = {}, []
+            mapping: Dict[str, tuple] = {}
+            new_blobs: List[tuple] = []  # (new_rel, field, rows)
             for fld, rels in sorted(by_field.items()):
                 if len(rels) < 2:
                     continue
@@ -3564,17 +3457,14 @@ class Dataset:
                 self.location, self.log.abs_path(rec_rel),
                 new_blobs,
             )
-            try:
-                self._commit_rewrite(
-                    snap_id, affected, survivors, None,
-                    append_record_manifest=rec_rel,
-                    operation="COMPACT RECORDS",
-                )
-                return self
-            except TransactionConflictError as e:
-                last_err = e
-                self.reload()
-        raise last_err
+            self._commit_rewrite(
+                snap_id, affected, survivors, None,
+                append_record_manifest=rec_rel,
+                operation="COMPACT RECORDS",
+            )
+            return self
+
+        return md.retry_commit(attempt, self.reload)
 
     def _write_compacted_blobs(
         self, mapping: Dict[str, tuple], new_blobs: List[tuple]

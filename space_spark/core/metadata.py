@@ -571,6 +571,64 @@ class MetadataLog:
             return meta
 
 
+# Conflicting attempts re-run this many times before the conflict
+# surfaces (six attempts in all).
+COMMIT_RETRIES = 5
+
+
+def retry_commit(attempt, on_conflict=None):
+    """The one optimistic-retry loop every writer commits through.
+
+    ``attempt()`` plans against the handle's loaded metadata and ends
+    in ``commit_snapshot`` or ``update_refs``; its return value is
+    returned. When it raises ``TransactionConflictError`` (the branch
+    head or the constraint set moved under it), ``on_conflict()``
+    brings the writer up to the new head and the attempt re-runs, up to
+    ``COMMIT_RETRIES`` times; the last conflict is then re-raised.
+
+    What a retry redoes depends on the writer: an append only rebuilds
+    its snapshot record (appends commute, the written files stay
+    valid); DML re-runs its probe against the new head, since that head
+    may hold rows it never saw; a row-adding write whose rows were
+    validated against an older constraint set re-validates them
+    (``on_conflict`` raises ``ConstraintViolationError`` if they now
+    fail). Writers that reload at the start of each attempt pass no
+    ``on_conflict``."""
+    for n in range(COMMIT_RETRIES + 1):
+        try:
+            return attempt()
+        except TransactionConflictError:
+            if n == COMMIT_RETRIES:
+                raise
+            if on_conflict is not None:
+                on_conflict()
+
+
+def append_snapshot(parent: Snapshot, manifest_rel: Optional[str],
+                    files: List[str], rows: int, nbytes: int,
+                    record_manifest: Optional[str] = None,
+                    operation: str = "APPEND") -> Snapshot:
+    """Child of ``parent`` that adds already-written data files (and
+    their manifest) to it; a zero-row append carries the parent's files
+    unchanged. Ids and timestamp are set by ``commit_snapshot``."""
+    rec_manifests = list(parent.record_manifest_files)
+    if record_manifest:
+        rec_manifests.append(record_manifest)
+    return Snapshot(
+        snapshot_id=-1,
+        parent_snapshot_id=parent.snapshot_id,
+        created_at="",
+        manifest_files=(parent.manifest_files + [manifest_rel]
+                        if rows > 0 else list(parent.manifest_files)),
+        num_rows=parent.num_rows + rows,
+        data_bytes=parent.data_bytes + nbytes,
+        added_files=list(files) if rows > 0 else [],
+        record_manifest_files=rec_manifests,
+        delete_vector_files=list(parent.delete_vector_files),
+        operation=operation,
+    )
+
+
 def initial_metadata(
     table_type: str,
     schema: T.StructType,

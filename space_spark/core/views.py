@@ -460,6 +460,27 @@ def _load_plan_node(spark, plan: dict, log: md.MetadataLog) -> _Node:
     raise SpaceError(f"Unknown plan op {op!r}")
 
 
+def sync_marker_mutate(snapshot_id: int, expected_prev: int):
+    """Metadata mutate advancing a materialized view's source-synced
+    marker to ``snapshot_id``. It REFUSES unless the stored marker still
+    equals ``expected_prev``: another refresher (or this handle, if
+    stale) got there first, and folding the same source snapshot twice
+    would duplicate rows. The check runs inside the commit critical
+    section, so the commit aborts before any metadata is written."""
+
+    def mutate(meta: md.StorageMetadata):
+        cur = int(meta.logical_plan.get("source_snapshot_synced", 0))
+        if cur != expected_prev:
+            raise SpaceError(
+                "Concurrent refresh detected: expected this view to be "
+                f"synced at source snapshot {expected_prev} but the "
+                f"stored marker is {cur}; reload and refresh again"
+            )
+        meta.logical_plan["source_snapshot_synced"] = snapshot_id
+
+    return mutate
+
+
 class MaterializedView:
     """A view with its own storage; ``refresh()`` incrementally syncs from
     the source's change feed (ray/runners.py:135-260)."""
@@ -535,24 +556,8 @@ class MaterializedView:
             # commit and a separate marker update would blind-re-append the
             # same source snapshot on restart, duplicating PK rows.
             # Replaying the steps BEFORE the marked commit is safe: a
-            # re-run delete matches nothing new. The mutate also REFUSES
-            # to advance if another refresher moved the marker since
-            # this loop read it (round-13 review: a stale handle would
-            # otherwise re-append already-synced snapshots) — checked
-            # inside the commit critical section, so the commit aborts
-            # before any metadata is written.
-            def sync_mut(meta, _sid=snap.snapshot_id, _prev=prev):
-                cur = int(
-                    meta.logical_plan.get("source_snapshot_synced", 0)
-                )
-                if cur != _prev:
-                    raise SpaceError(
-                        "Concurrent refresh detected: expected this "
-                        f"view to be synced at source snapshot {_prev} "
-                        f"but the stored marker is {cur}; reload and "
-                        "refresh again"
-                    )
-                meta.logical_plan["source_snapshot_synced"] = _sid
+            # re-run delete matches nothing new.
+            sync_mut = sync_marker_mutate(snap.snapshot_id, prev)
 
             marked = False
             # Deletes first, then adds (change_data.py:123-127).
@@ -587,19 +592,7 @@ class MaterializedView:
         return applied
 
     def _set_synced(self, source_snapshot_id: int,
-                    expected_prev: Optional[int] = None) -> None:
-        def mutate(meta: md.StorageMetadata):
-            if expected_prev is not None:
-                cur = int(
-                    meta.logical_plan.get("source_snapshot_synced", 0)
-                )
-                if cur != expected_prev:
-                    raise SpaceError(
-                        "Concurrent refresh detected: expected this "
-                        "view to be synced at source snapshot "
-                        f"{expected_prev} but the stored marker is "
-                        f"{cur}; reload and refresh again"
-                    )
-            meta.logical_plan["source_snapshot_synced"] = source_snapshot_id
-
-        self.dataset.metadata = self.dataset.log.update_refs(mutate)
+                    expected_prev: int) -> None:
+        self.dataset.metadata = self.dataset.log.update_refs(
+            sync_marker_mutate(source_snapshot_id, expected_prev)
+        )

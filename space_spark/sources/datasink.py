@@ -12,9 +12,8 @@ protocol:
 - ``write`` (executors): each task streams its Arrow batches into ONE
   parquet data file — the same distributed shard write ``Dataset.append``
   plans, without a driver round-trip.
-- ``commit`` (driver): footer stats -> one manifest -> one snapshot
-  commit, retried on conflict exactly like ``Dataset.append`` (appends
-  commute; only the metadata commit re-runs).
+- ``commit`` (driver): footer stats -> one manifest -> one append
+  snapshot commit through ``metadata.retry_commit``.
 - ``abort``: written shards are dropped; the table never referenced them.
 
 Instance lifecycle (dictated by Spark's Python data source workers): the
@@ -55,11 +54,8 @@ from space_spark.core import metadata as md
 from space_spark.core import schema as sc
 from space_spark.errors import (
     ConstraintViolationError,
-    TransactionConflictError,
     UserInputError,
 )
-
-COMMIT_RETRIES = 5
 
 
 @dataclass
@@ -296,8 +292,8 @@ def _commit_append(location: str, branch: str, rel_files: List[str],
                    operation: str = "APPEND"
                    ) -> None:
     """Driver side: manifest from shard footers, then one optimistic
-    snapshot commit with append's retry discipline (shard files stay
-    valid across a conflict; only the metadata commit re-runs)."""
+    append commit (``md.retry_commit``); a conflict re-validates the
+    shards without Spark if the constraint set moved."""
     log = md.MetadataLog(location)
     meta = log.read_metadata()
     ren = getattr(meta, "renames", {}) or {}
@@ -325,39 +321,27 @@ def _commit_append(location: str, branch: str, rel_files: List[str],
         if mutate is None:
             return  # empty batch write: nothing to commit
         nbytes = 0
-    last_err = None
-    for _ in range(COMMIT_RETRIES + 1):
+
+    def attempt():
         pinned = meta.resolve_version(None, branch)
-        parent = meta.snapshot(pinned)
-        snap = md.Snapshot(
-            snapshot_id=-1,
-            parent_snapshot_id=pinned,
-            created_at="",
-            manifest_files=(parent.manifest_files + [manifest_rel]
-                            if manifest_rel
-                            else list(parent.manifest_files)),
-            num_rows=parent.num_rows + rows,
-            data_bytes=parent.data_bytes + nbytes,
-            added_files=rel_files if rows > 0 else [],
-            record_manifest_files=list(parent.record_manifest_files),
-            delete_vector_files=list(parent.delete_vector_files),
-            operation=operation,
+        snap = md.append_snapshot(meta.snapshot(pinned), manifest_rel,
+                                  rel_files, rows, nbytes,
+                                  operation=operation)
+        log.commit_snapshot(
+            pinned, branch, snap, mutate=mutate,
+            pinned_constraints_version=pinned_constraints_version,
         )
-        try:
-            log.commit_snapshot(
-                pinned, branch, snap, mutate=mutate,
-                pinned_constraints_version=pinned_constraints_version,
-            )
-            return
-        except TransactionConflictError as e:
-            last_err = e
-            meta = log.read_metadata()
-            if (pinned_constraints_version is not None
-                    and meta.constraints_version
-                    != pinned_constraints_version):
-                _validate_files_live(location, rel_files, meta)
-                pinned_constraints_version = meta.constraints_version
-    raise last_err
+
+    def on_conflict():
+        nonlocal meta, pinned_constraints_version
+        meta = log.read_metadata()
+        if (pinned_constraints_version is not None
+                and meta.constraints_version
+                != pinned_constraints_version):
+            _validate_files_live(location, rel_files, meta)
+            pinned_constraints_version = meta.constraints_version
+
+    md.retry_commit(attempt, on_conflict)
 
 
 def _drop_files(location: str, rel_files: List[str]) -> None:

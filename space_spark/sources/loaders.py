@@ -165,11 +165,8 @@ def append_parquet(dataset, pattern: str) -> None:
         dataset.spark, dataset.log.abs_path(manifest_rel), rel_paths, stats,
         dataset._stats_fields(), bloom_pks=bloom_pks,
     )
-    # Commit through the shared append loop: it pins the
-    # constraints_version this load validated against and re-validates
-    # the external files on a version-moved conflict — zero-copy load
-    # is a row-adding commit like any other, so the reverse
-    # add_constraint TOCTOU must be closed here too (ADVICE r12).
+    # A row-adding commit like any other: the shared append commit
+    # pins the constraint set and re-validates on conflict.
     dataset._commit_append(manifest_rel, rel_paths, rows, nbytes, None,
                            operation="ZERO-COPY LOAD")
 
@@ -271,8 +268,5 @@ def append_binary_files(
                 "uncommitted orphans — vacuum reclaims them)"
             )
     rec_rel = dataset._write_record_manifest_for(files)
-    # Shared append loop: pins the constraints_version validated above
-    # and re-validates on a version-moved conflict (reverse
-    # add_constraint TOCTOU — ADVICE r12).
     dataset._commit_append(manifest_rel, files, rows, nbytes, rec_rel,
                            operation="ZERO-COPY LOAD")

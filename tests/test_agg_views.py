@@ -272,7 +272,7 @@ def test_concurrent_refresh_cannot_double_fold(
     # handle's marker read and its commit.
     mv._set_synced(2, expected_prev=1)
     with pytest.raises(SpaceError, match="Concurrent refresh"):
-        mv._apply_snapshot(source, snap, expected_prev=1)
+        mv._apply_snapshots(source, [snap], expected_prev=1)
     # State did not double-fold; a clean refresh picks up nothing new.
     mv2 = MaterializedAggregate.load(spark, tmp_location + "_mv")
     assert mv2.refresh() == []
