@@ -21,12 +21,12 @@ SCHEMA = T.StructType([
 PINNED_JOBS = {
     "append": 3,
     "upsert": 8,
+    "mv_refresh": 9,
+    "agg_mv_refresh": 16,
     "delete_by_keys": 6,
     "delete": 2,
     "merge": 14,
     "apply_changes": 8,
-    "mv_refresh": 39,
-    "agg_mv_refresh": 32,
 }
 
 
@@ -62,10 +62,14 @@ def test_write_ops_spark_job_pins(spark, tmp_location):
         fn()
         return len(set(tracker.getJobIdsForGroup(None)) - before)
 
+    # The views refresh over two source snapshots: an append and an
+    # upsert (a delete plus an add).
     ops = {
         "append": lambda: ds.append(_rows(spark, [(100, "g0", 1)])),
         "upsert": lambda: ds.upsert(
             _rows(spark, [(1, "g1", 10), (101, "g2", 2)])),
+        "mv_refresh": mv.refresh,
+        "agg_mv_refresh": agg.refresh,
         "delete_by_keys": lambda: ds.delete_by_keys(
             _rows(spark, [(2, "", 0)]).select("k")),
         "delete": lambda: ds.delete(field("k") == 3),
@@ -74,10 +78,7 @@ def test_write_ops_spark_job_pins(spark, tmp_location):
         "apply_changes": lambda: ds.apply_changes(
             _rows(spark, [(5, "g2", 50)]),
             _rows(spark, [(6, "", 0)]).select("k")),
-        "mv_refresh": mv.refresh,
-        "agg_mv_refresh": agg.refresh,
     }
     got = {name: jobs(fn) for name, fn in ops.items()}
     assert got == PINNED_JOBS, str(got)
-    assert {r.k for r in mv.read().collect()} == (
-        set(range(40)) - {2, 3, 6} | {100, 101, 102})
+    assert {r.k for r in mv.read().collect()} == set(range(40)) | {100, 101}
