@@ -15,9 +15,11 @@ Parity map (reference paths relative to /root/reference/python/src/space/):
 - diff(v1,v2) change feed-> core/ops/change_data.py:59-161
 
 Spark-first design: mutations are distributed Parquet writes planned by
-Catalyst; only the commit protocol (JSON log) runs on the driver. Reads
-hand Catalyst a manifest-pruned file list, so predicate pushdown, column
-pruning, AQE and whole-stage codegen all apply unchanged.
+Catalyst, except outputs the driver already holds within Spark's own
+broadcast threshold (local inputs, keyed delete splits), which the driver
+writes with pyarrow; the commit protocol (JSON log) runs on the driver.
+Reads hand Catalyst a manifest-pruned file list, so predicate pushdown,
+column pruning, AQE and whole-stage codegen all apply unchanged.
 """
 
 from __future__ import annotations
@@ -933,26 +935,90 @@ class Dataset:
 
         return marked.mapInArrow(assign, out_schema)
 
-    def _write_data_files(self, df: DataFrame, physical: bool = False):
-        """Write data files for one commit; returns (manifest_rel, files,
-        rows, bytes). Executors write shard files in parallel (the
-        reference's actor writers, ray/ops/append.py:32-120); the driver
-        only collects footer stats and writes the manifest.
+    def _driver_bytes_max(self) -> int:
+        """Largest output, in bytes, the driver writes itself: Spark's own
+        ``spark.sql.autoBroadcastJoinThreshold``, the size Spark agrees to
+        collect to the driver. -1 turns driver writes off, as it turns off
+        broadcasts."""
+        return int(self.spark._jsparkSession.sessionState().conf()
+                   .autoBroadcastJoinThreshold())
 
-        ``physical=True`` means ``df`` already carries record-field ADDRESS
-        structs (the copy-on-write survivor rewrite) — blobs are NOT
-        rewritten, addresses carry over (reference ops/delete.py:42-45)."""
+    def _local_arrow(self, df: DataFrame) -> Optional[pa.Table]:
+        """``df`` collected to Arrow when its optimized plan is a
+        ``LocalRelation`` (rows the driver built) within
+        ``_driver_bytes_max``; None otherwise."""
+        limit = self._driver_bytes_max()
+        if limit < 0:
+            return None
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() != "LocalRelation" \
+                or plan.stats().sizeInBytes() > limit:
+            return None
+        return df.toArrow()
+
+    def _physical_arrow(self, tbl: pa.Table) -> pa.Table:
+        """Logical-named Arrow rows (a local input, a collected read) cast
+        to the table's PHYSICAL file layout; every top-level column
+        nullable, as Spark writes parquet."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(self._physical_schema())
+        target = pa.schema([
+            target.field(self._phys_name(n)).with_nullable(True)
+            for n in tbl.column_names
+        ])
+        return tbl.rename_columns(target.names).cast(target)
+
+    def _write_arrow_file(self, abs_path: str, tbl: pa.Table) -> None:
+        """Driver-side write of rows already in the physical layout."""
+        mf.write_data_file(
+            abs_path, tbl,
+            int96_timestamps=self.spark.conf.get(
+                "spark.sql.parquet.outputTimestampType") == "INT96",
+        )
+
+    def _write_data_files(self, data, physical: bool = False,
+                          n_files: int = 1):
+        """Write data files for one commit; returns (manifest_rel, files,
+        rows, bytes).
+
+        ``data`` is a DataFrame or an Arrow table. Spark writes a
+        DataFrame, one file per partition (the reference's sharded
+        writers, ray/ops/append.py:32-120). An Arrow table is an output
+        the driver already holds within ``_driver_bytes_max`` (a local
+        input, a keyed delete's survivors); the driver writes it with
+        pyarrow as ``n_files`` contiguous slices, with no Spark job (the
+        reference's in-process ``LocalAppendOp``, core/ops/append.py:
+        164-244). Either way the driver then reads the footer stats and
+        writes the manifest.
+
+        ``physical=True`` means the rows already carry record-field
+        ADDRESS structs (the copy-on-write survivor rewrite) — blobs are
+        NOT rewritten, addresses carry over (reference ops/delete.py:
+        42-45)."""
         commit_reldir = self.log.new_commit_data_reldir()
         absdir = self.log.abs_path(commit_reldir)
-        if self.record_fields and not physical:
-            df = rec.write_record_fields(df, self.location, self.record_fields)
-        # Write half of the rename boundary: files always land under the
-        # immutable PHYSICAL names, keeping every data file uniform across
-        # renames (stats/pruning stay consistent table-wide).
-        self._to_physical(df).write.parquet(absdir)
+        if isinstance(data, pa.Table):
+            data = self._physical_arrow(data)
+            per_file = -(-data.num_rows // n_files)
+            for i in range(n_files):
+                part = data.slice(i * per_file, per_file)
+                if part.num_rows:
+                    self._write_arrow_file(
+                        os.path.join(absdir, f"part-{i:05d}.parquet"), part)
+        else:
+            if self.record_fields and not physical:
+                data = rec.write_record_fields(data, self.location,
+                                               self.record_fields)
+            # Write half of the rename boundary: files always land under
+            # the immutable PHYSICAL names, keeping every data file
+            # uniform across renames (stats/pruning stay consistent
+            # table-wide).
+            self._to_physical(data).write.parquet(absdir)
         rel_files = sorted(
             os.path.join(commit_reldir, name)
-            for name in os.listdir(absdir)
+            for name in (os.listdir(absdir) if os.path.isdir(absdir)
+                         else [])
             if name.endswith(".parquet")
         )
         stat_names = [n for n, _ in self._stats_fields()]
@@ -1275,19 +1341,28 @@ class Dataset:
             raise UserInputError(
                 "cluster_by and zorder_by are mutually exclusive"
             )
-        if zorder_by:
+        unknown = set(cluster_by or zorder_by or ()) \
+            - set(self.schema.fieldNames())
+        if unknown:
+            raise UserInputError(
+                f"Unknown {'zorder' if zorder_by else 'cluster'} "
+                f"columns: {unknown}")
+        # Rows the driver built (a LocalRelation within the driver-write
+        # bound) are written by the driver: clustering is a local sort,
+        # and the output is one file unless the caller asked for more.
+        local = None if zorder_by or self.record_fields \
+            else self._local_arrow(df)
+        n = target_files or self.spark.sparkContext.defaultParallelism
+        if local is not None:
+            if cluster_by:
+                local = local.sort_by([(c, "ascending") for c in cluster_by],
+                                      null_placement="at_start")
+            df, n = local, target_files or 1
+        elif zorder_by:
             from space_spark.operators.zorder import zorder_layout
 
-            unknown = set(zorder_by) - set(self.schema.fieldNames())
-            if unknown:
-                raise UserInputError(f"Unknown zorder columns: {unknown}")
-            n = target_files or self.spark.sparkContext.defaultParallelism
             df = zorder_layout(df, zorder_by, n)
         elif cluster_by:
-            unknown = set(cluster_by) - set(self.schema.fieldNames())
-            if unknown:
-                raise UserInputError(f"Unknown cluster columns: {unknown}")
-            n = target_files or self.spark.sparkContext.defaultParallelism
             df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
                 *cluster_by
             )
@@ -1297,7 +1372,8 @@ class Dataset:
         # start, core/storage.py:587-593) so stale handles re-pin instead of
         # spuriously conflicting.
         self.reload()
-        manifest_rel, files, rows, nbytes = self._write_data_files(df)
+        manifest_rel, files, rows, nbytes = self._write_data_files(
+            df, n_files=n)
         if rows == 0 and commit_mutate is None:
             return self  # empty append: skip commit (test_runners.py:83-92)
         # With commit_mutate set, even an empty append commits (a metadata-
@@ -1740,24 +1816,54 @@ class Dataset:
         # for the probe's manifest pruning come free from the written
         # files' stats (driver-side footers, no job). On a duplicate-PK
         # raise the uncommitted files are orphans; vacuum reclaims them.
-        manifest_rel, files, rows, nbytes = self._write_data_files(df)
+        local = None if self.record_fields else self._local_arrow(df)
+        manifest_rel, files, rows, nbytes = self._write_data_files(
+            df if local is None else local)
         if rows == 0:
             return self
         pks = self.primary_keys
         new_keys = self._read_files(files).select(*pks)
-        row = (
-            new_keys.groupBy(*pks).count()
-            .agg(F.count(F.lit(1)).alias("n"), F.max("count").alias("mx"))
-            .collect()[0]
-        )
-        if row["mx"] is not None and row["mx"] > 1:
+        keys_arrow = None
+        if rows <= self.BROADCAST_KEYS_MAX:
+            # A key set the probe would broadcast anyway is read by the
+            # driver straight from the written files' key columns.
+            keys_arrow = self._read_keys_arrow(files)
+            dup = keys_arrow.group_by(pks).aggregate([]).num_rows < rows
+            n_keys = rows
+        else:
+            row = (
+                new_keys.groupBy(*pks).count()
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.max("count").alias("mx"))
+                .collect()[0]
+            )
+            dup = row["mx"] is not None and row["mx"] > 1
+            n_keys = int(row["n"] or 0)
+        if dup:
             raise UserInputError("Input data has duplicate primary keys")
-        n_keys = int(row["n"] or 0)
         return self._apply_changes_retry(
             new_keys, n_keys,
             self._keys_range_expr(self._bounds_from_manifest(manifest_rel)),
             manifest_rel, files, rows, nbytes, operation=operation,
+            keys_arrow=keys_arrow,
         )
+
+    def _read_keys_arrow(self, rel_files: List[str]) -> pa.Table:
+        """The primary-key columns of written data files, read by the
+        driver with pyarrow, under logical names and the table's Arrow
+        key types (an INT96 timestamp reads back as naive nanoseconds)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        pks = self.primary_keys
+        tbl = pa.concat_tables([
+            pq.read_table(self.log.abs_path(f),
+                          columns=[self._phys_name(k) for k in pks])
+            for f in rel_files
+        ])
+        key_schema = to_arrow_schema(
+            T.StructType([self.schema[k] for k in pks]))
+        return tbl.rename_columns(pks).cast(
+            pa.schema([f.with_nullable(True) for f in key_schema]))
 
     @staticmethod
     def _normalize_matched_clauses(when_matched, matched_condition,
@@ -2414,9 +2520,11 @@ class Dataset:
         def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
-            deletes_rel, affected = self._probe_deletes(
-                snapshot, prune_expr, lambda phys: phys.where(pred_true)
-            )
+            files = self._probe_candidates(snapshot, prune_expr)
+            if not files:
+                return self
+            deletes_rel, affected = self._write_probe_deletes(
+                self._probe_frame(snapshot, files).where(pred_true))
             if not affected:
                 return self
             man_tbl = pa.concat_tables(
@@ -2487,9 +2595,9 @@ class Dataset:
     _DERIVE_PRUNE = object()  # sentinel: build prune_expr from the keys
 
     def _matching_delete_parts(self, keys_df: DataFrame, n_keys=None,
-                               prune_expr=_DERIVE_PRUNE):
+                               prune_expr=_DERIVE_PRUNE, keys_arrow=None):
         """CoW-delete inputs for rows whose PKs appear in ``keys_df``:
-        (affected rel files, survivors df, written deletes relpath) —
+        (affected rel files, survivors, written deletes relpath) —
         ([], None, None) when nothing matches. Computes and writes the
         deletes file, never commits.
 
@@ -2499,7 +2607,14 @@ class Dataset:
         whole table. ``prune_expr`` overrides the derived range
         (upsert passes its written files' footer bounds, apply_changes'
         unique-adds path a union-of-boxes expression; an explicit None
-        means no pruning)."""
+        means no pruning).
+
+        When the keys fit a broadcast (``BROADCAST_KEYS_MAX``) and the
+        candidates' manifest bytes fit ``_driver_bytes_max``, the split
+        runs on the driver (``_split_on_driver``): one Spark read of the
+        candidates, the survivors an Arrow table. ``keys_arrow``: the
+        keys already on the driver. Otherwise one distributed probe job
+        writes the deletes and ``survivors`` is a DataFrame."""
         pks = self.primary_keys
         if prune_expr is Dataset._DERIVE_PRUNE:
             row = keys_df.agg(
@@ -2513,10 +2628,22 @@ class Dataset:
         if n_keys == 0:
             return [], None, None
         snapshot = self.metadata.snapshot(self.current_snapshot_id)
+        files = self._probe_candidates(snapshot, prune_expr)
+        if not files:
+            return [], None, None
+        if n_keys <= self.BROADCAST_KEYS_MAX and self._driver_fits(files):
+            if keys_arrow is None and all(
+                    keys_df.schema[k].dataType == self.schema[k].dataType
+                    for k in pks):
+                keys_arrow = keys_df.toArrow()
+            if keys_arrow is not None:
+                cand = self._probe_frame(snapshot, files).toArrow()
+                return self._split_on_driver(
+                    cand, self._keys_match(cand, keys_arrow))
         keys = self._keys_join_side(keys_df, n_keys)
-        deletes_rel, affected = self._probe_deletes(
-            snapshot, prune_expr,
-            lambda phys: phys.join(keys, on=pks, how="left_semi"),
+        deletes_rel, affected = self._write_probe_deletes(
+            self._probe_frame(snapshot, files)
+            .join(keys, on=pks, how="left_semi")
         )
         if not affected:
             return [], None, None
@@ -2525,42 +2652,88 @@ class Dataset:
         ).join(keys, on=pks, how="left_anti")
         return affected, survivors, deletes_rel
 
-    def _probe_deletes(self, snapshot, prune_expr: FilterType, match):
-        """The delete probe shared by every CoW and MoR delete path: the
-        files whose manifest stats pass ``prune_expr`` are read with
-        their existing delete vectors applied (already-deleted rows are
-        never re-logged), ``match(rows)`` selects the rows to delete,
-        and ``_write_probe_deletes`` lands them in one job. Returns
-        (deletes relpath, affected rel files) — (None, []) when nothing
-        matches."""
-        files = mf.prune_files(
+    def _probe_candidates(self, snapshot, prune_expr: FilterType):
+        """(rel file, manifest size bytes) of the files whose manifest
+        stats pass ``prune_expr`` — the files a delete probe reads."""
+        return mf.prune_files(
             self.spark,
             self._manifest_abs_paths(snapshot),
             self._phys_expr(prune_expr),
             self._stats_fields(),
+            with_sizes=True,
         )
-        if not files:
-            return None, []
+
+    def _driver_fits(self, files) -> bool:
+        """Whether probe candidates (``_probe_candidates`` pairs) are small
+        enough for the driver to read and split them itself."""
+        return sum(size for _, size in files) <= self._driver_bytes_max()
+
+    def _probe_frame(self, snapshot, files) -> DataFrame:
+        """The probe candidates' rows with their existing delete vectors
+        applied (already-deleted rows are never re-logged), each tagged
+        with its source file (``__file``) and row position (``__pos``)."""
         # Provenance columns BEFORE the vector mask: input_file_name()
         # must bind to the single parquet source, not the mask join.
-        phys = self._apply_vectors(
-            self._read_files(files)
+        return self._apply_vectors(
+            self._read_files([f for f, _ in files])
             .withColumn("__file", F.input_file_name())
             .withColumn("__pos", F.col("_metadata.row_index")),
             snapshot,
         )
-        return self._write_probe_deletes(match(phys))
+
+    def _keys_match(self, cand: pa.Table, keys: pa.Table) -> pa.Array:
+        """Mask of the candidate rows whose PKs appear in ``keys``. The
+        join carries only the key columns and a row index — Acero's join
+        cannot carry struct payloads such as record-field addresses —
+        and a left-semi join neither repeats a row for a repeated key
+        nor matches a NULL key, as Spark's does not."""
+        import numpy as np
+
+        pks = self.primary_keys
+        narrow = cand.select(pks).append_column(
+            "__row", pa.array(np.arange(cand.num_rows)))
+        key_types = pa.schema([narrow.schema.field(k).with_nullable(True)
+                               for k in pks])
+        hit = narrow.join(keys.select(pks).cast(key_types),
+                          keys=pks, join_type="left semi")["__row"]
+        return pc.is_in(narrow["__row"], value_set=hit)
+
+    def _split_on_driver(self, cand: pa.Table, matched):
+        """A CoW delete's split over a candidate read held on the
+        driver (``_probe_frame`` rows, ``matched`` a boolean mask): the
+        matched rows become the deletes log, written with pyarrow, and
+        the unmatched rows of the files holding a match become the
+        survivors. Returns (affected rel files, survivors Arrow table,
+        deletes relpath) — ([], None, None) when nothing matches."""
+        deleted = cand.filter(matched)
+        if deleted.num_rows == 0:
+            return [], None, None
+        hit_files = pc.unique(deleted["__file"])
+        survivors = cand.filter(pc.and_(
+            pc.is_in(cand["__file"], value_set=hit_files),
+            pc.invert(matched),
+        )).drop_columns(["__file", "__pos"])
+        deletes_rel = self.log.new_deletes_relpath().replace(".parquet", "")
+        log_tbl = self._physical_arrow(deleted.select(self.primary_keys))
+        for c in ("__file", "__pos"):
+            log_tbl = log_tbl.append_column(c, deleted[c])
+        self._write_arrow_file(
+            os.path.join(self.log.abs_path(deletes_rel), "part-00000.parquet"),
+            log_tbl)
+        affected = sorted(
+            {self._abs_to_rel_file(u) for u in hit_files.to_pylist()})
+        return affected, survivors, deletes_rel
 
     def _write_probe_deletes(self, matches: DataFrame):
-        """ONE distributed job materializes the probe: matched rows'
+        """The distributed probe of a MoR delete, or of a CoW delete over
+        the driver bound. ONE job materializes it: matched rows'
         (PKs, source file, row position) land directly as the change-log
         deletes file; the affected-file list is then a driver-side column
-        read of that (small) output. Replaces the round-2 shape of a
-        collect job for the file list PLUS a second full probe job to
-        write the deletes. Readers of the deletes file select the PK
-        columns, so the extra ``__file``/``__pos`` provenance columns ride
-        along for free; ``__pos`` (``_metadata.row_index``) additionally
-        feeds the per-file delete BITMAP sidecar built at commit time."""
+        read of that (small) output. Readers of the deletes file select
+        the PK columns, so the extra ``__file``/``__pos`` provenance
+        columns ride along for free; ``__pos`` (``_metadata.row_index``)
+        additionally feeds the per-file delete BITMAP sidecar built at
+        commit time."""
         pks = self.primary_keys
         deletes_rel = self.log.new_deletes_relpath().replace(".parquet", "")
         abs_del = self.log.abs_path(deletes_rel)
@@ -2570,10 +2743,11 @@ class Dataset:
             *[F.col(k).alias(self._phys_name(k)) for k in pks],
             "__file", "__pos",
         ).write.parquet(abs_del)
-        try:
-            tbl = pq.read_table(abs_del, columns=["__file"])
-        except Exception:
-            tbl = None  # zero-partition write: no part files at all
+        # Only a write with no part file at all (zero partitions) means
+        # "no matches"; any failure to read the log back must surface —
+        # read as empty, it would commit the delete as a no-op.
+        parts = [n for n in os.listdir(abs_del) if n.endswith(".parquet")]
+        tbl = pq.read_table(abs_del, columns=["__file"]) if parts else None
         if tbl is None or tbl.num_rows == 0:
             import shutil
 
@@ -2756,14 +2930,15 @@ class Dataset:
     def _apply_changes_retry(self, keys_df, n_keys, prune_expr,
                              manifest_rel, files, rows, nbytes,
                              commit_mutate=None,
-                             operation: str = "APPLY CHANGES"
-                             ) -> "Dataset":
+                             operation: str = "APPLY CHANGES",
+                             keys_arrow=None) -> "Dataset":
         rec_rel = self._write_record_manifest_for(files)
 
         def attempt():
             pinned = self.current_snapshot_id
             affected, survivors, deletes_rel = self._matching_delete_parts(
-                keys_df, n_keys=n_keys, prune_expr=prune_expr
+                keys_df, n_keys=n_keys, prune_expr=prune_expr,
+                keys_arrow=keys_arrow,
             )
             self._commit_rewrite(
                 pinned, affected, survivors, deletes_rel,
@@ -2819,14 +2994,24 @@ class Dataset:
         def attempt():
             snap_id = self.current_snapshot_id
             snapshot = self.metadata.snapshot(snap_id)
-            deletes_rel, affected = self._probe_deletes(
-                snapshot, prune_expr, lambda phys: phys.where(pred_true)
-            )
+            files = self._probe_candidates(snapshot, prune_expr)
+            if not files:
+                return self
+            if self._driver_fits(files):
+                # One read tags each row with the predicate; the driver
+                # splits it like a keyed delete.
+                cand = self._probe_frame(snapshot, files) \
+                    .withColumn("__del", pred_true).toArrow()
+                affected, survivors, deletes_rel = self._split_on_driver(
+                    cand.drop_columns(["__del"]), cand["__del"])
+            else:
+                deletes_rel, affected = self._write_probe_deletes(
+                    self._probe_frame(snapshot, files).where(pred_true))
+                survivors = self._apply_vectors(
+                    self._read_files(affected), snapshot
+                ).where(~pred_true)
             if not affected:
                 return self
-            survivors = self._apply_vectors(
-                self._read_files(affected), snapshot
-            ).where(~pred_true)
             self._commit_rewrite(snap_id, affected, survivors,
                                  deletes_rel, operation="DELETE")
             return self
@@ -2890,7 +3075,7 @@ class Dataset:
         self,
         pinned: int,
         affected: List[str],
-        survivors: Optional[DataFrame],
+        survivors: Union[DataFrame, pa.Table, None],
         deletes_rel: Optional[str],
         append_manifest: Optional[str] = None,
         append_files: Optional[List[str]] = None,

@@ -23,6 +23,7 @@ import os
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,6 +90,82 @@ def manifest_spark_schema(
     return T.StructType(fields)
 
 
+# Arrow's parquet writer leaves NaN out of float min/max; parquet-mr
+# orders NaN above every number (so does Spark's comparison), making NaN
+# the max of any float column that holds one. A max without the NaN
+# would let pruning drop a file whose NaN rows match ``col > x``, so
+# ``write_data_file`` names its NaN-holding float columns under this
+# footer key and ``_footer_stats`` restores the NaN max.
+NAN_COLUMNS_KEY = b"space.nan_columns"
+
+
+def _decimal_bytes(precision: int) -> int:
+    """Width of the FIXED_LEN_BYTE_ARRAY Arrow writes a decimal into."""
+    n = 1
+    while 2 ** (8 * n - 1) <= 10 ** precision:
+        n += 1
+    return n
+
+
+def _plain_bytes(arr: pa.ChunkedArray) -> int:
+    """Bytes of ``arr``'s non-null values in PLAIN encoding."""
+    t = arr.type
+    if pa.types.is_binary(t) or pa.types.is_string(t) \
+            or pa.types.is_large_binary(t) or pa.types.is_large_string(t):
+        return int(pc.sum(pc.binary_length(arr)).as_py() or 0) \
+            + 4 * len(arr)
+    if pa.types.is_decimal(t):
+        return _decimal_bytes(t.precision) * len(arr)
+    return t.bit_width // 8 * len(arr)
+
+
+def _dictionary_smaller(arr: pa.ChunkedArray) -> bool:
+    """Whether a dictionary page plus RLE indices beats PLAIN for this
+    column — parquet-mr's own test for keeping dictionary encoding
+    (``DictionaryValuesWriter.isCompressionSatisfying``). Booleans and
+    nested columns stay PLAIN, as parquet-mr writes them."""
+    t = arr.type
+    if pa.types.is_nested(t) or pa.types.is_boolean(t) \
+            or pa.types.is_null(t):
+        return False
+    values = arr.drop_null()
+    if len(values) == 0:
+        return False
+    uniques = pc.unique(values)
+    index_bits = max(1, (len(uniques) - 1).bit_length())
+    encoded = _plain_bytes(uniques) + (len(values) * index_bits + 7) // 8
+    return encoded < _plain_bytes(values)
+
+
+def write_data_file(abs_path: str, table: pa.Table,
+                    int96_timestamps: bool = False) -> None:
+    """Write ``table`` as one Parquet data file with pyarrow, shaped like
+    Spark's parquet-mr output so a driver-written file costs the same
+    bytes as a Spark-written one: dictionary encoding only on columns
+    where it is smaller than PLAIN, no ``ARROW:schema`` footer entry, and
+    timestamps as INT96 when Spark's ``outputTimestampType`` says so.
+    Shared by the driver-side write of ``Dataset`` and the sink tasks of
+    ``format("space")`` (``datasink._write_shard``)."""
+    nan_cols = [
+        f.name for f in table.schema
+        if pa.types.is_floating(f.type)
+        and pc.any(pc.is_nan(table[f.name])).as_py()
+    ]
+    os.makedirs(os.path.dirname(abs_path), exist_ok=True)
+    pq.write_table(
+        table.replace_schema_metadata(
+            {NAN_COLUMNS_KEY: ",".join(nan_cols)} if nan_cols else None
+        ),
+        abs_path,
+        use_dictionary=[f.name for f in table.schema
+                        if _dictionary_smaller(table[f.name])],
+        # The footer keeps key-value metadata only with the Arrow schema;
+        # pay for it only when the NaN note must ride along.
+        store_schema=bool(nan_cols),
+        use_deprecated_int96_timestamps=int96_timestamps,
+    )
+
+
 def _footer_stats(abs_path: str, stat_names: List[str],
                   bloom_pks: Sequence[str] = (),
                   bloom_bpk: Optional[int] = None) -> dict:
@@ -124,7 +201,17 @@ def _footer_stats(abs_path: str, stat_names: List[str],
                 nulls[name] = nulls.get(name, 0) + stats.null_count
             if not stats.has_min_max:
                 continue
-            mn, mx = stats.min, stats.max
+            try:
+                mn, mx = stats.min, stats.max
+            except pa.ArrowNotImplementedError:
+                # INT32/INT64-backed decimals (how Spark writes precision
+                # <= 18): pyarrow has no converter, the raw unscaled
+                # integers and the column's scale give the values.
+                import decimal
+
+                scale = meta.schema.column(idx).scale
+                mn = decimal.Decimal(stats.min_raw).scaleb(-scale)
+                mx = decimal.Decimal(stats.max_raw).scaleb(-scale)
             # min/max can be None (e.g. all-null pages) even with
             # has_min_max claimed by some writers; never let a None
             # poison the driver-side comparison.
@@ -132,6 +219,10 @@ def _footer_stats(abs_path: str, stat_names: List[str],
                 mins[name] = mn
             if mx is not None and (name not in maxs or mx > maxs[name]):
                 maxs[name] = mx
+    noted = (meta.metadata or {}).get(NAN_COLUMNS_KEY, b"").decode()
+    for name in set(noted.split(",")) & set(stat_names):
+        maxs[name] = float("nan")
+        mins.setdefault(name, float("nan"))  # an all-NaN column
     out = {
         "num_rows": meta.num_rows,
         "size_bytes": os.path.getsize(abs_path),
@@ -455,8 +546,10 @@ def prune_files(
     filter_: Optional[Expr],
     stats_fields: Sequence[Tuple[str, T.DataType]],
     exclude_files: Optional[Sequence[str]] = None,
-) -> List[str]:
-    """Return relative data-file paths possibly containing matching rows.
+    with_sizes: bool = False,
+) -> List:
+    """Return relative data-file paths possibly containing matching rows
+    (``with_sizes=True``: (path, manifest size bytes) pairs).
 
     A file is dropped only when the falsifiable filter PROVES it cannot
     match (never-wrong pruning: unsupported predicates keep everything —
@@ -501,7 +594,8 @@ def prune_files(
     if total_bytes <= _DRIVER_PRUNE_MAX_BYTES:
         try:
             return _prune_files_arrow(
-                manifest_abs_paths, filter_, stat_names, exclude_files
+                manifest_abs_paths, filter_, stat_names, exclude_files,
+                with_sizes,
             )
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
             pass  # e.g. string-vs-timestamp literal: let Spark coerce.
@@ -513,6 +607,9 @@ def prune_files(
         fals = filter_.falsifiable(stat_names)
         if fals is not None:
             df = df.where(~F.coalesce(fals, F.lit(False)))
+    if with_sizes:
+        return [(r[0], r[1])
+                for r in df.select(FILE_PATH_COL, SIZE_BYTES_COL).collect()]
     return [r[0] for r in df.select(FILE_PATH_COL).collect()]
 
 

@@ -133,8 +133,9 @@ def _write_shard(location: str, rel: str, table_arrow: pa.Schema,
                  not_null: Optional[List[str]] = None,
                  constraints_version: int = -1
                  ) -> FilesCommitMessage:
-    """Executor side: stream this task's batches into one parquet file,
-    aligned to the table's column order/types. Returns no file for an
+    """Executor side: write this task's batches as one parquet file
+    (``manifests.write_data_file``), aligned to the table's column
+    order/types. Returns no file for an
     empty task (no zero-row shards in the manifest). ``write_arrow``
     (default: ``table_arrow``) names the columns in the FILE — the
     physical names under a rename_column.
@@ -161,55 +162,53 @@ def _write_shard(location: str, rel: str, table_arrow: pa.Schema,
         from space_spark.core.expressions import expr_from_json
 
         gens = [(n, expr_from_json(j)) for n, j in generated]
-    writer: Optional[pq.ParquetWriter] = None
-    try:
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            for gname, gexpr in gens:
-                idx = batch.schema.get_field_index(gname)
-                val = ex.eval_arrow_rows(gexpr, batch)
-                if isinstance(val, pa.ChunkedArray):
-                    val = val.combine_chunks()
-                elif isinstance(val, pa.Scalar):  # constant expression
-                    val = pa.array([val.as_py()] * batch.num_rows)
-                val = pc.cast(val, batch.schema.field(idx).type)
-                batch = batch.set_column(
-                    idx, batch.schema.field(idx), val
+    aligned_batches: List[pa.RecordBatch] = []
+    for batch in iterator:
+        if batch.num_rows == 0:
+            continue
+        for gname, gexpr in gens:
+            idx = batch.schema.get_field_index(gname)
+            val = ex.eval_arrow_rows(gexpr, batch)
+            if isinstance(val, pa.ChunkedArray):
+                val = val.combine_chunks()
+            elif isinstance(val, pa.Scalar):  # constant expression
+                val = pa.array([val.as_py()] * batch.num_rows)
+            val = pc.cast(val, batch.schema.field(idx).type)
+            batch = batch.set_column(
+                idx, batch.schema.field(idx), val
+            )
+        for nname in (not_null or []):
+            idx = batch.schema.get_field_index(nname)
+            if idx >= 0 and batch.column(idx).null_count:
+                raise ConstraintViolationError(
+                    f"NOT NULL({nname}) violated by "
+                    f"{batch.column(idx).null_count} row(s) in "
+                    "this write"
                 )
-            for nname in (not_null or []):
-                idx = batch.schema.get_field_index(nname)
-                if idx >= 0 and batch.column(idx).null_count:
-                    raise ConstraintViolationError(
-                        f"NOT NULL({nname}) violated by "
-                        f"{batch.column(idx).null_count} row(s) in "
-                        "this write"
-                    )
-            for cname, cexpr in checks:
-                mask = ex.eval_arrow_rows(cexpr, batch)
-                bad = pc.sum(
-                    pc.invert(pc.fill_null(mask, True))
-                ).as_py() or 0
-                if bad:
-                    raise ConstraintViolationError(
-                        f"CHECK constraint {cname!r} violated by "
-                        f"{bad} row(s) in this write"
-                    )
-            cols = [
-                batch.column(batch.schema.get_field_index(f.name)).cast(
-                    f.type
+        for cname, cexpr in checks:
+            mask = ex.eval_arrow_rows(cexpr, batch)
+            bad = pc.sum(
+                pc.invert(pc.fill_null(mask, True))
+            ).as_py() or 0
+            if bad:
+                raise ConstraintViolationError(
+                    f"CHECK constraint {cname!r} violated by "
+                    f"{bad} row(s) in this write"
                 )
-                for f in table_arrow
-            ]
-            aligned = pa.RecordBatch.from_arrays(cols, schema=write_arrow)
-            if writer is None:
-                os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-                writer = pq.ParquetWriter(abs_path, write_arrow)
-            writer.write_batch(aligned)
-    finally:
-        if writer is not None:
-            writer.close()
-    return FilesCommitMessage(rel_files=[rel] if writer else [],
+        cols = [
+            batch.column(batch.schema.get_field_index(f.name)).cast(
+                f.type
+            )
+            for f in table_arrow
+        ]
+        aligned_batches.append(
+            pa.RecordBatch.from_arrays(cols, schema=write_arrow))
+    # One file, one row group, written whole like parquet-mr's buffered
+    # row group — the NaN note and the dictionary choice need every row.
+    if aligned_batches:
+        mf.write_data_file(
+            abs_path, pa.Table.from_batches(aligned_batches, write_arrow))
+    return FilesCommitMessage(rel_files=[rel] if aligned_batches else [],
                               constraints_version=constraints_version)
 
 

@@ -18,15 +18,20 @@ SCHEMA = T.StructType([
     T.StructField("x", T.LongType()),
 ])
 
+# Outputs within spark.sql.autoBroadcastJoinThreshold are written by the
+# driver: a local append is one collect (was a range sample and a write),
+# upsert's dup check reads the written keys with pyarrow, and every CoW
+# delete is one candidate read split on the driver (was a probe write and
+# a survivor write).
 PINNED_JOBS = {
-    "append": 3,
-    "upsert": 8,
-    "mv_refresh": 9,
-    "agg_mv_refresh": 16,
-    "delete_by_keys": 6,
-    "delete": 2,
-    "merge": 14,
-    "apply_changes": 8,
+    "append": 1,
+    "upsert": 2,
+    "mv_refresh": 7,
+    "agg_mv_refresh": 14,
+    "delete_by_keys": 4,
+    "delete": 1,
+    "merge": 12,
+    "apply_changes": 6,
 }
 
 
