@@ -137,33 +137,44 @@ def _dictionary_smaller(arr: pa.ChunkedArray) -> bool:
     return encoded < _plain_bytes(values)
 
 
-def write_data_file(abs_path: str, table: pa.Table,
-                    int96_timestamps: bool = False) -> None:
-    """Write ``table`` as one Parquet data file with pyarrow, shaped like
-    Spark's parquet-mr output so a driver-written file costs the same
-    bytes as a Spark-written one: dictionary encoding only on columns
-    where it is smaller than PLAIN, no ``ARROW:schema`` footer entry, and
-    timestamps as INT96 when Spark's ``outputTimestampType`` says so.
-    Shared by the driver-side write of ``Dataset`` and the sink tasks of
-    ``format("space")`` (``datasink._write_shard``)."""
-    nan_cols = [
-        f.name for f in table.schema
-        if pa.types.is_floating(f.type)
-        and pc.any(pc.is_nan(table[f.name])).as_py()
-    ]
+def open_data_file(abs_path: str, sample: pa.Table,
+                   nan_cols: Sequence[str],
+                   int96_timestamps: bool = False) -> pq.ParquetWriter:
+    """A pyarrow writer for one Parquet data file, shaped like Spark's
+    parquet-mr output so a pyarrow-written file costs the same bytes as a
+    Spark-written one: dictionary encoding only on the columns where,
+    over ``sample``, it is smaller than PLAIN; no ``ARROW:schema`` footer
+    entry; timestamps as INT96 when Spark's ``outputTimestampType`` says
+    so. ``nan_cols`` go into the footer's NaN note."""
     os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-    pq.write_table(
-        table.replace_schema_metadata(
-            {NAN_COLUMNS_KEY: ",".join(nan_cols)} if nan_cols else None
-        ),
+    return pq.ParquetWriter(
         abs_path,
-        use_dictionary=[f.name for f in table.schema
-                        if _dictionary_smaller(table[f.name])],
+        sample.schema.with_metadata(
+            {NAN_COLUMNS_KEY: ",".join(nan_cols)} if nan_cols else {}
+        ),
+        use_dictionary=[f.name for f in sample.schema
+                        if _dictionary_smaller(sample[f.name])],
         # The footer keeps key-value metadata only with the Arrow schema;
         # pay for it only when the NaN note must ride along.
         store_schema=bool(nan_cols),
         use_deprecated_int96_timestamps=int96_timestamps,
     )
+
+
+def write_data_file(abs_path: str, table: pa.Table,
+                    int96_timestamps: bool = False) -> None:
+    """Write ``table`` whole as one Parquet data file (``open_data_file``),
+    the NaN note exact. Shared by the driver-side write of ``Dataset``
+    and the sink tasks of ``format("space")``
+    (``datasink._write_shard``)."""
+    nan_cols = [
+        f.name for f in table.schema
+        if pa.types.is_floating(f.type)
+        and pc.any(pc.is_nan(table[f.name])).as_py()
+    ]
+    with open_data_file(abs_path, table, nan_cols,
+                        int96_timestamps) as writer:
+        writer.write_table(table)
 
 
 def _footer_stats(abs_path: str, stat_names: List[str],

@@ -125,6 +125,12 @@ def _phys_arrow(logical_arrow: pa.Schema, meta) -> pa.Schema:
     )
 
 
+# Batches a sink task holds before it streams the rest of its file: a
+# file written whole gets an exact NaN note and a dictionary choice over
+# all its rows, as parquet-mr buffers a whole row group.
+SHARD_HOLD_BYTES = 64 << 20
+
+
 def _write_shard(location: str, rel: str, table_arrow: pa.Schema,
                  iterator: Iterator[pa.RecordBatch],
                  write_arrow: Optional[pa.Schema] = None,
@@ -133,9 +139,11 @@ def _write_shard(location: str, rel: str, table_arrow: pa.Schema,
                  not_null: Optional[List[str]] = None,
                  constraints_version: int = -1
                  ) -> FilesCommitMessage:
-    """Executor side: write this task's batches as one parquet file
-    (``manifests.write_data_file``), aligned to the table's column
-    order/types. Returns no file for an
+    """Executor side: write this task's batches as one parquet file,
+    aligned to the table's column order/types. Up to
+    ``SHARD_HOLD_BYTES`` of batches are held and written whole
+    (``manifests.write_data_file``); past that the rest streams into the
+    file one batch at a time. Returns no file for an
     empty task (no zero-row shards in the manifest). ``write_arrow``
     (default: ``table_arrow``) names the columns in the FILE — the
     physical names under a rename_column.
@@ -162,53 +170,72 @@ def _write_shard(location: str, rel: str, table_arrow: pa.Schema,
         from space_spark.core.expressions import expr_from_json
 
         gens = [(n, expr_from_json(j)) for n, j in generated]
-    aligned_batches: List[pa.RecordBatch] = []
-    for batch in iterator:
-        if batch.num_rows == 0:
-            continue
-        for gname, gexpr in gens:
-            idx = batch.schema.get_field_index(gname)
-            val = ex.eval_arrow_rows(gexpr, batch)
-            if isinstance(val, pa.ChunkedArray):
-                val = val.combine_chunks()
-            elif isinstance(val, pa.Scalar):  # constant expression
-                val = pa.array([val.as_py()] * batch.num_rows)
-            val = pc.cast(val, batch.schema.field(idx).type)
-            batch = batch.set_column(
-                idx, batch.schema.field(idx), val
-            )
-        for nname in (not_null or []):
-            idx = batch.schema.get_field_index(nname)
-            if idx >= 0 and batch.column(idx).null_count:
-                raise ConstraintViolationError(
-                    f"NOT NULL({nname}) violated by "
-                    f"{batch.column(idx).null_count} row(s) in "
-                    "this write"
+    held: List[pa.RecordBatch] = []
+    held_bytes = 0
+    writer: Optional[pq.ParquetWriter] = None
+    try:
+        for batch in iterator:
+            if batch.num_rows == 0:
+                continue
+            for gname, gexpr in gens:
+                idx = batch.schema.get_field_index(gname)
+                val = ex.eval_arrow_rows(gexpr, batch)
+                if isinstance(val, pa.ChunkedArray):
+                    val = val.combine_chunks()
+                elif isinstance(val, pa.Scalar):  # constant expression
+                    val = pa.array([val.as_py()] * batch.num_rows)
+                val = pc.cast(val, batch.schema.field(idx).type)
+                batch = batch.set_column(
+                    idx, batch.schema.field(idx), val
                 )
-        for cname, cexpr in checks:
-            mask = ex.eval_arrow_rows(cexpr, batch)
-            bad = pc.sum(
-                pc.invert(pc.fill_null(mask, True))
-            ).as_py() or 0
-            if bad:
-                raise ConstraintViolationError(
-                    f"CHECK constraint {cname!r} violated by "
-                    f"{bad} row(s) in this write"
+            for nname in (not_null or []):
+                idx = batch.schema.get_field_index(nname)
+                if idx >= 0 and batch.column(idx).null_count:
+                    raise ConstraintViolationError(
+                        f"NOT NULL({nname}) violated by "
+                        f"{batch.column(idx).null_count} row(s) in "
+                        "this write"
+                    )
+            for cname, cexpr in checks:
+                mask = ex.eval_arrow_rows(cexpr, batch)
+                bad = pc.sum(
+                    pc.invert(pc.fill_null(mask, True))
+                ).as_py() or 0
+                if bad:
+                    raise ConstraintViolationError(
+                        f"CHECK constraint {cname!r} violated by "
+                        f"{bad} row(s) in this write"
+                    )
+            cols = [
+                batch.column(batch.schema.get_field_index(f.name)).cast(
+                    f.type
                 )
-        cols = [
-            batch.column(batch.schema.get_field_index(f.name)).cast(
-                f.type
-            )
-            for f in table_arrow
-        ]
-        aligned_batches.append(
-            pa.RecordBatch.from_arrays(cols, schema=write_arrow))
-    # One file, one row group, written whole like parquet-mr's buffered
-    # row group — the NaN note and the dictionary choice need every row.
-    if aligned_batches:
-        mf.write_data_file(
-            abs_path, pa.Table.from_batches(aligned_batches, write_arrow))
-    return FilesCommitMessage(rel_files=[rel] if aligned_batches else [],
+                for f in table_arrow
+            ]
+            aligned = pa.RecordBatch.from_arrays(cols, schema=write_arrow)
+            if writer is not None:
+                writer.write_batch(aligned)
+                continue
+            held.append(aligned)
+            held_bytes += aligned.nbytes
+            if held_bytes > SHARD_HOLD_BYTES:
+                # The rest of the task is unseen: pick dictionary columns
+                # from the held rows and note every float column as
+                # possibly NaN (a NaN max only keeps the file in pruning).
+                head = pa.Table.from_batches(held, write_arrow)
+                writer = mf.open_data_file(
+                    abs_path, head,
+                    [f.name for f in write_arrow
+                     if pa.types.is_floating(f.type)])
+                writer.write_table(head)
+                held = []
+        if writer is None and held:
+            mf.write_data_file(abs_path,
+                               pa.Table.from_batches(held, write_arrow))
+    finally:
+        if writer is not None:
+            writer.close()
+    return FilesCommitMessage(rel_files=[rel] if writer or held else [],
                               constraints_version=constraints_version)
 
 

@@ -2,16 +2,21 @@
 schema validation, append-only mode, and streaming (space table ->
 space table replication with exactly-once micro-batch commits)."""
 
+import math
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from space_spark import Dataset
+from space_spark.core import manifests as mf
 from space_spark.errors import UserInputError
+from space_spark.sources import datasink
 from space_spark.sources.datasource import register_space_source
 
 SIMPLE = T.StructType(
@@ -46,6 +51,36 @@ def test_batch_write_roundtrip(spark, sink_table):
     ).mode("append").save(sink_table.location)
     assert sink_table.reload().read().count() == 30
     assert sink_table.versions().count() >= 3  # create + 2 writes
+
+
+@pytest.mark.parametrize("hold_bytes", [datasink.SHARD_HOLD_BYTES, 1])
+def test_shard_file_records_nan_max(tmp_path, monkeypatch, hold_bytes):
+    """A sink task writes its batches as one file whose footer stats give
+    a NaN max to a float column holding NaN, whether the task's batches
+    fit the hold (written whole, the note exact) or stream past it
+    (every float column noted)."""
+    monkeypatch.setattr(datasink, "SHARD_HOLD_BYTES", hold_bytes)
+    schema = pa.schema([("id", pa.int64()), ("val", pa.float64()),
+                        ("w", pa.float64())])
+    batches = [
+        pa.record_batch([pa.array(range(i * 10, i * 10 + 10)),
+                         pa.array([float("nan") if i == 2 and j == 3
+                                   else j / 2 for j in range(10)]),
+                         pa.array([float(j) for j in range(10)])],
+                        schema=schema)
+        for i in range(3)
+    ]
+    msg = datasink._write_shard(str(tmp_path), "d/part.parquet", schema,
+                                iter(batches))
+    path = os.path.join(tmp_path, "d/part.parquet")
+    assert msg.rel_files == ["d/part.parquet"]
+    assert repr(pq.read_table(path).to_pylist()) == \
+        repr(pa.Table.from_batches(batches).to_pylist())
+    stats = mf._footer_stats(path, ["id", "val", "w"])
+    assert math.isnan(stats["maxs"]["val"])
+    assert stats["mins"]["id"] == 0 and stats["maxs"]["id"] == 29
+    # ``w`` holds no NaN: its max is exact when the file is written whole
+    assert (stats["maxs"]["w"] == 9.0) == (hold_bytes > 1)
 
 
 def test_batch_write_column_order_aligned(spark, sink_table):

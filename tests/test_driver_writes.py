@@ -211,6 +211,32 @@ def test_clustered_driver_append_layout(spark, tmp_location):
     assert len(ds.data_files((field("k") >= 31) & (field("k") <= 40))) == 1
     got = [r.k for r in ds.read(field("k") > 30).collect()]
     assert sorted(got) == list(range(31, 61))
+    # a delete hitting two of those files rewrites each one's survivors
+    # as its own file, keeping the ranges disjoint
+    ds.delete_by_keys(_local(spark, [(35, "", 0), (55, "", 0)]).select("k"))
+    assert len(ds.data_files()) == 4
+    for k in (31, 40, 41, 50, 51, 60):
+        assert len(ds.data_files(field("k") == k)) == 1
+    got = [r.k for r in ds.read(field("k") > 30).collect()]
+    assert sorted(got) == sorted(set(range(31, 61)) - {35, 55})
+
+
+def test_driver_split_packs_neighbouring_files(spark, tmp_location):
+    """A driver-split delete hitting more files than defaultParallelism
+    packs the survivors of neighbouring files together, keeping the
+    output files' key ranges disjoint."""
+    ds = Dataset.create(spark, tmp_location, KXG, ["k"], cluster_by=["k"])
+    ds.append(_local(spark, [(i, "g", i) for i in range(80, 0, -1)]),
+              target_files=8)
+    width = spark.sparkContext.defaultParallelism
+    assert len(ds.data_files()) == 8 > width
+    ds.delete_by_keys(_local(spark, [(k, "", 0) for k in range(5, 81, 10)])
+                      .select("k"))
+    assert len(ds.data_files()) == width
+    for k in range(1, 81):
+        if k % 10 != 5:
+            assert len(ds.data_files(field("k") == k)) == 1
+    assert ds.read().count() == 72
 
 
 # -- type fidelity ---------------------------------------------------------
@@ -287,15 +313,18 @@ def _null_counts(ds):
         for f in ds.data_files())
 
 
-@pytest.mark.parametrize("ts_type", ["TIMESTAMP_MICROS", "INT96"])
+@pytest.mark.parametrize("ts_type,with_ntz", [
+    ("TIMESTAMP_MICROS", True), ("INT96", False), ("INT96", True)])
 def test_driver_written_files_match_spark_written(spark, tmp_location,
-                                                   ts_type):
+                                                   ts_type, with_ntz):
     """Driver- and Spark-written files give identical rows, manifest
     min/max, footer null counts and bloom hits. Under INT96 (Spark's
-    default ``outputTimestampType``) pyarrow can write every timestamp
-    column as INT96 or none, so that case leaves TimestampNTZ out."""
-    schema = WIDE if ts_type != "INT96" else T.StructType(
+    default ``outputTimestampType``) pyarrow writes every timestamp
+    column INT96 or none, and Spark cannot read INT96 as TimestampNTZ,
+    so a table with a TimestampNTZ column stays on Spark's writer."""
+    schema = WIDE if with_ntz else T.StructType(
         [f for f in WIDE.fields if f.name != "ntz"])
+    driver_writes = not (ts_type == "INT96" and with_ntz)
     prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", ts_type)
     try:
@@ -306,7 +335,7 @@ def test_driver_written_files_match_spark_written(spark, tmp_location,
         spk = _with_threshold(spark, "-1",
                               lambda: _wide_table(spark, tmp_location + "_s",
                                                   ids, schema))
-        assert _driver_named(drv.location)
+        assert bool(_driver_named(drv.location)) == driver_writes
         assert not _driver_named(spk.location)
         assert len(drv.data_files()) == len(spk.data_files()) == 1
         assert _rows(drv.read()) == _rows(spk.read())
