@@ -122,6 +122,49 @@ def merge_blobs(blobs, num_rows: int) -> tuple[bytes, int]:
     return encode_positions(merged, num_rows), int(merged.size)
 
 
+def write_sidecar(abs_path: str, files, num_rows, n_deleted,
+                  blobs) -> None:
+    """Write one bitmap sidecar: a row per data file with its table-
+    relative path, row count, deleted-row count and encoded positions —
+    the format ``read_sidecars`` reads, for change-log bitmaps and MoR
+    delete vectors alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "file": pa.array(files, pa.string()),
+            "num_rows": pa.array(num_rows, pa.int64()),
+            "n_deleted": pa.array(n_deleted, pa.int64()),
+            "bitmap": pa.array(blobs, pa.binary()),
+        }),
+        abs_path,
+    )
+
+
+def fold_sidecars(paths):
+    """Union the bitmaps N sidecars hold for each data file (positions
+    deduped): the ``write_sidecar`` columns (files, num_rows, n_deleted,
+    blobs) of one merged sidecar, files sorted."""
+    tbl = read_sidecars(paths, columns=("file", "num_rows", "bitmap"))
+    by_file: dict = {}
+    nrows_of: dict = {}
+    for f, nr, blob in zip(tbl["file"].to_pylist(),
+                           tbl["num_rows"].to_pylist(),
+                           tbl["bitmap"].to_pylist()):
+        by_file.setdefault(f, []).append(blob)
+        nrows_of[f] = nr
+    files, nrows, ndels, blobs = [], [], [], []
+    for f in sorted(by_file):
+        nr = nrows_of[f]
+        blob, nd = merge_blobs(by_file[f], nr)
+        files.append(f)
+        nrows.append(int(nr))
+        ndels.append(nd)
+        blobs.append(blob)
+    return files, nrows, ndels, blobs
+
+
 def read_sidecars(paths, columns=("file", "num_rows", "n_deleted",
                                  "bitmap"), with_filename=False):
     """Read N delete-vector sidecar parquet files as ONE Arrow table.

@@ -28,6 +28,7 @@ import os
 from typing import Dict, List, Optional, Sequence, Union
 from urllib.parse import urlparse
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -35,11 +36,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from space_spark.core import bitmaps as bm
 from space_spark.core import blooms as _bl
 from space_spark.core import manifests as mf
 from space_spark.core import metadata as md
 from space_spark.core import records as rec
 from space_spark.core import schema as sc
+from space_spark.core import write_path as wp
 from space_spark.core.expressions import Expr, Field
 from space_spark.errors import (
     ConstraintViolationError,
@@ -56,17 +59,6 @@ def _norm_file_path():
     """``_metadata.file_path`` normalized ("file:///x" or "file:/x" ->
     "/x") to match driver-side absolute paths."""
     return F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/")
-
-
-def _has_ntz(dt: T.DataType) -> bool:
-    """Whether ``dt`` is or nests a TimestampNTZType."""
-    if isinstance(dt, T.StructType):
-        return any(_has_ntz(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return _has_ntz(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _has_ntz(dt.keyType) or _has_ntz(dt.valueType)
-    return isinstance(dt, T.TimestampNTZType)
 
 
 CHANGE_TYPE_COL = "_change_type"
@@ -550,6 +542,17 @@ class Dataset:
     def _manifest_abs_paths(self, snapshot: md.Snapshot) -> List[str]:
         return [self.log.abs_path(p) for p in snapshot.manifest_files]
 
+    def _manifest_table(self, snapshot: md.Snapshot,
+                        columns=None) -> pa.Table:
+        """A snapshot's manifests (one or more) as one Arrow table.
+        Permissive: schema evolution (add_column) leaves manifests with
+        heterogeneous stats columns."""
+        return pa.concat_tables(
+            [pq.read_table(p, columns=columns)
+             for p in self._manifest_abs_paths(snapshot)],
+            promote_options="permissive",
+        )
+
     def data_files(
         self, filter_: FilterType = None, version=None
     ) -> List[str]:
@@ -946,143 +949,6 @@ class Dataset:
 
         return marked.mapInArrow(assign, out_schema)
 
-    def _int96_timestamps(self) -> bool:
-        return self.spark.conf.get(
-            "spark.sql.parquet.outputTimestampType") == "INT96"
-
-    def _driver_bytes_max(self) -> int:
-        """Largest output, in bytes, the driver writes itself: Spark's own
-        ``spark.sql.autoBroadcastJoinThreshold``, the size Spark agrees to
-        collect to the driver. -1 turns driver writes off, as it turns off
-        broadcasts.
-
-        Also -1 when the session writes INT96 and the table holds a
-        TimestampNTZ column: pyarrow writes every timestamp column INT96
-        or none, while Spark writes TimestampNTZ as INT64 (an INT96 one
-        has no footer min/max), so such a table stays on Spark's
-        writer."""
-        if self._int96_timestamps() and _has_ntz(self._physical_schema()):
-            return -1
-        return int(self.spark._jsparkSession.sessionState().conf()
-                   .autoBroadcastJoinThreshold())
-
-    def _local_arrow(self, df: DataFrame) -> Optional[pa.Table]:
-        """``df`` collected to Arrow when its optimized plan is a
-        ``LocalRelation`` (rows the driver built) within
-        ``_driver_bytes_max``; None otherwise."""
-        limit = self._driver_bytes_max()
-        if limit < 0:
-            return None
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation" \
-                or plan.stats().sizeInBytes() > limit:
-            return None
-        return df.toArrow()
-
-    def _physical_arrow(self, tbl: pa.Table) -> pa.Table:
-        """Logical-named Arrow rows (a local input, a collected read) cast
-        to the table's PHYSICAL file layout; every top-level column
-        nullable, as Spark writes parquet."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self._physical_schema())
-        target = pa.schema([
-            target.field(self._phys_name(n)).with_nullable(True)
-            for n in tbl.column_names
-        ])
-        return tbl.rename_columns(target.names).cast(target)
-
-    def _write_arrow_file(self, abs_path: str, tbl: pa.Table) -> None:
-        """Driver-side write of rows already in the physical layout."""
-        mf.write_data_file(abs_path, tbl,
-                           int96_timestamps=self._int96_timestamps())
-
-    def _write_data_files(self, data, physical: bool = False):
-        """Write data files for one commit; returns (manifest_rel, files,
-        rows, bytes).
-
-        ``data`` is a DataFrame or a list of Arrow tables. Spark writes a
-        DataFrame, one file per partition (the reference's sharded
-        writers, ray/ops/append.py:32-120). Arrow tables are an output
-        the driver already holds within ``_driver_bytes_max`` (slices of
-        a local input, a CoW delete's survivors); the
-        driver writes each non-empty one as a file with pyarrow, with no
-        Spark job (the reference's in-process ``LocalAppendOp``,
-        core/ops/append.py:164-244). Either way the driver then reads the
-        footer stats and writes the manifest.
-
-        ``physical=True`` means the rows already carry record-field
-        ADDRESS structs (the copy-on-write survivor rewrite) — blobs are
-        NOT rewritten, addresses carry over (reference ops/delete.py:
-        42-45)."""
-        commit_reldir = self.log.new_commit_data_reldir()
-        absdir = self.log.abs_path(commit_reldir)
-        if isinstance(data, list):
-            for i, part in enumerate(data):
-                if part.num_rows:
-                    self._write_arrow_file(
-                        os.path.join(absdir, f"part-{i:05d}.parquet"),
-                        self._physical_arrow(part))
-        else:
-            if self.record_fields and not physical:
-                data = rec.write_record_fields(data, self.location,
-                                               self.record_fields)
-            # Write half of the rename boundary: files always land under
-            # the immutable PHYSICAL names, keeping every data file
-            # uniform across renames (stats/pruning stay consistent
-            # table-wide).
-            self._to_physical(data).write.parquet(absdir)
-        rel_files = sorted(
-            os.path.join(commit_reldir, name)
-            for name in (os.listdir(absdir) if os.path.isdir(absdir)
-                         else [])
-            if name.endswith(".parquet")
-        )
-        stat_names = [n for n, _ in self._stats_fields()]
-        bloom_pks = self._bloom_pks()
-        stats = mf.collect_file_stats(
-            self.spark,
-            [self.log.abs_path(f) for f in rel_files],
-            stat_names,
-            bloom_pks=bloom_pks,
-            bloom_bpk=self._bloom_bpk(),
-        )
-        # Primary keys are NOT NULL (reference schema contract): a null
-        # key row can never be matched by upsert/delete-by-key/point
-        # reads, so it must be rejected loudly at ingress, not ingested
-        # as unreachable data. Detection is free — the footer stats
-        # just collected carry per-column null counts. (The written
-        # files are uncommitted orphans; vacuum reclaims them.)
-        self._reject_null_pks(stats)
-        manifest_rel = self.log.new_manifest_relpath()
-        rows, nbytes = mf.write_manifest(
-            self.spark,
-            self.log.abs_path(manifest_rel),
-            rel_files,
-            stats,
-            self._stats_fields(),
-            bloom_pks=bloom_pks,
-        )
-        if not physical and (self.metadata.constraints
-                             or self.metadata.not_null):
-            # Write-first CHECK enforcement: validate the files just
-            # written (still uncommitted orphans) with ONE pushed-down
-            # scan — row-group stats of compliant files falsify the
-            # violation predicate, so clean data costs footer reads.
-            # The input DataFrame is never re-evaluated (the same
-            # double-evaluation hazard merge() pins against).
-            violated = self._constraint_violation_names(
-                self._read_files(rel_files)
-            )
-            if violated:
-                raise ConstraintViolationError(
-                    f"Constraint(s) {violated} violated by "
-                    "incoming rows; write aborted before commit (the "
-                    "shard files are uncommitted orphans — vacuum "
-                    "reclaims them)"
-                )
-        return manifest_rel, rel_files, rows, nbytes
-
     # ------------------------------------------------------ constraints
     @staticmethod
     def _encode_constraints(check_constraints, schema, record_fields):
@@ -1347,51 +1213,14 @@ class Dataset:
         for predicates on ANY of the columns (operators/zorder.py), not
         just the lead one."""
         df = self._align(df)
-        if cluster_by is None and zorder_by is None:
-            spec = self.metadata.cluster_spec
-            if spec:
-                if spec.get("kind") == "zorder":
-                    zorder_by = list(spec["cols"])
-                else:
-                    cluster_by = list(spec["cols"])
-        if cluster_by and zorder_by:
-            raise UserInputError(
-                "cluster_by and zorder_by are mutually exclusive"
-            )
-        unknown = set(cluster_by or zorder_by or ()) \
-            - set(self.schema.fieldNames())
-        if unknown:
-            raise UserInputError(
-                f"Unknown {'zorder' if zorder_by else 'cluster'} "
-                f"columns: {unknown}")
-        # Rows the driver built (a LocalRelation within the driver-write
-        # bound) are written by the driver: clustering is a local sort,
-        # and the output is one file unless the caller asked for more.
-        local = None if zorder_by or self.record_fields \
-            else self._local_arrow(df)
-        n = target_files or self.spark.sparkContext.defaultParallelism
-        if local is not None:
-            if cluster_by:
-                local = local.sort_by([(c, "ascending") for c in cluster_by],
-                                      null_placement="at_start")
-            per_file = -(-local.num_rows // (target_files or 1))
-            df = [local.slice(i * per_file, per_file)
-                  for i in range(target_files or 1)]
-        elif zorder_by:
-            from space_spark.operators.zorder import zorder_layout
-
-            df = zorder_layout(df, zorder_by, n)
-        elif cluster_by:
-            df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
-                *cluster_by
-            )
-        elif target_files:
-            df = df.repartition(target_files)
+        cluster_by, zorder_by = wp.resolve_layout(self, cluster_by,
+                                                  zorder_by)
         # Transactions pin the head AFTER a reload (reference reloads at txn
         # start, core/storage.py:587-593) so stale handles re-pin instead of
         # spuriously conflicting.
         self.reload()
-        manifest_rel, files, rows, nbytes = self._write_data_files(df)
+        manifest_rel, files, rows, nbytes = wp.write_input(
+            self, df, cluster_by, zorder_by, target_files)
         if rows == 0 and commit_mutate is None:
             return self  # empty append: skip commit (test_runners.py:83-92)
         # With commit_mutate set, even an empty append commits (a metadata-
@@ -1416,7 +1245,7 @@ class Dataset:
                         commit_mutate=None,
                         operation: str = "APPEND") -> "Dataset":
         # Pins the constraint set the rows were validated against: the
-        # loaded one (_write_data_files or _reload_revalidating ran
+        # loaded one (wp.write_data_files or _reload_revalidating ran
         # under it).
         pinned = self.current_snapshot_id
         snap = md.append_snapshot(
@@ -1487,7 +1316,7 @@ class Dataset:
            groups only the WRITTEN keys (small side shuffles, map-side
            combined); (b) the clash check left-semi-joins the
            manifest-range-pruned existing keys against the written keys
-           — broadcast below ``BROADCAST_KEYS_MAX`` written rows, so
+           — broadcast below ``wp.BROADCAST_KEYS_MAX`` written rows, so
            the table side never exchanges a row. Each branch stops at
            the first offending key (limit 1). A small insert into a
            huge clustered table scans only the files whose stats
@@ -1500,7 +1329,7 @@ class Dataset:
         df = self._align(df)
         self.reload()
         pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = self._write_data_files(df)
+        manifest_rel, files, rows, nbytes = wp.write_data_files(self, df)
         if rows == 0:
             return self  # empty insert: nothing to check or commit
         bounds = self._bounds_from_manifest(manifest_rel)
@@ -1511,7 +1340,7 @@ class Dataset:
                 filter_=self._keys_range_expr(bounds), fields=pks
             )
             return (
-                old_keys.join(self._keys_join_side(new_keys, rows),
+                old_keys.join(wp.keys_join_side(new_keys, rows),
                               on=pks, how="left_semi")
                 .select(F.lit("clash").alias("__kind")).limit(1)
             )
@@ -1555,23 +1384,24 @@ class Dataset:
         (None, None) for that key — conservatively unbounded, pruning
         simply helps less."""
         tbl = pq.read_table(self.log.abs_path(manifest_rel))
-        tbl = tbl.filter(pc.greater(tbl[mf.NUM_ROWS_COL],
-                                    pa.scalar(0, pa.int64())))
         out = {}
         for k in self.primary_keys:
-            col = mf.STATS_PREFIX + self._phys_name(k)
-            mn = mx = None
-            if col in tbl.column_names and tbl.num_rows:
-                arr = tbl[col].combine_chunks()
-                mins = arr.field(mf.MIN_COL)
-                maxs = arr.field(mf.MAX_COL)
-                if mins.null_count == 0:
-                    mn = pc.min(mins).as_py()
-                if maxs.null_count == 0:
-                    mx = pc.max(maxs).as_py()
-            out[f"mn_{k}"] = mn
-            out[f"mx_{k}"] = mx
+            out[f"mn_{k}"], out[f"mx_{k}"] = self._stats_bounds(tbl, k)
         return out
+
+    def _stats_bounds(self, man_tbl: pa.Table, col: str):
+        """(min, max) of column ``col`` over the non-empty files of
+        manifest rows ``man_tbl``; a side is None when no file counts or
+        any file lacks that side's stat."""
+        tbl = man_tbl.filter(pc.greater(man_tbl[mf.NUM_ROWS_COL],
+                                        pa.scalar(0, pa.int64())))
+        scol = mf.STATS_PREFIX + self._phys_name(col)
+        if scol not in tbl.column_names or not tbl.num_rows:
+            return None, None
+        arr = tbl[scol].combine_chunks()
+        mins, maxs = arr.field(mf.MIN_COL), arr.field(mf.MAX_COL)
+        return (pc.min(mins).as_py() if mins.null_count == 0 else None,
+                pc.max(maxs).as_py() if maxs.null_count == 0 else None)
 
     def overwrite(self, df: DataFrame) -> "Dataset":
         """Replace the ENTIRE table contents with ``df`` as ONE snapshot
@@ -1600,7 +1430,7 @@ class Dataset:
         steps."""
         df = self._align(df)
         self.reload()
-        manifest_rel, files, rows, nbytes = self._write_data_files(df)
+        manifest_rel, files, rows, nbytes = wp.write_data_files(self, df)
         rec_rel = self._write_record_manifest_for(files)
 
         def attempt():
@@ -1612,9 +1442,7 @@ class Dataset:
                 self._manifest_abs_paths(parent)
             )
             if old_files:
-                deletes_rel = os.path.join(
-                    "_space", "changes", f"deletes_{md.new_uuid()}"
-                )
+                deletes_rel = self.log.new_deletes_reldir()
                 old = self._apply_vectors(
                     self._read_files(sorted(old_files)), parent
                 )
@@ -1688,33 +1516,16 @@ class Dataset:
         delete vectors). Keeps the invariant the DML model checks: any
         snapshot carrying a PK delete stream also carries the bitmap
         encoding of the same rows."""
-        import numpy as np
-
-        from space_spark.core import bitmaps as bm
-
-        man_paths = self._manifest_abs_paths(parent)
-        if not man_paths:
+        if not parent.manifest_files:
             return None
-        man_tbl = pa.concat_tables(
-            [pq.read_table(p, columns=[mf.FILE_PATH_COL,
-                                       mf.NUM_ROWS_COL])
-             for p in man_paths],
-            promote_options="permissive",
-        )
+        man_tbl = self._manifest_table(
+            parent, columns=[mf.FILE_PATH_COL, mf.NUM_ROWS_COL])
         masks: Dict[str, object] = {}
         vecs = list(getattr(parent, "delete_vector_files", []) or [])
         if vecs:
-            vt = bm.read_sidecars(
-                [self.log.abs_path(r) for r in vecs],
-                columns=("file", "num_rows", "bitmap"),
-            )
-            for f, nr, blob in zip(vt["file"].to_pylist(),
-                                   vt["num_rows"].to_pylist(),
-                                   vt["bitmap"].to_pylist()):
-                cur = bm.decode_positions(blob, nr)
-                prev = masks.get(f)
-                masks[f] = (np.union1d(prev, cur)
-                            if prev is not None else cur)
+            for f, nr, _, blob in zip(*bm.fold_sidecars(
+                    [self.log.abs_path(r) for r in vecs])):
+                masks[f] = bm.decode_positions(blob, nr)
         files, nrows, ndels, blobs = [], [], [], []
         for rel, nr in zip(man_tbl[mf.FILE_PATH_COL].to_pylist(),
                            man_tbl[mf.NUM_ROWS_COL].to_pylist()):
@@ -1740,15 +1551,8 @@ class Dataset:
         if not files:
             return None
         bitmap_rel = self.log.new_bitmap_relpath()
-        pq.write_table(
-            pa.table({
-                "file": pa.array(files, pa.string()),
-                "num_rows": pa.array(nrows, pa.int64()),
-                "n_deleted": pa.array(ndels, pa.int64()),
-                "bitmap": pa.array(blobs, pa.binary()),
-            }),
-            self.log.abs_path(bitmap_rel),
-        )
+        bm.write_sidecar(self.log.abs_path(bitmap_rel), files, nrows, ndels,
+                         blobs)
         return bitmap_rel
 
     def update(self, filter_: Expr,
@@ -1834,29 +1638,11 @@ class Dataset:
         # for the probe's manifest pruning come free from the written
         # files' stats (driver-side footers, no job). On a duplicate-PK
         # raise the uncommitted files are orphans; vacuum reclaims them.
-        local = None if self.record_fields else self._local_arrow(df)
-        manifest_rel, files, rows, nbytes = self._write_data_files(
-            df if local is None else [local])
+        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
         if rows == 0:
             return self
-        pks = self.primary_keys
-        new_keys = self._read_files(files).select(*pks)
-        keys_arrow = None
-        if rows <= self.BROADCAST_KEYS_MAX:
-            # A key set the probe would broadcast anyway is read by the
-            # driver straight from the written files' key columns.
-            keys_arrow = self._read_keys_arrow(files)
-            dup = keys_arrow.group_by(pks).aggregate([]).num_rows < rows
-            n_keys = rows
-        else:
-            row = (
-                new_keys.groupBy(*pks).count()
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.max("count").alias("mx"))
-                .collect()[0]
-            )
-            dup = row["mx"] is not None and row["mx"] > 1
-            n_keys = int(row["n"] or 0)
+        new_keys, n_keys, keys_arrow, dup = wp.written_keys(self, files,
+                                                            rows)
         if dup:
             raise UserInputError("Input data has duplicate primary keys")
         return self._apply_changes_retry(
@@ -1865,23 +1651,6 @@ class Dataset:
             manifest_rel, files, rows, nbytes, operation=operation,
             keys_arrow=keys_arrow,
         )
-
-    def _read_keys_arrow(self, rel_files: List[str]) -> pa.Table:
-        """The primary-key columns of written data files, read by the
-        driver with pyarrow, under logical names and the table's Arrow
-        key types (an INT96 timestamp reads back as naive nanoseconds)."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        pks = self.primary_keys
-        tbl = pa.concat_tables([
-            pq.read_table(self.log.abs_path(f),
-                          columns=[self._phys_name(k) for k in pks])
-            for f in rel_files
-        ])
-        key_schema = to_arrow_schema(
-            T.StructType([self.schema[k] for k in pks]))
-        return tbl.rename_columns(pks).cast(
-            pa.schema([f.with_nullable(True) for f in key_schema]))
 
     @staticmethod
     def _normalize_matched_clauses(when_matched, matched_condition,
@@ -2347,6 +2116,16 @@ class Dataset:
                                       _identity_preassigned=True,
                                       operation="MERGE")
 
+    def _key_bounds(self, keys_df: DataFrame):
+        """One aggregate over a key set: its row count ``n`` and the
+        ``mn_<pk>``/``mx_<pk>`` bounds ``_keys_range_expr`` consumes."""
+        pks = self.primary_keys
+        return keys_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.min(k).alias(f"mn_{k}") for k in pks],
+            *[F.max(k).alias(f"mx_{k}") for k in pks],
+        ).collect()[0]
+
     def _keys_range_expr(self, bounds) -> FilterType:
         """Falsifiable manifest-prune expression from a key set's min/max
         bounds (conjunction of per-PK ranges). Shared by ``read_by_keys``
@@ -2365,36 +2144,25 @@ class Dataset:
     def _abs_to_rel_file(self, uri: str) -> str:
         return self.log.rel_path(urlparse(uri).path)
 
-    def _write_delete_bitmaps(self, deletes_rel: str, aff_manifest: pa.Table
-                              ) -> Optional[str]:
+    def _write_delete_bitmaps(self, positions: pa.Table,
+                              man_tbl: pa.Table):
         """Row-level delete bitmap sidecar (metadata.proto:160-191 RowBitmap
         analog): one row per affected file with the deleted row POSITIONS
         compactly encoded (core/bitmaps.py) — O(deleted) bytes, vs the PK
-        parquet's O(deleted * pk_width). The driver-side group-by is
-        bounded by the same deletes file it already reads for the
-        affected-file list; positions come from the probe's
-        ``_metadata.row_index`` column."""
-        import numpy as np
-
-        from space_spark.core import bitmaps as bm
-
-        try:
-            tbl = pq.read_table(
-                self.log.abs_path(deletes_rel), columns=["__file", "__pos"]
-            )
-        except Exception:
-            return None  # pre-bitmap deletes log: no __pos column
-        if tbl.num_rows == 0:
-            return None
+        parquet's O(deleted * pk_width). ``positions`` is the CoW split's
+        or MoR probe's ``__file``/``__pos`` table, already on the driver;
+        ``man_tbl`` the manifest rows giving each file's row count.
+        Returns (sidecar relpath, deleted rows it encodes), (None, 0)
+        when no affected file is in ``man_tbl``."""
         rows_by_file = dict(
             zip(
-                aff_manifest[mf.FILE_PATH_COL].to_pylist(),
-                aff_manifest[mf.NUM_ROWS_COL].to_pylist(),
+                man_tbl[mf.FILE_PATH_COL].to_pylist(),
+                man_tbl[mf.NUM_ROWS_COL].to_pylist(),
             )
         )
-        fcol = tbl.column("__file").combine_chunks().dictionary_encode()
+        fcol = positions.column("__file").combine_chunks().dictionary_encode()
         codes = fcol.indices.to_numpy(zero_copy_only=False)
-        pos = tbl.column("__pos").combine_chunks().to_numpy(
+        pos = positions.column("__pos").combine_chunks().to_numpy(
             zero_copy_only=False
         )
         files, nrows, ndels, blobs = [], [], [], []
@@ -2409,20 +2177,11 @@ class Dataset:
             ndels.append(int(p.size))
             blobs.append(bm.encode_positions(p, int(nr)))
         if not files:
-            return None
+            return None, 0
         bitmap_rel = self.log.new_bitmap_relpath()
-        pq.write_table(
-            pa.table(
-                {
-                    "file": pa.array(files, pa.string()),
-                    "num_rows": pa.array(nrows, pa.int64()),
-                    "n_deleted": pa.array(ndels, pa.int64()),
-                    "bitmap": pa.array(blobs, pa.binary()),
-                }
-            ),
-            self.log.abs_path(bitmap_rel),
-        )
-        return bitmap_rel
+        bm.write_sidecar(self.log.abs_path(bitmap_rel), files, nrows, ndels,
+                         blobs)
+        return bitmap_rel, sum(ndels)
 
     # Above this many live MoR delete-vector sidecars, a new MoR delete
     # folds them all into ONE merged sidecar at commit time — pure
@@ -2435,37 +2194,9 @@ class Dataset:
     def _fold_vector_rels(self, vec_rels: List[str]) -> str:
         """Union N delete-vector sidecars into one merged sidecar file
         (positions deduped per data file) and return its rel path."""
-        from space_spark.core import bitmaps as bm
-
-        tbl = bm.read_sidecars(
-            [self.log.abs_path(r) for r in vec_rels],
-            columns=["file", "num_rows", "bitmap"],
-        )
-        by_file: Dict[str, list] = {}
-        nrows_of: Dict[str, int] = {}
-        for f, nr, blob in zip(tbl["file"].to_pylist(),
-                               tbl["num_rows"].to_pylist(),
-                               tbl["bitmap"].to_pylist()):
-            by_file.setdefault(f, []).append(blob)
-            nrows_of[f] = nr
-        files, nrows, ndels, blobs = [], [], [], []
-        for f in sorted(by_file):
-            nr = nrows_of[f]
-            blob, nd = bm.merge_blobs(by_file[f], nr)
-            files.append(f)
-            nrows.append(int(nr))
-            ndels.append(nd)
-            blobs.append(blob)
         folded_rel = self.log.new_bitmap_relpath()
-        pq.write_table(
-            pa.table({
-                "file": pa.array(files, pa.string()),
-                "num_rows": pa.array(nrows, pa.int64()),
-                "n_deleted": pa.array(ndels, pa.int64()),
-                "bitmap": pa.array(blobs, pa.binary()),
-            }),
-            self.log.abs_path(folded_rel),
-        )
+        bm.write_sidecar(self.log.abs_path(folded_rel), *bm.fold_sidecars(
+            [self.log.abs_path(r) for r in vec_rels]))
         return folded_rel
 
     def compact_delete_vectors(self) -> "Dataset":
@@ -2484,27 +2215,37 @@ class Dataset:
             vecs = list(getattr(snapshot, "delete_vector_files", []) or [])
             if len(vecs) <= 1:
                 return self
-            folded = self._fold_vector_rels(vecs)
-            snap = md.Snapshot(
-                snapshot_id=-1,
-                parent_snapshot_id=snap_id,
-                created_at="",
-                manifest_files=list(snapshot.manifest_files),
-                num_rows=snapshot.num_rows,
-                data_bytes=snapshot.data_bytes,
-                added_files=[],
-                deleted_pks_file=None,
-                deleted_bitmap_file=None,
-                delete_vector_files=[folded],
-                record_manifest_files=list(snapshot.record_manifest_files),
-                operation="COMPACT DELETE VECTORS",
-            )
-            self.metadata = self.log.commit_snapshot(
-                snap_id, self.branch, snap
-            )
+            self._commit_vectors(snap_id, [self._fold_vector_rels(vecs)],
+                                 "COMPACT DELETE VECTORS")
             return self
 
         return md.retry_commit(attempt)
+
+    def _commit_vectors(self, snap_id: int, vec_list: List[str],
+                        operation: str, n_masked: int = 0,
+                        deletes_rel: Optional[str] = None,
+                        bitmap_rel: Optional[str] = None) -> None:
+        """Commit snapshot ``snap_id``'s data files unchanged under a new
+        delete-vector list, ``n_masked`` more rows masked, with the
+        optional change log of those rows."""
+        snapshot = self.metadata.snapshot(snap_id)
+        snap = md.Snapshot(
+            snapshot_id=-1,
+            parent_snapshot_id=snap_id,
+            created_at="",
+            manifest_files=list(snapshot.manifest_files),
+            # data_bytes tracks PHYSICAL live bytes — unchanged: the
+            # masked rows still occupy their files until a rewrite.
+            num_rows=snapshot.num_rows - n_masked,
+            data_bytes=snapshot.data_bytes,
+            added_files=[],
+            deleted_pks_file=deletes_rel,
+            deleted_bitmap_file=bitmap_rel,
+            delete_vector_files=vec_list,
+            record_manifest_files=list(snapshot.record_manifest_files),
+            operation=operation,
+        )
+        self.metadata = self.log.commit_snapshot(snap_id, self.branch, snap)
 
     def delete(self, filter_: Expr, rewrite: bool = True) -> "Dataset":
         """Delete rows matching ``filter_``.
@@ -2532,7 +2273,9 @@ class Dataset:
         pred_true = F.coalesce(filter_.to_spark(), F.lit(False))
         if not rewrite:
             return self._delete_mor(pred_true, prune_expr=filter_)
-        return self._delete_predicate(pred_true, prune_expr=filter_)
+        self._delete_split(lambda: wp.cow_split(self, filter_,
+                                                pred=pred_true))
+        return self
 
     def _delete_mor(self, pred_true, prune_expr: FilterType) -> "Dataset":
         def attempt():
@@ -2541,83 +2284,37 @@ class Dataset:
             files = self._probe_candidates(snapshot, prune_expr)
             if not files:
                 return self
-            deletes_rel, affected = self._write_probe_deletes(
-                self._probe_frame(snapshot, files).where(pred_true))
-            if not affected:
+            split = wp.probe_deletes(
+                self, wp.probe_frame(self, snapshot, files).where(pred_true))
+            if not split.affected:
                 return self
-            man_tbl = pa.concat_tables(
-                [pq.read_table(p) for p in
-                 self._manifest_abs_paths(snapshot)],
-                promote_options="permissive",
-            )
-            aff_manifest = man_tbl.filter(
-                pc.is_in(man_tbl[mf.FILE_PATH_COL],
-                         value_set=pa.array(affected))
-            )
-            bitmap_rel = self._write_delete_bitmaps(deletes_rel,
-                                                    aff_manifest)
+            bitmap_rel, n_masked = self._write_delete_bitmaps(
+                split.positions, self._manifest_table(snapshot))
             if bitmap_rel is None:
-                # Affected files missing from manifest stats (or a sidecar
-                # write failure): surface a clean error rather than
-                # dereferencing None below.
+                # Affected files missing from manifest stats: surface a
+                # clean error rather than dereferencing None below.
                 raise SpaceError(
                     "merge-on-read delete: could not build delete vectors "
-                    f"for affected files {sorted(affected)[:5]}...; "
+                    f"for affected files {sorted(split.affected)[:5]}...; "
                     "use delete(rewrite=True) for the copy-on-write path"
                 )
-            n_masked = int(sum(
-                pq.read_table(
-                    self.log.abs_path(bitmap_rel), columns=["n_deleted"]
-                )["n_deleted"].to_pylist()
-            ))
             vec_list = list(
                 getattr(snapshot, "delete_vector_files", []) or []
             ) + [bitmap_rel]
             if len(vec_list) > self.DELETE_VECTOR_FOLD_MAX:
                 vec_list = [self._fold_vector_rels(vec_list)]
-            snap = md.Snapshot(
-                snapshot_id=-1,
-                parent_snapshot_id=snap_id,
-                created_at="",
-                manifest_files=list(snapshot.manifest_files),
-                # data_bytes tracks PHYSICAL live bytes — unchanged: the
-                # masked rows still occupy their files until a rewrite.
-                num_rows=snapshot.num_rows - n_masked,
-                data_bytes=snapshot.data_bytes,
-                added_files=[],
-                deleted_pks_file=deletes_rel,
-                deleted_bitmap_file=bitmap_rel,
-                delete_vector_files=vec_list,
-                record_manifest_files=list(snapshot.record_manifest_files),
-                operation="DELETE",
-            )
-            self.metadata = self.log.commit_snapshot(
-                snap_id, self.branch, snap
-            )
+            self._commit_vectors(snap_id, vec_list, "DELETE", n_masked,
+                                 split.deletes_rel, bitmap_rel)
             return self
 
         return md.retry_commit(attempt, self.reload)
-
-    # A key set under this many rows is broadcast to the probe side; above
-    # it, a shuffle-hash join (a bulk upsert's key set can exceed executor
-    # memory — an unconditional broadcast would OOM at scale).
-    BROADCAST_KEYS_MAX = 500_000
-
-    def _keys_join_side(self, keys_df: DataFrame, n_keys=None) -> DataFrame:
-        if n_keys is None:
-            n_keys = keys_df.count()
-        if n_keys <= self.BROADCAST_KEYS_MAX:
-            return keys_df.hint("broadcast")
-        return keys_df.hint("shuffle_hash")
 
     _DERIVE_PRUNE = object()  # sentinel: build prune_expr from the keys
 
     def _matching_delete_parts(self, keys_df: DataFrame, n_keys=None,
                                prune_expr=_DERIVE_PRUNE, keys_arrow=None):
-        """CoW-delete inputs for rows whose PKs appear in ``keys_df``:
-        (affected rel files, survivors, written deletes relpath) —
-        ([], None, None) when nothing matches. Computes and writes the
-        deletes file, never commits.
+        """``wp.cow_split`` of the rows whose PKs appear in ``keys_df``
+        (``keys_arrow``: the same keys already on the driver).
 
         The probe is manifest-pruned by the keys' min/max range (same
         derivation as ``read_by_keys``) — a 10-row upsert into a huge
@@ -2625,50 +2322,16 @@ class Dataset:
         whole table. ``prune_expr`` overrides the derived range
         (upsert passes its written files' footer bounds, apply_changes'
         unique-adds path a union-of-boxes expression; an explicit None
-        means no pruning).
-
-        When the keys fit a broadcast (``BROADCAST_KEYS_MAX``) and the
-        candidates fit ``_driver_fits``, the split runs on the driver
-        (``_split_on_driver``): one Spark read of the candidates, the
-        survivors Arrow tables. ``keys_arrow``: the keys already on the
-        driver. Otherwise one distributed probe job
-        writes the deletes and ``survivors`` is a DataFrame."""
-        pks = self.primary_keys
+        means no pruning)."""
         if prune_expr is Dataset._DERIVE_PRUNE:
-            row = keys_df.agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[F.min(k).alias(f"mn_{k}") for k in pks],
-                *[F.max(k).alias(f"mx_{k}") for k in pks],
-            ).collect()[0]
+            row = self._key_bounds(keys_df)
             if n_keys is None:
-                n_keys = int(row["__n"] or 0)
+                n_keys = int(row["n"] or 0)
             prune_expr = self._keys_range_expr(row)
         if n_keys == 0:
-            return [], None, None
-        snapshot = self.metadata.snapshot(self.current_snapshot_id)
-        files = self._probe_candidates(snapshot, prune_expr)
-        if not files:
-            return [], None, None
-        if n_keys <= self.BROADCAST_KEYS_MAX and self._driver_fits(files):
-            if keys_arrow is None and all(
-                    keys_df.schema[k].dataType == self.schema[k].dataType
-                    for k in pks):
-                keys_arrow = keys_df.toArrow()
-            if keys_arrow is not None:
-                cand = self._probe_frame(snapshot, files).toArrow()
-                return self._split_on_driver(
-                    cand, self._keys_match(cand, keys_arrow))
-        keys = self._keys_join_side(keys_df, n_keys)
-        deletes_rel, affected = self._write_probe_deletes(
-            self._probe_frame(snapshot, files)
-            .join(keys, on=pks, how="left_semi")
-        )
-        if not affected:
-            return [], None, None
-        survivors = self._apply_vectors(
-            self._read_files(affected), snapshot
-        ).join(keys, on=pks, how="left_anti")
-        return affected, survivors, deletes_rel
+            return wp.NO_MATCH
+        return wp.cow_split(self, prune_expr, keys_df=keys_df,
+                            n_keys=n_keys, keys_arrow=keys_arrow)
 
     def _probe_candidates(self, snapshot, prune_expr: FilterType):
         """(rel file, manifest size bytes) of the files whose manifest
@@ -2680,133 +2343,6 @@ class Dataset:
             self._stats_fields(),
             with_sizes=True,
         )
-
-    # Candidate Parquet bytes up to which the driver's split of a CoW
-    # delete beats Spark's probe and survivor jobs. Measured crossover
-    # (one candidate file, two keys, median of 6 alternating reps,
-    # local[4] on a shared 4-core VM): 3.0 MB 0.78 s vs 1.02 s, 4.0 MB
-    # 0.88 s vs 0.87 s, 5.1 MB 1.11 s vs 1.08 s, 9.7 MB 2.04 s vs 1.53 s.
-    DRIVER_SPLIT_MAX_BYTES = 4 << 20
-
-    def _driver_fits(self, files) -> bool:
-        """Whether probe candidates (``_probe_candidates`` pairs) are small
-        enough for the driver to read and split them itself: within
-        ``_driver_bytes_max`` and ``DRIVER_SPLIT_MAX_BYTES``."""
-        return sum(size for _, size in files) <= min(
-            self._driver_bytes_max(), self.DRIVER_SPLIT_MAX_BYTES)
-
-    def _probe_frame(self, snapshot, files) -> DataFrame:
-        """The probe candidates' rows with their existing delete vectors
-        applied (already-deleted rows are never re-logged), each tagged
-        with its source file (``__file``) and row position (``__pos``)."""
-        # Provenance columns BEFORE the vector mask: input_file_name()
-        # must bind to the single parquet source, not the mask join.
-        return self._apply_vectors(
-            self._read_files([f for f, _ in files])
-            .withColumn("__file", F.input_file_name())
-            .withColumn("__pos", F.col("_metadata.row_index")),
-            snapshot,
-        )
-
-    def _keys_match(self, cand: pa.Table, keys: pa.Table) -> pa.Array:
-        """Mask of the candidate rows whose PKs appear in ``keys``. The
-        join carries only the key columns and a row index — Acero's join
-        cannot carry struct payloads such as record-field addresses —
-        and a left-semi join neither repeats a row for a repeated key
-        nor matches a NULL key, as Spark's does not."""
-        import numpy as np
-
-        pks = self.primary_keys
-        narrow = cand.select(pks).append_column(
-            "__row", pa.array(np.arange(cand.num_rows)))
-        key_types = pa.schema([narrow.schema.field(k).with_nullable(True)
-                               for k in pks])
-        hit = narrow.join(keys.select(pks).cast(key_types),
-                          keys=pks, join_type="left semi")["__row"]
-        return pc.is_in(narrow["__row"], value_set=hit)
-
-    def _split_on_driver(self, cand: pa.Table, matched):
-        """A CoW delete's split over a candidate read held on the
-        driver (``_probe_frame`` rows, ``matched`` a boolean mask): the
-        matched rows become the deletes log, written with pyarrow, and
-        the unmatched rows of the files holding a match become the
-        survivors. Returns (affected rel files, survivor tables, one per
-        output file, deletes relpath) — ([], None, None) when nothing
-        matches.
-
-        Like Spark's file packing, which bounds the survivor rewrite's
-        width, the survivors go to at most ``defaultParallelism`` files:
-        the affected files, ordered by their lead cluster (else key)
-        column, are packed in runs of neighbours, each in row order. A
-        few affected files keep one output each, and so their key
-        ranges."""
-        import numpy as np
-
-        deleted = cand.filter(matched)
-        if deleted.num_rows == 0:
-            return [], None, None
-        hit_files = pc.unique(deleted["__file"])
-        lead = ((self.metadata.cluster_spec or {}).get("cols")
-                or self.primary_keys)[0]
-        order = cand.filter(pc.is_in(cand["__file"], value_set=hit_files)) \
-            .group_by("__file").aggregate([(lead, "min")]) \
-            .sort_by(f"{lead}_min")["__file"].to_pylist()
-        kept = cand.filter(pc.invert(matched))
-        survivors = [
-            pa.concat_tables([
-                kept.filter(pc.equal(kept["__file"], order[i]))
-                .sort_by("__pos") for i in run
-            ]).drop_columns(["__file", "__pos"])
-            for run in np.array_split(np.arange(len(order)), min(
-                len(order), self.spark.sparkContext.defaultParallelism))
-        ]
-        deletes_rel = self.log.new_deletes_relpath().replace(".parquet", "")
-        log_tbl = self._physical_arrow(deleted.select(self.primary_keys))
-        for c in ("__file", "__pos"):
-            log_tbl = log_tbl.append_column(c, deleted[c])
-        self._write_arrow_file(
-            os.path.join(self.log.abs_path(deletes_rel), "part-00000.parquet"),
-            log_tbl)
-        affected = sorted(
-            {self._abs_to_rel_file(u) for u in hit_files.to_pylist()})
-        return affected, survivors, deletes_rel
-
-    def _write_probe_deletes(self, matches: DataFrame):
-        """The distributed probe of a MoR delete, or of a CoW delete over
-        the driver bound. ONE job materializes it: matched rows'
-        (PKs, source file, row position) land directly as the change-log
-        deletes file; the affected-file list is then a driver-side column
-        read of that (small) output. Readers of the deletes file select
-        the PK columns, so the extra ``__file``/``__pos`` provenance
-        columns ride along for free; ``__pos`` (``_metadata.row_index``)
-        additionally feeds the per-file delete BITMAP sidecar built at
-        commit time."""
-        pks = self.primary_keys
-        deletes_rel = self.log.new_deletes_relpath().replace(".parquet", "")
-        abs_del = self.log.abs_path(deletes_rel)
-        # Changelog PK files are written under PHYSICAL names too, so the
-        # delete stream stays uniform across column renames.
-        matches.select(
-            *[F.col(k).alias(self._phys_name(k)) for k in pks],
-            "__file", "__pos",
-        ).write.parquet(abs_del)
-        # Only a write with no part file at all (zero partitions) means
-        # "no matches"; any failure to read the log back must surface —
-        # read as empty, it would commit the delete as a no-op.
-        parts = [n for n in os.listdir(abs_del) if n.endswith(".parquet")]
-        tbl = pq.read_table(abs_del, columns=["__file"]) if parts else None
-        if tbl is None or tbl.num_rows == 0:
-            import shutil
-
-            shutil.rmtree(abs_del, ignore_errors=True)
-            return None, []
-        affected = sorted(
-            {
-                self._abs_to_rel_file(u)
-                for u in pc.unique(tbl["__file"].combine_chunks()).to_pylist()
-            }
-        )
-        return deletes_rel, affected
 
     def apply_changes(self, adds: DataFrame,
                       delete_keys: DataFrame,
@@ -2846,7 +2382,7 @@ class Dataset:
         adds = self._align(adds, skip_identity=_identity_preassigned)
         self.reload()
         pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = self._write_data_files(adds)
+        manifest_rel, files, rows, nbytes = wp.write_data_files(self, adds)
         dk = delete_keys.select(*pks)
         if rows > 0:
             new_keys = self._read_files(files).select(*pks)
@@ -2901,18 +2437,14 @@ class Dataset:
         adds = self._align(adds)
         self.reload()
         pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = self._write_data_files(adds)
+        manifest_rel, files, rows, nbytes = wp.write_data_files(self, adds)
         dk = delete_keys.select(*pks)
         with self._release_new_blocks():
             # Pin delete_keys (nondeterministic-source hazard, same
             # argument as the fused path); its bounds aggregate is
             # the first action and materializes the checkpoint.
             dk = dk.localCheckpoint(eager=False)
-            dkrow = dk.agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.min(k).alias(f"mn_{k}") for k in pks],
-                *[F.max(k).alias(f"mx_{k}") for k in pks],
-            ).collect()[0]
+            dkrow = self._key_bounds(dk)
             n_dk = int(dkrow["n"] or 0)
             # Upper bound on distinct keys (adds may overlap dk);
             # exact for the ==0 emptiness test, conservative for
@@ -2983,12 +2515,12 @@ class Dataset:
 
         def attempt():
             pinned = self.current_snapshot_id
-            affected, survivors, deletes_rel = self._matching_delete_parts(
+            split = self._matching_delete_parts(
                 keys_df, n_keys=n_keys, prune_expr=prune_expr,
                 keys_arrow=keys_arrow,
             )
             self._commit_rewrite(
-                pinned, affected, survivors, deletes_rel,
+                pinned, split,
                 append_manifest=manifest_rel, append_files=files,
                 append_rows=rows, append_bytes=nbytes,
                 append_record_manifest=rec_rel,
@@ -3021,47 +2553,22 @@ class Dataset:
     def _delete_matching(self, keys_df: DataFrame, commit_mutate=None) -> bool:
         """Delete rows whose PKs appear in keys_df (MV refresh's delete
         half). Returns whether a snapshot was committed."""
+        return self._delete_split(lambda: self._matching_delete_parts(keys_df),
+                                  commit_mutate)
+
+    def _delete_split(self, split_fn, commit_mutate=None) -> bool:
+        """Commit ``split_fn()``, a CoW split of the head, as one DELETE
+        snapshot, re-splitting on a conflict. Returns whether a snapshot
+        was committed."""
 
         def attempt():
             snap_id = self.current_snapshot_id
-            affected, survivors, deletes_rel = self._matching_delete_parts(
-                keys_df
-            )
-            if not affected:
+            split = split_fn()
+            if not split.affected:
                 return False
-            self._commit_rewrite(snap_id, affected, survivors,
-                                 deletes_rel, mutate=commit_mutate,
+            self._commit_rewrite(snap_id, split, mutate=commit_mutate,
                                  operation="DELETE")
             return True
-
-        return md.retry_commit(attempt, self.reload)
-
-    def _delete_predicate(self, pred_true,
-                          prune_expr: FilterType) -> "Dataset":
-        def attempt():
-            snap_id = self.current_snapshot_id
-            snapshot = self.metadata.snapshot(snap_id)
-            files = self._probe_candidates(snapshot, prune_expr)
-            if not files:
-                return self
-            if self._driver_fits(files):
-                # One read tags each row with the predicate; the driver
-                # splits it like a keyed delete.
-                cand = self._probe_frame(snapshot, files) \
-                    .withColumn("__del", pred_true).toArrow()
-                affected, survivors, deletes_rel = self._split_on_driver(
-                    cand.drop_columns(["__del"]), cand["__del"])
-            else:
-                deletes_rel, affected = self._write_probe_deletes(
-                    self._probe_frame(snapshot, files).where(pred_true))
-                survivors = self._apply_vectors(
-                    self._read_files(affected), snapshot
-                ).where(~pred_true)
-            if not affected:
-                return self
-            self._commit_rewrite(snap_id, affected, survivors,
-                                 deletes_rel, operation="DELETE")
-            return self
 
         return md.retry_commit(attempt, self.reload)
 
@@ -3076,8 +2583,6 @@ class Dataset:
         if not vecs or not affected:
             return vecs, 0
         aff = set(affected)
-        from space_spark.core import bitmaps as bm
-
         # One batched read of every sidecar (single Arrow-dataset scan
         # when >8), grouped back per source file so untouched sidecars
         # keep their rel path unchanged.
@@ -3121,9 +2626,7 @@ class Dataset:
     def _commit_rewrite(
         self,
         pinned: int,
-        affected: List[str],
-        survivors: Union[DataFrame, List[pa.Table], None],
-        deletes_rel: Optional[str],
+        split: wp.CowSplit,
         append_manifest: Optional[str] = None,
         append_files: Optional[List[str]] = None,
         append_rows: int = 0,
@@ -3133,11 +2636,12 @@ class Dataset:
         pinned_constraints_version: Optional[int] = None,
         operation: Optional[str] = None,
     ) -> None:
-        """One snapshot combining a CoW rewrite of ``affected`` files (with
-        ``survivors`` re-written and the pre-written ``deletes_rel`` PK log
-        attached) and an optional already-written append — upsert's
-        delete+add lands as a single commit (reference merge_patches,
-        ops/insert.py:93-99)."""
+        """One snapshot combining a CoW rewrite of ``split.affected`` files
+        (with its survivors re-written, the pre-written deletes log
+        attached and the bitmap sidecar built from its positions) and an
+        optional already-written append — upsert's delete+add lands as a
+        single commit (reference merge_patches, ops/insert.py:93-99)."""
+        affected, survivors, deletes_rel, positions = split
         parent = self.metadata.snapshot(pinned)
         removed_rows = removed_bytes = surv_rows = surv_bytes = 0
         bitmap_rel = None
@@ -3152,35 +2656,23 @@ class Dataset:
         )
         if affected:
             # Rows removed from the table = affected rows - surviving rows.
-            old_manifests = self._manifest_abs_paths(parent)
-            # permissive: schema evolution (add_column) leaves parent
-            # manifests with heterogeneous stats columns.
-            man_tbl = pa.concat_tables(
-                [pq.read_table(p) for p in old_manifests],
-                promote_options="permissive",
-            )
+            man_tbl = self._manifest_table(parent)
             aff_mask = pc.is_in(
                 man_tbl[mf.FILE_PATH_COL], value_set=pa.array(affected)
             )
-            removed_rows = pc.sum(
-                pc.if_else(aff_mask, man_tbl[mf.NUM_ROWS_COL],
-                           pa.scalar(0, pa.int64()))
-            ).as_py() or 0
-            removed_bytes = pc.sum(
-                pc.if_else(aff_mask, man_tbl[mf.SIZE_BYTES_COL],
-                           pa.scalar(0, pa.int64()))
-            ).as_py() or 0
+            removed = man_tbl.filter(aff_mask)
+            removed_rows = pc.sum(removed[mf.NUM_ROWS_COL]).as_py() or 0
+            removed_bytes = pc.sum(removed[mf.SIZE_BYTES_COL]).as_py() or 0
             carry = man_tbl.filter(pc.invert(aff_mask))
             if deletes_rel:
-                bitmap_rel = self._write_delete_bitmaps(
-                    deletes_rel, man_tbl.filter(aff_mask)
-                )
+                bitmap_rel, _ = self._write_delete_bitmaps(positions,
+                                                           man_tbl)
 
             # Write survivors as new data files (may be zero files/rows);
             # they are already physical rows (addresses carried over, blobs
             # intact).
-            surv_rel, _, surv_rows, surv_bytes = self._write_data_files(
-                survivors, physical=True
+            surv_rel, _, surv_rows, surv_bytes = wp.write_data_files(
+                self, survivors, physical=True
             )
             carry_rel = self.log.new_manifest_relpath()
             pq.write_table(carry, self.log.abs_path(carry_rel))
@@ -3426,28 +2918,11 @@ class Dataset:
         """
         if target_bytes <= 0:
             raise UserInputError("target_bytes must be positive")
-        if cluster_by is None and zorder_by is None:
-            # Declared table clustering (Delta CLUSTER BY analog) is
-            # the default re-bin layout — compaction HEALS layout
-            # drift instead of freezing whatever interleaving the
-            # small files happened to have.
-            spec = self.metadata.cluster_spec
-            if spec:
-                if spec.get("kind") == "zorder":
-                    zorder_by = list(spec["cols"])
-                else:
-                    cluster_by = list(spec["cols"])
-        if cluster_by and zorder_by:
-            raise UserInputError(
-                "cluster_by and zorder_by are mutually exclusive"
-            )
-        for named in (cluster_by, zorder_by):
-            if named:
-                unknown = set(named) - set(self.schema.fieldNames())
-                if unknown:
-                    raise UserInputError(
-                        f"Unknown cluster columns: {unknown}"
-                    )
+        # Declared table clustering is the default re-bin layout —
+        # compaction HEALS layout drift instead of freezing whatever
+        # interleaving the small files happened to have.
+        cluster_by, zorder_by = wp.resolve_layout(self, cluster_by,
+                                                  zorder_by)
         if where is not None:
             # A typo'd column would make every stats term
             # non-falsifiable — i.e. silently compact the WHOLE table
@@ -3467,12 +2942,8 @@ class Dataset:
             man_paths = self._manifest_abs_paths(snapshot)
             if not man_paths:
                 return self
-            man_tbl = pa.concat_tables(
-                [pq.read_table(p, columns=[mf.FILE_PATH_COL,
-                                           mf.SIZE_BYTES_COL])
-                 for p in man_paths],
-                promote_options="permissive",
-            )
+            man_tbl = self._manifest_table(
+                snapshot, columns=[mf.FILE_PATH_COL, mf.SIZE_BYTES_COL])
             small_mask = pc.less(man_tbl[mf.SIZE_BYTES_COL],
                                  pa.scalar(threshold, pa.int64()))
             small = man_tbl.filter(small_mask)
@@ -3501,21 +2972,17 @@ class Dataset:
             rewritten = self._apply_vectors(
                 self._read_files(affected), snapshot
             )
-            if zorder_by:
-                from space_spark.operators.zorder import zorder_layout
-
-                rewritten = zorder_layout(rewritten, zorder_by, int(n_out))
-            elif cluster_by:
-                rewritten = rewritten.repartitionByRange(
-                    int(n_out), *cluster_by
-                ).sortWithinPartitions(*cluster_by)
+            if cluster_by or zorder_by:
+                rewritten = wp.lay_out(rewritten, cluster_by, zorder_by,
+                                       int(n_out))
             else:
                 rewritten = rewritten.coalesce(int(n_out))
-            # deletes_rel=None + no append: the snapshot carries ZERO
+            # No deletes log + no append: the snapshot carries ZERO
             # changelog entries — diff() across it is empty by
             # construction.
-            self._commit_rewrite(snap_id, affected, rewritten, None,
-                                 operation="COMPACT")
+            self._commit_rewrite(
+                snap_id, wp.CowSplit(affected, rewritten, None, None),
+                operation="COMPACT")
             return self
 
         return md.retry_commit(attempt, self.reload)
@@ -3690,7 +3157,7 @@ class Dataset:
                 new_blobs,
             )
             self._commit_rewrite(
-                snap_id, affected, survivors, None,
+                snap_id, wp.CowSplit(affected, survivors, None, None),
                 append_record_manifest=rec_rel,
                 operation="COMPACT RECORDS",
             )
@@ -4133,11 +3600,7 @@ class Dataset:
             )
         # Range-prune files from the keys' bounds (cheap driver agg on the
         # small key set), then semi-join exactly.
-        bounds = keys.agg(
-            *[F.min(k).alias(f"mn_{k}") for k in pks],
-            *[F.max(k).alias(f"mx_{k}") for k in pks],
-        ).collect()[0]
-        prune = self._keys_range_expr(bounds)
+        prune = self._keys_range_expr(self._key_bounds(keys))
         snap_id = self.metadata.resolve_version(version, self.branch)
         snapshot = self.metadata.snapshot(snap_id)
         files = mf.prune_files(
@@ -4460,7 +3923,7 @@ class Dataset:
         core/schema/arrow.py:28-31); only the logical name changes, so no
         file is rewritten and files written before and after the rename
         stay uniform. Reads alias physical -> logical at the API boundary
-        (``_read_files``); writes translate back (``_write_data_files``);
+        (``_read_files``); writes translate back (``wp.write_data_files``);
         filters translate at the manifest-pruning seam (``_phys_expr``).
         Primary keys and record fields may be renamed. Persisted UDF
         views capture the names current at creation time and are NOT
@@ -4823,24 +4286,11 @@ class Dataset:
         file lacks stats for ``col`` (a partial range would be
         unsound)."""
         snapshot = self.metadata.snapshot(self.current_snapshot_id)
-        scol = mf.STATS_PREFIX + self._phys_name(col)
-        mn = mx = None
-        for p in self._manifest_abs_paths(snapshot):
-            t = pq.read_table(p)
-            t = t.filter(pc.greater(t[mf.NUM_ROWS_COL],
-                                    pa.scalar(0, pa.int64())))
-            if not t.num_rows:
-                continue
-            if scol not in t.column_names:
-                return None, None
-            arr = t[scol].combine_chunks()
-            mins, maxs = arr.field(mf.MIN_COL), arr.field(mf.MAX_COL)
-            if mins.null_count or maxs.null_count:
-                return None, None
-            lo, hi = pc.min(mins).as_py(), pc.max(maxs).as_py()
-            mn = lo if mn is None or lo < mn else mn
-            mx = hi if mx is None or hi > mx else mx
-        return mn, mx
+        if not snapshot.manifest_files:
+            return None, None
+        mn, mx = self._stats_bounds(self._manifest_table(snapshot), col)
+        return (mn, mx) if mn is not None and mx is not None \
+            else (None, None)
 
     def _bitmap_pairs_df(self, sidecar_rels: List[str]) -> DataFrame:
         """Decode bitmap sidecars to (__abs data-file path, __pos) pairs —

@@ -399,6 +399,15 @@ class Arith(Expr):
             return F.concat(l.cast("string"), r.cast("string"))
         if self.op == "/":
             return l.cast("double") / r.cast("double")
+        if self.op in ("+", "*"):
+            # Catalyst's ReorderAssociativeOperator flattens integral
+            # +/* chains and moves literals last, so a * (a * 0) runs as
+            # (a * a) * 0 and raises an ANSI overflow that tree order
+            # (and the Arrow evaluator) does not. A one-element array
+            # pick is opaque to that rule and pins the tree's order.
+            l, r = (F.element_at(F.array(c), 1)
+                    if isinstance(n, Arith) and n.op == self.op else c
+                    for n, c in ((self.left, l), (self.right, r)))
         # Build only the requested Column (see Comparison._CMP).
         return {"+": _op.add, "-": _op.sub,
                 "*": _op.mul, "%": _op.mod}[self.op](l, r)

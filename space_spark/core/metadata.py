@@ -196,7 +196,7 @@ class StorageMetadata:
     # prunes files by key membership. None = table has no Bloom index.
     bloom: Optional[dict] = None
     # CHECK constraints: name -> expr_to_json(Expr) string. Enforced on
-    # every row-adding write (Dataset._write_data_files write-first
+    # every row-adding write (write_path.write_data_files write-first
     # validation; datasink per-batch Arrow evaluation; zero-copy load
     # external-file scan). SQL semantics: a row violates only when the
     # expression evaluates to FALSE — NULL passes.
@@ -381,8 +381,8 @@ class MetadataLog:
     def new_manifest_relpath(self) -> str:
         return os.path.join("_space", "manifests", f"manifest_{new_uuid()}.parquet")
 
-    def new_deletes_relpath(self) -> str:
-        return os.path.join("_space", "changes", f"deletes_{new_uuid()}.parquet")
+    def new_deletes_reldir(self) -> str:
+        return os.path.join("_space", "changes", f"deletes_{new_uuid()}")
 
     def new_bitmap_relpath(self) -> str:
         return os.path.join("_space", "changes", f"bitmap_{new_uuid()}.parquet")

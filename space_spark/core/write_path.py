@@ -1,0 +1,499 @@
+"""The write path: how a commit's outputs become data files, and the one
+place that decides whether the driver writes an output with pyarrow or
+Spark's file committer does (the reference's runner picks ``ds.local()``
+or ``ds.ray()`` once, core/runners.py:203-287). Entry points:
+``write_input`` (a commit's input rows), ``cow_split`` (a copy-on-write
+delete's survivors, deletes log and deleted positions, from one split —
+reference ops/delete.py:56-228) and ``write_data_files``.
+
+Manifest and parquet calls go through their module attributes
+(``mf.write_manifest``, ``pq.read_table``), so that a tracer or a test
+that patches those names sees every call.
+"""
+
+from __future__ import annotations
+
+import os
+from typing import List, NamedTuple, Optional, Union
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from space_spark.core import manifests as mf
+from space_spark.core import records as rec
+from space_spark.errors import ConstraintViolationError, UserInputError
+
+# A key set under this many rows is broadcast to the probe side; above
+# it, a shuffle-hash join (a bulk upsert's key set can exceed executor
+# memory — an unconditional broadcast would OOM at scale).
+BROADCAST_KEYS_MAX = 500_000
+
+# Candidate Parquet bytes up to which the driver's split of a CoW
+# delete beats Spark's probe and survivor jobs. Measured crossover
+# (one candidate file, two keys, median of 6 alternating reps,
+# local[4] on a shared 4-core VM): 3.0 MB 0.78 s vs 1.02 s, 4.0 MB
+# 0.88 s vs 0.87 s, 5.1 MB 1.11 s vs 1.08 s, 9.7 MB 2.04 s vs 1.53 s.
+DRIVER_SPLIT_MAX_BYTES = 4 << 20
+
+
+class CowSplit(NamedTuple):
+    """A copy-on-write delete's split: the affected rel files, their
+    survivors (a DataFrame, or Arrow tables one per output file), the
+    written deletes log's relpath, and the deleted rows' ``__file`` (data
+    file URI) and ``__pos`` (row position) as an Arrow table."""
+    affected: List[str]
+    survivors: Union[DataFrame, List[pa.Table], None]
+    deletes_rel: Optional[str]
+    positions: Optional[pa.Table]
+
+
+NO_MATCH = CowSplit([], None, None, None)
+
+
+# ------------------------------------------------------------- size rule
+def _has_ntz(dt: T.DataType) -> bool:
+    """Whether ``dt`` is or nests a TimestampNTZType."""
+    if isinstance(dt, T.StructType):
+        return any(_has_ntz(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _has_ntz(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_ntz(dt.keyType) or _has_ntz(dt.valueType)
+    return isinstance(dt, T.TimestampNTZType)
+
+
+def _int96_timestamps(ds) -> bool:
+    return ds.spark.conf.get(
+        "spark.sql.parquet.outputTimestampType") == "INT96"
+
+
+def _driver_bytes_max(ds) -> int:
+    """Largest output, in bytes, the driver writes itself: Spark's own
+    ``spark.sql.autoBroadcastJoinThreshold``, the size Spark agrees to
+    collect to the driver. -1 turns driver writes off, as it turns off
+    broadcasts.
+
+    Also -1 when the session writes INT96 and the table holds a
+    TimestampNTZ column: pyarrow writes every timestamp column INT96
+    or none, while Spark writes TimestampNTZ as INT64 (an INT96 one
+    has no footer min/max), so such a table stays on Spark's
+    writer."""
+    if _int96_timestamps(ds) and _has_ntz(ds._physical_schema()):
+        return -1
+    return int(ds.spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
+
+
+def _local_arrow(ds, df: DataFrame) -> Optional[pa.Table]:
+    """``df`` collected to Arrow when its optimized plan is a
+    ``LocalRelation`` (rows the driver built) within
+    ``_driver_bytes_max``; None otherwise."""
+    limit = _driver_bytes_max(ds)
+    if limit < 0:
+        return None
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation" \
+            or plan.stats().sizeInBytes() > limit:
+        return None
+    return df.toArrow()
+
+
+def _driver_fits(ds, files) -> bool:
+    """Whether probe candidates (``Dataset._probe_candidates`` pairs) are
+    small enough for the driver to read and split them itself: within
+    ``_driver_bytes_max`` and ``DRIVER_SPLIT_MAX_BYTES``."""
+    return sum(size for _, size in files) <= min(
+        _driver_bytes_max(ds), DRIVER_SPLIT_MAX_BYTES)
+
+
+def keys_join_side(keys_df: DataFrame, n_keys: int) -> DataFrame:
+    """``keys_df`` (``n_keys`` rows) hinted for a join against table
+    files: broadcast up to ``BROADCAST_KEYS_MAX`` keys, shuffle-hash
+    above."""
+    if n_keys <= BROADCAST_KEYS_MAX:
+        return keys_df.hint("broadcast")
+    return keys_df.hint("shuffle_hash")
+
+
+# ---------------------------------------------------------- input write
+def resolve_layout(ds, cluster_by, zorder_by):
+    """The (cluster_by, zorder_by) a write lays its rows out by: the
+    caller's, else the table's declared clustering (Delta CLUSTER BY
+    analog), checked against each other and the schema."""
+    if cluster_by is None and zorder_by is None:
+        spec = ds.metadata.cluster_spec
+        if spec:
+            if spec.get("kind") == "zorder":
+                zorder_by = list(spec["cols"])
+            else:
+                cluster_by = list(spec["cols"])
+    if cluster_by and zorder_by:
+        raise UserInputError(
+            "cluster_by and zorder_by are mutually exclusive"
+        )
+    unknown = set(cluster_by or zorder_by or ()) \
+        - set(ds.schema.fieldNames())
+    if unknown:
+        raise UserInputError(
+            f"Unknown {'zorder' if zorder_by else 'cluster'} "
+            f"columns: {unknown}")
+    return cluster_by, zorder_by
+
+
+def lay_out(df: DataFrame, cluster_by, zorder_by, n: int) -> DataFrame:
+    """``df`` in ``n`` partitions: Morton-interleaved on ``zorder_by``
+    (operators/zorder.py), or range-partitioned and sorted on
+    ``cluster_by``, so each output file covers a compact key range."""
+    if zorder_by:
+        from space_spark.operators.zorder import zorder_layout
+
+        return zorder_layout(df, zorder_by, n)
+    return df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
+        *cluster_by
+    )
+
+
+def write_input(ds, df: DataFrame, cluster_by=None, zorder_by=None,
+                target_files: Optional[int] = None):
+    """Write a commit's input rows (``df`` already aligned to the table)
+    as data files; returns ``write_data_files``' (manifest_rel, files,
+    rows, bytes).
+
+    Rows the driver built (a LocalRelation within the driver-write
+    bound) are written by the driver: clustering is a local sort, and
+    the output is one file unless ``target_files`` asks for more. A
+    z-order layout and a table with record fields stay on Spark, which
+    writes one file per partition of the laid-out rows."""
+    local = None if zorder_by or ds.record_fields else _local_arrow(ds, df)
+    if local is not None:
+        if cluster_by:
+            local = local.sort_by([(c, "ascending") for c in cluster_by],
+                                  null_placement="at_start")
+        per_file = -(-local.num_rows // (target_files or 1))
+        return write_data_files(ds, [local.slice(i * per_file, per_file)
+                                     for i in range(target_files or 1)])
+    if cluster_by or zorder_by:
+        df = lay_out(df, cluster_by, zorder_by, target_files
+                     or ds.spark.sparkContext.defaultParallelism)
+    elif target_files:
+        df = df.repartition(target_files)
+    return write_data_files(ds, df)
+
+
+def _read_keys_arrow(ds, rel_files: List[str]) -> pa.Table:
+    """The primary-key columns of written data files, read by the
+    driver with pyarrow, under logical names and the table's Arrow
+    key types (an INT96 timestamp reads back as naive nanoseconds)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pks = ds.primary_keys
+    tbl = pa.concat_tables([
+        pq.read_table(ds.log.abs_path(f),
+                      columns=[ds._phys_name(k) for k in pks])
+        for f in rel_files
+    ])
+    key_schema = to_arrow_schema(
+        T.StructType([ds.schema[k] for k in pks]))
+    return tbl.rename_columns(pks).cast(
+        pa.schema([f.with_nullable(True) for f in key_schema]))
+
+
+def written_keys(ds, files: List[str], rows: int):
+    """The primary keys of a commit's written data files: (keys
+    DataFrame, distinct key count, the keys as Arrow or None, whether a
+    key repeats). A key set the probe would broadcast anyway
+    (``BROADCAST_KEYS_MAX``) is read by the driver straight from the
+    files' key columns; a larger one is counted by one Spark
+    aggregate."""
+    pks = ds.primary_keys
+    new_keys = ds._read_files(files).select(*pks)
+    if rows <= BROADCAST_KEYS_MAX:
+        keys_arrow = _read_keys_arrow(ds, files)
+        dup = keys_arrow.group_by(pks).aggregate([]).num_rows < rows
+        return new_keys, rows, keys_arrow, dup
+    row = (
+        new_keys.groupBy(*pks).count()
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.max("count").alias("mx"))
+        .collect()[0]
+    )
+    dup = row["mx"] is not None and row["mx"] > 1
+    return new_keys, int(row["n"] or 0), None, dup
+
+
+# ------------------------------------------------------------ CoW split
+def probe_frame(ds, snapshot, files) -> DataFrame:
+    """The probe candidates' rows with their existing delete vectors
+    applied (already-deleted rows are never re-logged), each tagged
+    with its source file (``__file``) and row position (``__pos``)."""
+    # Provenance columns BEFORE the vector mask: input_file_name()
+    # must bind to the single parquet source, not the mask join.
+    return ds._apply_vectors(
+        ds._read_files([f for f, _ in files])
+        .withColumn("__file", F.input_file_name())
+        .withColumn("__pos", F.col("_metadata.row_index")),
+        snapshot,
+    )
+
+
+def cow_split(ds, prune_expr, keys_df: Optional[DataFrame] = None,
+              n_keys: Optional[int] = None, keys_arrow=None,
+              pred=None) -> CowSplit:
+    """Split a copy-on-write delete over the head snapshot's files whose
+    manifest stats pass ``prune_expr``: the rows whose PKs appear in
+    ``keys_df`` (``n_keys`` of them; ``keys_arrow`` the same keys
+    already on the driver), or else the rows where the Column ``pred``
+    is true, become the deletes log, and the other rows of the files
+    holding a match become the survivors. Writes the deletes log, never
+    commits; ``NO_MATCH`` when nothing matches.
+
+    The split runs on the driver when the candidates fit
+    ``_driver_fits`` (and a key set fits a broadcast): one Spark read of
+    the candidates, split with pyarrow. Otherwise one distributed probe
+    job writes the deletes and the survivors are a DataFrame."""
+    snapshot = ds.metadata.snapshot(ds.current_snapshot_id)
+    files = ds._probe_candidates(snapshot, prune_expr)
+    if not files:
+        return NO_MATCH
+    pks = ds.primary_keys
+    probe = probe_frame(ds, snapshot, files)
+    if pred is not None:
+        if _driver_fits(ds, files):
+            # One read tags each row with the predicate; the driver
+            # splits it like a keyed delete.
+            cand = probe.withColumn("__del", pred).toArrow()
+            return _split_on_driver(ds, cand.drop_columns(["__del"]),
+                                    cand["__del"])
+        split = probe_deletes(ds, probe.where(pred))
+    else:
+        if n_keys <= BROADCAST_KEYS_MAX and _driver_fits(ds, files):
+            if keys_arrow is None and all(
+                    keys_df.schema[k].dataType == ds.schema[k].dataType
+                    for k in pks):
+                keys_arrow = keys_df.toArrow()
+            if keys_arrow is not None:
+                cand = probe.toArrow()
+                return _split_on_driver(
+                    ds, cand, _keys_match(ds, cand, keys_arrow))
+        keys = keys_join_side(keys_df, n_keys)
+        split = probe_deletes(ds, probe.join(keys, on=pks, how="left_semi"))
+    if not split.affected:
+        return NO_MATCH
+    kept = ds._apply_vectors(ds._read_files(split.affected), snapshot)
+    kept = kept.where(~pred) if pred is not None \
+        else kept.join(keys, on=pks, how="left_anti")
+    return split._replace(survivors=kept)
+
+
+def _keys_match(ds, cand: pa.Table, keys: pa.Table) -> pa.Array:
+    """Mask of the candidate rows whose PKs appear in ``keys``. The
+    join carries only the key columns and a row index — Acero's join
+    cannot carry struct payloads such as record-field addresses —
+    and a left-semi join neither repeats a row for a repeated key
+    nor matches a NULL key, as Spark's does not."""
+    import numpy as np
+
+    pks = ds.primary_keys
+    narrow = cand.select(pks).append_column(
+        "__row", pa.array(np.arange(cand.num_rows)))
+    key_types = pa.schema([narrow.schema.field(k).with_nullable(True)
+                           for k in pks])
+    hit = narrow.join(keys.select(pks).cast(key_types),
+                      keys=pks, join_type="left semi")["__row"]
+    return pc.is_in(narrow["__row"], value_set=hit)
+
+
+def _split_on_driver(ds, cand: pa.Table, matched) -> CowSplit:
+    """A CoW delete's split over a candidate read held on the
+    driver (``probe_frame`` rows, ``matched`` a boolean mask): the
+    matched rows become the deletes log, written with pyarrow, and
+    the unmatched rows of the files holding a match become the
+    survivors, one Arrow table per output file.
+
+    Like Spark's file packing, which bounds the survivor rewrite's
+    width, the survivors go to at most ``defaultParallelism`` files:
+    the affected files, ordered by their lead cluster (else key)
+    column, are packed in runs of neighbours, each in row order. A
+    few affected files keep one output each, and so their key
+    ranges."""
+    import numpy as np
+
+    deleted = cand.filter(matched)
+    if deleted.num_rows == 0:
+        return NO_MATCH
+    hit_files = pc.unique(deleted["__file"])
+    lead = ((ds.metadata.cluster_spec or {}).get("cols")
+            or ds.primary_keys)[0]
+    order = cand.filter(pc.is_in(cand["__file"], value_set=hit_files)) \
+        .group_by("__file").aggregate([(lead, "min")]) \
+        .sort_by(f"{lead}_min")["__file"].to_pylist()
+    kept = cand.filter(pc.invert(matched))
+    survivors = [
+        pa.concat_tables([
+            kept.filter(pc.equal(kept["__file"], order[i]))
+            .sort_by("__pos") for i in run
+        ]).drop_columns(["__file", "__pos"])
+        for run in np.array_split(np.arange(len(order)), min(
+            len(order), ds.spark.sparkContext.defaultParallelism))
+    ]
+    deletes_rel = ds.log.new_deletes_reldir()
+    positions = deleted.select(["__file", "__pos"])
+    log_tbl = _physical_arrow(ds, deleted.select(ds.primary_keys))
+    for c in positions.column_names:
+        log_tbl = log_tbl.append_column(c, positions[c])
+    _write_arrow_file(
+        ds, os.path.join(ds.log.abs_path(deletes_rel), "part-00000.parquet"),
+        log_tbl)
+    return CowSplit(_affected(ds, positions), survivors, deletes_rel,
+                    positions)
+
+
+def _affected(ds, positions: pa.Table) -> List[str]:
+    """The sorted rel paths of the data files ``positions`` touches."""
+    uris = pc.unique(positions["__file"].combine_chunks()).to_pylist()
+    return sorted({ds._abs_to_rel_file(u) for u in uris})
+
+
+def probe_deletes(ds, matches: DataFrame) -> CowSplit:
+    """The distributed probe of a MoR delete, or of a CoW delete over
+    the driver bound. ONE job materializes it: matched rows'
+    (PKs, source file, row position) land directly as the change-log
+    deletes file; the affected files and the deleted positions are
+    then one driver-side read of that output's ``__file``/``__pos``
+    columns, which also feed the per-file delete BITMAP sidecar built
+    at commit time. Readers of the deletes file select the PK columns,
+    so the provenance columns ride along for free. ``survivors`` is
+    left None."""
+    pks = ds.primary_keys
+    deletes_rel = ds.log.new_deletes_reldir()
+    abs_del = ds.log.abs_path(deletes_rel)
+    # Changelog PK files are written under PHYSICAL names too, so the
+    # delete stream stays uniform across column renames.
+    matches.select(
+        *[F.col(k).alias(ds._phys_name(k)) for k in pks],
+        "__file", "__pos",
+    ).write.parquet(abs_del)
+    # Only a write with no part file at all (zero partitions) means
+    # "no matches"; any failure to read the log back must surface —
+    # read as empty, it would commit the delete as a no-op.
+    parts = [n for n in os.listdir(abs_del) if n.endswith(".parquet")]
+    tbl = pq.read_table(abs_del, columns=["__file", "__pos"]) \
+        if parts else None
+    if tbl is None or tbl.num_rows == 0:
+        import shutil
+
+        shutil.rmtree(abs_del, ignore_errors=True)
+        return NO_MATCH
+    return CowSplit(_affected(ds, tbl), None, deletes_rel, tbl)
+
+
+# -------------------------------------------------------- file write
+def _physical_arrow(ds, tbl: pa.Table) -> pa.Table:
+    """Logical-named Arrow rows (a local input, a collected read) cast
+    to the table's PHYSICAL file layout; every top-level column
+    nullable, as Spark writes parquet."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(ds._physical_schema())
+    target = pa.schema([
+        target.field(ds._phys_name(n)).with_nullable(True)
+        for n in tbl.column_names
+    ])
+    return tbl.rename_columns(target.names).cast(target)
+
+
+def _write_arrow_file(ds, abs_path: str, tbl: pa.Table) -> None:
+    """Driver-side write of rows already in the physical layout."""
+    mf.write_data_file(abs_path, tbl,
+                       int96_timestamps=_int96_timestamps(ds))
+
+
+def write_data_files(ds, data, physical: bool = False):
+    """Write data files for one commit; returns (manifest_rel, files,
+    rows, bytes).
+
+    ``data`` is a DataFrame or a list of Arrow tables. Spark writes a
+    DataFrame, one file per partition (the reference's sharded
+    writers, ray/ops/append.py:32-120). Arrow tables are an output
+    the driver already holds within ``_driver_bytes_max`` (slices of
+    a local input, a CoW delete's survivors); the
+    driver writes each non-empty one as a file with pyarrow, with no
+    Spark job (the reference's in-process ``LocalAppendOp``,
+    core/ops/append.py:164-244). Either way the driver then reads the
+    footer stats and writes the manifest.
+
+    ``physical=True`` means the rows already carry record-field
+    ADDRESS structs (the copy-on-write survivor rewrite) — blobs are
+    NOT rewritten, addresses carry over (reference ops/delete.py:
+    42-45)."""
+    commit_reldir = ds.log.new_commit_data_reldir()
+    absdir = ds.log.abs_path(commit_reldir)
+    if isinstance(data, list):
+        for i, part in enumerate(data):
+            if part.num_rows:
+                _write_arrow_file(
+                    ds, os.path.join(absdir, f"part-{i:05d}.parquet"),
+                    _physical_arrow(ds, part))
+    else:
+        if ds.record_fields and not physical:
+            data = rec.write_record_fields(data, ds.location,
+                                           ds.record_fields)
+        # Write half of the rename boundary: files always land under
+        # the immutable PHYSICAL names, keeping every data file
+        # uniform across renames (stats/pruning stay consistent
+        # table-wide).
+        ds._to_physical(data).write.parquet(absdir)
+    rel_files = sorted(
+        os.path.join(commit_reldir, name)
+        for name in (os.listdir(absdir) if os.path.isdir(absdir)
+                     else [])
+        if name.endswith(".parquet")
+    )
+    stat_names = [n for n, _ in ds._stats_fields()]
+    bloom_pks = ds._bloom_pks()
+    stats = mf.collect_file_stats(
+        ds.spark,
+        [ds.log.abs_path(f) for f in rel_files],
+        stat_names,
+        bloom_pks=bloom_pks,
+        bloom_bpk=ds._bloom_bpk(),
+    )
+    # Primary keys are NOT NULL (reference schema contract): a null
+    # key row can never be matched by upsert/delete-by-key/point
+    # reads, so it must be rejected loudly at ingress, not ingested
+    # as unreachable data. Detection is free — the footer stats
+    # just collected carry per-column null counts. (The written
+    # files are uncommitted orphans; vacuum reclaims them.)
+    ds._reject_null_pks(stats)
+    manifest_rel = ds.log.new_manifest_relpath()
+    rows, nbytes = mf.write_manifest(
+        ds.spark,
+        ds.log.abs_path(manifest_rel),
+        rel_files,
+        stats,
+        ds._stats_fields(),
+        bloom_pks=bloom_pks,
+    )
+    if not physical and (ds.metadata.constraints
+                         or ds.metadata.not_null):
+        # Write-first CHECK enforcement: validate the files just
+        # written (still uncommitted orphans) with ONE pushed-down
+        # scan — row-group stats of compliant files falsify the
+        # violation predicate, so clean data costs footer reads.
+        # The input DataFrame is never re-evaluated (the same
+        # double-evaluation hazard merge() pins against).
+        violated = ds._constraint_violation_names(
+            ds._read_files(rel_files)
+        )
+        if violated:
+            raise ConstraintViolationError(
+                f"Constraint(s) {violated} violated by "
+                "incoming rows; write aborted before commit (the "
+                "shard files are uncommitted orphans — vacuum "
+                "reclaims them)"
+            )
+    return manifest_rel, rel_files, rows, nbytes

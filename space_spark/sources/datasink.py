@@ -42,6 +42,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceStreamArrowWriter,
@@ -67,12 +68,6 @@ class FilesCommitMessage(WriterCommitMessage):
     # validated forces a driver-side re-validation (the reverse
     # add_constraint TOCTOU — see MetadataLog.commit_snapshot).
     constraints_version: int = -1
-
-
-def _arrow_schema(spark_schema: T.StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(spark_schema)
 
 
 def _sink_generated(meta) -> List[tuple]:
@@ -106,14 +101,14 @@ def _validated_table_arrow(location: str, input_schema: T.StructType
             f"Input schema mismatch: missing={sorted(missing)} "
             f"extra={sorted(extra)}; table has {table_schema.fieldNames()}"
         )
-    return _arrow_schema(table_schema)
+    return to_arrow_schema(table_schema)
 
 
 def _phys_arrow(logical_arrow: pa.Schema, meta) -> pa.Schema:
     """The parquet write schema: logical field order/types renamed to the
     immutable PHYSICAL column names data files are keyed by (the write
     half of the rename_column boundary — same as
-    ``Dataset._write_data_files``)."""
+    ``write_path.write_data_files``)."""
     ren = getattr(meta, "renames", {}) or {}
     if not ren:
         return logical_arrow

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from space_spark.core import manifests as mf
+from space_spark.core import write_path
 from space_spark.core.schema import ADDRESS_STRUCT, FILE_COL, ROW_ID_COL
 from space_spark.errors import SpaceError, UserInputError
 
@@ -245,17 +246,18 @@ def append_binary_files(
     # The index rows (with addresses) are written as normal data files;
     # blobs stay where they are.
     dataset.reload()
-    manifest_rel, files, rows, nbytes = dataset._write_data_files(
-        physical_rows, physical=True
+    manifest_rel, files, rows, nbytes = write_path.write_data_files(
+        dataset, physical_rows, physical=True
     )
     if rows == 0:
         raise UserInputError(f"No files match {pattern!r}")
     if dataset.metadata.constraints or dataset.metadata.not_null:
         # physical=True skips the write-first check inside
-        # _write_data_files (its other caller re-writes SURVIVOR rows,
-        # already validated when first admitted) — but these index rows
-        # come from a user index_fn and were never checked, so run the
-        # same one pushed-down scan here (ADVICE r12 follow-through).
+        # write_path.write_data_files (its other caller re-writes
+        # SURVIVOR rows, already validated when first admitted) — but
+        # these index rows come from a user index_fn and were never
+        # checked, so run the same one pushed-down scan here (ADVICE r12
+        # follow-through).
         violated = dataset._constraint_violation_names(
             dataset._read_files(files)
         )

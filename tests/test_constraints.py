@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from space_spark import ConstraintViolationError, Dataset, field
+from space_spark.core import write_path
 from space_spark.errors import UserInputError
 
 SCHEMA = T.StructType(
@@ -373,8 +374,8 @@ def test_inflight_append_revalidates_after_concurrent_add_constraint(
     # The writer is past its own (empty-set) validation: files written,
     # commit not yet attempted.
     writer.reload()
-    man, files, rows, nbytes = writer._write_data_files(
-        _rows(spark, [(2, -9, "x")])
+    man, files, rows, nbytes = write_path.write_data_files(
+        writer, _rows(spark, [(2, -9, "x")])
     )
     # The constraint lands first — existing rows are clean, so it
     # commits and bumps constraints_version (head does NOT move).
@@ -399,8 +400,8 @@ def test_inflight_append_of_clean_rows_survives_concurrent_constraint(
     ds.append(_rows(spark, [(1, 5, "a")]))
     writer = Dataset.load(spark, tmp_location)
     writer.reload()
-    man, files, rows, nbytes = writer._write_data_files(
-        _rows(spark, [(2, 7, "x")])
+    man, files, rows, nbytes = write_path.write_data_files(
+        writer, _rows(spark, [(2, 7, "x")])
     )
     Dataset.load(spark, tmp_location).add_constraint(
         "qty_nonneg", field("qty") >= 0
@@ -422,8 +423,8 @@ def test_inflight_append_revalidates_after_concurrent_add_not_null(
     ds.append(_rows(spark, [(1, 5, "a")]))
     writer = Dataset.load(spark, tmp_location)
     writer.reload()
-    man, files, rows, nbytes = writer._write_data_files(
-        _rows(spark, [(2, None, "x")])
+    man, files, rows, nbytes = write_path.write_data_files(
+        writer, _rows(spark, [(2, None, "x")])
     )
     Dataset.load(spark, tmp_location).add_not_null("qty")
     with pytest.raises(ConstraintViolationError, match="NOT NULL"):

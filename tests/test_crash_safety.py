@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 
 from space_spark import Dataset, field
 from space_spark.core import metadata as md
+from space_spark.core import write_path
 
 SIMPLE = T.StructType(
     [
@@ -33,8 +34,8 @@ def test_crash_before_commit_is_invisible_and_vacuumable(spark, tmp_location):
 
     # Simulate a writer that died after writing data files + manifest but
     # BEFORE the metadata commit (the only atomicity point).
-    manifest_rel, files, rows, nbytes = ds._write_data_files(
-        simple_df(spark, range(100, 120))
+    manifest_rel, files, rows, nbytes = write_path.write_data_files(
+        ds, simple_df(spark, range(100, 120))
     )
     assert rows == 20 and files
 
@@ -90,8 +91,8 @@ def test_overwrite_crash_before_commit_is_invisible_and_vacuumable(
 
     # Simulate the crash point: replicate overwrite()'s pre-commit
     # steps without committing.
-    manifest_rel, files, rows, _ = ds._write_data_files(
-        simple_df(spark, range(100, 105))
+    manifest_rel, files, rows, _ = write_path.write_data_files(
+        ds, simple_df(spark, range(100, 105))
     )
     parent = ds.metadata.snapshot(ds.current_snapshot_id)
     import os as _os

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from space_spark import Dataset, MaterializedView, field
+from space_spark.core import write_path
 from space_spark.errors import UserInputError
 from space_spark.sources import loaders
 
@@ -116,12 +117,14 @@ def test_upsert_insert_only_keys(spark, tmp_location):
     assert ds.read().count() == 7
 
 
-def test_upsert_large_key_set_no_broadcast(spark, tmp_location):
+def test_upsert_large_key_set_no_broadcast(spark, tmp_location,
+                                           monkeypatch):
     """Key sets above BROADCAST_KEYS_MAX take the shuffle join path and
     still produce the right table."""
     ds = Dataset.create(spark, tmp_location, SIMPLE, ["int64"])
     ds.append(simple_df(spark, range(0, 200)))
-    ds.BROADCAST_KEYS_MAX = 10  # instance override forces the big-key path
+    # a lower bound forces the big-key path
+    monkeypatch.setattr(write_path, "BROADCAST_KEYS_MAX", 10)
     ds.upsert(
         simple_df(spark, range(100, 300)).withColumn(
             "string", F.lit("updated")
@@ -136,10 +139,10 @@ def test_upsert_large_key_set_no_broadcast(spark, tmp_location):
     )
     # The hint helper itself: large n -> shuffle_hash, small n -> broadcast.
     keys = simple_df(spark, range(50)).select("int64")
-    plan_big = ds._keys_join_side(keys, n_keys=10**9)._jdf.queryExecution(
-    ).analyzed().toString()
-    plan_small = ds._keys_join_side(keys, n_keys=5)._jdf.queryExecution(
-    ).analyzed().toString()
+    plan_big = write_path.keys_join_side(
+        keys, n_keys=10**9)._jdf.queryExecution().analyzed().toString()
+    plan_small = write_path.keys_join_side(
+        keys, n_keys=5)._jdf.queryExecution().analyzed().toString()
     assert "shuffle_hash" in plan_big
     assert "broadcast" in plan_small
 

@@ -160,6 +160,18 @@ def _record_fields(spark, loc):
     return [ds]
 
 
+def _mor_upsert_overwrite(spark, loc):
+    """A merge-on-read delete, an upsert of a key in the masked file (a
+    CoW split over vector-masked candidates that retires the vector),
+    then an overwrite (the all-rows bitmap)."""
+    ds = _seeded(spark, loc)
+    ds.delete(field("k") == 8, rewrite=False)
+    ds.upsert(_local(spark, [(9, "u", 90)]))
+    ds.delete(field("k") == 12, rewrite=False)
+    ds.overwrite(_local(spark, [(i, "o", i) for i in range(5)]))
+    return [ds]
+
+
 SCENARIOS = {
     "clustered_append": _clustered_append(None),
     "clustered_append_target_files": _clustered_append(3),
@@ -169,6 +181,7 @@ SCENARIOS = {
     "merge": _merge,
     "views_refresh": _views,
     "record_fields": _record_fields,
+    "mor_upsert_overwrite": _mor_upsert_overwrite,
 }
 
 
@@ -176,7 +189,8 @@ SCENARIOS = {
 def test_size_rule_sides_agree(spark, tmp_location, name):
     """The same ops under the default threshold (driver writes) and
     under -1 (every write through Spark) give equal ``read()`` rows and
-    equal ``diff()`` change feeds."""
+    equal ``diff()`` change feeds, and every snapshot's bitmap stream
+    names the same rows as its PK delete stream."""
     out = {}
     for side, value in (("driver", spark.conf.get(THRESHOLD)),
                         ("spark", "-1")):
@@ -191,6 +205,11 @@ def test_size_rule_sides_agree(spark, tmp_location, name):
                    .drop(dataset_mod.CHANGE_SNAPSHOT_COL, *t.record_fields)))
             for t in tables
         ]
+        for t in tables:
+            for snap in t.metadata.snapshots.values():
+                if snap.deleted_pks_file:
+                    assert _rows(t.read_deleted_pks_via_bitmap(snap)) == \
+                        _rows(t.read_deleted_pks(snap)), snap.snapshot_id
         drivers = _driver_named(os.path.dirname(loc))
         if side == "driver":
             assert drivers, "default threshold took no driver write"
@@ -398,3 +417,47 @@ def test_deletes_log_read_error_propagates(spark, tmp_location,
     monkeypatch.setattr(dataset_mod.pq, "read_table", real)
     assert ds.reload().current_snapshot_id == head
     assert sorted((r.k, r.x) for r in ds.read().collect()) == [(1, 0), (2, 0)]
+
+
+@pytest.mark.parametrize("side", ["driver", "spark"])
+@pytest.mark.parametrize("op", ["delete", "delete_by_keys", "upsert"])
+def test_cow_delete_commits_bitmap_with_pk_stream(spark, tmp_location,
+                                                  monkeypatch, op, side):
+    """A failed read of a deletes log's row positions never commits the
+    PK delete stream without its bitmap stream: the op either raises
+    and leaves the table unchanged, or commits both."""
+    ds = Dataset.create(spark, tmp_location, KXG, ["k"])
+    ds.append(_local(spark, [(1, "a", 0), (2, "b", 0)]))
+    head = ds.current_snapshot_id
+    real = pq.read_table
+
+    def failing(path, *a, **kw):
+        if "deletes_" in str(path) and "__pos" in (kw.get("columns") or ()):
+            raise OSError("injected read failure")
+        return real(path, *a, **kw)
+
+    ops = {
+        "delete": lambda: ds.delete(field("k") == 1),
+        "delete_by_keys": lambda: ds.delete_by_keys(
+            _local(spark, [(1, "", 0)]).select("k")),
+        "upsert": lambda: ds.upsert(_local(spark, [(1, "a", 99)])),
+    }
+    value = spark.conf.get(THRESHOLD) if side == "driver" else "-1"
+    monkeypatch.setattr(pq, "read_table", failing)
+    try:
+        _with_threshold(spark, value, ops[op])
+        raised = False
+    except OSError as e:
+        assert "injected" in str(e)
+        raised = True
+    monkeypatch.setattr(pq, "read_table", real)
+    ds.reload()
+    if raised:
+        assert ds.current_snapshot_id == head
+        assert sorted((r.k, r.x) for r in ds.read().collect()) == \
+            [(1, 0), (2, 0)]
+        return
+    snap = ds.metadata.snapshot(ds.current_snapshot_id)
+    assert snap.deleted_pks_file and snap.deleted_bitmap_file
+    assert _rows(ds.read_deleted_pks_via_bitmap(snap)) == \
+        _rows(ds.read_deleted_pks(snap)) == [(1,)]

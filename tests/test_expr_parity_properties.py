@@ -209,6 +209,22 @@ def test_random_value_trees_agree_across_engines(spark, expr):
         )
 
 
+def test_reassociable_chains_keep_tree_order(spark):
+    """Catalyst reassociates integral +/* chains with literals moved
+    last: a * (a * 0) would run as (a * a) * 0 and overflow, and
+    ((a * 7) + -50) + a as ((a * 7) + a) + -50. Both stay in range in
+    tree order, so neither engine may raise."""
+    from space_spark.core.expressions import field, lit
+
+    a = field("a")
+    for expr in (a * (a * lit(0)), ((a * lit(7)) + lit(-50)) + a):
+        got_s = _spark_eval(spark, expr)
+        got_a = _arrow_eval(expr)
+        assert got_s is not _RAISED and got_a is not _RAISED, expr
+        for xs, xa in zip(got_s, got_a):
+            assert _close(xs, xa), expr
+
+
 def test_float_remainder_by_zero_raises_both_engines(spark):
     """double %% 0.0 RAISES in BOTH engines under the ANSI-default
     session this engine pins: Spark's Remainder extends DivModLike,

@@ -34,6 +34,22 @@ PINNED_JOBS = {
     "apply_changes": 6,
 }
 
+# The same ops with spark.sql.autoBroadcastJoinThreshold=-1, where every
+# output goes through Spark's writer, plus a merge-on-read delete and an
+# overwrite, which are Spark writes on either side.
+PINNED_JOBS_SPARK = {
+    "append": 3,
+    "upsert": 5,
+    "mv_refresh": 9,
+    "agg_mv_refresh": 17,
+    "delete_by_keys": 6,
+    "delete": 2,
+    "merge": 18,
+    "apply_changes": 8,
+    "delete_mor": 1,
+    "overwrite": 5,
+}
+
 
 def _rows(spark, triples):
     values = ", ".join(f"({k}, '{g}', {x})" for k, g, x in triples)
@@ -43,7 +59,9 @@ def _rows(spark, triples):
     )
 
 
-def test_write_ops_spark_job_pins(spark, tmp_location):
+def _run_ops(spark, tmp_location, extra_ops=False):
+    """Job counts of each write op on a fresh clustered table, and the
+    row-wise MV's keys after its last refresh."""
     ds = Dataset.create(spark, tmp_location, SCHEMA, ["k"],
                         cluster_by=["k"])
     ds.append(_rows(spark, [(i, f"g{i % 3}", i) for i in range(40)]))
@@ -84,6 +102,28 @@ def test_write_ops_spark_job_pins(spark, tmp_location):
             _rows(spark, [(5, "g2", 50)]),
             _rows(spark, [(6, "", 0)]).select("k")),
     }
+    if extra_ops:
+        ops["delete_mor"] = lambda: ds.delete(field("k") == 7,
+                                              rewrite=False)
+        ops["overwrite"] = lambda: ds.overwrite(
+            _rows(spark, [(i, "o", i) for i in range(5)]))
     got = {name: jobs(fn) for name, fn in ops.items()}
+    return got, {r.k for r in mv.read().collect()}
+
+
+def test_write_ops_spark_job_pins(spark, tmp_location):
+    got, mv_keys = _run_ops(spark, tmp_location)
     assert got == PINNED_JOBS, str(got)
-    assert {r.k for r in mv.read().collect()} == set(range(40)) | {100, 101}
+    assert mv_keys == set(range(40)) | {100, 101}
+
+
+def test_write_ops_spark_side_job_pins(spark, tmp_location):
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        got, mv_keys = _run_ops(spark, tmp_location, extra_ops=True)
+    finally:
+        spark.conf.set(threshold, prev)
+    assert got == PINNED_JOBS_SPARK, str(got)
+    assert mv_keys == set(range(40)) | {100, 101}

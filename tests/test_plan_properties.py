@@ -172,7 +172,7 @@ def test_upsert_probe_is_pruned(spark, tmp_path):
             [(i, i) for i in range(start, start + 1000)], schema
         ).coalesce(1))
     bounds_keys = spark.createDataFrame([(5, -5)], schema)
-    affected, _, _ = ds._matching_delete_parts(bounds_keys.select("k"))
+    affected = ds._matching_delete_parts(bounds_keys.select("k")).affected
     # key 5 overlaps only the first file's [0, 999] range
     assert len(affected) <= 1
     assert len(ds.data_files()) == 4
