@@ -1473,21 +1473,24 @@ WHERE NOT (s_acctbal < 1000.0) AND NOT (s_nationkey = 3)
 
 
 def space_bitmap_changelog(spark, sf_dir):
-    """Row-level delete bitmap changelog: the DELETE stream reconstructed
-    from the parent version's files masked by the per-file row-position
-    bitmaps (reference RowBitmap change log, metadata.proto:160-191 +
-    change_data.py:126-141) — O(deleted) changelog bytes instead of PK
-    sets."""
+    """A copy-on-write predicate delete's DELETE stream, read through
+    ``diff`` across the delete's snapshot. The bitmap changelog form
+    (the reference's RowBitmap change log, metadata.proto:160-191) was
+    removed: the PK deletes log is the table's one delete changelog, so
+    this query keeps its name and oracle but reads the PK stream."""
     from space_spark import Dataset, field
+    from space_spark.core.dataset import CHANGE_DELETE, CHANGE_TYPE_COL
 
     supp = _t(spark, sf_dir, "supplier")
     ds = Dataset.create(
         spark, _space_tmp() + "/supplier_bm", supp.schema, ["s_suppkey"]
     )
     ds.append(supp)
+    v_before = ds.current_snapshot_id
     ds.delete(field("s_acctbal") < 1000.0)
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    return ds.read_deleted_pks_via_bitmap(snap)
+    return ds.diff(v_before, ds.current_snapshot_id).where(
+        F.col(CHANGE_TYPE_COL) == CHANGE_DELETE
+    ).select("s_suppkey")
 
 
 SPACE_BITMAP_SQL = """

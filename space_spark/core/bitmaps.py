@@ -1,13 +1,13 @@
 """Row-level delete bitmaps: compact per-file encodings of deleted row
-positions.
+positions, the format of merge-on-read delete vectors.
 
 The reference's change log stores deletions as per-file roaring bitmaps
 (metadata.proto:160-191 ``RowBitmap {file, all_rows, roaring_bitmap,
-num_rows}``) and reconstructs the DELETE stream by re-reading the original
-data files masked by the bitmap, primary-key fields only
-(ops/change_data.py:126-141). This module provides the same capability
-with a dependency-free two-container encoding that matches roaring's
-small/dense split at file granularity:
+num_rows}``). Here the change log is the PK deletes log, which every
+change consumer reads without a re-scan; the bitmaps serve the delete
+vectors that mask rows out of reads without rewriting data files. The
+encoding is dependency-free and matches roaring's small/dense split at
+file granularity:
 
 - SPARSE (tag 0): sorted uint32 positions — O(deleted rows) bytes. A
   1-row delete from a 1M-row file is 5 bytes, not 125 KB.
@@ -16,14 +16,13 @@ small/dense split at file granularity:
   positions outgrow 1-bit membership).
 - ALL (tag 2): every row of the file — zero payload, O(1) regardless of
   row count. This is the reference's ``RowBitmap.all_rows`` flag
-  (metadata.proto:182): a full-table overwrite's changelog marks each
-  parent file "all rows deleted" in 1 byte instead of rows/8, so the
-  sidecar for replacing a 10^12-row table is O(files), not ~125 GB.
+  (metadata.proto:182): a vector that covers a whole file, or a fold
+  that unions to one, costs 1 byte instead of rows/8.
 
 Encoding is chosen per file by actual size, so bitmap bytes are always
 min(4*k, num_rows/8, 1-if-full) + 1 — never O(rows) for a small delete
 and O(1) for a full-file delete. Decoders expand ALL lazily at the
-consumer (the CDC reader and MoR maskers run distributed, per-file).
+consumer (the MoR maskers run distributed, per-file).
 """
 
 from __future__ import annotations
@@ -51,15 +50,6 @@ def encode_positions(positions: np.ndarray, num_rows: int) -> bytes:
     bits = np.zeros(num_rows, dtype=bool)
     bits[pos] = True
     return bytes([_TAG_DENSE]) + np.packbits(bits).tobytes()
-
-
-def encode_all(num_rows: int) -> bytes:
-    """O(1) encoding of "every position in the file" — no position
-    array is ever materialized (reference metadata.proto:182
-    ``all_rows``). ``num_rows`` is unused but kept for signature
-    symmetry with encode_positions; the sidecar row carries it."""
-    del num_rows
-    return bytes([_TAG_ALL])
 
 
 def is_all(blob: bytes) -> bool:
@@ -126,8 +116,7 @@ def write_sidecar(abs_path: str, files, num_rows, n_deleted,
                   blobs) -> None:
     """Write one bitmap sidecar: a row per data file with its table-
     relative path, row count, deleted-row count and encoded positions —
-    the format ``read_sidecars`` reads, for change-log bitmaps and MoR
-    delete vectors alike."""
+    the format ``read_sidecars`` reads for MoR delete vectors."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -1415,29 +1415,30 @@ class Dataset:
         a DELETE (primary keys only) followed by the new rows as ADDs,
         so ``diff()``, the CDC stream, and incremental MV refresh
         replay the overwrite correctly instead of silently skipping
-        it. That delete stream is inherently O(old-table primary keys)
-        — the price of CDF over a full replacement — and is written by
-        a DISTRIBUTED job into a directory-valued deletes entry (every
-        reader of the delete stream already handles directories); the
-        dump is MoR-masked, so rows already hidden by delete vectors
-        do not re-appear as deletes. Active vectors are dropped with
-        the files they covered.
+        it. That delete stream, the commit's only changelog, is
+        inherently O(old-table primary keys) — the price of CDF over a
+        full replacement — and is written by a DISTRIBUTED job into a
+        directory-valued deletes entry (every reader of the delete
+        stream already handles directories); the dump is MoR-masked,
+        so rows already hidden by delete vectors do not re-appear as
+        deletes. Active vectors are dropped with the files they
+        covered.
 
         New data files are written FIRST (the write-first discipline
         every mutate here uses): the input plan evaluates exactly
         once, CHECK constraints validate the landed files, and a
         commit conflict retries only the cheap metadata + PK-dump
-        steps."""
+        steps. The write path decides driver or Spark for the new
+        rows as it does for ``append``, with no layout."""
         df = self._align(df)
         self.reload()
-        manifest_rel, files, rows, nbytes = wp.write_data_files(self, df)
+        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
         rec_rel = self._write_record_manifest_for(files)
 
         def attempt():
             pinned = self.current_snapshot_id
             parent = self.metadata.snapshot(pinned)
             deletes_rel = None
-            bitmap_rel = None
             old_files = mf.read_manifest_paths(
                 self._manifest_abs_paths(parent)
             )
@@ -1450,13 +1451,10 @@ class Dataset:
                     *[F.col(k).alias(self._phys_name(k))
                       for k in self.primary_keys]
                 ).write.parquet(self.log.abs_path(deletes_rel))
-                bitmap_rel = self._write_all_rows_bitmaps(parent)
                 # A parent whose listed files hold ZERO live rows (all
                 # CoW-emptied or fully vector-masked) produces an EMPTY
-                # PK dump — drop it, or the snapshot would carry a
-                # deletes stream with no bitmap sidecar, breaking the
-                # "PK stream iff bitmap stream" invariant the DML model
-                # pins (and making CDC replay a spurious empty DELETE).
+                # PK dump — drop it, or CDC would replay a spurious
+                # empty DELETE for this snapshot.
                 abs_del = self.log.abs_path(deletes_rel)
                 try:
                     # Footer-only row count: O(part files), no data read
@@ -1477,7 +1475,6 @@ class Dataset:
                     shutil.rmtree(self.log.abs_path(deletes_rel),
                                   ignore_errors=True)
                     deletes_rel = None
-                    bitmap_rel = None
             snap = md.Snapshot(
                 snapshot_id=-1,
                 parent_snapshot_id=pinned,
@@ -1487,7 +1484,6 @@ class Dataset:
                 data_bytes=nbytes,
                 added_files=list(files) if rows > 0 else [],
                 deleted_pks_file=deletes_rel,
-                deleted_bitmap_file=bitmap_rel,
                 delete_vector_files=[],
                 record_manifest_files=[rec_rel] if rec_rel else [],
                 operation="OVERWRITE",
@@ -1502,58 +1498,6 @@ class Dataset:
             attempt,
             lambda: self._reload_revalidating(files if rows > 0 else []),
         )
-
-    def _write_all_rows_bitmaps(self, parent) -> Optional[str]:
-        """Bitmap changelog for a full replacement: every surviving
-        (non-vector-masked) position of every parent data file, derived
-        from MANIFEST row counts alone — no data scan, O(files) sidecar
-        rows. Unmasked files (the overwhelming majority — only files
-        with live MoR delete vectors are masked) get the O(1) ALL
-        encoding (reference metadata.proto:182 ``RowBitmap.all_rows``),
-        so overwriting a 10^12-row table builds O(files) bytes on the
-        driver, never a per-row position array. Masked files keep the
-        exact complement encoding (bounded by files that actually carry
-        delete vectors). Keeps the invariant the DML model checks: any
-        snapshot carrying a PK delete stream also carries the bitmap
-        encoding of the same rows."""
-        if not parent.manifest_files:
-            return None
-        man_tbl = self._manifest_table(
-            parent, columns=[mf.FILE_PATH_COL, mf.NUM_ROWS_COL])
-        masks: Dict[str, object] = {}
-        vecs = list(getattr(parent, "delete_vector_files", []) or [])
-        if vecs:
-            for f, nr, _, blob in zip(*bm.fold_sidecars(
-                    [self.log.abs_path(r) for r in vecs])):
-                masks[f] = bm.decode_positions(blob, nr)
-        files, nrows, ndels, blobs = [], [], [], []
-        for rel, nr in zip(man_tbl[mf.FILE_PATH_COL].to_pylist(),
-                           man_tbl[mf.NUM_ROWS_COL].to_pylist()):
-            nr = int(nr)
-            if nr == 0:
-                continue
-            if rel not in masks:
-                # O(1) all-rows encoding — no position array at any
-                # row count (metadata.proto:182 all_rows analogue).
-                files.append(rel)
-                nrows.append(nr)
-                ndels.append(nr)
-                blobs.append(bm.encode_all(nr))
-                continue
-            pos = np.setdiff1d(np.arange(nr, dtype=np.int64),
-                               masks[rel])
-            if pos.size == 0:
-                continue  # fully vector-masked: nothing visible to delete
-            files.append(rel)
-            nrows.append(nr)
-            ndels.append(int(pos.size))
-            blobs.append(bm.encode_positions(pos, nr))
-        if not files:
-            return None
-        bitmap_rel = self.log.new_bitmap_relpath()
-        bm.write_sidecar(self.log.abs_path(bitmap_rel), files, nrows, ndels,
-                         blobs)
-        return bitmap_rel
 
     def update(self, filter_: Expr,
                assignments: Dict[str, object]) -> "Dataset":
@@ -2144,13 +2088,13 @@ class Dataset:
     def _abs_to_rel_file(self, uri: str) -> str:
         return self.log.rel_path(urlparse(uri).path)
 
-    def _write_delete_bitmaps(self, positions: pa.Table,
-                              man_tbl: pa.Table):
-        """Row-level delete bitmap sidecar (metadata.proto:160-191 RowBitmap
-        analog): one row per affected file with the deleted row POSITIONS
-        compactly encoded (core/bitmaps.py) — O(deleted) bytes, vs the PK
-        parquet's O(deleted * pk_width). ``positions`` is the CoW split's
-        or MoR probe's ``__file``/``__pos`` table, already on the driver;
+    def _write_delete_vector(self, positions: pa.Table,
+                             man_tbl: pa.Table):
+        """A merge-on-read delete vector: a bitmap sidecar
+        (metadata.proto:160-191 RowBitmap analog) with one row per
+        affected file and its deleted row POSITIONS compactly encoded
+        (core/bitmaps.py) — O(deleted) bytes. ``positions`` is the MoR
+        probe's ``__file``/``__pos`` table, already on the driver;
         ``man_tbl`` the manifest rows giving each file's row count.
         Returns (sidecar relpath, deleted rows it encodes), (None, 0)
         when no affected file is in ``man_tbl``."""
@@ -2178,10 +2122,10 @@ class Dataset:
             blobs.append(bm.encode_positions(p, int(nr)))
         if not files:
             return None, 0
-        bitmap_rel = self.log.new_bitmap_relpath()
-        bm.write_sidecar(self.log.abs_path(bitmap_rel), files, nrows, ndels,
+        vector_rel = self.log.new_bitmap_relpath()
+        bm.write_sidecar(self.log.abs_path(vector_rel), files, nrows, ndels,
                          blobs)
-        return bitmap_rel, sum(ndels)
+        return vector_rel, sum(ndels)
 
     # Above this many live MoR delete-vector sidecars, a new MoR delete
     # folds them all into ONE merged sidecar at commit time — pure
@@ -2223,8 +2167,7 @@ class Dataset:
 
     def _commit_vectors(self, snap_id: int, vec_list: List[str],
                         operation: str, n_masked: int = 0,
-                        deletes_rel: Optional[str] = None,
-                        bitmap_rel: Optional[str] = None) -> None:
+                        deletes_rel: Optional[str] = None) -> None:
         """Commit snapshot ``snap_id``'s data files unchanged under a new
         delete-vector list, ``n_masked`` more rows masked, with the
         optional change log of those rows."""
@@ -2240,7 +2183,6 @@ class Dataset:
             data_bytes=snapshot.data_bytes,
             added_files=[],
             deleted_pks_file=deletes_rel,
-            deleted_bitmap_file=bitmap_rel,
             delete_vector_files=vec_list,
             record_manifest_files=list(snapshot.record_manifest_files),
             operation=operation,
@@ -2288,9 +2230,9 @@ class Dataset:
                 self, wp.probe_frame(self, snapshot, files).where(pred_true))
             if not split.affected:
                 return self
-            bitmap_rel, n_masked = self._write_delete_bitmaps(
+            vector_rel, n_masked = self._write_delete_vector(
                 split.positions, self._manifest_table(snapshot))
-            if bitmap_rel is None:
+            if vector_rel is None:
                 # Affected files missing from manifest stats: surface a
                 # clean error rather than dereferencing None below.
                 raise SpaceError(
@@ -2300,11 +2242,11 @@ class Dataset:
                 )
             vec_list = list(
                 getattr(snapshot, "delete_vector_files", []) or []
-            ) + [bitmap_rel]
+            ) + [vector_rel]
             if len(vec_list) > self.DELETE_VECTOR_FOLD_MAX:
                 vec_list = [self._fold_vector_rels(vec_list)]
             self._commit_vectors(snap_id, vec_list, "DELETE", n_masked,
-                                 split.deletes_rel, bitmap_rel)
+                                 split.deletes_rel)
             return self
 
         return md.retry_commit(attempt, self.reload)
@@ -2637,14 +2579,13 @@ class Dataset:
         operation: Optional[str] = None,
     ) -> None:
         """One snapshot combining a CoW rewrite of ``split.affected`` files
-        (with its survivors re-written, the pre-written deletes log
-        attached and the bitmap sidecar built from its positions) and an
-        optional already-written append — upsert's delete+add lands as a
-        single commit (reference merge_patches, ops/insert.py:93-99)."""
-        affected, survivors, deletes_rel, positions = split
+        (with its survivors re-written and the pre-written deletes log
+        attached) and an optional already-written append — upsert's
+        delete+add lands as a single commit (reference merge_patches,
+        ops/insert.py:93-99)."""
+        affected, survivors, deletes_rel, _ = split
         parent = self.metadata.snapshot(pinned)
         removed_rows = removed_bytes = surv_rows = surv_bytes = 0
-        bitmap_rel = None
         # Rewriting a file retires its merge-on-read vector entries (the
         # rewrite was produced from a vector-masked read, so the masked
         # rows are physically gone now); entries for untouched files carry
@@ -2664,9 +2605,6 @@ class Dataset:
             removed_rows = pc.sum(removed[mf.NUM_ROWS_COL]).as_py() or 0
             removed_bytes = pc.sum(removed[mf.SIZE_BYTES_COL]).as_py() or 0
             carry = man_tbl.filter(pc.invert(aff_mask))
-            if deletes_rel:
-                bitmap_rel, _ = self._write_delete_bitmaps(positions,
-                                                           man_tbl)
 
             # Write survivors as new data files (may be zero files/rows);
             # they are already physical rows (addresses carried over, blobs
@@ -2703,7 +2641,6 @@ class Dataset:
             # holds deleted bitmaps only, ops/delete.py:113-115,215-228).
             added_files=list(append_files or []),
             deleted_pks_file=deletes_rel if affected else None,
-            deleted_bitmap_file=bitmap_rel,
             delete_vector_files=vector_files,
             # Blob files are untouched by CoW deletes; their manifests
             # carry over (counts become an upper bound on live refs).
@@ -3466,7 +3403,7 @@ class Dataset:
                 s.snapshot_id, s.created_at, s.operation,
                 s.parent_snapshot_id, s.num_rows, s.data_bytes,
                 len(s.added_files or []),
-                bool(s.deleted_pks_file or s.deleted_bitmap_file),
+                bool(s.deleted_pks_file),
             )
             for s in self.metadata.snapshots.values()
         ]
@@ -4134,8 +4071,6 @@ class Dataset:
                         for n in fs:
                             live.add(self.log.rel_path(
                                 os.path.join(root, n)))
-            if snap.deleted_bitmap_file:
-                live.add(snap.deleted_bitmap_file)
             live.update(snap.delete_vector_files)
             live.update(
                 mf.read_manifest_paths(
@@ -4240,43 +4175,17 @@ class Dataset:
         return list(reversed(chain))
 
     def read_deleted_pks(self, snap) -> DataFrame:
-        """A snapshot's delete stream as PK-only rows. The stored file may
-        carry a probe-provenance ``__file`` column (written by the fused
-        delete probe); parquet is columnar, so selecting the PKs never
-        reads it."""
+        """A snapshot's delete stream as PK-only rows. This deletes log
+        is the table's one delete changelog: ``diff``, both MV refreshes
+        and CDC read it, and no consumer re-scans the parent's data
+        files. A split's log also carries each deleted row's
+        ``__file``/``__pos`` provenance; parquet is columnar, so
+        selecting the PKs never reads those columns."""
         return self.spark.read.parquet(
             self.log.abs_path(snap.deleted_pks_file)
         ).select(
             *[F.col(self._phys_name(k)).alias(k) for k in self.primary_keys]
         )
-
-    def read_deleted_pks_via_bitmap(self, snap) -> DataFrame:
-        """The same DELETE stream reconstructed from the PARENT version's
-        data files masked by the per-file row bitmaps — how the reference
-        serves change-data deletes (change_data.py:126-141: FileSetReadOp
-        over bitmap-masked files, PK fields only). The changelog itself is
-        O(deleted) bitmap bytes; this read re-scans only the affected
-        files, PK columns only, and semi-joins on (file, row position).
-        At 100 TB the sidecar ships KBs where PK sets would ship GBs; the
-        PK parquet remains the MV-facing stream (no re-scan)."""
-        if not getattr(snap, "deleted_bitmap_file", None):
-            raise UserInputError(
-                f"Snapshot {snap.snapshot_id} has no delete bitmap"
-            )
-        side = self.spark.read.parquet(
-            self.log.abs_path(snap.deleted_bitmap_file)
-        )
-        pairs = self._bitmap_pairs_df([snap.deleted_bitmap_file])
-        rel_files = [r["file"] for r in side.select("file").collect()]
-        phys = self._read_files(rel_files).select(
-            *self.primary_keys,
-            _norm_file_path().alias("__abs"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        # No join hint: the pair side is O(deleted) — AQE broadcasts it
-        # when small and shuffles when a bulk delete makes it large.
-        return phys.join(pairs, on=["__abs", "__pos"], how="left_semi"
-                         ).select(*self.primary_keys)
 
     def key_range(self, col: str):
         """(min, max) of an indexed column aggregated from manifest

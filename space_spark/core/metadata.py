@@ -96,16 +96,15 @@ class Snapshot:
     num_rows: int = 0
     data_bytes: int = 0
     # Change log (metadata.proto:160-191 analog): files added by this commit
-    # and a Parquet file holding the primary keys of rows deleted by it.
+    # and a Parquet deletes log holding the primary keys of rows deleted by
+    # it (a split's log also holds each row's ``__file``/``__pos``). The
+    # deletes log is the one delete changelog: O(deleted * pk_width) bytes,
+    # read by diff, MV refresh and CDC without re-scanning data files.
+    # Metadata written before the bitmap changelog was removed may still
+    # name a bitmap sidecar; from_dict ignores that key and vacuum
+    # reclaims the sidecar as an orphan.
     added_files: List[str] = dc_field(default_factory=list)
     deleted_pks_file: Optional[str] = None
-    # Row-level delete bitmaps (metadata.proto:160-191 RowBitmap analog):
-    # a parquet of (file, num_rows, bitmap) with one row per affected file,
-    # where ``bitmap`` compactly encodes the deleted row POSITIONS within
-    # that file (core/bitmaps.py). O(deleted) bytes vs the PK parquet's
-    # O(deleted * pk_width); the DELETE stream is reconstructible from the
-    # parent snapshot's files masked by these bitmaps.
-    deleted_bitmap_file: Optional[str] = None
     # ACTIVE merge-on-read delete vectors (Iceberg-v2-style positional
     # deletes; beyond the reference, which is CoW-only): bitmap-sidecar
     # files whose (file, positions) entries mask rows OUT of every read of
@@ -131,7 +130,6 @@ class Snapshot:
             "data_bytes": self.data_bytes,
             "added_files": self.added_files,
             "deleted_pks_file": self.deleted_pks_file,
-            "deleted_bitmap_file": self.deleted_bitmap_file,
             "delete_vector_files": self.delete_vector_files,
             "record_manifest_files": self.record_manifest_files,
             "operation": self.operation,
@@ -148,7 +146,6 @@ class Snapshot:
             data_bytes=d.get("data_bytes", 0),
             added_files=list(d.get("added_files", [])),
             deleted_pks_file=d.get("deleted_pks_file"),
-            deleted_bitmap_file=d.get("deleted_bitmap_file"),
             delete_vector_files=list(d.get("delete_vector_files", [])),
             record_manifest_files=list(d.get("record_manifest_files", [])),
             operation=d.get("operation"),

@@ -44,7 +44,9 @@ class CowSplit(NamedTuple):
     """A copy-on-write delete's split: the affected rel files, their
     survivors (a DataFrame, or Arrow tables one per output file), the
     written deletes log's relpath, and the deleted rows' ``__file`` (data
-    file URI) and ``__pos`` (row position) as an Arrow table."""
+    file URI) and ``__pos`` (row position) as an Arrow table. The log
+    holds the same ``__file``/``__pos`` next to the keys; the positions
+    give the affected files, and a MoR delete's vector."""
     affected: List[str]
     survivors: Union[DataFrame, List[pa.Table], None]
     deletes_rel: Optional[str]
@@ -364,10 +366,10 @@ def probe_deletes(ds, matches: DataFrame) -> CowSplit:
     (PKs, source file, row position) land directly as the change-log
     deletes file; the affected files and the deleted positions are
     then one driver-side read of that output's ``__file``/``__pos``
-    columns, which also feed the per-file delete BITMAP sidecar built
-    at commit time. Readers of the deletes file select the PK columns,
-    so the provenance columns ride along for free. ``survivors`` is
-    left None."""
+    columns, which a MoR delete also encodes as its delete vector.
+    Readers of the deletes file select the PK columns, so the
+    provenance columns ride along for free. ``survivors`` is left
+    None."""
     pks = ds.primary_keys
     deletes_rel = ds.log.new_deletes_reldir()
     abs_del = ds.log.abs_path(deletes_rel)

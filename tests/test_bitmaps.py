@@ -1,9 +1,10 @@
-"""Row-level delete bitmap sidecar: encoding + end-to-end changelog.
+"""Row-level delete bitmaps: encoding + end-to-end delete-vector sidecars.
 
-Mirrors the reference's RowBitmap change log (metadata.proto:160-191,
-ops/change_data.py:126-141): deletions are logged as per-file row-position
-bitmaps with O(deleted) bytes, and the DELETE stream is reconstructible by
-re-reading the parent version's files masked by the bitmap."""
+The encoding mirrors the reference's RowBitmap (metadata.proto:160-191):
+per-file row-position bitmaps with O(deleted) bytes. A merge-on-read
+delete commits its matched positions as such a sidecar."""
+
+import os
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -14,7 +15,6 @@ from pyspark.sql import functions as F
 
 from space_spark import Dataset, field, lit
 from space_spark.core import bitmaps as bm
-from space_spark.errors import UserInputError
 
 
 # ------------------------------------------------------------- unit: encoding
@@ -45,23 +45,18 @@ def test_empty_and_full():
 
 def test_all_rows_encoding_is_o1():
     """A full-file delete encodes in ONE byte at any row count — the
-    reference's RowBitmap.all_rows flag (metadata.proto:182). Both the
-    explicit encode_all path and encode_positions' full-set detection
-    hit it, and count/merge never materialize positions."""
-    for n in (1, 100, 2_000_000_000):  # 2e9 rows: arange would be 16 GB
-        blob = bm.encode_all(n)
-        assert len(blob) == 1 and bm.is_all(blob)
-        assert bm.count_positions(blob, n) == n
-    # encode_positions recognizes a full set (small n only — the point
-    # of encode_all is that callers never build the full array).
+    reference's RowBitmap.all_rows flag (metadata.proto:182).
+    encode_positions' full-set detection hits it, and count/merge never
+    materialize positions."""
     full = np.arange(500)
-    blob = bm.encode_positions(full, 500)
-    assert len(blob) == 1 and bm.is_all(blob)
-    assert np.array_equal(bm.decode_positions(blob, 500), full)
+    all_blob = bm.encode_positions(full, 500)
+    assert len(all_blob) == 1 and bm.is_all(all_blob)
+    assert np.array_equal(bm.decode_positions(all_blob, 500), full)
+    for n in (1, 100, 2_000_000_000):  # 2e9 rows: arange would be 16 GB
+        assert bm.count_positions(all_blob, n) == n
     # merge with ALL short-circuits to ALL without decoding.
     sparse = bm.encode_positions(np.array([3, 7]), 2_000_000_000)
-    merged, nd = bm.merge_blobs([sparse, bm.encode_all(2_000_000_000)],
-                                2_000_000_000)
+    merged, nd = bm.merge_blobs([sparse, all_blob], 2_000_000_000)
     assert bm.is_all(merged) and nd == 2_000_000_000
 
 
@@ -109,12 +104,18 @@ def big_table(spark, tmp_location):
     return ds, n
 
 
+def _vector_sidecar(ds):
+    """The head snapshot's one merge-on-read delete-vector sidecar."""
+    snap = ds.metadata.snapshot(ds.current_snapshot_id)
+    assert len(snap.delete_vector_files) == 1
+    return snap.delete_vector_files[0]
+
+
 def test_small_delete_logs_o1_bitmap_bytes(big_table):
     ds, n = big_table
-    ds.delete((field("id") == lit(5)) | (field("id") == lit(77_777)))
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    assert snap.deleted_bitmap_file is not None
-    side = pq.read_table(ds.log.abs_path(snap.deleted_bitmap_file))
+    ds.delete((field("id") == lit(5)) | (field("id") == lit(77_777)),
+              rewrite=False)
+    side = pq.read_table(ds.log.abs_path(_vector_sidecar(ds)))
     assert side.num_rows == 1  # one affected file
     blob = side["bitmap"][0].as_py()
     # 2 deleted rows from a 100k-row file: tag + 2 uint32 = 9 bytes.
@@ -122,63 +123,63 @@ def test_small_delete_logs_o1_bitmap_bytes(big_table):
     assert side["num_rows"][0].as_py() == n
 
 
-def test_bitmap_stream_matches_pk_stream(big_table):
-    ds, _ = big_table
-    ds.delete(field("id") < lit(100))
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    via_pks = sorted(
-        r["id"] for r in ds.read_deleted_pks(snap).collect()
-    )
-    via_bitmap = sorted(
-        r["id"] for r in ds.read_deleted_pks_via_bitmap(snap).collect()
-    )
-    assert via_bitmap == via_pks
-    assert len(via_bitmap) == 100
-
-
 def test_dense_delete_uses_bitset(big_table):
     ds, n = big_table
-    ds.delete(field("v") < lit(5))  # ~5/7 of rows
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    side = pq.read_table(ds.log.abs_path(snap.deleted_bitmap_file))
+    ds.delete(field("v") < lit(5), rewrite=False)  # ~5/7 of rows
+    side = pq.read_table(ds.log.abs_path(_vector_sidecar(ds)))
     blob = side["bitmap"][0].as_py()
     assert len(blob) == 1 + (n + 7) // 8  # dense container
-    assert (
-        ds.read_deleted_pks_via_bitmap(snap).count()
-        == ds.read_deleted_pks(snap).count()
-    )
-
-
-def test_upsert_writes_bitmap_too(spark, tmp_location):
-    df = spark.range(1000).coalesce(1).select(
-        F.col("id"), F.lit("old").alias("s")
-    )
-    ds = Dataset.create(spark, tmp_location, df.schema, ["id"])
-    ds.append(df)
-    up = spark.range(3).select(F.col("id"), F.lit("new").alias("s"))
-    ds.upsert(up)
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    assert snap.deleted_bitmap_file is not None
-    assert sorted(
-        r["id"] for r in ds.read_deleted_pks_via_bitmap(snap).collect()
-    ) == [0, 1, 2]
-
-
-def test_no_bitmap_raises(spark, tmp_location):
-    df = spark.range(10).select("id")
-    ds = Dataset.create(spark, tmp_location, df.schema, ["id"])
-    ds.append(df)
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    with pytest.raises(UserInputError):
-        ds.read_deleted_pks_via_bitmap(snap)
+    assert side["n_deleted"][0].as_py() == \
+        ds.read_deleted_pks(
+            ds.metadata.snapshot(ds.current_snapshot_id)).count()
 
 
 def test_vacuum_keeps_bitmap_sidecar(big_table):
     ds, _ = big_table
-    ds.delete(field("id") == lit(1))
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
+    ds.delete(field("id") == lit(1), rewrite=False)
     removed = ds.vacuum(dry_run=True)
-    assert snap.deleted_bitmap_file not in removed
+    assert _vector_sidecar(ds) not in removed
+
+
+def test_older_bitmap_changelog_sidecar_is_reclaimed(spark, tmp_location):
+    """Metadata written while CoW deletes also logged a bitmap changelog
+    names that sidecar under ``deleted_bitmap_file``. Such a table still
+    loads and diffs from its PK deletes log, and vacuum reclaims the
+    sidecar as an orphan: nothing reads it."""
+    import json
+
+    from space_spark.core import manifests as mf
+
+    df = spark.range(10).coalesce(1).select("id")
+    ds = Dataset.create(spark, tmp_location, df.schema, ["id"])
+    ds.append(df)
+    v = ds.current_snapshot_id
+    parent = ds.metadata.snapshot(v)
+    (data_rel,) = mf.read_manifest_paths(ds._manifest_abs_paths(parent))
+    ds.delete(field("id") < lit(3))
+    sid = ds.current_snapshot_id
+    side_rel = ds.log.new_bitmap_relpath()
+    assert side_rel.startswith("_space/changes/")
+    bm.write_sidecar(ds.log.abs_path(side_rel), [data_rel], [10], [3],
+                     [bm.encode_positions(np.arange(3), 10)])
+    with open(ds.log.entrypoint_path, encoding="utf-8") as f:
+        meta_abs = ds.log.abs_path(json.load(f)["metadata_file"])
+    with open(meta_abs, encoding="utf-8") as f:
+        meta = json.load(f)
+    meta["snapshots"][str(sid)]["deleted_bitmap_file"] = side_rel
+    with open(meta_abs, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+
+    fresh = Dataset.load(spark, tmp_location)
+    assert sorted(r["id"] for r in fresh.read().collect()) == \
+        list(range(3, 10))
+    d = fresh.diff(v, sid)
+    assert sorted(r["id"] for r in d.where(F.col("_change_type") == "DELETE")
+                  .collect()) == [0, 1, 2]
+    removed = fresh.vacuum(data_grace_sec=0)
+    assert side_rel in removed
+    assert not os.path.exists(fresh.log.abs_path(side_rel))
+    assert fresh.read().count() == 7
 
 
 def test_read_sidecars_batched_matches_sequential(tmp_path):

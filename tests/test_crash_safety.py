@@ -91,10 +91,9 @@ def test_overwrite_crash_before_commit_is_invisible_and_vacuumable(
 
     # Simulate the crash point: replicate overwrite()'s pre-commit
     # steps without committing.
-    manifest_rel, files, rows, _ = write_path.write_data_files(
+    manifest_rel, files, rows, _ = write_path.write_input(
         ds, simple_df(spark, range(100, 105))
     )
-    parent = ds.metadata.snapshot(ds.current_snapshot_id)
     import os as _os
 
     from space_spark.core import metadata as _md
@@ -106,8 +105,6 @@ def test_overwrite_crash_before_commit_is_invisible_and_vacuumable(
     ds._read_files(
         sorted(ds.data_files())
     ).select(F.col("id")).write.parquet(ds.log.abs_path(deletes_rel))
-    bitmap_rel = ds._write_all_rows_bitmaps(parent)
-    assert bitmap_rel is not None
 
     fresh = Dataset.load(spark, tmp_location)
     assert fresh.read().count() == 10  # crash invisible
@@ -115,7 +112,6 @@ def test_overwrite_crash_before_commit_is_invisible_and_vacuumable(
     removed = fresh.vacuum(metadata_grace_sec=0.0, data_grace_sec=0.0)
     assert set(files) <= set(removed)
     assert manifest_rel in removed
-    assert bitmap_rel in removed
     # Every file inside the uncommitted deletes DIRECTORY is reaped.
     leftovers = _glob.glob(
         _os.path.join(ds.log.abs_path(deletes_rel), "*.parquet")

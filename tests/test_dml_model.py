@@ -223,19 +223,22 @@ def test_dml_sequence_matches_model(spark, ops):
             # model can't hold; restrict comparison to count parity first.
             assert got == model, f"step {step} {kind} {ids}"
 
-            # Whenever this op logged deletes, the bitmap-reconstructed
-            # DELETE stream must equal the PK-parquet stream.
-            snap = ds.metadata.snapshot(after)
-            if snap is not None and snap.deleted_pks_file:
-                assert snap.deleted_bitmap_file is not None
-                via_pk = sorted(
-                    r.pk for r in ds.read_deleted_pks(snap).collect()
+            # Whenever this op committed past the previous head, its
+            # change feed replayed onto the previous state must give
+            # the new one: the DELETE stream names exactly the removed
+            # or replaced keys, the ADD stream the new values.
+            if after != before and _descends(ds, after, before):
+                replayed = dict(history[before])
+                changes = sorted(
+                    ds.diff(before, after).collect(),
+                    key=lambda r: (r["_snapshot_id"], r["_change_order"]),
                 )
-                via_bm = sorted(
-                    r.pk
-                    for r in ds.read_deleted_pks_via_bitmap(snap).collect()
-                )
-                assert via_bm == via_pk, f"step {step} {kind}"
+                for r in changes:
+                    if r["_change_type"] == "DELETE":
+                        replayed.pop(r["pk"], None)
+                    else:
+                        replayed[r["pk"]] = r["v"]
+                assert replayed == model, f"step {step} {kind} diff"
 
         # Time travel: every recorded snapshot state must replay.
         for sid, state in enumerate(history):
@@ -245,6 +248,13 @@ def test_dml_sequence_matches_model(spark, ops):
             assert got == state, f"snapshot {sid}"
     finally:
         shutil.rmtree(location, ignore_errors=True)
+
+
+def _descends(ds, sid, ancestor):
+    """Whether snapshot ``sid`` has ``ancestor`` in its parent chain."""
+    while sid is not None and sid != ancestor:
+        sid = ds.metadata.snapshot(sid).parent_snapshot_id
+    return sid == ancestor
 
 
 def test_blind_append_allows_duplicate_pks(spark):

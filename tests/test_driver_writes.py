@@ -163,7 +163,7 @@ def _record_fields(spark, loc):
 def _mor_upsert_overwrite(spark, loc):
     """A merge-on-read delete, an upsert of a key in the masked file (a
     CoW split over vector-masked candidates that retires the vector),
-    then an overwrite (the all-rows bitmap)."""
+    then an overwrite of a table with a live vector."""
     ds = _seeded(spark, loc)
     ds.delete(field("k") == 8, rewrite=False)
     ds.upsert(_local(spark, [(9, "u", 90)]))
@@ -189,8 +189,7 @@ SCENARIOS = {
 def test_size_rule_sides_agree(spark, tmp_location, name):
     """The same ops under the default threshold (driver writes) and
     under -1 (every write through Spark) give equal ``read()`` rows and
-    equal ``diff()`` change feeds, and every snapshot's bitmap stream
-    names the same rows as its PK delete stream."""
+    equal ``diff()`` change feeds."""
     out = {}
     for side, value in (("driver", spark.conf.get(THRESHOLD)),
                         ("spark", "-1")):
@@ -205,11 +204,6 @@ def test_size_rule_sides_agree(spark, tmp_location, name):
                    .drop(dataset_mod.CHANGE_SNAPSHOT_COL, *t.record_fields)))
             for t in tables
         ]
-        for t in tables:
-            for snap in t.metadata.snapshots.values():
-                if snap.deleted_pks_file:
-                    assert _rows(t.read_deleted_pks_via_bitmap(snap)) == \
-                        _rows(t.read_deleted_pks(snap)), snap.snapshot_id
         drivers = _driver_named(os.path.dirname(loc))
         if side == "driver":
             assert drivers, "default threshold took no driver write"
@@ -423,9 +417,10 @@ def test_deletes_log_read_error_propagates(spark, tmp_location,
 @pytest.mark.parametrize("op", ["delete", "delete_by_keys", "upsert"])
 def test_cow_delete_commits_bitmap_with_pk_stream(spark, tmp_location,
                                                   monkeypatch, op, side):
-    """A failed read of a deletes log's row positions never commits the
-    PK delete stream without its bitmap stream: the op either raises
-    and leaves the table unchanged, or commits both."""
+    """A failed read of a deletes log's row positions never commits a
+    wrong or empty delete: the op either raises and leaves the table
+    unchanged, or commits a PK delete stream naming exactly the deleted
+    key."""
     ds = Dataset.create(spark, tmp_location, KXG, ["k"])
     ds.append(_local(spark, [(1, "a", 0), (2, "b", 0)]))
     head = ds.current_snapshot_id
@@ -458,6 +453,5 @@ def test_cow_delete_commits_bitmap_with_pk_stream(spark, tmp_location,
             [(1, 0), (2, 0)]
         return
     snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    assert snap.deleted_pks_file and snap.deleted_bitmap_file
-    assert _rows(ds.read_deleted_pks_via_bitmap(snap)) == \
-        _rows(ds.read_deleted_pks(snap)) == [(1,)]
+    assert snap.deleted_pks_file
+    assert _rows(ds.read_deleted_pks(snap)) == [(1,)]

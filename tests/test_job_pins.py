@@ -22,7 +22,8 @@ SCHEMA = T.StructType([
 # driver: a local append is one collect (was a range sample and a write),
 # upsert's dup check reads the written keys with pyarrow, and every CoW
 # delete is one candidate read split on the driver (was a probe write and
-# a survivor write).
+# a survivor write). An overwrite writes its local input the way append
+# does; its dump of the old keys stays a Spark write.
 PINNED_JOBS = {
     "append": 1,
     "upsert": 2,
@@ -32,11 +33,12 @@ PINNED_JOBS = {
     "delete": 1,
     "merge": 12,
     "apply_changes": 6,
+    "overwrite": 2,
 }
 
 # The same ops with spark.sql.autoBroadcastJoinThreshold=-1, where every
-# output goes through Spark's writer, plus a merge-on-read delete and an
-# overwrite, which are Spark writes on either side.
+# output goes through Spark's writer, plus a merge-on-read delete, which
+# is a Spark write on either side.
 PINNED_JOBS_SPARK = {
     "append": 3,
     "upsert": 5,
@@ -59,7 +61,7 @@ def _rows(spark, triples):
     )
 
 
-def _run_ops(spark, tmp_location, extra_ops=False):
+def _run_ops(spark, tmp_location, mor=False):
     """Job counts of each write op on a fresh clustered table, and the
     row-wise MV's keys after its last refresh."""
     ds = Dataset.create(spark, tmp_location, SCHEMA, ["k"],
@@ -102,11 +104,11 @@ def _run_ops(spark, tmp_location, extra_ops=False):
             _rows(spark, [(5, "g2", 50)]),
             _rows(spark, [(6, "", 0)]).select("k")),
     }
-    if extra_ops:
+    if mor:
         ops["delete_mor"] = lambda: ds.delete(field("k") == 7,
                                               rewrite=False)
-        ops["overwrite"] = lambda: ds.overwrite(
-            _rows(spark, [(i, "o", i) for i in range(5)]))
+    ops["overwrite"] = lambda: ds.overwrite(
+        _rows(spark, [(i, "o", i) for i in range(5)]))
     got = {name: jobs(fn) for name, fn in ops.items()}
     return got, {r.k for r in mv.read().collect()}
 
@@ -122,7 +124,7 @@ def test_write_ops_spark_side_job_pins(spark, tmp_location):
     prev = spark.conf.get(threshold)
     spark.conf.set(threshold, "-1")
     try:
-        got, mv_keys = _run_ops(spark, tmp_location, extra_ops=True)
+        got, mv_keys = _run_ops(spark, tmp_location, mor=True)
     finally:
         spark.conf.set(threshold, prev)
     assert got == PINNED_JOBS_SPARK, str(got)

@@ -110,87 +110,17 @@ def test_overwrite_respects_constraints(spark, tmp_location):
     assert ds.read().count() == 5  # untouched
 
 
-def test_overwrite_bitmap_changelog_agrees_with_pk_stream(
-    spark, tmp_location
-):
-    """The overwrite snapshot carries BOTH delete-stream encodings and
-    they agree — including when MoR vectors already hid rows."""
+def test_overwrite_pk_stream_skips_mor_hidden_rows(spark, tmp_location):
+    """The overwrite's PK deletes log names only the rows visible at
+    the parent: rows MoR vectors already hid are not logged again."""
     ds = Dataset.create(spark, tmp_location, SCHEMA, ["id"])
     ds.append(_rows(spark, 0, 10))
     ds.delete(field("id") >= 7, rewrite=False)
     ds.overwrite(_rows(spark, 100, 102))
     snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    assert snap.deleted_pks_file and snap.deleted_bitmap_file
+    assert snap.deleted_pks_file
     via_pk = sorted(r.id for r in ds.read_deleted_pks(snap).collect())
-    via_bm = sorted(
-        r.id for r in ds.read_deleted_pks_via_bitmap(snap).collect()
-    )
-    assert via_pk == via_bm == list(range(7))
-
-
-def test_overwrite_bitmap_sidecar_is_o_files_not_o_rows(
-    spark, tmp_location
-):
-    """The overwrite changelog's bitmap for an unmasked parent file is
-    the 1-byte ALL encoding (reference metadata.proto:182 all_rows) at
-    ANY row count — proven on a synthetic manifest claiming 2e9 rows,
-    where a dense bitset would be 250 MB and a position array 16 GB.
-    _write_all_rows_bitmaps reads only manifest row counts, so the
-    doctored manifest exercises the real production path."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from space_spark.core import bitmaps as bm
-    from space_spark.core import manifests as mf
-
-    ds = Dataset.create(spark, tmp_location, SCHEMA, ["id"])
-    ds.append(_rows(spark, 0, 10))
-    parent = ds.metadata.snapshot(ds.current_snapshot_id)
-    man_path = ds._manifest_abs_paths(parent)[0]
-    tbl = pq.read_table(man_path)
-    big = tbl.set_column(
-        tbl.column_names.index(mf.NUM_ROWS_COL), mf.NUM_ROWS_COL,
-        pa.array([2_000_000_000] * tbl.num_rows, pa.int64()),
-    )
-    pq.write_table(big, man_path)
-    rel = ds._write_all_rows_bitmaps(parent)
-    side = pq.read_table(ds.log.abs_path(rel))
-    assert side.num_rows == tbl.num_rows  # O(files) sidecar rows
-    for blob, nd in zip(side["bitmap"].to_pylist(),
-                        side["n_deleted"].to_pylist()):
-        assert len(blob) == 1 and bm.is_all(blob)
-        assert nd == 2_000_000_000
-
-
-def test_overwrite_bitmap_keeps_exact_encoding_for_masked_files(
-    spark, tmp_location
-):
-    """Parent files hidden by MoR delete vectors keep the exact
-    complement encoding; unmasked files in the same overwrite get ALL."""
-    from space_spark.core import bitmaps as bm
-
-    ds = Dataset.create(spark, tmp_location, SCHEMA, ["id"])
-    ds.append(_rows(spark, 0, 10))
-    ds.delete(field("id") == 3, rewrite=False)
-    ds.overwrite(_rows(spark, 100, 102))
-    snap = ds.metadata.snapshot(ds.current_snapshot_id)
-    import pyarrow.parquet as pq
-
-    side = pq.read_table(ds.log.abs_path(snap.deleted_bitmap_file))
-    # 10 parent rows (across several files), one MoR-hidden: 9 visible
-    # deletions total. The file carrying the masked row encodes the
-    # exact complement (not ALL); every fully-visible file encodes ALL.
-    assert sum(side["n_deleted"].to_pylist()) == 9
-    exact = [
-        (blob, nr, nd)
-        for blob, nr, nd in zip(side["bitmap"].to_pylist(),
-                                side["num_rows"].to_pylist(),
-                                side["n_deleted"].to_pylist())
-        if not bm.is_all(blob)
-    ]
-    assert len(exact) == 1
-    blob, nr, nd = exact[0]
-    assert nd == nr - 1  # one hidden row excluded from the complement
+    assert via_pk == list(range(7))
 
 
 def test_overwrite_of_fully_deleted_table_logs_no_delete_stream(
@@ -198,8 +128,8 @@ def test_overwrite_of_fully_deleted_table_logs_no_delete_stream(
 ):
     """Parent manifests still LIST files after a CoW delete emptied the
     table; an overwrite then must not log an empty PK-delete stream
-    (the DML model pins: deleted_pks_file set iff deleted_bitmap_file
-    set iff rows were actually visible to delete)."""
+    (deleted_pks_file is set iff rows were actually visible to
+    delete; an empty one would replay a spurious DELETE)."""
     ds = Dataset.create(spark, tmp_location, SCHEMA, ["id"])
     ds.append(_rows(spark, 0, 5))
     ds.delete(field("id") < 100)  # CoW-empties the table
@@ -207,7 +137,6 @@ def test_overwrite_of_fully_deleted_table_logs_no_delete_stream(
     ds.overwrite(_rows(spark, 200, 203))
     snap = ds.metadata.snapshot(ds.current_snapshot_id)
     assert snap.deleted_pks_file is None
-    assert snap.deleted_bitmap_file is None
     d = ds.diff(v, None)
     assert d.where(F.col("_change_type") == "DELETE").count() == 0
     assert d.where(F.col("_change_type") == "ADD").count() == 3
