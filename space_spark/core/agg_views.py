@@ -11,9 +11,11 @@ and the distributive/algebraic/holistic taxonomy):
 
 - ``count``/``sum``/``avg`` are DISTRIBUTIVE/ALGEBRAIC: a per-snapshot
   delta of signed rows (+1 adds, -1 deletes) folds into the stored
-  state exactly. Deleted rows are PK-only in the change log, so their
-  VALUES are recovered with one ``read_by_keys`` against the PARENT
-  version (range+bloom pruned: O(files containing those keys)). The
+  state exactly. The deletes log holds each deleted row's keys and its
+  ``__file``/``__pos`` in the PARENT version, so the deleted VALUES are
+  a positional read of exactly those rows; a log without that
+  provenance (written by older code) falls back to one ``read_by_keys``
+  against the parent version (range+bloom pruned). The
   sum accumulator keeps Spark's OWN sum output type (long for integral
   inputs — exact, never a double that loses integers past 2^53;
   round-13 review).
@@ -23,12 +25,18 @@ and the distributive/algebraic/holistic taxonomy):
   source at that snapshot — with the damaged keys pushed down as an
   isin filter so manifest stats prune the repair scan too.
 
-Scale shape per refresh: O(changed rows) for the delta, one pruned
-point read of the old state rows for exactly the touched groups (group
-keys are the state table's PRIMARY KEYS), one ``apply_changes`` commit
-(upserts + emptied-group deletes, atomic with the source-synced
+Scale shape per refresh: O(changed rows) for the delta — the added
+files plus a positional read of the deleted rows, grouped per parent
+file — one pruned read of the old state rows for the touched groups
+(group keys are the state table's PRIMARY KEYS), one ``apply_changes``
+commit (upserts + emptied-group deletes, atomic with the source-synced
 marker). Groups whose keys never appear in a snapshot's delta are
-never read, shuffled, or rewritten.
+never read, shuffled, or rewritten. A delta within the driver-write
+bound (``write_path.fits_driver``) is read with pyarrow and handed to
+the same Spark fold expressions as a LocalRelation; the fold is
+collected once and committed by a driver write and a driver split (the
+min/max repair scan stays a Spark read). One fold algebra serves both
+sides.
 
 SQL semantics: ``count(col)``/``sum``/``avg``/``min``/``max`` ignore
 NULLs; ``count(*)`` counts rows; a group whose last non-null value is
@@ -48,12 +56,15 @@ from __future__ import annotations
 
 from typing import Dict, List, Sequence, Tuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from space_spark.core import metadata as md
 from space_spark.core import schema as sc
+from space_spark.core import write_path as wp
 from space_spark.core.views import sync_marker_mutate
 from space_spark.errors import SpaceError, UserInputError
 
@@ -309,29 +320,36 @@ class MaterializedAggregate:
         # version (recomputing a damaged group from the live rows at end
         # IS the final answer — intermediate repairs would be folded
         # over anyway).
-        parts = []
-        for snap in snaps:
-            if snap.deleted_pks_file:
-                # Deleted rows are PK-only in the log; their VALUES
-                # lived in the parent version — one range+bloom-pruned
-                # point read per snapshot (versioned: cannot batch).
-                pks_df = source.read_deleted_pks(snap)
-                del_rows = source.read_by_keys(
-                    pks_df, version=snap.parent_snapshot_id
-                )
-                parts.append(del_rows.select(*gb, *in_cols)
-                             .withColumn(_SIGN, F.lit(-1)))
-            if snap.added_files:
-                add_df = source._read_files(snap.added_files)
-                parts.append(add_df.select(*gb, *in_cols)
-                             .withColumn(_SIGN, F.lit(1)))
         last = snaps[-1]
-        if not parts:
+        local = self._driver_delta(source, snaps, gb + in_cols)
+        if local is not None and local.num_rows == 0 or not any(
+                s.deleted_pks_file or s.added_files for s in snaps):
             self._set_synced(last.snapshot_id, expected_prev)
             return
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
+        if local is not None:
+            delta = wp.local_frame(self.spark, local, T.StructType(
+                [source.schema[c] for c in gb + in_cols]
+                + [T.StructField(_SIGN, T.IntegerType())]))
+        else:
+            parts = []
+            for snap in snaps:
+                if snap.deleted_pks_file:
+                    # The log holds keys only; the deleted VALUES lived
+                    # in the parent version — one range+bloom-pruned
+                    # point read per snapshot (versioned: cannot batch).
+                    pks_df = source.read_deleted_pks(snap)
+                    del_rows = source.read_by_keys(
+                        pks_df, version=snap.parent_snapshot_id
+                    )
+                    parts.append(del_rows.select(*gb, *in_cols)
+                                 .withColumn(_SIGN, F.lit(-1)))
+                if snap.added_files:
+                    add_df = source._read_files(snap.added_files)
+                    parts.append(add_df.select(*gb, *in_cols)
+                                 .withColumn(_SIGN, F.lit(1)))
+            delta = parts[0]
+            for p in parts[1:]:
+                delta = delta.unionByName(p)
 
         sign = F.col(_SIGN)
         dexprs = [F.sum(sign).alias("__agg_delta_nrows")]
@@ -368,20 +386,22 @@ class MaterializedAggregate:
         # merge/apply_changes — a long multi-snapshot refresh would
         # otherwise pin one checkpointed RDD per snapshot).
         with self.dataset._release_new_blocks():
-            # Pin the delta aggregate ONCE: read_by_keys' bounds probe,
-            # the merge join, and the commit would otherwise each
-            # re-execute the whole delta plan — including the parent-
-            # version point read (round-13 review: 3x waste).
-            # Lazy (r13-opt): read_by_keys' bounds probe below is a
-            # full pass over dagg — it materializes the checkpoint in
-            # the same job instead of paying a dedicated
-            # pre-materialization job per snapshot.
-            dagg = (delta.groupBy(*gb).agg(*dexprs)
-                    .localCheckpoint(eager=False))
-
-            # Old state rows for exactly the touched groups: group keys
-            # are the state PKs, so this is a pruned point read.
-            old = self.dataset.read_by_keys(dagg.select(*gb))
+            dagg = delta.groupBy(*gb).agg(*dexprs)
+            old = None if local is None else self._driver_state(
+                local.select(gb))
+            if old is None:
+                # Pin the delta aggregate ONCE: read_by_keys' bounds
+                # probe, the merge join, and the commit would otherwise
+                # each re-execute the whole delta plan — including the
+                # parent-version point read (round-13 review: 3x
+                # waste). Lazy (r13-opt): read_by_keys' bounds probe is
+                # a full pass over dagg — it materializes the
+                # checkpoint in the same job instead of paying a
+                # dedicated pre-materialization job per snapshot.
+                dagg = dagg.localCheckpoint(eager=False)
+                # Old state rows for exactly the touched groups: group
+                # keys are the state PKs, so this is a pruned point read.
+                old = self.dataset.read_by_keys(dagg.select(*gb))
             old_pref = old.select(
                 *gb, *[F.col(c).alias(f"__agg_o_{c}")
                        for c in old.columns if c not in gb]
@@ -456,23 +476,79 @@ class MaterializedAggregate:
             fix_cols = [n for n, (fn, _c) in sorted(aggs.items())
                         if fn in ("min", "max")] if has_deletes else []
             self._fold_commit(source, last, proj, fix_cols, gb, aggs,
-                              expected_prev)
+                              expected_prev, local=local is not None)
+
+    def _driver_delta(self, source, snaps, cols):
+        """The batch's signed delta (``cols`` and the sign) read by the
+        driver, or None when Spark reads it. Adds are the snapshots'
+        added files; the deleted rows' values are a positional take from
+        each deletes log's ``__file``/``__pos``, their rows in the
+        parent version (the delete's split already applied key bounds,
+        blooms and delete vectors). A log without that provenance
+        (written by older code) or a delta over ``fits_driver``'s bound
+        is Spark's."""
+        import numpy as np
+
+        logs = [s.deleted_pks_file for s in snaps if s.deleted_pks_file]
+        adds = [f for s in snaps for f in s.added_files]
+        if not wp.fits_driver(source, adds + logs):
+            return None
+        positions = {rel: wp.deleted_positions(source, rel) for rel in logs}
+        if any(p is None for p in positions.values()):
+            return None
+        parents = {f for p in positions.values()
+                   for f in wp.affected_files(source, p)}
+        if not wp.fits_driver(source, adds + logs + sorted(parents)):
+            return None
+        parts = []
+        for snap in snaps:
+            if snap.deleted_pks_file:
+                parts.append((wp.read_arrow(
+                    source, columns=cols,
+                    positions=positions[snap.deleted_pks_file]), -1))
+            if snap.added_files:
+                parts.append((wp.read_arrow(source, snap.added_files,
+                                            columns=cols), 1))
+        return pa.concat_tables([
+            t.append_column(_SIGN, pa.array(
+                np.full(t.num_rows, sign, np.int32)))
+            for t, sign in parts])
+
+    def _driver_state(self, keys: pa.Table):
+        """The state rows of the groups ``keys`` may touch, read by the
+        driver from the files whose stats overlap the keys' range, as a
+        LocalRelation; None when a delete vector masks the state or the
+        files exceed ``fits_driver``'s bound."""
+        mv = self.dataset
+        snapshot = mv.metadata.snapshot(mv.current_snapshot_id)
+        files = [f for f, _ in mv._probe_candidates(
+            snapshot, mv._keys_range_expr(wp.key_bounds(mv, keys)))]
+        if snapshot.delete_vector_files or not wp.fits_driver(mv, files):
+            return None
+        return wp.local_frame(self.spark, wp.read_arrow(mv, files),
+                              mv.schema)
 
     def _fold_commit(self, source, snap, proj, fix_cols, gb, aggs,
-                     expected_prev: int):
+                     expected_prev: int, local: bool = False):
         # ``snap`` is the LAST snapshot of the fold batch: the repair
         # scan reads the source at its version (the live rows at batch
         # end ARE the final answer) and the synced marker advances to
         # its id.
-        # Lazy when there is no repair branch: the first action (the
-        # upsert shard write) scans every partition and materializes
-        # the checkpoint in the same job. EAGER when fix_cols is
+        # A driver-side fold (``local``) collects ``proj`` once and
+        # commits it from the driver. Otherwise ``proj`` is pinned:
+        # lazily when there is no repair branch (the first action, the
+        # upsert shard write, scans every partition and materializes
+        # the checkpoint in the same job); EAGER when fix_cols is
         # non-empty (ADVICE r13): the first action there is
         # fix_keys.limit(N+1).collect(), and CollectLimit early-exits
         # after enough partitions — a lazy checkpoint would be only
         # PARTIALLY materialized, re-executing the merge join for the
         # unmaterialized partitions in every later consumer.
-        proj = proj.localCheckpoint(eager=bool(fix_cols))
+        if local:
+            folded = proj.toArrow()
+            proj = wp.local_frame(self.spark, folded, proj.schema)
+        else:
+            proj = proj.localCheckpoint(eager=bool(fix_cols))
         if fix_cols:
             any_fix = None
             for n in fix_cols:
@@ -515,7 +591,13 @@ class MaterializedAggregate:
                     if n not in gb
                 ]
                 proj = proj.select(*gb, *repl)
+                if local:
+                    folded = proj.toArrow()
 
+        sync_mut = sync_marker_mutate(snap.snapshot_id, expected_prev)
+        if local:
+            self._commit_folded(folded, gb, sync_mut)
+            return
         state_cols = self.dataset.schema.fieldNames()
         upserts = (proj.where(F.col(_ROWS_COL) > 0)
                    .select(*state_cols))
@@ -527,8 +609,22 @@ class MaterializedAggregate:
         # path is private because that proof is this caller's burden,
         # ADVICE r13).
         self.dataset._apply_changes_unique(
-            upserts, deletes,
-            commit_mutate=sync_marker_mutate(snap.snapshot_id,
-                                             expected_prev),
+            upserts, deletes, commit_mutate=sync_mut,
             operation="MV REFRESH",
         )
+
+    def _commit_folded(self, folded: pa.Table, gb, sync_mut) -> None:
+        """Commit a fold the driver holds as one snapshot: a pyarrow
+        write of the live groups, and a driver split deleting every
+        touched group's old state row (emptied groups are not
+        re-added)."""
+        mv = self.dataset
+        live = folded.filter(pc.greater(folded[_ROWS_COL], 0))
+        keys = folded.select(gb)
+        mv._apply_changes_retry(
+            wp.local_frame(self.spark, keys,
+                           T.StructType([mv.schema[g] for g in gb])),
+            keys.num_rows, mv._keys_range_expr(wp.key_bounds(mv, keys)),
+            *wp.write_data_files(mv, [live.select(mv.schema.fieldNames())]),
+            commit_mutate=sync_mut, operation="MV REFRESH",
+            keys_arrow=keys)

@@ -1191,7 +1191,6 @@ class Dataset:
         df: DataFrame,
         cluster_by: Optional[Sequence[str]] = None,
         target_files: Optional[int] = None,
-        commit_mutate=None,
         zorder_by: Optional[Sequence[str]] = None,
         operation: str = "APPEND",
     ) -> "Dataset":
@@ -1221,28 +1220,22 @@ class Dataset:
         self.reload()
         manifest_rel, files, rows, nbytes = wp.write_input(
             self, df, cluster_by, zorder_by, target_files)
-        if rows == 0 and commit_mutate is None:
+        if rows == 0:
             return self  # empty append: skip commit (test_runners.py:83-92)
-        # With commit_mutate set, even an empty append commits (a metadata-
-        # only snapshot) so the caller's progress marker lands atomically
-        # (MV refresh of a filtered-to-zero source snapshot).
         rec_rel = self._write_record_manifest_for(files)
         return self._commit_append(manifest_rel, files, rows, nbytes,
-                                   rec_rel, commit_mutate,
-                                   operation=operation)
+                                   rec_rel, operation=operation)
 
     def _commit_append(self, manifest_rel, files, rows, nbytes, rec_rel,
-                       commit_mutate=None,
                        operation: str = "APPEND") -> "Dataset":
         """Commit already-written data files as an append snapshot."""
         return md.retry_commit(
             lambda: self._append_attempt(manifest_rel, files, rows, nbytes,
-                                         rec_rel, commit_mutate, operation),
+                                         rec_rel, operation),
             lambda: self._reload_revalidating(files if rows > 0 else []),
         )
 
     def _append_attempt(self, manifest_rel, files, rows, nbytes, rec_rel,
-                        commit_mutate=None,
                         operation: str = "APPEND") -> "Dataset":
         # Pins the constraint set the rows were validated against: the
         # loaded one (wp.write_data_files or _reload_revalidating ran
@@ -1253,7 +1246,7 @@ class Dataset:
             nbytes, rec_rel, operation,
         )
         self.metadata = self.log.commit_snapshot(
-            pinned, self.branch, snap, mutate=commit_mutate,
+            pinned, self.branch, snap,
             pinned_constraints_version=self.metadata.constraints_version,
         )
         return self
@@ -1417,12 +1410,13 @@ class Dataset:
         replay the overwrite correctly instead of silently skipping
         it. That delete stream, the commit's only changelog, is
         inherently O(old-table primary keys) — the price of CDF over a
-        full replacement — and is written by a DISTRIBUTED job into a
-        directory-valued deletes entry (every reader of the delete
-        stream already handles directories); the dump is MoR-masked,
-        so rows already hidden by delete vectors do not re-appear as
-        deletes. Active vectors are dropped with the files they
-        covered.
+        full replacement. The driver writes it with pyarrow when the
+        old files fit ``write_path.fits_driver`` and carry no delete
+        vector; otherwise a DISTRIBUTED job writes it, MoR-masked, so
+        rows already hidden by delete vectors do not re-appear as
+        deletes. Like a split's log, each dumped key carries its row's
+        ``__file``/``__pos``. Active vectors are dropped with the files
+        they covered.
 
         New data files are written FIRST (the write-first discipline
         every mutate here uses): the input plan evaluates exactly
@@ -1439,17 +1433,22 @@ class Dataset:
             pinned = self.current_snapshot_id
             parent = self.metadata.snapshot(pinned)
             deletes_rel = None
-            old_files = mf.read_manifest_paths(
+            old_files = sorted(mf.read_manifest_paths(
                 self._manifest_abs_paths(parent)
-            )
-            if old_files:
+            ))
+            if old_files and not parent.delete_vector_files \
+                    and wp.fits_driver(self, old_files):
+                old = wp.read_arrow(self, old_files,
+                                    columns=self.primary_keys, tag=True)
+                if old.num_rows:
+                    deletes_rel = wp.write_deletes_log(self, old)
+            elif old_files:
                 deletes_rel = self.log.new_deletes_reldir()
-                old = self._apply_vectors(
-                    self._read_files(sorted(old_files)), parent
-                )
-                old.select(
+                wp.probe_frame(
+                    self, parent, [(f, None) for f in old_files]
+                ).select(
                     *[F.col(k).alias(self._phys_name(k))
-                      for k in self.primary_keys]
+                      for k in self.primary_keys], "__file", "__pos",
                 ).write.parquet(self.log.abs_path(deletes_rel))
                 # A parent whose listed files hold ZERO live rows (all
                 # CoW-emptied or fully vector-masked) produces an EMPTY
@@ -2492,11 +2491,11 @@ class Dataset:
         self._delete_matching(keys.select(*self.primary_keys))
         return self
 
-    def _delete_matching(self, keys_df: DataFrame, commit_mutate=None) -> bool:
-        """Delete rows whose PKs appear in keys_df (MV refresh's delete
-        half). Returns whether a snapshot was committed."""
-        return self._delete_split(lambda: self._matching_delete_parts(keys_df),
-                                  commit_mutate)
+    def _delete_matching(self, keys_df: DataFrame) -> bool:
+        """Delete rows whose PKs appear in keys_df. Returns whether a
+        snapshot was committed."""
+        return self._delete_split(
+            lambda: self._matching_delete_parts(keys_df))
 
     def _delete_split(self, split_fn, commit_mutate=None) -> bool:
         """Commit ``split_fn()``, a CoW split of the head, as one DELETE

@@ -13,13 +13,19 @@ Parity (reference paths relative to /root/reference/python/src/space/):
   deletes FIRST then adds (required order, core/ops/change_data.py:123-127);
   deletes arrive as PK-only rows and bypass UDFs (runners.py:79-96 — filter
   views may over-delete, documented at core/views.py:166-169); adds flow
-  through the transform chain then append.
+  through the transform chain then append. Both land in ONE MV commit per
+  source snapshot, carrying the source-synced marker.
 - Join views cannot be materialized (core/transform/join.py:128-129) and
   join results cannot be joined again (ray/ops/utils.py:30-40).
 
 Spark-first: UDF transforms run as ``mapInArrow`` stages (Arrow-batched,
 pipelined inside a Spark stage, no extra shuffle); the join is a plain
-DataFrame equi-join that Catalyst plans (broadcast/SMJ/AQE).
+DataFrame equi-join that Catalyst plans (broadcast/SMJ/AQE). A refresh
+whose source delta fits the driver-write bound (``write_path.fits_driver``)
+runs the same task functions on the driver instead, over Arrow batches of
+``arrow.maxRecordsPerBatch`` rows read with pyarrow, and writes the MV
+output with pyarrow — the reference's in-process ``ds.local()`` beside
+``ds.ray()`` (core/runners.py:203-287).
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ except ImportError:  # pragma: no cover
 
 from space_spark.core import metadata as md
 from space_spark.core import schema as sc
+from space_spark.core import write_path as wp
 from space_spark.errors import SpaceError, UserInputError
 
 
@@ -64,6 +71,12 @@ class _Node:
     def apply_to(self, df: DataFrame) -> DataFrame:
         """Apply only this DAG's transforms to an externally supplied source
         DataFrame (the refresh path: core/transform/udfs.py:102-104)."""
+        raise NotImplementedError
+
+    def apply_arrow(self, batches: Iterator[pa.RecordBatch]
+                    ) -> Iterator[pa.RecordBatch]:
+        """``apply_to`` on the driver: the same task functions the
+        ``mapInArrow`` stages run, over source rows the driver holds."""
         raise NotImplementedError
 
     def to_dict(self, udf_sink) -> dict:
@@ -91,6 +104,9 @@ class _SourceNode(_Node):
 
     def apply_to(self, df):
         return df
+
+    def apply_arrow(self, batches):
+        return batches
 
     def to_dict(self, udf_sink):
         return {"op": "source", "location": self.dataset.location}
@@ -170,10 +186,19 @@ class _MapBatchesNode(_Node):
     def apply_to(self, df):
         return self._apply_self(self.parent.apply_to(df))
 
-    def _apply_self(self, df):
-        task = _arrow_batches_adapter(self.fn, self.output_schema,
+    def apply_arrow(self, batches):
+        batches = self.parent.apply_arrow(batches)
+        if self.input_fields:
+            batches = (b.select(self.input_fields) for b in batches)
+        return self._task()(batches)
+
+    def _task(self):
+        return _arrow_batches_adapter(self.fn, self.output_schema,
                                       self.batch_size)
-        return self._project(df).mapInArrow(task, self.output_schema)
+
+    def _apply_self(self, df):
+        return self._project(df).mapInArrow(self._task(),
+                                            self.output_schema)
 
     def to_dict(self, udf_sink):
         return {
@@ -216,20 +241,26 @@ class _FilterNode(_Node):
     def apply_to(self, df):
         return self._apply_self(self.parent.apply_to(df))
 
-    def _apply_self(self, df):
+    def apply_arrow(self, batches):
+        return self._task()(self.parent.apply_arrow(batches))
+
+    def _task(self):
         fn = self.fn
-        visible = self.input_fields or df.columns
-        out_schema = df.schema
+        input_fields = self.input_fields
 
         def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
+                names = batch.schema.names
                 rows = batch.select(
-                    [c for c in visible if c in batch.schema.names]
+                    [c for c in input_fields or names if c in names]
                 ).to_pylist()
                 mask = pa.array([bool(fn(r)) for r in rows], pa.bool_())
                 yield batch.filter(mask)
 
-        return df.mapInArrow(task, out_schema)
+        return task
+
+    def _apply_self(self, df):
+        return df.mapInArrow(self._task(), df.schema)
 
     def to_dict(self, udf_sink):
         return {
@@ -324,6 +355,8 @@ class _JoinNode(_Node):
 
     def apply_to(self, df):
         raise SpaceError("Join views cannot be incrementally refreshed")
+
+    apply_arrow = apply_to
 
     def to_dict(self, udf_sink):
         raise SpaceError(
@@ -525,7 +558,15 @@ class MaterializedView:
     def refresh(self, target_version=None) -> List[int]:
         """Sync with the source, one MV commit per source snapshot so MV
         history mirrors source history (ray/runners.py:200-215). Returns the
-        list of source snapshot ids applied."""
+        list of source snapshot ids applied.
+
+        Each commit carries the source-synced marker, so a refresh that
+        dies between snapshots resumes at the first unapplied one. A
+        snapshot whose delta fits the driver-write bound
+        (``write_path.fits_driver``) is applied on the driver, with no
+        Spark job but the MV's candidate read: pyarrow reads of its
+        added files and deletes log, the view chain's task functions
+        over Arrow batches, and a pyarrow write."""
         from space_spark.core.dataset import Dataset
 
         # Pick up the LIVE marker: a stale handle must not re-apply
@@ -551,24 +592,50 @@ class MaterializedView:
         applied: List[int] = []
         prev = start
         for snap in source._ancestors(start, end):
-            # The synced marker must land ATOMICALLY with the final MV
-            # commit for this source snapshot — a crash between an append
-            # commit and a separate marker update would blind-re-append the
-            # same source snapshot on restart, duplicating PK rows.
-            # Replaying the steps BEFORE the marked commit is safe: a
-            # re-run delete matches nothing new.
-            sync_mut = sync_marker_mutate(snap.snapshot_id, prev)
+            self._apply_snapshot(source, snap, prev)
+            prev = snap.snapshot_id
+            applied.append(snap.snapshot_id)
+        return applied
 
-            marked = False
-            # Deletes first, then adds (change_data.py:123-127).
-            if snap.deleted_pks_file:
-                pks_df = source.read_deleted_pks(snap)
-                # PK-only stream: applied directly to MV storage, skipping
-                # UDFs (runners.py:79-96).
-                delete_mut = None if snap.added_files else sync_mut
-                marked = self.dataset._delete_matching(
-                    pks_df, commit_mutate=delete_mut
-                ) and delete_mut is not None
+    def _apply_snapshot(self, source, snap, prev: int) -> None:
+        """Apply one source snapshot as ONE MV commit that also advances
+        the synced marker from ``prev``: the deletes log's keys are
+        deleted first, as a PK-only stream that skips the UDFs
+        (runners.py:79-96), then the added rows flow through the view
+        chain and append (change_data.py:123-127). A snapshot that
+        changes nothing here moves the marker alone (replaying a no-op
+        is a no-op)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        mv = self.dataset
+        sync_mut = sync_marker_mutate(snap.snapshot_id, prev)
+        logs = [snap.deleted_pks_file] if snap.deleted_pks_file else []
+        keys_df, keys, n_keys, prune = None, None, 0, None
+        written = None
+        mv.reload()
+        layout = wp.resolve_layout(mv, None, None)
+        if wp.fits_driver(source, snap.added_files + logs, into=[mv]):
+            pks = source.primary_keys
+            if logs:
+                keys = wp.read_arrow(source, logs, columns=pks)
+                n_keys = keys.num_rows
+                keys_df = wp.local_frame(self.spark, keys, T.StructType(
+                    [source.schema[k] for k in pks]))
+                prune = mv._keys_range_expr(wp.key_bounds(mv, keys))
+            if snap.added_files:
+                size = int(self.spark.conf.get(
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"))
+                out = list(self.view._node.apply_arrow(iter(
+                    wp.read_arrow(source, snap.added_files)
+                    .to_batches(max_chunksize=size))))
+                out = pa.Table.from_batches(out) if out \
+                    else to_arrow_schema(self.view.schema).empty_table()
+                written = wp.write_input(mv, out.select(
+                    mv.schema.fieldNames()), *layout)
+        else:
+            if logs:
+                keys_df, n_keys = source.read_deleted_pks(snap), None
+                prune = mv._DERIVE_PRUNE
             if snap.added_files:
                 add_df = source._read_files(snap.added_files)
                 if source.record_fields:
@@ -579,17 +646,17 @@ class MaterializedView:
                         source.schema,
                         bases=source.record_search_bases,
                     )
-                out = self.view.process_source(add_df)
-                self.dataset.append(out, commit_mutate=sync_mut,
-                                    operation="MV REFRESH")
-                marked = True
-            if not marked:
-                # Nothing committed (no-op snapshot): marker-only update is
-                # safe — replaying a no-op is a no-op.
-                self._set_synced(snap.snapshot_id, expected_prev=prev)
-            prev = snap.snapshot_id
-            applied.append(snap.snapshot_id)
-        return applied
+                written = wp.write_input(
+                    mv, mv._align(self.view.process_source(add_df)),
+                    *layout)
+        if written is not None and written[2] > 0:
+            mv._apply_changes_retry(
+                keys_df, n_keys, prune, *written, commit_mutate=sync_mut,
+                operation="MV REFRESH", keys_arrow=keys)
+        elif not (logs and mv._delete_split(
+                lambda: mv._matching_delete_parts(
+                    keys_df, n_keys, prune, keys_arrow=keys), sync_mut)):
+            self._set_synced(snap.snapshot_id, expected_prev=prev)
 
     def _set_synced(self, source_snapshot_id: int,
                     expected_prev: int) -> None:

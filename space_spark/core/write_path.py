@@ -14,6 +14,7 @@ that patches those names sees every call.
 from __future__ import annotations
 
 import os
+import pathlib
 from typing import List, NamedTuple, Optional, Union
 
 import pyarrow as pa
@@ -112,6 +113,37 @@ def _driver_fits(ds, files) -> bool:
         _driver_bytes_max(ds), DRIVER_SPLIT_MAX_BYTES)
 
 
+def _file_sizes(ds, rel_paths) -> List[tuple]:
+    """(rel file, bytes) of the parquet files at ``rel_paths``: data
+    files, and deletes-log directories expanded to their part files."""
+    out = []
+    for rel in rel_paths:
+        path = ds.log.abs_path(rel)
+        if os.path.isdir(path):
+            out += [(os.path.join(rel, n),
+                     os.path.getsize(os.path.join(path, n)))
+                    for n in sorted(os.listdir(path))
+                    if n.endswith(".parquet") and not n.startswith(".")]
+        else:
+            out.append((rel, os.path.getsize(path)))
+    return out
+
+
+def fits_driver(ds, rel_paths, into=()) -> bool:
+    """Whether the driver reads the files at ``rel_paths`` of ``ds``
+    (data files, deletes logs) with ``read_arrow`` and writes what they
+    yield into each table of ``into`` itself — a view refresh's source
+    delta and its MV output. The files must fit ``_driver_fits`` of
+    every table, none of which may hold record fields (a blob read is
+    Spark's) or a z-order layout (a Spark sort)."""
+    tables = [ds, *into]
+    if any(t.record_fields or (t.metadata.cluster_spec or {}).get("kind")
+           == "zorder" for t in tables):
+        return False
+    files = _file_sizes(ds, rel_paths)
+    return all(_driver_fits(t, files) for t in tables)
+
+
 def keys_join_side(keys_df: DataFrame, n_keys: int) -> DataFrame:
     """``keys_df`` (``n_keys`` rows) hinted for a join against table
     files: broadcast up to ``BROADCAST_KEYS_MAX`` keys, shuffle-hash
@@ -159,18 +191,23 @@ def lay_out(df: DataFrame, cluster_by, zorder_by, n: int) -> DataFrame:
     )
 
 
-def write_input(ds, df: DataFrame, cluster_by=None, zorder_by=None,
-                target_files: Optional[int] = None):
+def write_input(ds, df: Union[DataFrame, pa.Table], cluster_by=None,
+                zorder_by=None, target_files: Optional[int] = None):
     """Write a commit's input rows (``df`` already aligned to the table)
     as data files; returns ``write_data_files``' (manifest_rel, files,
     rows, bytes).
 
     Rows the driver built (a LocalRelation within the driver-write
-    bound) are written by the driver: clustering is a local sort, and
-    the output is one file unless ``target_files`` asks for more. A
-    z-order layout and a table with record fields stay on Spark, which
-    writes one file per partition of the laid-out rows."""
-    local = None if zorder_by or ds.record_fields else _local_arrow(ds, df)
+    bound, or an Arrow table ``fits_driver`` bounded) are written by
+    the driver: clustering is a local sort, and the output is one file
+    unless ``target_files`` asks for more. A z-order layout and a table
+    with record fields stay on Spark, which writes one file per
+    partition of the laid-out rows."""
+    if isinstance(df, pa.Table):
+        local = df
+    else:
+        local = None if zorder_by or ds.record_fields \
+            else _local_arrow(ds, df)
     if local is not None:
         if cluster_by:
             local = local.sort_by([(c, "ascending") for c in cluster_by],
@@ -186,22 +223,85 @@ def write_input(ds, df: DataFrame, cluster_by=None, zorder_by=None,
     return write_data_files(ds, df)
 
 
-def _read_keys_arrow(ds, rel_files: List[str]) -> pa.Table:
-    """The primary-key columns of written data files, read by the
-    driver with pyarrow, under logical names and the table's Arrow
-    key types (an INT96 timestamp reads back as naive nanoseconds)."""
+def read_arrow(ds, rel_paths=(), columns=None, positions=None,
+               tag: bool = False) -> pa.Table:
+    """Rows of ``ds``'s files at ``rel_paths`` (data files, deletes-log
+    directories) read by the driver with pyarrow — the driver's twin of
+    ``ds._read_files`` for files ``fits_driver`` bounds. Physical names
+    map to the logical ``columns`` (default: every column; a column a
+    file predates reads as NULL), cast to the Arrow types Spark hands a
+    ``mapInArrow`` task (``to_arrow_schema``: INT96 and nanosecond
+    timestamps become microseconds, decimals keep their type).
+
+    ``tag`` adds each row's ``__file`` (its URI, as
+    ``input_file_name()`` spells it) and ``__pos`` (row position), as
+    ``probe_frame`` does. ``positions`` (``__file``/``__pos`` rows, a
+    deletes log's provenance) reads only those rows, grouped per file,
+    in place of ``rel_paths``."""
+    import numpy as np
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    pks = ds.primary_keys
-    tbl = pa.concat_tables([
-        pq.read_table(ds.log.abs_path(f),
-                      columns=[ds._phys_name(k) for k in pks])
-        for f in rel_files
-    ])
-    key_schema = to_arrow_schema(
-        T.StructType([ds.schema[k] for k in pks]))
-    return tbl.rename_columns(pks).cast(
-        pa.schema([f.with_nullable(True) for f in key_schema]))
+    names = list(columns or ds.schema.fieldNames())
+    phys = [ds._phys_name(c) for c in names]
+    target = pa.schema([
+        f.with_nullable(True) for f in
+        to_arrow_schema(T.StructType([ds.schema[c] for c in names]))])
+
+    def read(path: str, rows=None) -> pa.Table:
+        pf = pq.ParquetFile(path)
+        got = pf.read(columns=[p for p in phys
+                               if p in pf.schema_arrow.names])
+        n = pf.metadata.num_rows
+        tbl = pa.table([
+            got[p].cast(f.type) if p in got.column_names
+            else pa.nulls(n, f.type) for p, f in zip(phys, target)
+        ], schema=target)
+        if tag:
+            tbl = tbl.append_column(
+                "__file", pa.array([pathlib.Path(path).as_uri()] * n,
+                                   pa.string())
+            ).append_column("__pos", pa.array(np.arange(n), pa.int64()))
+        return tbl if rows is None else tbl.take(rows)
+
+    if positions is not None:
+        per_file = positions.group_by("__file").aggregate(
+            [("__pos", "list")])
+        parts = [read(ds.log.abs_path(ds._abs_to_rel_file(uri)), rows)
+                 for uri, rows in zip(per_file["__file"].to_pylist(),
+                                      per_file["__pos_list"].to_pylist())]
+    else:
+        parts = [read(ds.log.abs_path(f))
+                 for f, _ in _file_sizes(ds, rel_paths)]
+    return pa.concat_tables(parts) if parts else target.empty_table()
+
+
+def deleted_positions(ds, deletes_rel: str) -> Optional[pa.Table]:
+    """A deletes log's ``__file``/``__pos`` provenance (each deleted
+    row's data file and position in its parent version), or None for a
+    log written before every log carried it."""
+    part = ds.log.abs_path(_file_sizes(ds, [deletes_rel])[0][0])
+    if not {"__file", "__pos"} <= set(pq.read_schema(part).names):
+        return None
+    return pq.read_table(ds.log.abs_path(deletes_rel),
+                         columns=["__file", "__pos"])
+
+
+def local_frame(spark, tbl: pa.Table, schema: T.StructType) -> DataFrame:
+    """``tbl`` as a LocalRelation DataFrame. The chunks are combined
+    first: ``createDataFrame`` drops the rows that follow a zero-row
+    batch of an Arrow table (Spark 4.1: batches of 1, 1, 0 and 1 rows
+    give 2 rows), and a per-file read or take leaves such chunks."""
+    return spark.createDataFrame(tbl.combine_chunks(), schema)
+
+
+def key_bounds(ds, keys: pa.Table) -> dict:
+    """The ``mn_<pk>``/``mx_<pk>`` bounds ``ds._keys_range_expr`` takes,
+    of a key set the driver holds — no Spark job."""
+    out = {}
+    for k in ds.primary_keys:
+        mm = pc.min_max(keys[k])
+        out[f"mn_{k}"], out[f"mx_{k}"] = mm["min"].as_py(), mm["max"].as_py()
+    return out
 
 
 def written_keys(ds, files: List[str], rows: int):
@@ -214,7 +314,7 @@ def written_keys(ds, files: List[str], rows: int):
     pks = ds.primary_keys
     new_keys = ds._read_files(files).select(*pks)
     if rows <= BROADCAST_KEYS_MAX:
-        keys_arrow = _read_keys_arrow(ds, files)
+        keys_arrow = read_arrow(ds, files, columns=pks)
         dup = keys_arrow.group_by(pks).aggregate([]).num_rows < rows
         return new_keys, rows, keys_arrow, dup
     row = (
@@ -342,19 +442,26 @@ def _split_on_driver(ds, cand: pa.Table, matched) -> CowSplit:
         for run in np.array_split(np.arange(len(order)), min(
             len(order), ds.spark.sparkContext.defaultParallelism))
     ]
-    deletes_rel = ds.log.new_deletes_reldir()
     positions = deleted.select(["__file", "__pos"])
+    return CowSplit(affected_files(ds, positions), survivors,
+                    write_deletes_log(ds, deleted), positions)
+
+
+def write_deletes_log(ds, deleted: pa.Table) -> str:
+    """Write a deletes log with pyarrow: the PK columns of ``deleted``
+    (logical names, written physical) and its ``__file``/``__pos``
+    provenance. Returns the log's relpath."""
+    deletes_rel = ds.log.new_deletes_reldir()
     log_tbl = _physical_arrow(ds, deleted.select(ds.primary_keys))
-    for c in positions.column_names:
-        log_tbl = log_tbl.append_column(c, positions[c])
+    for c in ("__file", "__pos"):
+        log_tbl = log_tbl.append_column(c, deleted[c])
     _write_arrow_file(
         ds, os.path.join(ds.log.abs_path(deletes_rel), "part-00000.parquet"),
         log_tbl)
-    return CowSplit(_affected(ds, positions), survivors, deletes_rel,
-                    positions)
+    return deletes_rel
 
 
-def _affected(ds, positions: pa.Table) -> List[str]:
+def affected_files(ds, positions: pa.Table) -> List[str]:
     """The sorted rel paths of the data files ``positions`` touches."""
     uris = pc.unique(positions["__file"].combine_chunks()).to_pylist()
     return sorted({ds._abs_to_rel_file(u) for u in uris})
@@ -390,7 +497,7 @@ def probe_deletes(ds, matches: DataFrame) -> CowSplit:
 
         shutil.rmtree(abs_del, ignore_errors=True)
         return NO_MATCH
-    return CowSplit(_affected(ds, tbl), None, deletes_rel, tbl)
+    return CowSplit(affected_files(ds, tbl), None, deletes_rel, tbl)
 
 
 # -------------------------------------------------------- file write

@@ -23,17 +23,20 @@ SCHEMA = T.StructType([
 # upsert's dup check reads the written keys with pyarrow, and every CoW
 # delete is one candidate read split on the driver (was a probe write and
 # a survivor write). An overwrite writes its local input the way append
-# does; its dump of the old keys stays a Spark write.
+# does, and the driver dumps the old keys. A view refresh reads its
+# source delta with pyarrow: the row-wise MV's one job is the upsert
+# snapshot's MV candidate read; the aggregate MV collects its fold once
+# and splits its state on the driver.
 PINNED_JOBS = {
     "append": 1,
     "upsert": 2,
-    "mv_refresh": 7,
-    "agg_mv_refresh": 14,
+    "mv_refresh": 1,
+    "agg_mv_refresh": 4,
     "delete_by_keys": 4,
     "delete": 1,
     "merge": 12,
     "apply_changes": 6,
-    "overwrite": 2,
+    "overwrite": 1,
 }
 
 # The same ops with spark.sql.autoBroadcastJoinThreshold=-1, where every

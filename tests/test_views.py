@@ -134,24 +134,25 @@ def test_mv_refresh_crash_midway_resumes_without_duplicates(
     ds.append(simple_df(spark, range(5)))
     assert mv.refresh() == [1]
 
-    # Two pending source snapshots; crash the MV append for the SECOND.
+    # Two pending source snapshots; crash the MV commit for the SECOND.
     ds.append(simple_df(spark, range(10, 15)))
     ds.append(simple_df(spark, range(20, 25)))
-    orig = mv.dataset.append
-    state = {"appends": 0}
+    log = mv.dataset.log
+    orig = log.commit_snapshot
+    state = {"commits": 0}
 
-    def crashing_append(*a, **kw):
-        state["appends"] += 1
-        if state["appends"] == 2:
+    def crashing_commit(*a, **kw):
+        state["commits"] += 1
+        if state["commits"] == 2:
             raise RuntimeError("simulated crash mid-refresh")
         return orig(*a, **kw)
 
-    mv.dataset.append = crashing_append
+    log.commit_snapshot = crashing_commit
     try:
         with pytest.raises(RuntimeError, match="mid-refresh"):
             mv.refresh()
     finally:
-        mv.dataset.append = orig
+        log.commit_snapshot = orig
 
     # A fresh process resumes: only the unapplied snapshot replays.
     recovered = MaterializedView.load(spark, tmp_location + "_mv")
@@ -163,6 +164,80 @@ def test_mv_refresh_crash_midway_resumes_without_duplicates(
     assert [r.double for r in got] == [i / 5.0 for i in (
         list(range(5)) + list(range(10, 15)) + list(range(20, 25))
     )]
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@pytest.fixture(params=["default", "-1"])
+def write_side(request, spark):
+    """Run at the default driver-write threshold, then with every
+    refresh read and write on Spark."""
+    prev = spark.conf.get(THRESHOLD)
+    if request.param != "default":
+        spark.conf.set(THRESHOLD, request.param)
+    yield request.param
+    spark.conf.set(THRESHOLD, prev)
+
+
+def _mv_behind_an_upsert(spark, tmp_location):
+    """A doubling MV synced at source snapshot 1, and an upsert (a
+    delete plus an add) as source snapshot 2."""
+    ds = Dataset.create(spark, tmp_location, SIMPLE, ["int64"])
+    mv = ds.map_batches(make_double_udf(), DOUBLE_SCHEMA).materialize(
+        spark, tmp_location + "_mv")
+    ds.append(simple_df(spark, range(5)))
+    assert mv.refresh() == [1]
+    ds.upsert(spark.createDataFrame(
+        [Row(int64=1, float64=5.0), Row(int64=7, float64=0.7)], SIMPLE))
+    return mv
+
+
+UPSERTED = [(0, 0.0), (1, 10.0), (2, 0.4), (3, 0.6), (4, 0.8), (7, 1.4)]
+
+
+def _mv_rows(mv):
+    return [(r.int64, r.double)
+            for r in mv.read().orderBy("int64").collect()]
+
+
+def test_mv_refresh_upsert_snapshot_is_one_mv_commit(spark, tmp_location,
+                                                     write_side):
+    mv = _mv_behind_an_upsert(spark, tmp_location)
+    before = len(mv.dataset.metadata.snapshots)
+    assert mv.refresh() == [2]
+    assert len(mv.dataset.metadata.snapshots) == before + 1
+    assert _mv_rows(mv) == UPSERTED
+
+
+def test_mv_refresh_failed_upsert_commit_leaves_mv_unchanged(
+    spark, tmp_location, write_side
+):
+    """The upsert snapshot's delete and add land in one MV commit with
+    the synced marker: if that commit fails, nothing of the snapshot is
+    visible, and a fresh refresh applies it once."""
+    mv = _mv_behind_an_upsert(spark, tmp_location)
+    rows_before = _mv_rows(mv)
+    log = mv.dataset.log
+    orig = log.commit_snapshot
+
+    def failing_commit(pinned, branch, snap, **kw):
+        assert snap.deleted_pks_file and snap.added_files
+        raise RuntimeError("simulated commit failure")
+
+    log.commit_snapshot = failing_commit
+    try:
+        with pytest.raises(RuntimeError, match="commit failure"):
+            mv.refresh()
+    finally:
+        log.commit_snapshot = orig
+
+    fresh = MaterializedView.load(spark, tmp_location + "_mv")
+    assert _mv_rows(fresh) == rows_before
+    assert fresh.dataset.metadata.logical_plan["source_snapshot_synced"] == 1
+    assert fresh.refresh() == [2]
+    assert _mv_rows(fresh) == UPSERTED
+    assert fresh.refresh() == []
 
 
 def test_mv_refresh_after_source_expiry_fails_loudly(spark, tmp_location):
