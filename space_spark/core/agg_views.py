@@ -28,15 +28,15 @@ and the distributive/algebraic/holistic taxonomy):
 Scale shape per refresh: O(changed rows) for the delta — the added
 files plus a positional read of the deleted rows, grouped per parent
 file — one pruned read of the old state rows for the touched groups
-(group keys are the state table's PRIMARY KEYS), one ``apply_changes``
-commit (upserts + emptied-group deletes, atomic with the source-synced
-marker). Groups whose keys never appear in a snapshot's delta are
-never read, shuffled, or rewritten. A delta within the driver-write
-bound (``write_path.fits_driver``) is read with pyarrow and handed to
-the same Spark fold expressions as a LocalRelation; the fold is
-collected once and committed by a driver write and a driver split (the
-min/max repair scan stays a Spark read). One fold algebra serves both
-sides.
+(group keys are the state table's PRIMARY KEYS), one change commit
+(the live groups written, every touched group's old row deleted,
+atomic with the source-synced marker). Groups whose keys never appear
+in a snapshot's delta are never read, shuffled, or rewritten. A delta
+within the driver-write bound (``write_path.fits_driver``) is read
+with pyarrow and handed to the same Spark fold expressions as a
+LocalRelation; the fold is collected once and committed by a driver
+write and a driver split (the min/max repair scan stays a Spark read).
+One fold algebra and one commit serve both sides.
 
 SQL semantics: ``count(col)``/``sum``/``avg``/``min``/``max`` ignore
 NULLs; ``count(*)`` counts rows; a group whose last non-null value is
@@ -46,7 +46,7 @@ table's primary keys (space PKs are NOT NULL); a null key raises the
 standard null-PK error at refresh.
 
 Concurrency: ``refresh`` reloads the marker first, and the state
-commit's ``commit_mutate`` verifies the stored marker still equals the
+commit's marker mutate verifies the stored marker still equals the
 fold batch's start before advancing it to the batch end — two handles
 refreshing the same MV cannot double-fold a delta (the loser fails
 fast with SpaceError; its uncommitted shards are vacuum-reclaimable).
@@ -267,14 +267,13 @@ class MaterializedAggregate:
     def refresh(self, target_version=None) -> List[int]:
         """ONE MV commit per refresh: every pending source snapshot's
         delta is netted into a single signed aggregate and folded with a
-        single ``apply_changes`` commit (r14-opt — the per-snapshot fold
-        paid the full fixed cost of dagg checkpoint + state point read +
-        merge join + commit N times; CDC signs net across adjacent
-        snapshots exactly like within one). The source-synced marker
-        still lands atomically with the state commit (apply_changes'
-        commit_mutate), so a crash never double-folds — it just replays
-        the whole batch, which nets to the same state. Returns applied
-        source snapshot ids."""
+        single change commit (r14-opt — the per-snapshot fold paid the
+        full fixed cost of dagg checkpoint + state point read + merge
+        join + commit N times; CDC signs net across adjacent snapshots
+        exactly like within one). The source-synced marker still lands
+        atomically with the state commit, so a crash never double-folds
+        — it just replays the whole batch, which nets to the same
+        state. Returns applied source snapshot ids."""
         from space_spark.core.dataset import Dataset
 
         # Pick up the LIVE marker: a stale handle must not re-fold
@@ -387,8 +386,13 @@ class MaterializedAggregate:
         # otherwise pin one checkpointed RDD per snapshot).
         with self.dataset._release_new_blocks():
             dagg = delta.groupBy(*gb).agg(*dexprs)
-            old = None if local is None else self._driver_state(
-                local.select(gb))
+            # A driver-side fold's key set is the delta's groups: the
+            # touched groups of ``proj`` (one row per group of dagg).
+            keys = old = None
+            if local is not None:
+                keys = wp.KeySet.from_arrow(
+                    self.dataset, local.select(gb).group_by(gb).aggregate([]))
+                old = self._driver_state(keys)
             if old is None:
                 # Pin the delta aggregate ONCE: read_by_keys' bounds
                 # probe, the merge join, and the commit would otherwise
@@ -476,7 +480,7 @@ class MaterializedAggregate:
             fix_cols = [n for n, (fn, _c) in sorted(aggs.items())
                         if fn in ("min", "max")] if has_deletes else []
             self._fold_commit(source, last, proj, fix_cols, gb, aggs,
-                              expected_prev, local=local is not None)
+                              expected_prev, keys)
 
     def _driver_delta(self, source, snaps, cols):
         """The batch's signed delta (``cols`` and the sign) read by the
@@ -514,28 +518,28 @@ class MaterializedAggregate:
                 np.full(t.num_rows, sign, np.int32)))
             for t, sign in parts])
 
-    def _driver_state(self, keys: pa.Table):
-        """The state rows of the groups ``keys`` may touch, read by the
-        driver from the files whose stats overlap the keys' range, as a
-        LocalRelation; None when a delete vector masks the state or the
-        files exceed ``fits_driver``'s bound."""
+    def _driver_state(self, keys):
+        """The state rows of the groups in ``keys`` (a ``KeySet``), read
+        by the driver from the files whose stats overlap the keys'
+        range, as a LocalRelation; None when a delete vector masks the
+        state or the files exceed ``fits_driver``'s bound."""
         mv = self.dataset
         snapshot = mv.metadata.snapshot(mv.current_snapshot_id)
-        files = [f for f, _ in mv._probe_candidates(
-            snapshot, mv._keys_range_expr(wp.key_bounds(mv, keys)))]
+        files = [f for f, _ in mv._probe_candidates(snapshot, keys.prune)]
         if snapshot.delete_vector_files or not wp.fits_driver(mv, files):
             return None
         return wp.local_frame(self.spark, wp.read_arrow(mv, files),
                               mv.schema)
 
     def _fold_commit(self, source, snap, proj, fix_cols, gb, aggs,
-                     expected_prev: int, local: bool = False):
+                     expected_prev: int, keys=None):
         # ``snap`` is the LAST snapshot of the fold batch: the repair
         # scan reads the source at its version (the live rows at batch
         # end ARE the final answer) and the synced marker advances to
         # its id.
-        # A driver-side fold (``local``) collects ``proj`` once and
-        # commits it from the driver. Otherwise ``proj`` is pinned:
+        # A driver-side fold (``keys``, the touched groups' key set, is
+        # given) collects ``proj`` once and commits it from the driver.
+        # Otherwise ``proj`` is pinned:
         # lazily when there is no repair branch (the first action, the
         # upsert shard write, scans every partition and materializes
         # the checkpoint in the same job); EAGER when fix_cols is
@@ -544,6 +548,7 @@ class MaterializedAggregate:
         # after enough partitions — a lazy checkpoint would be only
         # PARTIALLY materialized, re-executing the merge join for the
         # unmaterialized partitions in every later consumer.
+        local = keys is not None
         if local:
             folded = proj.toArrow()
             proj = wp.local_frame(self.spark, folded, proj.schema)
@@ -594,37 +599,21 @@ class MaterializedAggregate:
                 if local:
                     folded = proj.toArrow()
 
-        sync_mut = sync_marker_mutate(snap.snapshot_id, expected_prev)
-        if local:
-            self._commit_folded(folded, gb, sync_mut)
-            return
-        state_cols = self.dataset.schema.fieldNames()
-        upserts = (proj.where(F.col(_ROWS_COL) > 0)
-                   .select(*state_cols))
-        deletes = proj.where(F.col(_ROWS_COL) <= 0).select(*gb)
-        # upserts/deletes both project `proj` — one groupBy(gb) output,
-        # unique on the MV's primary keys (= gb) by construction — so
-        # the dup-check aggregate is skippable (r13-opt: one groupBy
-        # exchange + written-files re-scan saved per fold; the unique
-        # path is private because that proof is this caller's burden,
-        # ADVICE r13).
-        self.dataset._apply_changes_unique(
-            upserts, deletes, commit_mutate=sync_mut,
-            operation="MV REFRESH",
-        )
-
-    def _commit_folded(self, folded: pa.Table, gb, sync_mut) -> None:
-        """Commit a fold the driver holds as one snapshot: a pyarrow
-        write of the live groups, and a driver split deleting every
-        touched group's old state row (emptied groups are not
-        re-added)."""
+        # One commit writes the live groups and deletes every touched
+        # group's old state row (emptied groups are not re-added). The
+        # touched groups are one groupBy(gb) output, unique on the MV's
+        # primary keys (= gb) by construction, so no dup check runs.
         mv = self.dataset
-        live = folded.filter(pc.greater(folded[_ROWS_COL], 0))
-        keys = folded.select(gb)
-        mv._apply_changes_retry(
-            wp.local_frame(self.spark, keys,
-                           T.StructType([mv.schema[g] for g in gb])),
-            keys.num_rows, mv._keys_range_expr(wp.key_bounds(mv, keys)),
-            *wp.write_data_files(mv, [live.select(mv.schema.fieldNames())]),
-            commit_mutate=sync_mut, operation="MV REFRESH",
-            keys_arrow=keys)
+        state_cols = mv.schema.fieldNames()
+        if local:
+            live = folded.filter(pc.greater(folded[_ROWS_COL], 0)) \
+                .select(state_cols)
+        else:
+            live = mv._align(proj.where(F.col(_ROWS_COL) > 0)
+                             .select(*state_cols))
+        written = wp.write_input(mv, live)
+        if not local:
+            keys = wp.KeySet.from_frame(mv, proj.select(*gb))
+        mv._commit_change("MV REFRESH", keys, written,
+                          mutate=sync_marker_mutate(snap.snapshot_id,
+                                                    expected_prev))

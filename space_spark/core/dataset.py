@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 from typing import Dict, List, Optional, Sequence, Union
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -56,9 +56,12 @@ FilterType = Union[Expr, None]
 
 
 def _norm_file_path():
-    """``_metadata.file_path`` normalized ("file:///x" or "file:/x" ->
-    "/x") to match driver-side absolute paths."""
-    return F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/")
+    """``_metadata.file_path`` normalized ("file:///x%20y" or
+    "file:/x%20y" -> "/x y") to match driver-side absolute paths: the
+    URI's percent-escapes are decoded, and a literal '+' stays one
+    (``url_decode`` alone would read it as a space)."""
+    path = F.regexp_replace(F.col("_metadata.file_path"), "^[a-z]+:/+", "/")
+    return F.url_decode(F.replace(path, F.lit("+"), F.lit("%2B")))
 
 
 CHANGE_TYPE_COL = "_change_type"
@@ -1299,11 +1302,13 @@ class Dataset:
         """Append that FAILS if any input primary key exists
         (ops/insert.py:38-134), in TWO Spark actions total:
 
-        1. Blind-write the data files (valid under every outcome — on a
-           failed check they are never committed and ``vacuum`` reclaims
-           the orphans). The input's PK min/max bounds then come FREE
-           from the written files' manifest stats (driver-side footer
-           metadata, zero extra jobs).
+        1. Blind-write the data files through ``wp.write_input`` (a
+           local input is one driver-written file, as for ``append``;
+           valid under every outcome — on a failed check they are never
+           committed and ``vacuum`` reclaims the orphans). The
+           input's PK min/max bounds then come FREE from the written
+           files' manifest stats (driver-side footer metadata, zero
+           extra jobs).
         2. ONE fused probe job checks both invariants at once, as a
            union of two bounded branches: (a) the input-duplicate check
            groups only the WRITTEN keys (small side shuffles, map-side
@@ -1322,7 +1327,7 @@ class Dataset:
         df = self._align(df)
         self.reload()
         pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = wp.write_data_files(self, df)
+        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
         if rows == 0:
             return self  # empty insert: nothing to check or commit
         bounds = self._bounds_from_manifest(manifest_rel)
@@ -1581,19 +1586,12 @@ class Dataset:
         # for the probe's manifest pruning come free from the written
         # files' stats (driver-side footers, no job). On a duplicate-PK
         # raise the uncommitted files are orphans; vacuum reclaims them.
-        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
-        if rows == 0:
+        written = wp.write_input(self, df)
+        if written[2] == 0:
             return self
-        new_keys, n_keys, keys_arrow, dup = wp.written_keys(self, files,
-                                                            rows)
-        if dup:
-            raise UserInputError("Input data has duplicate primary keys")
-        return self._apply_changes_retry(
-            new_keys, n_keys,
-            self._keys_range_expr(self._bounds_from_manifest(manifest_rel)),
-            manifest_rel, files, rows, nbytes, operation=operation,
-            keys_arrow=keys_arrow,
-        )
+        self._commit_change(operation, wp.KeySet.from_written(self, written),
+                            written)
+        return self
 
     @staticmethod
     def _normalize_matched_clauses(when_matched, matched_condition,
@@ -2059,16 +2057,6 @@ class Dataset:
                                       _identity_preassigned=True,
                                       operation="MERGE")
 
-    def _key_bounds(self, keys_df: DataFrame):
-        """One aggregate over a key set: its row count ``n`` and the
-        ``mn_<pk>``/``mx_<pk>`` bounds ``_keys_range_expr`` consumes."""
-        pks = self.primary_keys
-        return keys_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.min(k).alias(f"mn_{k}") for k in pks],
-            *[F.max(k).alias(f"mx_{k}") for k in pks],
-        ).collect()[0]
-
     def _keys_range_expr(self, bounds) -> FilterType:
         """Falsifiable manifest-prune expression from a key set's min/max
         bounds (conjunction of per-PK ranges). Shared by ``read_by_keys``
@@ -2085,7 +2073,9 @@ class Dataset:
 
     # ----------------------------------------------------------------- delete
     def _abs_to_rel_file(self, uri: str) -> str:
-        return self.log.rel_path(urlparse(uri).path)
+        """The rel path of the data file at ``uri`` (as
+        ``input_file_name()`` spells it: percent-encoded)."""
+        return self.log.rel_path(unquote(urlparse(uri).path))
 
     def _write_delete_vector(self, positions: pa.Table,
                              man_tbl: pa.Table):
@@ -2214,8 +2204,7 @@ class Dataset:
         pred_true = F.coalesce(filter_.to_spark(), F.lit(False))
         if not rewrite:
             return self._delete_mor(pred_true, prune_expr=filter_)
-        self._delete_split(lambda: wp.cow_split(self, filter_,
-                                                pred=pred_true))
+        self._commit_change("DELETE", wp.PredicateSplit(filter_, pred_true))
         return self
 
     def _delete_mor(self, pred_true, prune_expr: FilterType) -> "Dataset":
@@ -2250,30 +2239,6 @@ class Dataset:
 
         return md.retry_commit(attempt, self.reload)
 
-    _DERIVE_PRUNE = object()  # sentinel: build prune_expr from the keys
-
-    def _matching_delete_parts(self, keys_df: DataFrame, n_keys=None,
-                               prune_expr=_DERIVE_PRUNE, keys_arrow=None):
-        """``wp.cow_split`` of the rows whose PKs appear in ``keys_df``
-        (``keys_arrow``: the same keys already on the driver).
-
-        The probe is manifest-pruned by the keys' min/max range (same
-        derivation as ``read_by_keys``) — a 10-row upsert into a huge
-        clustered table touches the few overlapping files, never the
-        whole table. ``prune_expr`` overrides the derived range
-        (upsert passes its written files' footer bounds, apply_changes'
-        unique-adds path a union-of-boxes expression; an explicit None
-        means no pruning)."""
-        if prune_expr is Dataset._DERIVE_PRUNE:
-            row = self._key_bounds(keys_df)
-            if n_keys is None:
-                n_keys = int(row["n"] or 0)
-            prune_expr = self._keys_range_expr(row)
-        if n_keys == 0:
-            return wp.NO_MATCH
-        return wp.cow_split(self, prune_expr, keys_df=keys_df,
-                            n_keys=n_keys, keys_arrow=keys_arrow)
-
     def _probe_candidates(self, snapshot, prune_expr: FilterType):
         """(rel file, manifest size bytes) of the files whose manifest
         stats pass ``prune_expr`` — the files a delete probe reads."""
@@ -2296,14 +2261,14 @@ class Dataset:
         that ``stream_apply_changes`` applies per micro-batch, so a
         reader never observes the deletes-applied-but-adds-missing
         intermediate state and a replayed batch converges to the same
-        table.
+        table. Commits nothing when no row is deleted or added.
 
-        Job shape (same write-first discipline as upsert): one data-file
-        write, one fused dup-check/key-stats aggregate over the written
-        keys unioned with the delete keys (map-side combined), one
-        range-pruned probe, one survivor rewrite inside the commit —
-        about half the actions of running the two operations separately,
-        and one snapshot instead of two.
+        Job shape (same write-first discipline as upsert): the adds are
+        written as upsert writes them, their key set checked for
+        duplicates and bounded by the footers, the delete keys counted
+        and bounded by one aggregate, and the union of the two key sets
+        drives one range-pruned split inside the commit — one snapshot
+        instead of two.
 
         ``commit_mutate`` (optional) mutates the table metadata inside
         the SAME commit — the hook streaming MV maintenance uses to
@@ -2315,203 +2280,74 @@ class Dataset:
         source-assigned or target-carried ids — skipping the second
         pass avoids an extra full localCheckpoint + count job per
         merge. Generated columns still recompute here (a partial
-        UPDATE SET must refresh them from the updated inputs).
-
-        Callers that can PROVE ``adds`` carries no duplicate primary
-        keys should use the private ``_apply_changes_unique`` instead —
-        it skips the dup-check aggregate entirely."""
+        UPDATE SET must refresh them from the updated inputs)."""
         adds = self._align(adds, skip_identity=_identity_preassigned)
         self.reload()
-        pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = wp.write_data_files(self, adds)
-        dk = delete_keys.select(*pks)
-        if rows > 0:
-            new_keys = self._read_files(files).select(*pks)
-            tagged = new_keys.withColumn("__new", F.lit(1)).unionByName(
-                dk.withColumn("__new", F.lit(0))
-            )
-        else:
-            tagged = dk.withColumn("__new", F.lit(0))
-        # One evaluation for bounds, probe, and conflict retries: the
-        # adds side is already materialized parquet, but delete_keys is
-        # a live plan — a nondeterministic source (sample/limit/changing
-        # view) re-evaluated after the bounds were computed could emit a
-        # key OUTSIDE those bounds, which range pruning would then
-        # silently skip. localCheckpoint pins the key set; blocks are
-        # released on exit (the commit completes inside this method, so
-        # nothing reads them afterward — without the release every CDC
-        # micro-batch would leak one persisted RDD).
+        written = wp.write_input(self, adds)
+        # The delete keys' pin is released on exit: the commit completes
+        # inside this method, so nothing reads the blocks afterward
+        # (without the release every CDC micro-batch would leak one
+        # persisted RDD).
         with self._release_new_blocks():
-            # Lazy (r13-opt): the fused dup-check/bounds aggregate in
-            # _apply_changes_commit is the first action and scans every
-            # partition — it materializes the checkpoint in the same
-            # job. The key set is still pinned by that single
-            # evaluation; bounds and probe read the same blocks.
-            tagged = tagged.localCheckpoint(eager=False)
-            return self._apply_changes_commit(
-                tagged, manifest_rel, files, rows, nbytes,
-                commit_mutate=commit_mutate, operation=operation,
-            )
+            keys = wp.KeySet.from_written(self, written) \
+                | wp.KeySet.from_frame(self, delete_keys)
+            self._commit_change(operation, keys, written,
+                                mutate=commit_mutate)
+        return self
 
-    def _apply_changes_unique(self, adds: DataFrame,
-                              delete_keys: DataFrame,
-                              commit_mutate=None,
-                              operation: str = "APPLY CHANGES"
-                              ) -> "Dataset":
-        """``apply_changes`` for a caller that PROVES ``adds`` carries
-        no duplicate primary keys — e.g. the aggregate-MV refresh,
-        whose upserts/deletes both project one groupBy(PKs) output.
-        The fused dup-check aggregate (a full groupBy exchange over
-        the written keys unioned with the delete keys) is then pure
-        overhead: adds bounds come free from the just-written
-        manifest's footer stats (driver-side, the same derivation
-        ``upsert`` trusts) and one small aggregate over the delete
-        keys alone pins and bounds that side. Overlap between adds and
-        delete keys stays legal (net-ADD keys may ride the delete
-        set).
-
-        PRIVATE because the skipped dup-check is a validation the
-        public surface promises (duplicate adds raise UserInputError);
-        a caller that passes duplicated adds here commits a corrupt
-        snapshot with no signal (ADVICE r13 — the proof obligation
-        cannot be checked cheaply, that is the whole point)."""
-        adds = self._align(adds)
+    def delete_by_keys(self, keys: DataFrame) -> "Dataset":
+        """Delete rows whose primary keys appear in ``keys`` (a DataFrame
+        holding the PK columns) — the keyed-delete half of a CDC apply
+        (streaming/changefeed.py ``stream_apply_changes``). The probe is
+        manifest-range-pruned by the keys' bounds, exactly like
+        upsert's delete half. Deleting keys that are absent (or already
+        deleted) is a no-op, which is what makes a replayed CDC batch
+        idempotent."""
         self.reload()
-        pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = wp.write_data_files(self, adds)
-        dk = delete_keys.select(*pks)
         with self._release_new_blocks():
-            # Pin delete_keys (nondeterministic-source hazard, same
-            # argument as the fused path); its bounds aggregate is
-            # the first action and materializes the checkpoint.
-            dk = dk.localCheckpoint(eager=False)
-            dkrow = self._key_bounds(dk)
-            n_dk = int(dkrow["n"] or 0)
-            # Upper bound on distinct keys (adds may overlap dk);
-            # exact for the ==0 emptiness test, conservative for
-            # the broadcast-vs-shuffle join decision.
-            n_keys = rows + n_dk
-            if n_keys == 0:
-                return self
-            if rows > 0:
-                keys_df = self._read_files(files).select(*pks)
-                if n_dk > 0:
-                    keys_df = keys_df.unionByName(dk)
-            else:
-                keys_df = dk
-            # Prune with the UNION of the two sides' bounding
-            # boxes: a file outside both boxes cannot match. If
-            # either occupied side is unbounded, fall back to no
-            # pruning (never-wrong discipline).
-            exprs = []
-            if rows > 0:
-                exprs.append(self._keys_range_expr(
-                    self._bounds_from_manifest(manifest_rel)))
-            if n_dk > 0:
-                exprs.append(self._keys_range_expr(dkrow))
-            if any(e is None for e in exprs):
-                prune_expr = None
-            else:
-                prune_expr = exprs[0]
-                for e in exprs[1:]:
-                    prune_expr = prune_expr | e
-            return self._apply_changes_retry(
-                keys_df, n_keys, prune_expr, manifest_rel, files,
-                rows, nbytes, commit_mutate=commit_mutate,
-                operation=operation,
-            )
+            self._commit_change("DELETE", wp.KeySet.from_frame(self, keys))
+        return self
 
-    def _apply_changes_commit(self, tagged, manifest_rel, files, rows,
-                              nbytes, commit_mutate=None,
-                              operation: str = "APPLY CHANGES"
-                              ) -> "Dataset":
-        pks = self.primary_keys
-        row = (
-            tagged.groupBy(*pks).agg(F.sum("__new").alias("__nn"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("__nn").alias("mx"),
-                *[F.min(k).alias(f"mn_{k}") for k in pks],
-                *[F.max(k).alias(f"mx_{k}") for k in pks],
-            )
-            .collect()[0]
-        )
-        if row["mx"] is not None and row["mx"] > 1:
-            raise UserInputError("Input data has duplicate primary keys")
-        n_keys = int(row["n"] or 0)
-        if n_keys == 0:
-            return self
-        return self._apply_changes_retry(
-            tagged.select(*pks), n_keys, self._keys_range_expr(row),
-            manifest_rel, files, rows, nbytes,
-            commit_mutate=commit_mutate, operation=operation,
-        )
+    def _commit_change(self, operation: str, match=wp.NO_KEYS,
+                       written=None, mutate=None) -> bool:
+        """Commit one change as ONE snapshot (reference merge_patches,
+        ops/insert.py:93-99): a copy-on-write delete of the rows
+        ``match`` selects (a ``wp.KeySet`` or a ``wp.PredicateSplit``)
+        and the already-written input ``written`` (``wp.write_input``'s
+        (manifest_rel, files, rows, bytes)), re-splitting against the
+        new head on a conflict. Every keyed write and CoW delete commits
+        here.
 
-    def _apply_changes_retry(self, keys_df, n_keys, prune_expr,
-                             manifest_rel, files, rows, nbytes,
-                             commit_mutate=None,
-                             operation: str = "APPLY CHANGES",
-                             keys_arrow=None) -> "Dataset":
+        A snapshot is committed only when a row is deleted or added;
+        ``mutate`` lands with it, or alone as a metadata update when
+        nothing changed (a view's source-synced marker still advances).
+        Returns whether a snapshot was committed."""
+        manifest_rel, files, rows, nbytes = written or (None, [], 0, 0)
         rec_rel = self._write_record_manifest_for(files)
 
         def attempt():
             pinned = self.current_snapshot_id
-            split = self._matching_delete_parts(
-                keys_df, n_keys=n_keys, prune_expr=prune_expr,
-                keys_arrow=keys_arrow,
-            )
+            split = wp.cow_split(self, match)
+            if not (split.affected or rows):
+                if mutate is not None:
+                    self.metadata = self.log.update_refs(mutate)
+                return False
             self._commit_rewrite(
                 pinned, split,
                 append_manifest=manifest_rel, append_files=files,
                 append_rows=rows, append_bytes=nbytes,
                 append_record_manifest=rec_rel,
                 pinned_constraints_version=(
-                    self.metadata.constraints_version),
-                mutate=commit_mutate,
+                    self.metadata.constraints_version if rows else None),
+                mutate=mutate,
                 operation=operation,
             )
-            return self
+            return True
 
         # Only the NEW rows need re-checking; survivors already existed
         # when any concurrent add_constraint validated the table.
         return md.retry_commit(
-            attempt, lambda: self._reload_revalidating(files)
-        )
-
-    def delete_by_keys(self, keys: DataFrame) -> "Dataset":
-        """Delete rows whose primary keys appear in ``keys`` (a DataFrame
-        holding the PK columns) — the keyed-delete half of a CDC apply
-        (streaming/changefeed.py ``stream_apply_changes``). The key set
-        stays distributed end-to-end (broadcast or shuffle-hash joined,
-        never collected) and the probe is manifest-range-pruned by the
-        keys' bounds, exactly like upsert's delete half. Deleting keys
-        that are absent (or already deleted) is a no-op, which is what
-        makes a replayed CDC batch idempotent."""
-        self.reload()
-        self._delete_matching(keys.select(*self.primary_keys))
-        return self
-
-    def _delete_matching(self, keys_df: DataFrame) -> bool:
-        """Delete rows whose PKs appear in keys_df. Returns whether a
-        snapshot was committed."""
-        return self._delete_split(
-            lambda: self._matching_delete_parts(keys_df))
-
-    def _delete_split(self, split_fn, commit_mutate=None) -> bool:
-        """Commit ``split_fn()``, a CoW split of the head, as one DELETE
-        snapshot, re-splitting on a conflict. Returns whether a snapshot
-        was committed."""
-
-        def attempt():
-            snap_id = self.current_snapshot_id
-            split = split_fn()
-            if not split.affected:
-                return False
-            self._commit_rewrite(snap_id, split, mutate=commit_mutate,
-                                 operation="DELETE")
-            return True
-
-        return md.retry_commit(attempt, self.reload)
+            attempt, lambda: self._reload_revalidating(files))
 
     def _retire_vectors(self, parent, affected: List[str]):
         """Carry the parent's delete-vector list across a CoW rewrite of
@@ -3536,7 +3372,8 @@ class Dataset:
             )
         # Range-prune files from the keys' bounds (cheap driver agg on the
         # small key set), then semi-join exactly.
-        prune = self._keys_range_expr(self._key_bounds(keys))
+        keys = wp.KeySet.from_frame(self, keys)
+        prune = keys.prune
         snap_id = self.metadata.resolve_version(version, self.branch)
         snapshot = self.metadata.snapshot(snap_id)
         files = mf.prune_files(
@@ -3545,10 +3382,10 @@ class Dataset:
             self._phys_expr(prune),
             self._stats_fields(),
         )
-        files = self._bloom_prune(files, snapshot, keys)
+        files = self._bloom_prune(files, snapshot, keys.df)
         df = self.read_files(files, filter_=prune, fields=fields,
                              reference_read=True, snapshot=snapshot)
-        out = df.join(F.broadcast(keys), on=pks, how="left_semi")
+        out = df.join(F.broadcast(keys.df), on=pks, how="left_semi")
         resolve = [
             f for f in (fields or self.schema.fieldNames())
             if f in self.record_fields

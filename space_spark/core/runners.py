@@ -136,11 +136,14 @@ class SparkRunner:
 
     def _to_df(self, data):
         """Accept a DataFrame, Arrow table, pandas frame, or dict-of-lists
-        (the reference's InputData union). Arrow input goes straight into
-        ``createDataFrame`` (Spark 4 takes ``pa.Table`` natively) — no
-        pandas round-trip, which both copied every column and let pandas
-        dtype coercion mangle nested/extension types."""
+        (the reference's InputData union). Arrow input becomes a
+        LocalRelation through ``write_path.local_frame`` — no pandas
+        round-trip, which both copied every column and let pandas dtype
+        coercion mangle nested/extension types, and no row lost after a
+        zero-row batch."""
         from pyspark.sql import DataFrame
+
+        from space_spark.core import write_path as wp
 
         if isinstance(data, DataFrame):
             return data
@@ -148,5 +151,5 @@ class SparkRunner:
         if isinstance(data, dict):
             data = pa.Table.from_pydict(data)
         if isinstance(data, pa.Table):
-            return spark.createDataFrame(data, schema=self._t.schema)
+            return wp.local_frame(spark, data, self._t.schema)
         return spark.createDataFrame(data, schema=self._t.schema)

@@ -600,66 +600,58 @@ class MaterializedView:
     def _apply_snapshot(self, source, snap, prev: int) -> None:
         """Apply one source snapshot as ONE MV commit that also advances
         the synced marker from ``prev``: the deletes log's keys are
-        deleted first, as a PK-only stream that skips the UDFs
-        (runners.py:79-96), then the added rows flow through the view
+        deleted, as a PK-only stream that skips the UDFs
+        (runners.py:79-96), and the added rows flow through the view
         chain and append (change_data.py:123-127). A snapshot that
         changes nothing here moves the marker alone (replaying a no-op
         is a no-op)."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
         mv = self.dataset
-        sync_mut = sync_marker_mutate(snap.snapshot_id, prev)
         logs = [snap.deleted_pks_file] if snap.deleted_pks_file else []
-        keys_df, keys, n_keys, prune = None, None, 0, None
-        written = None
+        keys, written = wp.NO_KEYS, None
         mv.reload()
         layout = wp.resolve_layout(mv, None, None)
-        if wp.fits_driver(source, snap.added_files + logs, into=[mv]):
-            pks = source.primary_keys
-            if logs:
-                keys = wp.read_arrow(source, logs, columns=pks)
-                n_keys = keys.num_rows
-                keys_df = wp.local_frame(self.spark, keys, T.StructType(
-                    [source.schema[k] for k in pks]))
-                prune = mv._keys_range_expr(wp.key_bounds(mv, keys))
-            if snap.added_files:
-                size = int(self.spark.conf.get(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch"))
-                out = list(self.view._node.apply_arrow(iter(
-                    wp.read_arrow(source, snap.added_files)
-                    .to_batches(max_chunksize=size))))
-                out = pa.Table.from_batches(out) if out \
-                    else to_arrow_schema(self.view.schema).empty_table()
-                written = wp.write_input(mv, out.select(
-                    mv.schema.fieldNames()), *layout)
-        else:
-            if logs:
-                keys_df, n_keys = source.read_deleted_pks(snap), None
-                prune = mv._DERIVE_PRUNE
-            if snap.added_files:
-                add_df = source._read_files(snap.added_files)
-                if source.record_fields:
-                    from space_spark.core import records as rec_mod
+        with mv._release_new_blocks():
+            if wp.fits_driver(source, snap.added_files + logs, into=[mv]):
+                if logs:
+                    keys = wp.KeySet.from_arrow(mv, wp.read_arrow(
+                        source, logs, columns=source.primary_keys))
+                if snap.added_files:
+                    size = int(self.spark.conf.get(
+                        "spark.sql.execution.arrow.maxRecordsPerBatch"))
+                    out = list(self.view._node.apply_arrow(iter(
+                        wp.read_arrow(source, snap.added_files)
+                        .to_batches(max_chunksize=size))))
+                    out = pa.Table.from_batches(out) if out \
+                        else to_arrow_schema(self.view.schema).empty_table()
+                    written = wp.write_input(mv, out.select(
+                        mv.schema.fieldNames()), *layout)
+            else:
+                if logs:
+                    keys = wp.KeySet.from_frame(
+                        mv, source.read_deleted_pks(snap))
+                if snap.added_files:
+                    add_df = source._read_files(snap.added_files)
+                    if source.record_fields:
+                        from space_spark.core import records as rec_mod
 
-                    add_df = rec_mod.resolve_record_fields(
-                        add_df, source.location, source.record_fields,
-                        source.schema,
-                        bases=source.record_search_bases,
-                    )
-                written = wp.write_input(
-                    mv, mv._align(self.view.process_source(add_df)),
-                    *layout)
-        if written is not None and written[2] > 0:
-            mv._apply_changes_retry(
-                keys_df, n_keys, prune, *written, commit_mutate=sync_mut,
-                operation="MV REFRESH", keys_arrow=keys)
-        elif not (logs and mv._delete_split(
-                lambda: mv._matching_delete_parts(
-                    keys_df, n_keys, prune, keys_arrow=keys), sync_mut)):
-            self._set_synced(snap.snapshot_id, expected_prev=prev)
+                        add_df = rec_mod.resolve_record_fields(
+                            add_df, source.location, source.record_fields,
+                            source.schema,
+                            bases=source.record_search_bases,
+                        )
+                    written = wp.write_input(
+                        mv, mv._align(self.view.process_source(add_df)),
+                        *layout)
+            mv._commit_change("MV REFRESH", keys, written,
+                              mutate=sync_marker_mutate(snap.snapshot_id,
+                                                        prev))
 
     def _set_synced(self, source_snapshot_id: int,
                     expected_prev: int) -> None:
+        """Advance the source-synced marker alone, as a change commit
+        that changes nothing does."""
         self.dataset.metadata = self.dataset.log.update_refs(
             sync_marker_mutate(source_snapshot_id, expected_prev)
         )

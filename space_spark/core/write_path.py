@@ -2,8 +2,9 @@
 place that decides whether the driver writes an output with pyarrow or
 Spark's file committer does (the reference's runner picks ``ds.local()``
 or ``ds.ray()`` once, core/runners.py:203-287). Entry points:
-``write_input`` (a commit's input rows), ``cow_split`` (a copy-on-write
-delete's survivors, deletes log and deleted positions, from one split —
+``write_input`` (a commit's input rows), ``KeySet`` (the primary keys a
+keyed change deletes), ``cow_split`` (a copy-on-write delete's
+survivors, deletes log and deleted positions, from one split —
 reference ops/delete.py:56-228) and ``write_data_files``.
 
 Manifest and parquet calls go through their module attributes
@@ -98,11 +99,22 @@ def _local_arrow(ds, df: DataFrame) -> Optional[pa.Table]:
     limit = _driver_bytes_max(ds)
     if limit < 0:
         return None
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation" \
-            or plan.stats().sizeInBytes() > limit:
+    plan = _local_plan(df)
+    if plan is None or plan.stats().sizeInBytes() > limit:
         return None
     return df.toArrow()
+
+
+def _local_plan(df: DataFrame):
+    """``df``'s plan when it optimizes to a ``LocalRelation`` (rows the
+    driver built), else None. A frame built straight from driver rows
+    is one already analyzed, which spares running the optimizer."""
+    qe = df._jdf.queryExecution()
+    plan = qe.analyzed()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        plan = qe.optimizedPlan()
+    return plan if plan.getClass().getSimpleName() == "LocalRelation" \
+        else None
 
 
 def _driver_fits(ds, files) -> bool:
@@ -294,37 +306,110 @@ def local_frame(spark, tbl: pa.Table, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(tbl.combine_chunks(), schema)
 
 
-def key_bounds(ds, keys: pa.Table) -> dict:
-    """The ``mn_<pk>``/``mx_<pk>`` bounds ``ds._keys_range_expr`` takes,
-    of a key set the driver holds — no Spark job."""
-    out = {}
-    for k in ds.primary_keys:
-        mm = pc.min_max(keys[k])
-        out[f"mn_{k}"], out[f"mx_{k}"] = mm["min"].as_py(), mm["max"].as_py()
-    return out
+# ------------------------------------------------------------ key sets
+def _key_schema(ds) -> pa.Schema:
+    """The Arrow schema ``read_arrow`` gives ``ds``'s PK columns."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(
+        T.StructType([ds.schema[k] for k in ds.primary_keys]))])
 
 
-def written_keys(ds, files: List[str], rows: int):
-    """The primary keys of a commit's written data files: (keys
-    DataFrame, distinct key count, the keys as Arrow or None, whether a
-    key repeats). A key set the probe would broadcast anyway
-    (``BROADCAST_KEYS_MAX``) is read by the driver straight from the
-    files' key columns; a larger one is counted by one Spark
-    aggregate."""
-    pks = ds.primary_keys
-    new_keys = ds._read_files(files).select(*pks)
-    if rows <= BROADCAST_KEYS_MAX:
-        keys_arrow = read_arrow(ds, files, columns=pks)
-        dup = keys_arrow.group_by(pks).aggregate([]).num_rows < rows
-        return new_keys, rows, keys_arrow, dup
-    row = (
-        new_keys.groupBy(*pks).count()
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.max("count").alias("mx"))
-        .collect()[0]
-    )
-    dup = row["mx"] is not None and row["mx"] > 1
-    return new_keys, int(row["n"] or 0), None, dup
+class KeySet(NamedTuple):
+    """The primary keys a keyed change deletes from ``ds`` (upsert's
+    written keys, ``apply_changes``' delete keys, a view refresh's
+    deletes log or touched groups): ``df`` the PK columns as a
+    DataFrame, ``n`` their count (an upper bound once a key may
+    repeat), ``prune`` the manifest prune expression of their min/max
+    box (None: no pruning), and ``arrow`` the same keys when the driver
+    holds them. ``a | b`` is the union; its prune ORs the two boxes."""
+    df: Optional[DataFrame]
+    n: int
+    prune: object
+    arrow: Optional[pa.Table] = None
+
+    @classmethod
+    def from_arrow(cls, ds, keys: pa.Table) -> "KeySet":
+        """Keys the driver holds: bounds by ``pc.min_max``, no Spark
+        job."""
+        pks = ds.primary_keys
+        keys = keys.select(pks).cast(_key_schema(ds))
+        bounds = {}
+        for k in pks:
+            mm = pc.min_max(keys[k])
+            bounds[f"mn_{k}"] = mm["min"].as_py()
+            bounds[f"mx_{k}"] = mm["max"].as_py()
+        df = local_frame(ds.spark, keys,
+                         T.StructType([ds.schema[k] for k in pks]))
+        return cls(df, keys.num_rows, ds._keys_range_expr(bounds), keys)
+
+    @classmethod
+    def from_written(cls, ds, written) -> "KeySet":
+        """The keys of a commit's written data files (``write_input``'s
+        (manifest_rel, files, rows, bytes)), bounded by the manifest's
+        footer stats with no job. A key set the probe would broadcast
+        anyway (``BROADCAST_KEYS_MAX``) is read by the driver from the
+        files' key columns; a larger one is counted by one Spark
+        aggregate. Raises ``UserInputError`` when a key repeats."""
+        manifest_rel, files, rows, _ = written
+        if not rows:
+            return NO_KEYS
+        pks = ds.primary_keys
+        df = ds._read_files(files).select(*pks)
+        arrow = None
+        if rows <= BROADCAST_KEYS_MAX:
+            arrow = read_arrow(ds, files, columns=pks)
+            n = arrow.group_by(pks).aggregate([]).num_rows
+        else:
+            n = int(df.groupBy(*pks).count().agg(F.count(F.lit(1)))
+                    .collect()[0][0])
+        if n < rows:
+            raise UserInputError("Input data has duplicate primary keys")
+        return cls(df, n, ds._keys_range_expr(
+            ds._bounds_from_manifest(manifest_rel)), arrow)
+
+    @classmethod
+    def from_frame(cls, ds, keys: DataFrame) -> "KeySet":
+        """The keys of a DataFrame holding the PK columns, counted and
+        bounded by ONE aggregate. A plan other than a LocalRelation is
+        pinned first (``localCheckpoint``, materialized by that
+        aggregate), so the bounds, the probe and a conflict retry see
+        one evaluation: a nondeterministic plan re-run after the bounds
+        could emit a key outside them, which pruning would skip. The
+        caller releases the pinned blocks
+        (``Dataset._release_new_blocks``) once nothing reads them."""
+        pks = ds.primary_keys
+        df = keys if keys.columns == pks else keys.select(*pks)
+        if _local_plan(df) is None:
+            df = df.localCheckpoint(eager=False)
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.min(k).alias(f"mn_{k}") for k in pks],
+            *[F.max(k).alias(f"mx_{k}") for k in pks],
+        ).collect()[0]
+        return cls(df, int(row["n"]), ds._keys_range_expr(row))
+
+    def __or__(self, other: "KeySet") -> "KeySet":
+        if not other.n:
+            return self
+        if not self.n:
+            return other
+        prune = None if self.prune is None or other.prune is None \
+            else self.prune | other.prune
+        arrow = None if self.arrow is None or other.arrow is None \
+            else pa.concat_tables([self.arrow, other.arrow])
+        return KeySet(self.df.unionByName(other.df), self.n + other.n,
+                      prune, arrow)
+
+
+NO_KEYS = KeySet(None, 0, None)
+
+
+class PredicateSplit(NamedTuple):
+    """A predicate delete's match: the rows where the Column ``pred`` is
+    true, in the files whose manifest stats pass ``prune``."""
+    prune: object
+    pred: object
 
 
 # ------------------------------------------------------------ CoW split
@@ -342,52 +427,53 @@ def probe_frame(ds, snapshot, files) -> DataFrame:
     )
 
 
-def cow_split(ds, prune_expr, keys_df: Optional[DataFrame] = None,
-              n_keys: Optional[int] = None, keys_arrow=None,
-              pred=None) -> CowSplit:
+def cow_split(ds, match) -> CowSplit:
     """Split a copy-on-write delete over the head snapshot's files whose
-    manifest stats pass ``prune_expr``: the rows whose PKs appear in
-    ``keys_df`` (``n_keys`` of them; ``keys_arrow`` the same keys
-    already on the driver), or else the rows where the Column ``pred``
-    is true, become the deletes log, and the other rows of the files
-    holding a match become the survivors. Writes the deletes log, never
-    commits; ``NO_MATCH`` when nothing matches.
+    manifest stats pass ``match.prune``: the rows whose PKs are in
+    ``match`` (a ``KeySet``), or else the rows where ``match.pred`` (a
+    ``PredicateSplit``) is true, become the deletes log, and the other
+    rows of the files holding a match become the survivors. Writes the
+    deletes log, never commits; ``NO_MATCH`` when nothing matches.
 
     The split runs on the driver when the candidates fit
     ``_driver_fits`` (and a key set fits a broadcast): one Spark read of
     the candidates, split with pyarrow. Otherwise one distributed probe
     job writes the deletes and the survivors are a DataFrame."""
+    keyed = isinstance(match, KeySet)
+    if keyed and not match.n:
+        return NO_MATCH
     snapshot = ds.metadata.snapshot(ds.current_snapshot_id)
-    files = ds._probe_candidates(snapshot, prune_expr)
+    files = ds._probe_candidates(snapshot, match.prune)
     if not files:
         return NO_MATCH
     pks = ds.primary_keys
     probe = probe_frame(ds, snapshot, files)
-    if pred is not None:
+    if not keyed:
         if _driver_fits(ds, files):
             # One read tags each row with the predicate; the driver
             # splits it like a keyed delete.
-            cand = probe.withColumn("__del", pred).toArrow()
+            cand = probe.withColumn("__del", match.pred).toArrow()
             return _split_on_driver(ds, cand.drop_columns(["__del"]),
                                     cand["__del"])
-        split = probe_deletes(ds, probe.where(pred))
+        split = probe_deletes(ds, probe.where(match.pred))
     else:
-        if n_keys <= BROADCAST_KEYS_MAX and _driver_fits(ds, files):
+        if match.n <= BROADCAST_KEYS_MAX and _driver_fits(ds, files):
+            keys_arrow = match.arrow
             if keys_arrow is None and all(
-                    keys_df.schema[k].dataType == ds.schema[k].dataType
+                    match.df.schema[k].dataType == ds.schema[k].dataType
                     for k in pks):
-                keys_arrow = keys_df.toArrow()
+                keys_arrow = match.df.toArrow()
             if keys_arrow is not None:
                 cand = probe.toArrow()
                 return _split_on_driver(
                     ds, cand, _keys_match(ds, cand, keys_arrow))
-        keys = keys_join_side(keys_df, n_keys)
+        keys = keys_join_side(match.df, match.n)
         split = probe_deletes(ds, probe.join(keys, on=pks, how="left_semi"))
     if not split.affected:
         return NO_MATCH
     kept = ds._apply_vectors(ds._read_files(split.affected), snapshot)
-    kept = kept.where(~pred) if pred is not None \
-        else kept.join(keys, on=pks, how="left_anti")
+    kept = kept.join(keys, on=pks, how="left_anti") if keyed \
+        else kept.where(~match.pred)
     return split._replace(survivors=kept)
 
 

@@ -128,8 +128,8 @@ def stream_upsert(
     safe default for CDC feeds that should be keyed.
 
     At scale each micro-batch costs one range-pruned probe + commit
-    (``_matching_delete_parts``): a trickle of small upserts touches the
-    few overlapping files, never the table."""
+    (``write_path.cow_split`` of the batch's key set): a trickle of
+    small upserts touches the few overlapping files, never the table."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():

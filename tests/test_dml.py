@@ -240,52 +240,69 @@ def test_apply_changes_single_commit(spark, tmp_location):
             [Row(id=1, v=0.0), Row(id=1, v=1.0)], schema), dels)
 
 
-def test_apply_changes_unique_adds_path_equivalent(spark, tmp_location):
-    """The `_apply_changes_unique` fast path (aggregate-MV refresh: dup-check
-    aggregate skipped, adds bounds from the written manifest, delete
-    keys bounded alone) must produce snapshots IDENTICAL to the fused
-    path for every input shape it can receive: overlap between adds
-    and delete keys (net-ADD keys riding the delete set), deletes
-    only, adds only, and the both-empty no-op."""
+def test_agg_fold_sides_equivalent(spark, tmp_location):
+    """The aggregate-MV fold commits one key set (its touched groups)
+    through the one change commit on both sides of the size rule: the
+    driver fold (an Arrow key set) and the Spark fold (a key set over
+    the touched groups of the fold's output) must produce IDENTICAL MV
+    snapshots for every shape a fold commits: an update whose group
+    rides both the adds and the delete keys, deletes only (a group
+    emptied), adds only (a new group), and the no-op."""
     from pyspark.sql import Row, types as T
 
     from space_spark import Dataset
 
     schema = T.StructType([
-        T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType()),
+        T.StructField("id", T.LongType()), T.StructField("g", T.StringType()),
+        T.StructField("v", T.DoubleType()),
     ])
 
-    def run(flag: bool):
-        loc = tmp_location + f"_uniq{int(flag)}"
-        ds = Dataset.create(spark, loc, schema, ["id"])
-        ds.append(spark.createDataFrame(
-            [Row(id=i, v=float(i)) for i in range(10)], schema))
-        cases = [
-            # (adds, delete_keys): overlap — updated key 3 rides both
-            ([Row(id=3, v=-3.0), Row(id=20, v=20.0)], [3, 7]),
-            ([], [20]),                    # deletes only
-            ([Row(id=30, v=30.0)], []),    # adds only
-            ([], []),                      # both empty: no snapshot
-        ]
-        snaps = []
-        for adds, dels in cases:
-            fn = ds._apply_changes_unique if flag else ds.apply_changes
-            fn(
-                spark.createDataFrame(adds, schema),
-                spark.createDataFrame([Row(id=i) for i in dels], "id long"),
-            )
-            snaps.append(ds.current_snapshot_id)
-        rows = sorted((r["id"], r["v"]) for r in ds.read().collect())
-        return snaps, rows
+    def rows(*rs):
+        return spark.createDataFrame([Row(id=i, g=g, v=v) for i, g, v in rs],
+                                     schema)
 
-    (snaps_fused, rows_fused) = run(False)
-    (snaps_uniq, rows_uniq) = run(True)
-    assert rows_uniq == rows_fused
-    # same number of committed snapshots, and the both-empty case
-    # committed nothing on either path
-    assert [s - snaps_fused[0] for s in snaps_fused] == \
-        [s - snaps_uniq[0] for s in snaps_uniq]
-    assert snaps_fused[-1] == snaps_fused[-2]
+    def run(threshold: str):
+        loc = tmp_location + f"_fold{threshold}"
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        try:
+            ds = Dataset.create(spark, loc, schema, ["id"])
+            ds.append(rows(*[(i, "ab"[i % 2], float(i)) for i in range(10)]))
+            mv = ds.aggregate_view(["g"], {"n": ("count", "*"),
+                                           "s": ("sum", "v")}
+                                   ).materialize(spark, loc + "_agg")
+            mv.refresh()
+            cases = [
+                # overlap — group a's state row is deleted and re-added
+                lambda: ds.upsert(rows((2, "a", -2.0))),
+                # deletes only — group b empties
+                lambda: ds.delete_by_keys(rows(
+                    *[(i, "", 0.0) for i in range(1, 10, 2)]).select("id")),
+                # adds only — a new group
+                lambda: ds.append(rows((30, "c", 30.0))),
+                # no source change: no MV snapshot
+                lambda: None,
+            ]
+            snaps = []
+            for case in cases:
+                case()
+                mv.refresh()
+                snaps.append(mv.dataset.current_snapshot_id)
+            got = sorted((r["g"], r["n"], r["s"]) for r in mv.read().collect())
+            return snaps, got
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    (snaps_driver, rows_driver) = run(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    (snaps_spark, rows_spark) = run("-1")
+    assert rows_spark == rows_driver
+    assert rows_driver == [("a", 5, 16.0), ("c", 1, 30.0)]
+    # same number of committed snapshots, and the no-op case committed
+    # nothing on either side
+    assert [s - snaps_driver[0] for s in snaps_driver] == \
+        [s - snaps_spark[0] for s in snaps_spark]
+    assert snaps_driver[-1] == snaps_driver[-2]
 
 
 def test_concurrent_overwrite_and_append_serialize(spark, tmp_location):

@@ -21,6 +21,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from space_spark import Dataset, field
 from space_spark.core import dataset as dataset_mod
 from space_spark.core import manifests as mf
+from space_spark.errors import PrimaryKeyExistError, UserInputError
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -122,6 +123,34 @@ def _merge(spark, loc):
         ],
         when_not_matched="insert",
     )
+    return [ds]
+
+
+def _apply_changes(spark, loc):
+    """Adds that overlap the delete keys (key 3 rides both), an update
+    of a live key, a delete key absent from the table, then a
+    deletes-only apply."""
+    ds = _seeded(spark, loc)
+    ds.apply_changes(
+        _local(spark, [(3, "a", 33), (5, "a", 55), (60, "a", 6)]),
+        _local(spark, [(3, "", 0), (8, "", 0), (90, "", 0)]).select("k"))
+    no_adds = spark.createDataFrame(to_arrow_schema(KXG).empty_table(), KXG)
+    ds.apply_changes(no_adds,
+                     _local(spark, [(9, "", 0), (60, "", 0)]).select("k"))
+    return [ds]
+
+
+def _insert(spark, loc):
+    """An insert, then one that repeats a key and one that clashes with
+    a live key: both raise and commit nothing."""
+    ds = _seeded(spark, loc)
+    ds.insert(_local(spark, [(100, "i", 1), (101, "i", 2)]))
+    head = ds.current_snapshot_id
+    with pytest.raises(UserInputError, match="duplicate"):
+        ds.insert(_local(spark, [(102, "i", 1), (102, "i", 2)]))
+    with pytest.raises(PrimaryKeyExistError):
+        ds.insert(_local(spark, [(5, "i", 1), (103, "i", 2)]))
+    assert ds.reload().current_snapshot_id == head
     return [ds]
 
 
@@ -260,6 +289,8 @@ def _mor_upsert_overwrite(spark, loc):
 
 
 SCENARIOS = {
+    "apply_changes": _apply_changes,
+    "insert": _insert,
     "clustered_append": _clustered_append(None),
     "clustered_append_target_files": _clustered_append(3),
     "upsert": _upsert,
@@ -302,6 +333,35 @@ def test_size_rule_sides_agree(spark, tmp_location, name):
                 assert bool(_driver_named(mv.location)) == \
                     (side == "driver"), mv.location
     assert out["driver"] == out["spark"]
+
+
+@pytest.mark.parametrize("side", ["driver", "spark"])
+def test_percent_encoded_location(spark, tmp_path, side):
+    """A table whose location holds a character that URIs percent-encode
+    (a space): a keyed CoW delete, a merge-on-read delete and an
+    aggregate-MV refresh over a delete each map a row's file URI back
+    to its data file."""
+    base = tmp_path / "a b"
+
+    def run():
+        ds = Dataset.create(spark, str(base / "t"), KXG, ["k"])
+        ds.append(_local(spark, [(i, f"g{i % 2}", i) for i in range(10)]))
+        agg = ds.aggregate_view(["g"], {"n": ("count", "*"),
+                                        "s": ("sum", "x")}
+                                ).materialize(spark, str(base / "agg"))
+        agg.refresh()
+        ds.delete_by_keys(_local(spark, [(3, "", 0)]).select("k"))
+        ds.delete(field("k") == 4, rewrite=False)
+        agg.refresh()
+        return ds, agg
+
+    value = spark.conf.get(THRESHOLD) if side == "driver" else "-1"
+    ds, agg = _with_threshold(spark, value, run)
+    assert sorted(r.k for r in ds.read().collect()) == [0, 1, 2, 5, 6, 7, 8, 9]
+    assert ds.num_rows == 8  # the split's file was retired, not kept
+    assert sorted((r.g, r.n, r.s) for r in agg.read().collect()) == \
+        [("g0", 4, 16), ("g1", 4, 22)]
+    _assert_folded(agg)
 
 
 def test_clustered_driver_append_layout(spark, tmp_location):

@@ -26,7 +26,12 @@ SCHEMA = T.StructType([
 # does, and the driver dumps the old keys. A view refresh reads its
 # source delta with pyarrow: the row-wise MV's one job is the upsert
 # snapshot's MV candidate read; the aggregate MV collects its fold once
-# and splits its state on the driver.
+# and splits its state on the driver. apply_changes writes its local
+# adds as upsert does (one collect, was a Spark write) and checks them
+# for duplicates with pyarrow; its delete keys take one aggregate (two
+# jobs under AQE). An insert's local input is one collect too, then its
+# fused dup+clash job; read_by_keys is the keys' bounds aggregate (two
+# jobs), the broadcast of the keys and the scan.
 PINNED_JOBS = {
     "append": 1,
     "upsert": 2,
@@ -35,13 +40,18 @@ PINNED_JOBS = {
     "delete_by_keys": 4,
     "delete": 1,
     "merge": 12,
-    "apply_changes": 6,
+    "apply_changes": 5,
+    "insert": 5,
+    "read_by_keys": 4,
     "overwrite": 1,
 }
 
 # The same ops with spark.sql.autoBroadcastJoinThreshold=-1, where every
 # output goes through Spark's writer, plus a merge-on-read delete, which
-# is a Spark write on either side.
+# is a Spark write on either side. merge and apply_changes each lost a
+# job when the fused dup-check aggregate (a groupBy over the written
+# and delete keys, then a count) became a pyarrow check of the written
+# keys and one aggregate over the delete keys.
 PINNED_JOBS_SPARK = {
     "append": 3,
     "upsert": 5,
@@ -49,9 +59,11 @@ PINNED_JOBS_SPARK = {
     "agg_mv_refresh": 17,
     "delete_by_keys": 6,
     "delete": 2,
-    "merge": 18,
-    "apply_changes": 8,
+    "merge": 17,
+    "apply_changes": 7,
     "delete_mor": 1,
+    "insert": 5,
+    "read_by_keys": 7,
     "overwrite": 5,
 }
 
@@ -110,6 +122,9 @@ def _run_ops(spark, tmp_location, mor=False):
     if mor:
         ops["delete_mor"] = lambda: ds.delete(field("k") == 7,
                                               rewrite=False)
+    ops["insert"] = lambda: ds.insert(_rows(spark, [(103, "g1", 7)]))
+    ops["read_by_keys"] = lambda: ds.read_by_keys(
+        _rows(spark, [(8, "", 0)]).select("k")).collect()
     ops["overwrite"] = lambda: ds.overwrite(
         _rows(spark, [(i, "o", i) for i in range(5)]))
     got = {name: jobs(fn) for name, fn in ops.items()}

@@ -162,6 +162,7 @@ def test_upsert_probe_is_pruned(spark, tmp_path):
     from pyspark.sql import types as T
 
     from space_spark import Dataset
+    from space_spark.core import write_path
 
     schema = T.StructType([
         T.StructField("k", T.LongType()), T.StructField("v", T.LongType()),
@@ -172,7 +173,8 @@ def test_upsert_probe_is_pruned(spark, tmp_path):
             [(i, i) for i in range(start, start + 1000)], schema
         ).coalesce(1))
     bounds_keys = spark.createDataFrame([(5, -5)], schema)
-    affected = ds._matching_delete_parts(bounds_keys.select("k")).affected
+    affected = write_path.cow_split(
+        ds, write_path.KeySet.from_frame(ds, bounds_keys)).affected
     # key 5 overlaps only the first file's [0, 999] range
     assert len(affected) <= 1
     assert len(ds.data_files()) == 4

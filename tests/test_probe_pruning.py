@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 from space_spark import Dataset, field
 from space_spark.core import dataset as ds_mod
 from space_spark.core import manifests as mf
+from space_spark.core import write_path
 
 N_ROWS = 10_000
 N_FILES = 16
@@ -89,9 +90,10 @@ def test_read_by_keys_still_pruned(spark, clustered_ds, prune_spy):
     )
 
 
-def test_delete_matching_prunes(spark, clustered_ds, prune_spy):
+def test_keyed_delete_prunes(spark, clustered_ds, prune_spy):
     keys = spark.createDataFrame([(123,)], "id long")
-    assert clustered_ds._delete_matching(keys) is True
+    assert clustered_ds._commit_change(
+        "DELETE", write_path.KeySet.from_frame(clustered_ds, keys)) is True
     total = _total_files(clustered_ds)
     probe_calls = [c for c in prune_spy if c["expr"] is not None]
     assert probe_calls and all(

@@ -40,6 +40,19 @@ def test_runner_read_and_mutations(spark, tmp_location):
     assert ds.ray() .read_all().num_rows == 3
 
 
+def test_runner_arrow_input_keeps_rows_after_empty_batch(spark,
+                                                          tmp_location):
+    """An Arrow input whose chunks include a zero-row batch keeps every
+    row (``createDataFrame`` of such a table drops the rows after it)."""
+    ds = Dataset.create(spark, tmp_location, SIMPLE, ["id"])
+    a, b, c = (pa.table({"id": [i], "val": [i / 10]}) for i in (1, 2, 3))
+    empty = a.slice(0, 0)
+    data = pa.concat_tables([a, b, empty, c])
+    assert [len(ch) for ch in data["id"].chunks] == [1, 1, 0, 1]
+    ds.local().append(data)
+    assert sorted(r.id for r in ds.read().collect()) == [1, 2, 3]
+
+
 def test_mv_runner_refresh(spark, tmp_location):
     ds = Dataset.create(spark, tmp_location, SIMPLE, ["id"])
 
