@@ -294,7 +294,12 @@ class MaterializedAggregate:
         snaps = source._ancestors(start, end)
         if not snaps:
             return []
-        self._apply_snapshots(source, snaps, expected_prev=start)
+        # Blocks the fold pins (a deleted rows' point read, the delta
+        # aggregate, its projection) are released after the commit — a
+        # long multi-snapshot refresh would otherwise pin one
+        # checkpointed RDD per snapshot.
+        with self.dataset._release_new_blocks():
+            self._apply_snapshots(source, snaps, expected_prev=start)
         return [s.snapshot_id for s in snaps]
 
     def _set_synced(self, snapshot_id: int, expected_prev: int) -> None:
@@ -381,106 +386,102 @@ class MaterializedAggregate:
                               .alias(f"__agg_ddel_{name}"))
         has_deletes = any(s.deleted_pks_file for s in snaps)
 
-        # Blocks released after the commit (the same leak guard as
-        # merge/apply_changes — a long multi-snapshot refresh would
-        # otherwise pin one checkpointed RDD per snapshot).
-        with self.dataset._release_new_blocks():
-            dagg = delta.groupBy(*gb).agg(*dexprs)
-            # A driver-side fold's key set is the delta's groups: the
-            # touched groups of ``proj`` (one row per group of dagg).
-            keys = old = None
-            if local is not None:
-                keys = wp.KeySet.from_arrow(
-                    self.dataset, local.select(gb).group_by(gb).aggregate([]))
-                old = self._driver_state(keys)
-            if old is None:
-                # Pin the delta aggregate ONCE: read_by_keys' bounds
-                # probe, the merge join, and the commit would otherwise
-                # each re-execute the whole delta plan — including the
-                # parent-version point read (round-13 review: 3x
-                # waste). Lazy (r13-opt): read_by_keys' bounds probe is
-                # a full pass over dagg — it materializes the
-                # checkpoint in the same job instead of paying a
-                # dedicated pre-materialization job per snapshot.
-                dagg = dagg.localCheckpoint(eager=False)
-                # Old state rows for exactly the touched groups: group
-                # keys are the state PKs, so this is a pruned point read.
-                old = self.dataset.read_by_keys(dagg.select(*gb))
-            old_pref = old.select(
-                *gb, *[F.col(c).alias(f"__agg_o_{c}")
-                       for c in old.columns if c not in gb]
-            )
-            merged = dagg.join(old_pref, on=gb, how="left")
+        dagg = delta.groupBy(*gb).agg(*dexprs)
+        # A driver-side fold's key set is the delta's groups: the
+        # touched groups of ``proj`` (one row per group of dagg).
+        keys = old = None
+        if local is not None:
+            keys = wp.KeySet.from_arrow(
+                self.dataset, local.select(gb).group_by(gb).aggregate([]))
+            old = self._driver_state(keys)
+        if old is None:
+            # Pin the delta aggregate ONCE: read_by_keys' bounds
+            # probe, the merge join, and the commit would otherwise
+            # each re-execute the whole delta plan — including the
+            # parent-version point read (3x the work). Lazy:
+            # read_by_keys' bounds probe is a full pass over dagg —
+            # it materializes the checkpoint in the same job instead
+            # of paying a dedicated pre-materialization job per
+            # snapshot.
+            dagg = dagg.localCheckpoint(eager=False)
+            # Old state rows for exactly the touched groups: group
+            # keys are the state PKs, so this is a pruned point read.
+            old = self.dataset.read_by_keys(dagg.select(*gb))
+        old_pref = old.select(
+            *gb, *[F.col(c).alias(f"__agg_o_{c}")
+                   for c in old.columns if c not in gb]
+        )
+        merged = dagg.join(old_pref, on=gb, how="left")
 
-            def o(cname):
-                return F.col(f"__agg_o_{cname}")
+        def o(cname):
+            return F.col(f"__agg_o_{cname}")
 
-            new_rows = (F.coalesce(o(_ROWS_COL), F.lit(0))
-                        + F.col("__agg_delta_nrows"))
-            out_cols = [F.col(g) for g in gb] + [
-                new_rows.alias(_ROWS_COL)
-            ]
-            repair_flags = []
-            for name, (fn, col) in sorted(aggs.items()):
-                if fn == "count":
+        new_rows = (F.coalesce(o(_ROWS_COL), F.lit(0))
+                    + F.col("__agg_delta_nrows"))
+        out_cols = [F.col(g) for g in gb] + [
+            new_rows.alias(_ROWS_COL)
+        ]
+        repair_flags = []
+        for name, (fn, col) in sorted(aggs.items()):
+            if fn == "count":
+                out_cols.append(
+                    (F.coalesce(o(name), F.lit(0))
+                     + F.col(f"__agg_d_{name}")).alias(name))
+            elif fn in ("sum", "avg"):
+                acc = (F.coalesce(o(f"__agg_sum_{name}"), F.lit(0))
+                       + F.coalesce(F.col(f"__agg_dsum_{name}"),
+                                    F.lit(0)))
+                nn = (F.coalesce(o(f"__agg_nn_{name}"), F.lit(0))
+                      + F.col(f"__agg_dnn_{name}"))
+                acc_dt = self.dataset.schema[
+                    f"__agg_sum_{name}"].dataType
+                out_cols.append(
+                    acc.cast(acc_dt).alias(f"__agg_sum_{name}"))
+                out_cols.append(nn.alias(f"__agg_nn_{name}"))
+                if fn == "sum":
+                    dt = self.dataset.schema[name].dataType
                     out_cols.append(
-                        (F.coalesce(o(name), F.lit(0))
-                         + F.col(f"__agg_d_{name}")).alias(name))
-                elif fn in ("sum", "avg"):
-                    acc = (F.coalesce(o(f"__agg_sum_{name}"), F.lit(0))
-                           + F.coalesce(F.col(f"__agg_dsum_{name}"),
-                                        F.lit(0)))
-                    nn = (F.coalesce(o(f"__agg_nn_{name}"), F.lit(0))
-                          + F.col(f"__agg_dnn_{name}"))
-                    acc_dt = self.dataset.schema[
-                        f"__agg_sum_{name}"].dataType
+                        F.when(nn > 0, acc).cast(dt).alias(name))
+                else:
                     out_cols.append(
-                        acc.cast(acc_dt).alias(f"__agg_sum_{name}"))
-                    out_cols.append(nn.alias(f"__agg_nn_{name}"))
-                    if fn == "sum":
-                        dt = self.dataset.schema[name].dataType
-                        out_cols.append(
-                            F.when(nn > 0, acc).cast(dt).alias(name))
-                    else:
-                        out_cols.append(
-                            F.when(nn > 0,
-                                   acc.cast("double") / nn).alias(name))
-                else:  # min / max
-                    fold = F.least if fn == "min" else F.greatest
-                    candidate = fold(o(name), F.col(f"__agg_dadd_{name}"))
-                    if not has_deletes:
-                        # Insert-only snapshot: min/max are
-                        # distributive, no repair machinery.
-                        out_cols.append(candidate.alias(name))
-                        continue
-                    # The stored extreme may have been deleted only
-                    # when a deleted value TIES OR BEATS it — only
-                    # those groups recompute. A NULL stored extreme
-                    # with batch deletes also repairs (r14-opt batch
-                    # fold): a group CREATED within the batch has no
-                    # stored row, yet a delete inside the same batch
-                    # may have removed the batch-add extreme — in the
-                    # single-snapshot fold this case cannot arise (a
-                    # snapshot's deletes existed at its parent, so the
-                    # state row exists), so the extra disjunct never
-                    # fires there.
-                    dele = F.col(f"__agg_ddel_{name}")
-                    beats = (dele <= o(name)) if fn == "min" \
-                        else (dele >= o(name))
-                    needs = (dele.isNotNull()
-                             & (o(name).isNull() | beats))
-                    repair_flags.append(needs.alias(f"__agg_fix_{name}"))
-                    out_cols.append(
-                        F.when(needs, F.lit(None).cast(
-                            self.dataset.schema[name].dataType
-                        )).otherwise(candidate).alias(name))
+                        F.when(nn > 0,
+                               acc.cast("double") / nn).alias(name))
+            else:  # min / max
+                fold = F.least if fn == "min" else F.greatest
+                candidate = fold(o(name), F.col(f"__agg_dadd_{name}"))
+                if not has_deletes:
+                    # Insert-only snapshot: min/max are
+                    # distributive, no repair machinery.
+                    out_cols.append(candidate.alias(name))
+                    continue
+                # The stored extreme may have been deleted only
+                # when a deleted value TIES OR BEATS it — only
+                # those groups recompute. A NULL stored extreme
+                # with batch deletes also repairs (batch fold): a
+                # group CREATED within the batch has no
+                # stored row, yet a delete inside the same batch
+                # may have removed the batch-add extreme — in the
+                # single-snapshot fold this case cannot arise (a
+                # snapshot's deletes existed at its parent, so the
+                # state row exists), so the extra disjunct never
+                # fires there.
+                dele = F.col(f"__agg_ddel_{name}")
+                beats = (dele <= o(name)) if fn == "min" \
+                    else (dele >= o(name))
+                needs = (dele.isNotNull()
+                         & (o(name).isNull() | beats))
+                repair_flags.append(needs.alias(f"__agg_fix_{name}"))
+                out_cols.append(
+                    F.when(needs, F.lit(None).cast(
+                        self.dataset.schema[name].dataType
+                    )).otherwise(candidate).alias(name))
 
-            proj = (merged.select(*out_cols, *repair_flags)
-                    if repair_flags else merged.select(*out_cols))
-            fix_cols = [n for n, (fn, _c) in sorted(aggs.items())
-                        if fn in ("min", "max")] if has_deletes else []
-            self._fold_commit(source, last, proj, fix_cols, gb, aggs,
-                              expected_prev, keys)
+        proj = (merged.select(*out_cols, *repair_flags)
+                if repair_flags else merged.select(*out_cols))
+        fix_cols = [n for n, (fn, _c) in sorted(aggs.items())
+                    if fn in ("min", "max")] if has_deletes else []
+        self._fold_commit(source, last, proj, fix_cols, gb, aggs,
+                          expected_prev, keys)
 
     def _driver_delta(self, source, snaps, cols):
         """The batch's signed delta (``cols`` and the sign) read by the

@@ -874,8 +874,7 @@ class Dataset:
         pass-through ids above 2^53."""
         import numpy as np
 
-        idents = self.metadata.identity_columns
-        cols = sorted(idents)
+        cols = sorted(self.metadata.identity_columns)
         # Lazy checkpoint (r13-opt): the very next statement is the
         # per-partition null-count aggregate — a full scan that
         # materializes every partition of the checkpoint in the SAME
@@ -891,18 +890,7 @@ class Dataset:
         totals = {c: int(sum(r[c] or 0 for r in rows)) for c in cols}
         if all(v == 0 for v in totals.values()):
             return pinned
-        bases: Dict[str, int] = {}
-        steps = {c: int(idents[c]["step"]) for c in cols}
-
-        def reserve(meta):
-            for c in cols:
-                if totals[c] == 0:
-                    continue
-                spec = meta.identity_columns[c]
-                bases[c] = int(spec["watermark"])
-                spec["watermark"] = bases[c] + totals[c] * steps[c]
-
-        self.metadata = self.log.update_refs(reserve)
+        bases, steps = self._reserve_identity(totals)
         offsets = {c: {} for c in cols}
         running = {c: 0 for c in cols}
         for r in sorted(rows, key=lambda r: r["__pid"]):
@@ -951,6 +939,43 @@ class Dataset:
                 yield batch.drop_columns(["__pid"])
 
         return marked.mapInArrow(assign, out_schema)
+
+    def _reserve_identity(self, totals: Dict[str, int]):
+        """Reserve ``totals[c]`` ids of each identity column ``c``
+        atomically (one update_refs; a crashed write leaks its range as
+        a gap). Returns ({column: first id}, {column: step})."""
+        bases: Dict[str, int] = {}
+        steps = {c: int(spec["step"]) for c, spec in
+                 self.metadata.identity_columns.items()}
+
+        def reserve(meta):
+            for c, n in totals.items():
+                if n == 0:
+                    continue
+                spec = meta.identity_columns[c]
+                bases[c] = int(spec["watermark"])
+                spec["watermark"] = bases[c] + n * steps[c]
+
+        self.metadata = self.log.update_refs(reserve)
+        return bases, steps
+
+    def _assign_identity_arrow(self, tbl: pa.Table) -> pa.Table:
+        """``_assign_identity`` over rows the driver holds: NULL identity
+        entries filled in row order from one reserved range."""
+        totals = {c: tbl[c].null_count
+                  for c in sorted(self.metadata.identity_columns)}
+        if not any(totals.values()):
+            return tbl
+        bases, steps = self._reserve_identity(totals)
+        for c, base in bases.items():
+            col = pc.cast(tbl[c], pa.int64()).combine_chunks()
+            vals = col.fill_null(0).to_numpy().copy()
+            vals[col.is_null().to_numpy(zero_copy_only=False)] = \
+                base + steps[c] * np.arange(totals[c], dtype=np.int64)
+            i = tbl.schema.get_field_index(c)
+            tbl = tbl.set_column(i, tbl.schema.field(i),
+                                 pa.array(vals).cast(tbl.schema.field(i).type))
+        return tbl
 
     # ------------------------------------------------------ constraints
     @staticmethod
@@ -1913,25 +1938,38 @@ class Dataset:
           ``lambda s, t: s["ts"] > t["ts"]``). Matched rows matching no
           clause are left untouched.
 
-        Plan shape: the matched set comes from ``read_by_keys`` over the
-        source's keys (manifest range + bloom pruned — O(matched files),
-        never a table scan), one LEFT join source→target tags each
-        source row matched/new, the clause cascade evaluates as a
+        Plan shape. A source that is a LocalRelation within the
+        driver-write bound after alignment (``wp.local_arrow``), with no
+        ``when_not_matched_by_source`` clause, is collected to Arrow
+        ONCE; every branch derives from that copy. Its keys bound and
+        bloom-probe the target (``wp.KeySet.from_arrow``, no job); the
+        candidate files, when ``wp.fits_driver`` bounds them, are read
+        by the driver with their delete vectors applied and LEFT joined
+        to the source with pyarrow; the clause cascade runs over that
+        join as a LocalRelation in ONE collect returning the net adds
+        and the delete keys; the driver writes the adds, and one
+        ``_commit_change`` splits the target by the union of the adds'
+        and the delete keys (one candidate read): three Spark jobs on a
+        table without CHECK constraints. Otherwise the aligned source is pinned (``localCheckpoint``,
+        or the Arrow copy) and the matched set comes from
+        ``read_by_keys`` over its keys (manifest range + bloom pruned —
+        O(matched files), never a table scan); one LEFT join
+        source→target tags each source row matched/new, the cascade is a
         per-column CASE over that join (one pass regardless of clause
-        count), and the net change applies through ``apply_changes``
-        (write-first, fused dup-check — duplicate PKs in the source
-        raise there — one range-pruned survivor rewrite, marker-capable
-        single commit). A reader never observes a half-merged state;
-        replaying the same merge converges.
+        count), and the net change applies through ``apply_changes``.
+        On both sides a key repeated among the net adds (duplicate
+        source keys that update or insert) raises ``UserInputError``
+        before anything commits, and the change lands as one snapshot:
+        a reader never observes a half-merged state; replaying the same
+        merge converges.
 
-        The aligned source is pinned (``localCheckpoint``) BEFORE the
-        probe/join derive from it: the probe keys, the adds branches,
-        and the delete keys are separate Spark actions, and a
-        nondeterministic source (``rand()``, un-ordered ``limit``, a
-        changing view) re-evaluated between them could emit divergent
-        matched sets — a row deleted but not re-inserted (r9 verdict
-        "What's wrong #1"). Blocks release on exit like
-        ``apply_changes``' own checkpoint."""
+        Pinning matters because the probe keys, the adds and the delete
+        keys are separate evaluations: a nondeterministic source
+        (``rand()``, un-ordered ``limit``, a changing view) re-evaluated
+        between them could emit divergent matched sets — a row deleted
+        but not re-inserted. Pinned
+        blocks release on exit like ``apply_changes``' own
+        checkpoint."""
         pks = self.primary_keys
         cols = self.schema.fieldNames()
         clauses = self._normalize_matched_clauses(
@@ -1940,7 +1978,6 @@ class Dataset:
             when_not_matched, cols, pks)
         bys_clauses = self._normalize_by_source(
             when_not_matched_by_source, cols, pks)
-        non_pk = [c for c in cols if c not in pks]
         clash = [c for c in cols
                  if c == "__m" or c.startswith("__t_")]
         if clash:
@@ -1953,14 +1990,29 @@ class Dataset:
                 f"table has {clash}"
             )
         with self._release_new_blocks():
-            # Lazy (r13-opt): read_by_keys' bounds probe on the next
-            # line is a full min/max/count pass over the source — it
-            # materializes every checkpoint partition in one job; an
-            # eager checkpoint would run that scan twice. The pin is
-            # established by that first evaluation, before any derived
-            # branch (adds/deletes) executes — the r9 divergent-matched-
-            # set hazard stays closed.
-            source = self._align(source).localCheckpoint(eager=False)
+            # Identity ids are assigned on the copy that is pinned, so
+            # the alignment here leaves them out.
+            source = self._align(source, skip_identity=True)
+            idents = self.metadata.identity_columns
+            src = None if bys_clauses or self.record_fields \
+                else wp.local_arrow(self, source)
+            if src is not None:
+                if idents:
+                    src = self._assign_identity_arrow(src)
+                if self._merge_on_driver(src, clauses, ins_clauses):
+                    return self
+                source = wp.local_frame(self.spark, src, source.schema)
+            else:
+                if idents:
+                    source = self._assign_identity(source)
+                # Lazy: read_by_keys' bounds probe below is a
+                # full min/max/count pass over the source — it
+                # materializes every checkpoint partition in one job; an
+                # eager checkpoint would run that scan twice. The pin is
+                # established by that first evaluation, before any
+                # derived branch (adds/deletes) executes.
+                source = source.localCheckpoint(eager=False)
+            non_pk = [c for c in cols if c not in pks]
             # Target side of matched pairs, renamed so conditions and
             # set expressions can see both rows; __m tags existence
             # (left join below).
@@ -1969,52 +2021,9 @@ class Dataset:
                 *[F.col(c).alias(f"__t_{c}") for c in non_pk],
                 F.lit(1).alias("__m"),
             )
-            j = source.join(cand, on=list(pks), how="left")
-            s_acc = {c: F.col(c) for c in cols}
-            t_acc = {c: (F.col(c) if c in pks else F.col(f"__t_{c}"))
-                     for c in cols}
-            parts_adds = []
-            delete_parts = []
-
-            # -- WHEN MATCHED -------------------------------------------
-            fires = self._clause_fires(
-                clauses, F.col("__m").isNotNull(), (s_acc, t_acc))
-
-            idents = set(self.metadata.identity_columns or {})
-
-            def m_value(cl, c):
-                if cl["set"] is None or c in pks:
-                    # Whole-row replace / join key — EXCEPT identity
-                    # columns, which keep their target value on update
-                    # (Delta identity semantics: a matched row's id is
-                    # stable; the source's freshly-_align-assigned id
-                    # for that row must not displace it). An explicit
-                    # set entry still overrides below.
-                    if c in idents and c not in pks and cl["set"] is None:
-                        return t_acc[c]
-                    return s_acc[c]
-                # UPDATE SET: unlisted columns keep their target value.
-                return self._set_or(cl, c, t_acc[c], (s_acc, t_acc))
-
-            upd = [(cl, f) for cl, f in fires if cl["action"] == "update"]
-            if upd:
-                parts_adds.append(self._cascade_select(j, upd, cols,
-                                                       m_value))
-            if fires:
-                delete_parts.append(
-                    j.where(self._any_fire(fires)).select(*pks))
-
-            # -- WHEN NOT MATCHED (conditional inserts) -----------------
-            ins_fires = self._clause_fires(
-                ins_clauses, F.col("__m").isNull(), (s_acc,))
-
-            def i_value(cl, c):
-                # Unlisted set columns take the source value.
-                return self._set_or(cl, c, s_acc[c], (s_acc,))
-
-            if ins_fires:
-                parts_adds.append(self._cascade_select(j, ins_fires,
-                                                       cols, i_value))
+            parts_adds, delete_parts = self._merge_cascade(
+                source.join(cand, on=list(pks), how="left"),
+                clauses, ins_clauses)
 
             # -- WHEN NOT MATCHED BY SOURCE -----------------------------
             if bys_clauses:
@@ -2056,6 +2065,107 @@ class Dataset:
             return self.apply_changes(adds, delete_keys,
                                       _identity_preassigned=True,
                                       operation="MERGE")
+
+    def _merge_cascade(self, j: DataFrame, clauses, ins_clauses):
+        """A merge's WHEN MATCHED and WHEN NOT MATCHED clauses over ``j``
+        — each source row LEFT joined to its target row, whose non-key
+        columns are ``__t_<name>`` and whose existence is ``__m`` — as
+        (add branches, delete-key branches): the updated rows and the
+        inserted rows, each one per-column CASE pass, and the keys of
+        the matched rows any clause fires on."""
+        pks = self.primary_keys
+        cols = self.schema.fieldNames()
+        s_acc = {c: F.col(c) for c in cols}
+        t_acc = {c: (F.col(c) if c in pks else F.col(f"__t_{c}"))
+                 for c in cols}
+        parts_adds, delete_parts = [], []
+
+        # -- WHEN MATCHED -----------------------------------------------
+        fires = self._clause_fires(
+            clauses, F.col("__m").isNotNull(), (s_acc, t_acc))
+
+        idents = set(self.metadata.identity_columns or {})
+
+        def m_value(cl, c):
+            if cl["set"] is None or c in pks:
+                # Whole-row replace / join key — EXCEPT identity
+                # columns, which keep their target value on update
+                # (Delta identity semantics: a matched row's id is
+                # stable; the source's freshly-_align-assigned id
+                # for that row must not displace it). An explicit
+                # set entry still overrides below.
+                if c in idents and c not in pks and cl["set"] is None:
+                    return t_acc[c]
+                return s_acc[c]
+            # UPDATE SET: unlisted columns keep their target value.
+            return self._set_or(cl, c, t_acc[c], (s_acc, t_acc))
+
+        upd = [(cl, f) for cl, f in fires if cl["action"] == "update"]
+        if upd:
+            parts_adds.append(self._cascade_select(j, upd, cols, m_value))
+        if fires:
+            delete_parts.append(j.where(self._any_fire(fires)).select(*pks))
+
+        # -- WHEN NOT MATCHED (conditional inserts) ---------------------
+        ins_fires = self._clause_fires(
+            ins_clauses, F.col("__m").isNull(), (s_acc,))
+
+        def i_value(cl, c):
+            # Unlisted set columns take the source value.
+            return self._set_or(cl, c, s_acc[c], (s_acc,))
+
+        if ins_fires:
+            parts_adds.append(self._cascade_select(j, ins_fires, cols,
+                                                   i_value))
+        return parts_adds, delete_parts
+
+    def _merge_on_driver(self, src: pa.Table, clauses, ins_clauses) -> bool:
+        """``merge`` over a source the driver holds (``src``, aligned,
+        identity assigned) when the target files that may hold its keys
+        fit ``wp.fits_driver``; False, having committed nothing, when
+        they do not. The candidates are read with pyarrow (delete vectors
+        applied) and LEFT joined to ``src`` on the driver; the cascade
+        runs over that join as a LocalRelation, and ONE collect returns
+        the net adds (generated columns recomputed) and the delete keys,
+        told apart by ``__del``."""
+        self.reload()
+        pks = self.primary_keys
+        cols = self.schema.fieldNames()
+        snapshot = self.metadata.snapshot(self.current_snapshot_id)
+        files = self._key_files(snapshot, wp.KeySet.from_arrow(self, src))
+        if not wp.fits_driver(self, files):
+            return False
+        tgt = wp.read_arrow(self, files, snapshot=snapshot)
+        pairs = wp.left_join_rows(self, src, tgt)
+        joined = src.take(pairs["__l"])
+        schema = T.StructType(list(self.schema.fields))
+        for c in cols:
+            if c not in pks:
+                joined = joined.append_column(
+                    f"__t_{c}", tgt[c].take(pairs["__r"]))
+                schema.add(f"__t_{c}", self.schema[c].dataType)
+        joined = joined.append_column("__m", pc.if_else(
+            pc.is_valid(pairs["__r"]), pa.scalar(1, pa.int32()),
+            pa.scalar(None, pa.int32())))
+        schema.add("__m", T.IntegerType())
+        parts_adds, delete_parts = self._merge_cascade(
+            wp.local_frame(self.spark, joined, schema), clauses, ins_clauses)
+        parts = [self._align(p, skip_identity=True)
+                 .withColumn("__del", F.lit(False)) for p in parts_adds] \
+            + [p.withColumn("__del", F.lit(True)) for p in delete_parts]
+        if not parts:
+            return True
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p, allowMissingColumns=True)
+        out = out.toArrow()
+        adds = out.filter(pc.invert(out["__del"])).select(cols)
+        keys = wp.KeySet.from_arrow(self, adds, unique=True) \
+            | wp.KeySet.from_arrow(self, out.filter(out["__del"]))
+        self._commit_change("MERGE", keys,
+                            wp.write_input(self, adds) if adds.num_rows
+                            else None)
+        return True
 
     def _keys_range_expr(self, bounds) -> FilterType:
         """Falsifiable manifest-prune expression from a key set's min/max
@@ -2265,8 +2375,10 @@ class Dataset:
 
         Job shape (same write-first discipline as upsert): the adds are
         written as upsert writes them, their key set checked for
-        duplicates and bounded by the footers, the delete keys counted
-        and bounded by one aggregate, and the union of the two key sets
+        duplicates and bounded by the footers, the delete keys collected
+        once when the driver built them (``KeySet.from_local``) or else
+        counted and bounded by one aggregate, and the union of the two
+        key sets
         drives one range-pruned split inside the commit — one snapshot
         instead of two.
 
@@ -2290,7 +2402,7 @@ class Dataset:
         # persisted RDD).
         with self._release_new_blocks():
             keys = wp.KeySet.from_written(self, written) \
-                | wp.KeySet.from_frame(self, delete_keys)
+                | wp.KeySet.from_local(self, delete_keys)
             self._commit_change(operation, keys, written,
                                 mutate=commit_mutate)
         return self
@@ -2305,7 +2417,7 @@ class Dataset:
         idempotent."""
         self.reload()
         with self._release_new_blocks():
-            self._commit_change("DELETE", wp.KeySet.from_frame(self, keys))
+            self._commit_change("DELETE", wp.KeySet.from_local(self, keys))
         return self
 
     def _commit_change(self, operation: str, match=wp.NO_KEYS,
@@ -3333,9 +3445,17 @@ class Dataset:
         Replaces the reference's O(n) OR-of-AND expression build
         (primary_key_filter, core/ops/utils.py:56-91) with: key min/max ->
         manifest range pruning, then a broadcast semi-join. Scales with
-        matched files, not table size."""
+        matched files, not table size. List-form keys and a small
+        LocalRelation are held on the driver as Arrow (``KeySet``), so
+        their bounds and bloom probe take no Spark job."""
         pks = self.primary_keys
-        if not isinstance(keys, DataFrame):
+        if isinstance(keys, DataFrame):
+            if set(keys.columns) != set(pks):
+                raise UserInputError(
+                    f"Keys columns {keys.columns} != primary keys {pks}"
+                )
+            keys = wp.KeySet.from_local(self, keys)
+        else:
             if len(pks) != 1:
                 raise UserInputError(
                     "List-form keys require a single-PK table"
@@ -3363,27 +3483,13 @@ class Dataset:
                         tz, ambiguous=True, nonexistent="shift_forward"
                     )
                 pdf[pks[0]] = ser
-            keys = self.spark.createDataFrame(
-                pdf, schema=T.StructType([self.schema[pks[0]]]),
-            )
-        if set(keys.columns) != set(pks):
-            raise UserInputError(
-                f"Keys columns {keys.columns} != primary keys {pks}"
-            )
-        # Range-prune files from the keys' bounds (cheap driver agg on the
-        # small key set), then semi-join exactly.
-        keys = wp.KeySet.from_frame(self, keys)
-        prune = keys.prune
+            keys = wp.KeySet.from_arrow(
+                self, pa.Table.from_pandas(pdf, preserve_index=False))
+        # Range-prune files from the keys' bounds, then semi-join exactly.
         snap_id = self.metadata.resolve_version(version, self.branch)
         snapshot = self.metadata.snapshot(snap_id)
-        files = mf.prune_files(
-            self.spark,
-            self._manifest_abs_paths(snapshot),
-            self._phys_expr(prune),
-            self._stats_fields(),
-        )
-        files = self._bloom_prune(files, snapshot, keys.df)
-        df = self.read_files(files, filter_=prune, fields=fields,
+        df = self.read_files(self._key_files(snapshot, keys),
+                             filter_=keys.prune, fields=fields,
                              reference_read=True, snapshot=snapshot)
         out = df.join(F.broadcast(keys.df), on=pks, how="left_semi")
         resolve = [
@@ -3460,12 +3566,27 @@ class Dataset:
             return ()
         return tuple(meta.get("pks", ()))
 
-    def _bloom_prune(self, rel_files, snapshot, keys: DataFrame):
+    def _key_files(self, snapshot, keys) -> List[str]:
+        """The rel files of ``snapshot`` that may hold a key of ``keys``
+        (a ``wp.KeySet``): manifest-range pruned by the keys' min/max
+        box, then bloom pruned."""
+        files = mf.prune_files(
+            self.spark,
+            self._manifest_abs_paths(snapshot),
+            self._phys_expr(keys.prune),
+            self._stats_fields(),
+        )
+        return self._bloom_prune(files, snapshot, keys.df, keys.arrow)
+
+    def _bloom_prune(self, rel_files, snapshot, keys: DataFrame,
+                     arrow: Optional[pa.Table] = None):
         """Drop range-surviving files whose per-PK Bloom filters prove no
         probed key can be present (core/blooms.py). No-op for tables
         without the index (or with a different filter version),
         oversized key sets, unsupported PK types, and files whose
-        manifests predate the index (None blooms never prune)."""
+        manifests predate the index (None blooms never prune). ``arrow``,
+        the same keys held by the driver (``wp.KeySet.arrow``), spares
+        the collect of the probe values."""
         if not self._bloom_pks() or not rel_files:
             return rel_files
         # A custom bloom_filters=[...] index may not cover the PKs —
@@ -3482,8 +3603,15 @@ class Dataset:
         exprs = _bl.probe_exprs(self.primary_keys, self.schema)
         if exprs is None:
             return rel_files  # unsupported PK type: build wrote no filter
-        key_rows = (keys.select(*exprs)
-                    .limit(self.BLOOM_PROBE_MAX_KEYS + 1).collect())
+        if arrow is not None:
+            # Arrow values of the table's types (timestamps tz-aware
+            # UTC), which _canon maps to the same epoch integers as the
+            # Spark canonicalization below.
+            key_rows = arrow.slice(0, self.BLOOM_PROBE_MAX_KEYS + 1) \
+                .to_pylist()
+        else:
+            key_rows = (keys.select(*exprs)
+                        .limit(self.BLOOM_PROBE_MAX_KEYS + 1).collect())
         if len(key_rows) > self.BLOOM_PROBE_MAX_KEYS:
             return rel_files
         # Blooms are stored under immutable PHYSICAL names; probe values

@@ -92,7 +92,7 @@ def _driver_bytes_max(ds) -> int:
                .autoBroadcastJoinThreshold())
 
 
-def _local_arrow(ds, df: DataFrame) -> Optional[pa.Table]:
+def local_arrow(ds, df: DataFrame) -> Optional[pa.Table]:
     """``df`` collected to Arrow when its optimized plan is a
     ``LocalRelation`` (rows the driver built) within
     ``_driver_bytes_max``; None otherwise."""
@@ -115,6 +115,20 @@ def _local_plan(df: DataFrame):
         plan = qe.optimizedPlan()
     return plan if plan.getClass().getSimpleName() == "LocalRelation" \
         else None
+
+
+def _pinned(df: DataFrame) -> bool:
+    """Whether ``df``'s plan is deterministic and reads only RDDs held
+    in block storage (``localCheckpoint``s), so every evaluation sees
+    the same rows and a second pin would only copy them."""
+    plan = df._jdf.queryExecution().analyzed()
+    if not plan.deterministic():
+        return False
+    leaves = plan.collectLeaves()
+    return all(
+        leaf.getClass().getSimpleName() == "LogicalRDD"
+        and leaf.rdd().isLocallyCheckpointed()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())))
 
 
 def _driver_fits(ds, files) -> bool:
@@ -219,7 +233,7 @@ def write_input(ds, df: Union[DataFrame, pa.Table], cluster_by=None,
         local = df
     else:
         local = None if zorder_by or ds.record_fields \
-            else _local_arrow(ds, df)
+            else local_arrow(ds, df)
     if local is not None:
         if cluster_by:
             local = local.sort_by([(c, "ascending") for c in cluster_by],
@@ -236,7 +250,7 @@ def write_input(ds, df: Union[DataFrame, pa.Table], cluster_by=None,
 
 
 def read_arrow(ds, rel_paths=(), columns=None, positions=None,
-               tag: bool = False) -> pa.Table:
+               tag: bool = False, snapshot=None) -> pa.Table:
     """Rows of ``ds``'s files at ``rel_paths`` (data files, deletes-log
     directories) read by the driver with pyarrow — the driver's twin of
     ``ds._read_files`` for files ``fits_driver`` bounds. Physical names
@@ -249,7 +263,9 @@ def read_arrow(ds, rel_paths=(), columns=None, positions=None,
     ``input_file_name()`` spells it) and ``__pos`` (row position), as
     ``probe_frame`` does. ``positions`` (``__file``/``__pos`` rows, a
     deletes log's provenance) reads only those rows, grouped per file,
-    in place of ``rel_paths``."""
+    in place of ``rel_paths``. ``snapshot`` drops the rows its
+    merge-on-read delete vectors mask, as ``Dataset._apply_vectors``
+    does."""
     import numpy as np
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -259,7 +275,9 @@ def read_arrow(ds, rel_paths=(), columns=None, positions=None,
         f.with_nullable(True) for f in
         to_arrow_schema(T.StructType([ds.schema[c] for c in names]))])
 
-    def read(path: str, rows=None) -> pa.Table:
+    masked = _masked_positions(ds, snapshot)
+
+    def read(path: str, rows=None, drop=None) -> pa.Table:
         pf = pq.ParquetFile(path)
         got = pf.read(columns=[p for p in phys
                                if p in pf.schema_arrow.names])
@@ -273,7 +291,13 @@ def read_arrow(ds, rel_paths=(), columns=None, positions=None,
                 "__file", pa.array([pathlib.Path(path).as_uri()] * n,
                                    pa.string())
             ).append_column("__pos", pa.array(np.arange(n), pa.int64()))
-        return tbl if rows is None else tbl.take(rows)
+        if rows is not None:
+            return tbl.take(rows)
+        if drop is None:
+            return tbl
+        keep = np.ones(n, bool)
+        keep[drop] = False
+        return tbl.filter(pa.array(keep))
 
     if positions is not None:
         per_file = positions.group_by("__file").aggregate(
@@ -282,9 +306,29 @@ def read_arrow(ds, rel_paths=(), columns=None, positions=None,
                  for uri, rows in zip(per_file["__file"].to_pylist(),
                                       per_file["__pos_list"].to_pylist())]
     else:
-        parts = [read(ds.log.abs_path(f))
+        parts = [read(ds.log.abs_path(f), drop=masked.get(f))
                  for f, _ in _file_sizes(ds, rel_paths)]
     return pa.concat_tables(parts) if parts else target.empty_table()
+
+
+def _masked_positions(ds, snapshot) -> dict:
+    """{rel data file: row positions} that ``snapshot``'s delete
+    vectors mask; empty for None or a snapshot without vectors."""
+    vecs = list(getattr(snapshot, "delete_vector_files", None) or [])
+    if not vecs:
+        return {}
+    import numpy as np
+
+    from space_spark.core import bitmaps as bm
+
+    side = bm.read_sidecars([ds.log.abs_path(r) for r in vecs],
+                            columns=("file", "num_rows", "bitmap"))
+    out: dict = {}
+    for f, n, blob in zip(side["file"].to_pylist(),
+                          side["num_rows"].to_pylist(),
+                          side["bitmap"].to_pylist()):
+        out.setdefault(f, []).append(bm.decode_positions(blob, n))
+    return {f: np.concatenate(p) for f, p in out.items()}
 
 
 def deleted_positions(ds, deletes_rel: str) -> Optional[pa.Table]:
@@ -329,11 +373,15 @@ class KeySet(NamedTuple):
     arrow: Optional[pa.Table] = None
 
     @classmethod
-    def from_arrow(cls, ds, keys: pa.Table) -> "KeySet":
+    def from_arrow(cls, ds, keys: pa.Table, unique: bool = False
+                   ) -> "KeySet":
         """Keys the driver holds: bounds by ``pc.min_max``, no Spark
-        job."""
+        job. ``unique`` raises ``UserInputError`` when a key repeats."""
         pks = ds.primary_keys
         keys = keys.select(pks).cast(_key_schema(ds))
+        if unique and keys.group_by(pks).aggregate([]).num_rows \
+                < keys.num_rows:
+            raise UserInputError("Input data has duplicate primary keys")
         bounds = {}
         for k in pks:
             mm = pc.min_max(keys[k])
@@ -369,18 +417,36 @@ class KeySet(NamedTuple):
             ds._bounds_from_manifest(manifest_rel)), arrow)
 
     @classmethod
+    def from_local(cls, ds, keys: DataFrame) -> "KeySet":
+        """The keys of a DataFrame holding the PK columns. Keys the
+        driver built (a LocalRelation within the driver-write bound, of
+        the table's PK types) are collected to Arrow once and bounded by
+        ``from_arrow``: one job, where ``from_frame``'s aggregate takes
+        two under AQE, and the split then needs no collect of its own.
+        Other frames go to ``from_frame``."""
+        pks = ds.primary_keys
+        df = keys if keys.columns == pks else keys.select(*pks)
+        if all(df.schema[k].dataType == ds.schema[k].dataType
+               for k in pks):
+            arrow = local_arrow(ds, df)
+            if arrow is not None:
+                return cls.from_arrow(ds, arrow)
+        return cls.from_frame(ds, df)
+
+    @classmethod
     def from_frame(cls, ds, keys: DataFrame) -> "KeySet":
         """The keys of a DataFrame holding the PK columns, counted and
         bounded by ONE aggregate. A plan other than a LocalRelation is
         pinned first (``localCheckpoint``, materialized by that
-        aggregate), so the bounds, the probe and a conflict retry see
-        one evaluation: a nondeterministic plan re-run after the bounds
-        could emit a key outside them, which pruning would skip. The
-        caller releases the pinned blocks
-        (``Dataset._release_new_blocks``) once nothing reads them."""
+        aggregate) unless it already reads pinned blocks only, so the
+        bounds, the probe and a conflict retry see one evaluation: a
+        nondeterministic plan re-run after the bounds could emit a key
+        outside them, which pruning would skip. The caller releases the
+        pinned blocks (``Dataset._release_new_blocks``) once nothing
+        reads them."""
         pks = ds.primary_keys
         df = keys if keys.columns == pks else keys.select(*pks)
-        if _local_plan(df) is None:
+        if _local_plan(df) is None and not _pinned(df):
             df = df.localCheckpoint(eager=False)
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -493,6 +559,26 @@ def _keys_match(ds, cand: pa.Table, keys: pa.Table) -> pa.Array:
     hit = narrow.join(keys.select(pks).cast(key_types),
                       keys=pks, join_type="left semi")["__row"]
     return pc.is_in(narrow["__row"], value_set=hit)
+
+
+def left_join_rows(ds, left: pa.Table, right: pa.Table) -> pa.Table:
+    """``__l``/``__r``: the row indices of ``left`` LEFT joined to
+    ``right`` (unique on the PKs) on ``ds``'s PK columns, in ``left``'s
+    row order; ``__r`` is NULL where no right row matches. As in
+    ``_keys_match``, the join carries only the keys and row indices,
+    and a NULL key matches nothing."""
+    import numpy as np
+
+    pks = ds.primary_keys
+    key_types = _key_schema(ds)
+
+    def narrow(tbl, name):
+        return tbl.select(pks).cast(key_types).append_column(
+            name, pa.array(np.arange(tbl.num_rows)))
+
+    return narrow(left, "__l").join(
+        narrow(right, "__r"), keys=pks, join_type="left outer"
+    ).select(["__l", "__r"]).sort_by("__l")
 
 
 def _split_on_driver(ds, cand: pa.Table, matched) -> CowSplit:

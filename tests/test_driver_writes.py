@@ -21,6 +21,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from space_spark import Dataset, field
 from space_spark.core import dataset as dataset_mod
 from space_spark.core import manifests as mf
+from space_spark.core import write_path as wp
 from space_spark.errors import PrimaryKeyExistError, UserInputError
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
@@ -113,16 +114,118 @@ def _predicate_delete(spark, loc):
     return [ds]
 
 
+def _merge_writer(spark, ds, source, on_driver=True, **clauses):
+    """``ds.merge(source, **clauses)``, asserting who wrote its adds: the
+    driver when the threshold allows driver writes and ``on_driver``,
+    else Spark's committer. (A CoW split's survivors are written apart
+    from the adds and are not counted.)"""
+    writers = []
+    real = wp.write_data_files
+
+    def spy(ds_, data, physical=False):
+        if not physical:
+            writers.append("driver" if isinstance(data, list) else "spark")
+        return real(ds_, data, physical)
+
+    wp.write_data_files = spy
+    try:
+        ds.merge(source, **clauses)
+    finally:
+        wp.write_data_files = real
+    driver = on_driver and spark.conf.get(THRESHOLD) != "-1"
+    assert writers == ["driver" if driver else "spark"], writers
+
+
+# perfbench's clause shape: a conditional delete, an update, an insert
+CLAUSES = {"when_matched": [
+    {"action": "delete", "condition": lambda s, t: s["x"] == 0},
+    {"action": "update"}], "when_not_matched": "insert"}
+
+
 def _merge(spark, loc):
     ds = _seeded(spark, loc)
-    ds.merge(
-        _local(spark, [(3, "m", 0), (4, "m", 44), (120, "m", 5)]),
-        when_matched=[
-            {"action": "delete", "condition": lambda s, t: s["x"] == 0},
-            {"action": "update"},
-        ],
-        when_not_matched="insert",
-    )
+    _merge_writer(spark, ds, _local(spark, [(3, "m", 0), (4, "m", 44),
+                                            (120, "m", 5)]), **CLAUSES)
+    return [ds]
+
+
+def _merge_partial_set(spark, loc):
+    """A conditional partial ``SET`` (unlisted columns keep the target
+    value) and a conditional insert with a ``set``."""
+    ds = _seeded(spark, loc)
+    _merge_writer(
+        spark, ds,
+        _local(spark, [(3, "m", 1), (4, "m", 44), (120, "m", 5),
+                       (121, "m", -1)]),
+        when_matched=[{"action": "update",
+                       "condition": lambda s, t: s["x"] > t["x"],
+                       "set": {"x": lambda s, t: s["x"] + t["x"]}}],
+        when_not_matched=[{"action": "insert",
+                           "condition": lambda s: s["x"] > 0,
+                           "set": {"g": lambda s: F.concat(s["g"],
+                                                           F.lit("+"))}}])
+    return [ds]
+
+
+IDG = T.StructType([
+    T.StructField("k", T.LongType()),
+    T.StructField("rid", T.LongType()),
+    T.StructField("x", T.LongType()),
+    T.StructField("x2", T.LongType()),
+])
+
+
+def _merge_identity_generated(spark, loc, on_driver=True):
+    """An identity column (matched rows keep their id, inserted rows
+    draw new ones) and a generated column recomputed from a partial
+    ``SET``."""
+    ds = Dataset.create(spark, loc, IDG, ["k"],
+                        identity_columns={"rid": {"start": 1, "step": 1}},
+                        generated_columns={"x2": field("x") * 2})
+    kx = T.StructType([IDG["k"], IDG["x"]])
+    ds.append(_local(spark, [(i, i) for i in range(10)], kx))
+    _merge_writer(spark, ds, _local(spark, [(2, 0), (3, 30), (50, 5),
+                                            (51, 6)], kx), on_driver,
+                  **CLAUSES)
+    _merge_writer(spark, ds, _local(spark, [(4, 40), (52, 7)], kx),
+                  on_driver,
+                  when_matched=[{"action": "update",
+                                 "set": {"x": lambda s, t: s["x"] + 1}}])
+    return [ds]
+
+
+def _merge_masked_target(spark, loc):
+    """A target row a merge-on-read vector masks does not match: its
+    key inserts as a new row."""
+    ds = _seeded(spark, loc)
+    ds.delete(field("k") == 8, rewrite=False)
+    _merge_writer(spark, ds, _local(spark, [(8, "m", 0), (9, "m", 0),
+                                            (10, "m", 1)]), **CLAUSES)
+    return [ds]
+
+
+def _merge_dup_keys(spark, loc):
+    """Duplicate source keys that update or insert raise the same error
+    on both sides, and nothing commits."""
+    ds = _seeded(spark, loc)
+    head = ds.current_snapshot_id
+    for rows in ([(3, "m", 1), (3, "m", 2)], [(130, "m", 1), (130, "m", 2)]):
+        with pytest.raises(UserInputError,
+                           match="Input data has duplicate primary keys"):
+            ds.merge(_local(spark, rows), **CLAUSES)
+        assert ds.reload().current_snapshot_id == head
+    return [ds]
+
+
+def _merge_by_source(spark, loc):
+    """A ``when_not_matched_by_source`` clause keeps the merge on Spark
+    on both sides."""
+    ds = _seeded(spark, loc)
+    _merge_writer(spark, ds, _local(spark, [(3, "m", 0), (4, "m", 44),
+                                            (120, "m", 5)]),
+                  on_driver=False, **CLAUSES, when_not_matched_by_source=[
+                      {"action": "delete",
+                       "condition": lambda t: t["x"] > 35}])
     return [ds]
 
 
@@ -217,12 +320,7 @@ def _views(spark, loc):
     refresh()
     ds.merge(
         _local(spark, [(10, "m", 0), (13, "g1", 130), (202, "g0", 5)]),
-        when_matched=[
-            {"action": "delete", "condition": lambda s, t: s["x"] == 0},
-            {"action": "update"},
-        ],
-        when_not_matched="insert",
-    )
+        **CLAUSES)
     refresh()
     ds.overwrite(_local(spark, [(i, f"g{i % 2}", i) for i in range(5)]))
     typed.overwrite(_tsd(spark, range(20, 24)))
@@ -234,8 +332,6 @@ def _views_legacy_log(spark, loc):
     """Deletes logs without ``__file``/``__pos``, as older code wrote
     them: the aggregate MV reads the deleted values by key at the
     parent version instead."""
-    from space_spark.core import write_path as wp
-
     ds = _seeded(spark, loc)
     agg = ds.aggregate_view(["g"], AGGS).materialize(spark, loc + "_agg")
     agg.refresh()
@@ -297,6 +393,11 @@ SCENARIOS = {
     "delete_by_keys_dup_keys": _delete_dup_keys,
     "predicate_delete": _predicate_delete,
     "merge": _merge,
+    "merge_partial_set": _merge_partial_set,
+    "merge_identity_generated": _merge_identity_generated,
+    "merge_masked_target": _merge_masked_target,
+    "merge_dup_keys": _merge_dup_keys,
+    "merge_by_source": _merge_by_source,
     "views_refresh": _views,
     "views_refresh_legacy_log": _views_legacy_log,
     "record_fields": _record_fields,
@@ -333,6 +434,23 @@ def test_size_rule_sides_agree(spark, tmp_location, name):
                 assert bool(_driver_named(mv.location)) == \
                     (side == "driver"), mv.location
     assert out["driver"] == out["spark"]
+
+
+def test_merge_candidates_over_split_bound(spark, tmp_location,
+                                           monkeypatch):
+    """A local source whose candidate files exceed the driver's split
+    bound runs the Spark plan over the source's Arrow copy (identity
+    ids already assigned there) and gives the driver path's rows and
+    change feed."""
+    out = []
+    for bound in (wp.DRIVER_SPLIT_MAX_BYTES, 0):
+        monkeypatch.setattr(wp, "DRIVER_SPLIT_MAX_BYTES", bound)
+        ds, = _merge_identity_generated(spark, f"{tmp_location}_{bound}/t",
+                                        on_driver=bound > 0)
+        out.append((_rows(ds.read()), _rows(
+            ds.diff(0, ds.current_snapshot_id)
+            .drop(dataset_mod.CHANGE_SNAPSHOT_COL))))
+    assert out[0] == out[1]
 
 
 @pytest.mark.parametrize("side", ["driver", "spark"])

@@ -28,21 +28,31 @@ SCHEMA = T.StructType([
 # snapshot's MV candidate read; the aggregate MV collects its fold once
 # and splits its state on the driver. apply_changes writes its local
 # adds as upsert does (one collect, was a Spark write) and checks them
-# for duplicates with pyarrow; its delete keys take one aggregate (two
-# jobs under AQE). An insert's local input is one collect too, then its
-# fused dup+clash job; read_by_keys is the keys' bounds aggregate (two
-# jobs), the broadcast of the keys and the scan.
+# for duplicates with pyarrow. An insert's local input is one collect
+# too, then its fused dup+clash job.
+#
+# Keys the driver built (a LocalRelation) are collected to Arrow once
+# and bounded there (KeySet.from_local), where an aggregate took two
+# jobs under AQE and the split then collected them again:
+# delete_by_keys 4 -> 2 (the keys' collect, the candidate read),
+# apply_changes 5 -> 3 (the adds' collect, the delete keys' collect, the
+# candidate read) and read_by_keys 4 -> 3 (the keys' collect, the
+# broadcast of the keys, the scan). A merge of a local source runs on
+# the driver, 12 -> 3 in either clause shape: the source's collect, one
+# collect of the clause cascade over a pyarrow join of the source and
+# the driver-read candidates, and the split's candidate read.
 PINNED_JOBS = {
     "append": 1,
     "upsert": 2,
     "mv_refresh": 1,
     "agg_mv_refresh": 4,
-    "delete_by_keys": 4,
+    "delete_by_keys": 2,
     "delete": 1,
-    "merge": 12,
-    "apply_changes": 5,
+    "merge": 3,
+    "merge_clauses": 3,
+    "apply_changes": 3,
     "insert": 5,
-    "read_by_keys": 4,
+    "read_by_keys": 3,
     "overwrite": 1,
 }
 
@@ -60,6 +70,7 @@ PINNED_JOBS_SPARK = {
     "delete_by_keys": 6,
     "delete": 2,
     "merge": 17,
+    "merge_clauses": 17,
     "apply_changes": 7,
     "delete_mor": 1,
     "insert": 5,
@@ -115,6 +126,14 @@ def _run_ops(spark, tmp_location, mor=False):
         "delete": lambda: ds.delete(field("k") == 3),
         "merge": lambda: ds.merge(
             _rows(spark, [(4, "g1", 40), (102, "g0", 3)])),
+        # perfbench's clause shape: a conditional delete, then an
+        # update, then an insert
+        "merge_clauses": lambda: ds.merge(
+            _rows(spark, [(9, "g0", 0), (10, "g1", 99), (104, "g2", 4)]),
+            when_matched=[
+                {"action": "delete", "condition": lambda s, t: s["x"] == 0},
+                {"action": "update"}],
+            when_not_matched="insert"),
         "apply_changes": lambda: ds.apply_changes(
             _rows(spark, [(5, "g2", 50)]),
             _rows(spark, [(6, "", 0)]).select("k")),
@@ -147,3 +166,52 @@ def test_write_ops_spark_side_job_pins(spark, tmp_location):
         spark.conf.set(threshold, prev)
     assert got == PINNED_JOBS_SPARK, str(got)
     assert mv_keys == set(range(40)) | {100, 101}
+
+
+def test_spark_side_pins_each_plan_once(spark, tmp_location, monkeypatch):
+    """At threshold -1, a key set over a plan that already reads pinned
+    blocks only is not pinned again (``KeySet.from_frame``). Counted
+    are the persisted RDDs live when the commit starts, and all of them
+    are released once the op returns. The aggregate fold pins the keys
+    its deleted rows are read by (a deletes-log read), its delta
+    aggregate and its projection, once each (the key sets over the last
+    two were two more pins, and the first one outlived the refresh); a
+    merge pins its source and its delete keys, which its clauses may
+    derive nondeterministically (the probe keys over the source were
+    one more)."""
+    from space_spark.core import dataset as dataset_mod
+
+    jsc = spark.sparkContext._jsc
+    live = []
+    real = dataset_mod.Dataset._commit_change
+
+    def counting(self, *a, **kw):
+        live.append(jsc.getPersistentRDDs().size())
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(dataset_mod.Dataset, "_commit_change", counting)
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        ds = Dataset.create(spark, tmp_location, SCHEMA, ["k"])
+        ds.append(_rows(spark, [(i, f"g{i % 3}", i) for i in range(20)]))
+        agg = ds.aggregate_view(["g"], {"n": ("count", "*"),
+                                        "s": ("sum", "x")}
+                                ).materialize(spark, tmp_location + "_agg")
+        agg.refresh()
+        ds.upsert(_rows(spark, [(1, "g1", 10), (101, "g2", 2)]))
+
+        def pinned_at_commit(fn):
+            before = jsc.getPersistentRDDs().size()
+            live.clear()
+            fn()
+            assert len(live) == 1, live
+            assert jsc.getPersistentRDDs().size() == before  # released
+            return live[0] - before
+
+        assert pinned_at_commit(agg.refresh) == 3
+        assert pinned_at_commit(lambda: ds.merge(
+            _rows(spark, [(4, "g1", 40), (102, "g0", 3)]))) == 2
+    finally:
+        spark.conf.set(threshold, prev)
