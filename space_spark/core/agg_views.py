@@ -522,15 +522,15 @@ class MaterializedAggregate:
     def _driver_state(self, keys):
         """The state rows of the groups in ``keys`` (a ``KeySet``), read
         by the driver from the files whose stats overlap the keys'
-        range, as a LocalRelation; None when a delete vector masks the
-        state or the files exceed ``fits_driver``'s bound."""
+        range, delete vectors applied, as a LocalRelation; None when the
+        files exceed ``fits_driver``'s bound."""
         mv = self.dataset
         snapshot = mv.metadata.snapshot(mv.current_snapshot_id)
         files = [f for f, _ in mv._probe_candidates(snapshot, keys.prune)]
-        if snapshot.delete_vector_files or not wp.fits_driver(mv, files):
+        if not wp.fits_driver(mv, files):
             return None
-        return wp.local_frame(self.spark, wp.read_arrow(mv, files),
-                              mv.schema)
+        return wp.local_frame(self.spark, wp.read_arrow(
+            mv, files, snapshot=snapshot), mv.schema)
 
     def _fold_commit(self, source, snap, proj, fix_cols, gb, aggs,
                      expected_prev: int, keys=None):

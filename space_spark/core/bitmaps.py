@@ -154,6 +154,19 @@ def fold_sidecars(paths):
     return files, nrows, ndels, blobs
 
 
+def vector_masks(log, snapshot) -> dict:
+    """{abs data-file path: (bitmap blob, file num_rows)}: the rows
+    ``snapshot``'s merge-on-read delete vectors mask, the vectors of one
+    file merged. The blobs stay encoded, O(deleted) bytes to ship to
+    executors, and decode per file as ``manifests.read_data_file``
+    reads it. Empty for None or a snapshot without vectors."""
+    rels = getattr(snapshot, "delete_vector_files", None) or []
+    if not rels:
+        return {}
+    files, nrows, _, blobs = fold_sidecars([log.abs_path(r) for r in rels])
+    return {log.abs_path(f): (b, n) for f, n, b in zip(files, nrows, blobs)}
+
+
 def read_sidecars(paths, columns=("file", "num_rows", "n_deleted",
                                  "bitmap"), with_filename=False):
     """Read N delete-vector sidecar parquet files as ONE Arrow table.

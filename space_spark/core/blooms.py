@@ -42,11 +42,15 @@ actually held the key. v2 fixes this by hashing CANONICAL values only:
   no filter is built (None filters never prune), so exotic PK types
   degrade to the semi-join path instead of risking divergence.
 
-The probe side performs the temporal->int64 casts IN SPARK
-(``unix_micros`` / ``unix_date``) before collecting, so no naive
-Python datetime ever reaches the hash. Filters are versioned
-(metadata ``bloom.v``); a probe that sees any other version never
-prunes, so pre-v2 filters are inert rather than wrong.
+A key-set probe (``read_by_keys`` of a DataFrame) performs the
+temporal->int64 casts in Spark (``unix_micros`` / ``unix_date``) before
+collecting, and Arrow-held keys map tz-aware values to the same
+integers, so no naive Python datetime ever reaches the hash. An
+equality literal of a read's filter canonicalizes in Python
+(``canonicalize_literal``), replicating what ``F.lit`` does with it.
+Filters are versioned (metadata ``bloom.v``); a probe that sees any
+other version never prunes, so pre-v2 filters are inert rather than
+wrong.
 
 int64 hashing is two independent splitmix64 mixes (public-domain
 finalizer from Steele et al., "Fast Splittable Pseudorandom Number
@@ -315,12 +319,42 @@ def file_matches_value_sets(blooms: Dict[str, Optional[bytes]],
     return True
 
 
+def probe_values(expr, schema, renames, indexed, max_values: int
+                 ) -> Dict[str, list]:
+    """{physical column: canonical probe values} with which bloom
+    membership prunes a read filtered by ``expr`` (an ``Expr`` over
+    PHYSICAL names): its top-level equality and IN conjuncts
+    (``expressions.equality_conjuncts``) on the ``indexed`` columns,
+    each literal canonicalized against the column's type in the logical
+    ``schema`` (``renames``: logical -> physical). A column holding a
+    literal that does not canonicalize does not prune, and more than
+    ``max_values`` values in all prune nothing (a huge IN list hits
+    most files anyway). Shared by ``Dataset`` reads and the
+    ``format("space")`` planner; no Spark job."""
+    from space_spark.core.expressions import equality_conjuncts
+
+    if expr is None or not indexed:
+        return {}
+    types = {renames.get(f.name, f.name): f.dataType for f in schema}
+    out = {}
+    for phys, vs in equality_conjuncts(expr).items():
+        if phys not in indexed or phys not in types:
+            continue
+        canons = [canonicalize_literal(types[phys], v) for v in vs]
+        if all(ok for ok, _ in canons):
+            # All-None (col IN (NULL, ...)) matches no row: an empty
+            # list prunes every file, which is correct.
+            out[phys] = [c for _, c in canons if c is not None]
+    return out if sum(map(len, out.values())) <= max_values else {}
+
+
 def canonicalize_literal(dt, v):
-    """Driver-side Python canonicalization of an equality literal to
-    the build-side hash domain — for planners with NO SparkSession
-    (the DataSourceV2 Python worker). Returns ``(ok, canonical)``;
-    ``ok=False`` means "cannot canonicalize safely here" (unsupported
-    types: no filter was built anyway).
+    """Python canonicalization of an equality literal to the build-side
+    hash domain, with no Spark job: the equality probe of ``Dataset``
+    reads and of the ``format("space")`` planner (``probe_values``).
+    Returns ``(ok, canonical)``; ``ok=False`` means "cannot
+    canonicalize safely here" (an unsupported type, for which no
+    filter was built, or a literal of another type than the column's).
 
     Timestamps (round 13 — the r12 skip is gone). The anchor is what
     Spark's ROW-LEVEL evaluation of the same literal does, measured
@@ -350,8 +384,12 @@ def canonicalize_literal(dt, v):
     if v is None:
         return True, None  # might_contain(None) -> False: col == NULL
         # matches no row under SQL semantics, so full prune is correct.
+    # The literal's Python type is gated per column type: a mismatched
+    # literal (``string_col == 5``) would hash in the wrong domain and
+    # prune files whose rows Spark's coercing comparison matches.
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
-                       T.LongType, T.BooleanType)):
+                       T.LongType, T.BooleanType)) \
+            and isinstance(v, (int, bool)):
         return True, int(v)
     if isinstance(dt, T.DateType) and isinstance(v, _dt.date) \
             and not isinstance(v, _dt.datetime):
@@ -367,56 +405,6 @@ def canonicalize_literal(dt, v):
             and isinstance(v, (str, bytes)):
         return True, v
     return False, None
-
-
-def probe_literal_exprs(cols: Sequence[str], values: Sequence,
-                        schema) -> Optional[list]:
-    """``probe_exprs`` over ``F.lit`` literals — the equality-conjunct
-    pruning path (round 12): canonicalization BY ``F.lit`` itself, so
-    the probe uses the exact instant the row-level filter will compare
-    (for a naive datetime that is ``TimestampType.toInternal``'s
-    SYSTEM-timezone ``mktime`` — NOT the session timezone, which
-    governs SQL text literals only; see canonicalize_literal's round-13
-    refutation note — and never Python ``str``, the v1 bug class),
-    same unsupported-type -> None contract.
-
-    The LITERAL's python type is gated per branch (second round-12
-    review): a type-mismatched literal (``string_col == 5``) would
-    otherwise hash in the wrong domain — int splitmix64 vs the build's
-    md5-of-utf8 — and silently prune files whose rows Spark's own
-    coercing comparison WOULD match; None defers those filters to the
-    row-level plan instead, exactly like the driver-side twin
-    ``canonicalize_literal``."""
-    import datetime as _dt
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    out = []
-    for c, v in zip(cols, values):
-        dt = schema[c].dataType
-        if v is None:
-            # col == NULL matches no row under SQL semantics;
-            # might_contain(None) -> False gives the correct full prune.
-            out.append(F.lit(None).cast("long").alias(c))
-            continue
-        base = F.lit(v)
-        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
-                           T.LongType, T.BooleanType)) \
-                and isinstance(v, (int, bool)):
-            out.append(base.cast("long").alias(c))
-        elif isinstance(dt, T.DateType) and isinstance(v, _dt.date) \
-                and not isinstance(v, _dt.datetime):
-            out.append(F.unix_date(base.cast("date")).alias(c))
-        elif isinstance(dt, T.TimestampType) \
-                and isinstance(v, _dt.datetime):
-            out.append(F.unix_micros(base.cast("timestamp")).alias(c))
-        elif isinstance(dt, (T.StringType, T.BinaryType)) \
-                and isinstance(v, (str, bytes)):
-            out.append(base.alias(c))
-        else:
-            return None
-    return out
 
 
 def might_contain(bitmap: bytes, value) -> bool:

@@ -70,6 +70,11 @@ CHANGE_ORDER_COL = "_change_order"
 CHANGE_ADD = "ADD"
 CHANGE_DELETE = "DELETE"
 
+# Delta's MERGE rejects several source rows modifying one target row:
+# which of them wins would depend on evaluation order.
+MERGE_MULTI_MATCH = (wp.DUPLICATE_KEYS
+                     + ": several source rows matched one target row")
+
 
 class Dataset:
     """A versioned space table bound to a SparkSession."""
@@ -622,9 +627,8 @@ class Dataset:
         # point lookup on an indexed column typically lands under the
         # DataSourceV2 threshold after membership pruning. (The V2
         # route's own partition planning re-prunes stats + bloom from
-        # the manifests — with driver-side literal canonicalization
-        # that skips timestamps — so when it does engage the survivor
-        # set is the same or a superset; semantics unchanged.)
+        # the manifests with the same probe values, blooms.probe_values,
+        # so the survivor set is the same; semantics unchanged.)
         files = self._bloom_equality_prune(files, snapshot, filter_)
         if len(files) >= self.DATASOURCE_READ_MIN_FILES:
             # Metadata-scale escape hatch (SCALE.md "100k-file step"):
@@ -1949,17 +1953,20 @@ class Dataset:
         join as a LocalRelation in ONE collect returning the net adds
         and the delete keys; the driver writes the adds, and one
         ``_commit_change`` splits the target by the union of the adds'
-        and the delete keys (one candidate read): three Spark jobs on a
-        table without CHECK constraints. Otherwise the aligned source is pinned (``localCheckpoint``,
+        and the delete keys, again reading the candidates with pyarrow:
+        two Spark jobs on a table without CHECK constraints. Otherwise
+        the aligned source is pinned (``localCheckpoint``,
         or the Arrow copy) and the matched set comes from
         ``read_by_keys`` over its keys (manifest range + bloom pruned —
         O(matched files), never a table scan); one LEFT join
         source→target tags each source row matched/new, the cascade is a
         per-column CASE over that join (one pass regardless of clause
         count), and the net change applies through ``apply_changes``.
-        On both sides a key repeated among the net adds (duplicate
-        source keys that update or insert) raises ``UserInputError``
-        before anything commits, and the change lands as one snapshot:
+        On both sides a key repeated among the delete keys (several
+        source rows matched one target row) raises ``UserInputError``
+        before any file is written, a key repeated among the net adds
+        (duplicate source keys that insert) raises it before anything
+        commits, and the change lands as one snapshot:
         a reader never observes a half-merged state; replaying the same
         merge converges.
 
@@ -2160,8 +2167,9 @@ class Dataset:
             out = out.unionByName(p, allowMissingColumns=True)
         out = out.toArrow()
         adds = out.filter(pc.invert(out["__del"])).select(cols)
-        keys = wp.KeySet.from_arrow(self, adds, unique=True) \
-            | wp.KeySet.from_arrow(self, out.filter(out["__del"]))
+        keys = wp.KeySet.from_arrow(self, out.filter(out["__del"]),
+                                    MERGE_MULTI_MATCH)
+        keys = wp.KeySet.from_arrow(self, adds, wp.DUPLICATE_KEYS) | keys
         self._commit_change("MERGE", keys,
                             wp.write_input(self, adds) if adds.num_rows
                             else None)
@@ -2395,16 +2403,22 @@ class Dataset:
         UPDATE SET must refresh them from the updated inputs)."""
         adds = self._align(adds, skip_identity=_identity_preassigned)
         self.reload()
-        written = wp.write_input(self, adds)
         # The delete keys' pin is released on exit: the commit completes
         # inside this method, so nothing reads the blocks afterward
         # (without the release every CDC micro-batch would leak one
         # persisted RDD).
         with self._release_new_blocks():
-            keys = wp.KeySet.from_written(self, written) \
-                | wp.KeySet.from_local(self, delete_keys)
-            self._commit_change(operation, keys, written,
-                                mutate=commit_mutate)
+            # A MERGE's delete keys are its matched source rows' keys
+            # (and the by-source clauses' target keys, unique): a repeat
+            # means several source rows matched one target row, which
+            # raises before any file is written.
+            deletes = wp.KeySet.from_local(
+                self, delete_keys,
+                MERGE_MULTI_MATCH if operation == "MERGE" else "")
+            written = wp.write_input(self, adds)
+            self._commit_change(
+                operation, wp.KeySet.from_written(self, written) | deletes,
+                written, mutate=commit_mutate)
         return self
 
     def delete_by_keys(self, keys: DataFrame) -> "Dataset":
@@ -3630,12 +3644,6 @@ class Dataset:
                                     list(phys.values()))
         ]
 
-    @staticmethod
-    def _equality_conjuncts(expr) -> Dict[str, object]:
-        from space_spark.core.expressions import equality_conjuncts
-
-        return equality_conjuncts(expr)
-
     def _bloom_equality_prune(self, rel_files, snapshot, filter_,
                               accounting=None):
         """General-read Bloom pruning (round 12): when the filter pins a
@@ -3647,9 +3655,8 @@ class Dataset:
         Sound because the conjunct must hold on every matching row, and
         bloom false-negatives are impossible; a ``col == NULL``
         conjunct matches no row under SQL semantics, so might_contain's
-        False for None is also correct. One tiny JVM-only job
-        canonicalizes the literals (spark.range(1)), never a
-        Python-worker plan."""
+        False for None is also correct. The literals canonicalize in
+        Python (``blooms.probe_values``), with no Spark job."""
         vals = self._bloom_equality_values(filter_)
         if not vals or not rel_files:
             return rel_files
@@ -3664,42 +3671,16 @@ class Dataset:
 
     def _bloom_equality_values(self, filter_) -> Dict[str, list]:
         """{physical column: canonical probe values} that bloom pruning
-        will ACTUALLY use for this filter — every gate applied (Expr
-        only, indexed + in-schema columns, literal/column type match
-        via probe_literal_exprs, total value count under
-        BLOOM_PROBE_MAX_KEYS like the point-read path: a huge IN list
-        hits most files anyway and its one-row canonicalization plan
-        would be enormous). Shared by the pruner and explain_files so
+        will ACTUALLY use for this filter (``blooms.probe_values``,
+        every gate applied, at most BLOOM_PROBE_MAX_KEYS values like the
+        point-read path). Shared by the pruner and explain_files so
         observability can never claim an engagement that did not
-        happen (second round-12 review)."""
-        if filter_ is None or not isinstance(filter_, Expr):
+        happen."""
+        if not isinstance(filter_, Expr):
             return {}
-        bloom_cols = set(self._bloom_pks())
-        if not bloom_cols:
-            return {}
-        eq = self._equality_conjuncts(filter_)
-        cols = sorted(
-            c for c in eq if self._phys_name(c) in bloom_cols
-            and c in self.schema.fieldNames()
-        )
-        if not cols:
-            return {}
-        # Flatten (col, value) pairs for one canonicalization job.
-        pairs = [(c, v) for c in cols for v in eq[c]]
-        if len(pairs) > self.BLOOM_PROBE_MAX_KEYS:
-            return {}
-        exprs = _bl.probe_literal_exprs(
-            [c for c, _ in pairs], [v for _, v in pairs], self.schema
-        )
-        if exprs is None:
-            return {}  # type mismatch/unsupported: defer to row filter
-        row = self.spark.range(1).select(
-            *[e.alias(f"p{i}") for i, e in enumerate(exprs)]
-        ).collect()[0]
-        vals: Dict[str, list] = {}
-        for i, (c, _) in enumerate(pairs):
-            vals.setdefault(self._phys_name(c), []).append(row[f"p{i}"])
-        return vals
+        return _bl.probe_values(
+            self._phys_expr(filter_), self.schema, self.metadata.renames,
+            set(self._bloom_pks()), self.BLOOM_PROBE_MAX_KEYS)
 
     # -------------------------------------------------------- schema evolution
     def add_column(self, name: str, dtype: T.DataType) -> "Dataset":

@@ -177,6 +177,88 @@ def write_data_file(abs_path: str, table: pa.Table,
         writer.write_table(table)
 
 
+def parquet_files(abs_path: str) -> List[str]:
+    """The parquet file at ``abs_path``, or the part files of a directory
+    Spark's writer filled (a deletes log), sorted."""
+    if not os.path.isdir(abs_path):
+        return [abs_path]
+    return [os.path.join(abs_path, n) for n in sorted(os.listdir(abs_path))
+            if n.endswith(".parquet") and not n.startswith(".")]
+
+
+def read_data_file(path: str, schema: pa.Schema, renames=None,
+                   row_groups=None, arrow_filter=None,
+                   filter_names=frozenset(), mask=None, tag: bool = False,
+                   rows=None) -> pa.Table:
+    """The rows of the table file at ``path`` under ``schema``: logical
+    names, with the Arrow types Spark hands a task for the table's
+    physical schema (record fields as address structs, INT96 and
+    nanosecond timestamps as microseconds). The one pyarrow read of
+    table rows, on the driver (``write_path.read_arrow``) and in the
+    ``format("space")`` readers' tasks (reference ``FileSetReadOp``,
+    core/ops/read.py:93-135).
+
+    - ``renames`` (logical -> physical) names the file's columns; a
+      column the file predates reads as NULL.
+    - ``row_groups`` reads only those (contiguous) row groups.
+    - ``mask``, a delete vector's (blob, file rows) from
+      ``bitmaps.vector_masks``, drops the rows it masks.
+    - ``tag`` adds ``__file`` (the file's URI, as ``input_file_name()``
+      spells it) and ``__pos`` (row position in the file); ``rows``
+      takes the rows at those positions instead (no mask applies).
+    - ``arrow_filter`` (over the physical ``filter_names``) runs in the
+      scan, skipping row groups by their stats. It is an optimization
+      the caller re-applies, skipped when the file lacks a filter
+      column and on a positional read (mask, tag, rows), whose
+      positions a filter would shift."""
+    import numpy as np
+
+    from space_spark.core import bitmaps as bm
+
+    phys = [(renames or {}).get(n, n) for n in schema.names]
+    positional = tag or mask is not None or rows is not None
+    with pq.ParquetFile(path) as pf:
+        have = set(pf.schema_arrow.names)
+        cols = [p for p in phys if p in have]
+        offset = sum(pf.metadata.row_group(i).num_rows
+                     for i in range(row_groups[0])) if row_groups else 0
+        if arrow_filter is not None and not positional \
+                and set(filter_names) <= have:
+            import pyarrow.dataset as pads
+
+            frag = next(pads.dataset(path, format="parquet")
+                        .get_fragments())
+            if row_groups is not None:
+                frag = frag.subset(row_group_ids=row_groups)
+            got = frag.to_table(columns=cols, filter=arrow_filter)
+        elif row_groups is not None:
+            got = pf.read_row_groups(row_groups, columns=cols)
+        else:
+            got = pf.read(columns=cols)
+    n = got.num_rows
+    tbl = pa.table([
+        (got[p] if got[p].type == f.type else got[p].cast(f.type))
+        if p in have else pa.nulls(n, f.type)
+        for p, f in zip(phys, schema)], schema=schema)
+    if tag:
+        import pathlib
+
+        tbl = tbl.append_column(
+            "__file", pa.array([pathlib.Path(path).as_uri()] * n, pa.string())
+        ).append_column("__pos", pa.array(np.arange(offset, offset + n),
+                                          pa.int64()))
+    if rows is not None:
+        return tbl.take(rows)
+    if mask is not None:
+        gone = bm.decode_positions(*mask).astype(np.int64) - offset
+        gone = gone[(gone >= 0) & (gone < n)]
+        if gone.size:
+            keep = np.ones(n, bool)
+            keep[gone] = False
+            tbl = tbl.filter(pa.array(keep))
+    return tbl
+
+
 def _footer_stats(abs_path: str, stat_names: List[str],
                   bloom_pks: Sequence[str] = (),
                   bloom_bpk: Optional[int] = None) -> dict:

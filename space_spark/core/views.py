@@ -563,10 +563,11 @@ class MaterializedView:
         Each commit carries the source-synced marker, so a refresh that
         dies between snapshots resumes at the first unapplied one. A
         snapshot whose delta fits the driver-write bound
-        (``write_path.fits_driver``) is applied on the driver, with no
-        Spark job but the MV's candidate read: pyarrow reads of its
-        added files and deletes log, the view chain's task functions
-        over Arrow batches, and a pyarrow write."""
+        (``write_path.fits_driver``) is applied on the driver with no
+        Spark job: pyarrow reads of its added files and deletes log,
+        the view chain's task functions over Arrow batches, a pyarrow
+        write, and a split of the MV whose candidates pyarrow reads
+        too."""
         from space_spark.core.dataset import Dataset
 
         # Pick up the LIVE marker: a stale handle must not re-apply

@@ -5,7 +5,10 @@ or ``ds.ray()`` once, core/runners.py:203-287). Entry points:
 ``write_input`` (a commit's input rows), ``KeySet`` (the primary keys a
 keyed change deletes), ``cow_split`` (a copy-on-write delete's
 survivors, deletes log and deleted positions, from one split —
-reference ops/delete.py:56-228) and ``write_data_files``.
+reference ops/delete.py:56-228) and ``write_data_files``. The driver
+reads bounded table files with ``read_arrow``, each file through
+``manifests.read_data_file``, the reader the ``format("space")`` tasks
+use too.
 
 Manifest and parquet calls go through their module attributes
 (``mf.write_manifest``, ``pq.read_table``), so that a tracer or a test
@@ -15,7 +18,6 @@ that patches those names sees every call.
 from __future__ import annotations
 
 import os
-import pathlib
 from typing import List, NamedTuple, Optional, Union
 
 import pyarrow as pa
@@ -25,8 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from space_spark.core import bitmaps as bm
 from space_spark.core import manifests as mf
 from space_spark.core import records as rec
+from space_spark.core import schema as sc
 from space_spark.errors import ConstraintViolationError, UserInputError
 
 # A key set under this many rows is broadcast to the probe side; above
@@ -56,6 +60,8 @@ class CowSplit(NamedTuple):
 
 
 NO_MATCH = CowSplit([], None, None, None)
+
+DUPLICATE_KEYS = "Input data has duplicate primary keys"
 
 
 # ------------------------------------------------------------- size rule
@@ -117,18 +123,24 @@ def _local_plan(df: DataFrame):
         else None
 
 
-def _pinned(df: DataFrame) -> bool:
+def _pinned(ds, df: DataFrame) -> bool:
     """Whether ``df``'s plan is deterministic and reads only RDDs held
-    in block storage (``localCheckpoint``s), so every evaluation sees
-    the same rows and a second pin would only copy them."""
+    in block storage (``localCheckpoint``s), or is one scan of ``ds``'s
+    files (a deletes log: no commit rewrites a table file), so every
+    evaluation sees the same rows and a pin would only copy them."""
     plan = df._jdf.queryExecution().analyzed()
     if not plan.deterministic():
         return False
     leaves = plan.collectLeaves()
-    return all(
-        leaf.getClass().getSimpleName() == "LogicalRDD"
-        and leaf.rdd().isLocallyCheckpointed()
-        for leaf in (leaves.apply(i) for i in range(leaves.size())))
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    if len(leaves) == 1 and leaves[0].getClass().getSimpleName() \
+            == "LogicalRelation" and leaves[0].relation().getClass() \
+            .getSimpleName() == "HadoopFsRelation":
+        roots = leaves[0].relation().location().rootPaths()
+        return not any(ds._abs_to_rel_file(roots.apply(i).toString())
+                       .startswith("..") for i in range(roots.size()))
+    return all(leaf.getClass().getSimpleName() == "LogicalRDD"
+               and leaf.rdd().isLocallyCheckpointed() for leaf in leaves)
 
 
 def _driver_fits(ds, files) -> bool:
@@ -145,13 +157,8 @@ def _file_sizes(ds, rel_paths) -> List[tuple]:
     out = []
     for rel in rel_paths:
         path = ds.log.abs_path(rel)
-        if os.path.isdir(path):
-            out += [(os.path.join(rel, n),
-                     os.path.getsize(os.path.join(path, n)))
-                    for n in sorted(os.listdir(path))
-                    if n.endswith(".parquet") and not n.startswith(".")]
-        else:
-            out.append((rel, os.path.getsize(path)))
+        out += [(rel if p == path else os.path.join(rel, os.path.basename(p)),
+                 os.path.getsize(p)) for p in mf.parquet_files(path)]
     return out
 
 
@@ -249,86 +256,49 @@ def write_input(ds, df: Union[DataFrame, pa.Table], cluster_by=None,
     return write_data_files(ds, df)
 
 
+def _arrow_schema(ds, columns=None) -> pa.Schema:
+    """The Arrow schema ``read_arrow`` gives ``columns`` of ``ds``
+    (default: every column): logical names, the types Spark hands a
+    ``mapInArrow`` task for the physical schema (record fields as
+    address structs), every column nullable."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    phys = sc.physical_schema(ds.schema, ds.record_fields)
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(
+        T.StructType([phys[c] for c in columns or phys.fieldNames()]))])
+
+
 def read_arrow(ds, rel_paths=(), columns=None, positions=None,
                tag: bool = False, snapshot=None) -> pa.Table:
     """Rows of ``ds``'s files at ``rel_paths`` (data files, deletes-log
-    directories) read by the driver with pyarrow — the driver's twin of
-    ``ds._read_files`` for files ``fits_driver`` bounds. Physical names
-    map to the logical ``columns`` (default: every column; a column a
-    file predates reads as NULL), cast to the Arrow types Spark hands a
-    ``mapInArrow`` task (``to_arrow_schema``: INT96 and nanosecond
-    timestamps become microseconds, decimals keep their type).
+    directories) read by the driver, each file with
+    ``mf.read_data_file`` under ``_arrow_schema(ds, columns)`` — the
+    driver's twin of ``ds._read_files`` for files ``fits_driver``
+    bounds.
 
-    ``tag`` adds each row's ``__file`` (its URI, as
-    ``input_file_name()`` spells it) and ``__pos`` (row position), as
+    ``tag`` adds each row's ``__file`` and ``__pos``, as
     ``probe_frame`` does. ``positions`` (``__file``/``__pos`` rows, a
     deletes log's provenance) reads only those rows, grouped per file,
     in place of ``rel_paths``. ``snapshot`` drops the rows its
     merge-on-read delete vectors mask, as ``Dataset._apply_vectors``
     does."""
-    import numpy as np
-    from pyspark.sql.pandas.types import to_arrow_schema
+    schema = _arrow_schema(ds, columns)
 
-    names = list(columns or ds.schema.fieldNames())
-    phys = [ds._phys_name(c) for c in names]
-    target = pa.schema([
-        f.with_nullable(True) for f in
-        to_arrow_schema(T.StructType([ds.schema[c] for c in names]))])
-
-    masked = _masked_positions(ds, snapshot)
-
-    def read(path: str, rows=None, drop=None) -> pa.Table:
-        pf = pq.ParquetFile(path)
-        got = pf.read(columns=[p for p in phys
-                               if p in pf.schema_arrow.names])
-        n = pf.metadata.num_rows
-        tbl = pa.table([
-            got[p].cast(f.type) if p in got.column_names
-            else pa.nulls(n, f.type) for p, f in zip(phys, target)
-        ], schema=target)
-        if tag:
-            tbl = tbl.append_column(
-                "__file", pa.array([pathlib.Path(path).as_uri()] * n,
-                                   pa.string())
-            ).append_column("__pos", pa.array(np.arange(n), pa.int64()))
-        if rows is not None:
-            return tbl.take(rows)
-        if drop is None:
-            return tbl
-        keep = np.ones(n, bool)
-        keep[drop] = False
-        return tbl.filter(pa.array(keep))
+    def read(rel, **kw):
+        return mf.read_data_file(ds.log.abs_path(rel), schema,
+                                 ds.metadata.renames, **kw)
 
     if positions is not None:
         per_file = positions.group_by("__file").aggregate(
             [("__pos", "list")])
-        parts = [read(ds.log.abs_path(ds._abs_to_rel_file(uri)), rows)
+        parts = [read(ds._abs_to_rel_file(uri), rows=rows)
                  for uri, rows in zip(per_file["__file"].to_pylist(),
                                       per_file["__pos_list"].to_pylist())]
     else:
-        parts = [read(ds.log.abs_path(f), drop=masked.get(f))
+        masks = bm.vector_masks(ds.log, snapshot)
+        parts = [read(f, tag=tag, mask=masks.get(ds.log.abs_path(f)))
                  for f, _ in _file_sizes(ds, rel_paths)]
-    return pa.concat_tables(parts) if parts else target.empty_table()
-
-
-def _masked_positions(ds, snapshot) -> dict:
-    """{rel data file: row positions} that ``snapshot``'s delete
-    vectors mask; empty for None or a snapshot without vectors."""
-    vecs = list(getattr(snapshot, "delete_vector_files", None) or [])
-    if not vecs:
-        return {}
-    import numpy as np
-
-    from space_spark.core import bitmaps as bm
-
-    side = bm.read_sidecars([ds.log.abs_path(r) for r in vecs],
-                            columns=("file", "num_rows", "bitmap"))
-    out: dict = {}
-    for f, n, blob in zip(side["file"].to_pylist(),
-                          side["num_rows"].to_pylist(),
-                          side["bitmap"].to_pylist()):
-        out.setdefault(f, []).append(bm.decode_positions(blob, n))
-    return {f: np.concatenate(p) for f, p in out.items()}
+    return pa.concat_tables(parts) if parts else schema.empty_table()
 
 
 def deleted_positions(ds, deletes_rel: str) -> Optional[pa.Table]:
@@ -351,14 +321,6 @@ def local_frame(spark, tbl: pa.Table, schema: T.StructType) -> DataFrame:
 
 
 # ------------------------------------------------------------ key sets
-def _key_schema(ds) -> pa.Schema:
-    """The Arrow schema ``read_arrow`` gives ``ds``'s PK columns."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(
-        T.StructType([ds.schema[k] for k in ds.primary_keys]))])
-
-
 class KeySet(NamedTuple):
     """The primary keys a keyed change deletes from ``ds`` (upsert's
     written keys, ``apply_changes``' delete keys, a view refresh's
@@ -373,15 +335,15 @@ class KeySet(NamedTuple):
     arrow: Optional[pa.Table] = None
 
     @classmethod
-    def from_arrow(cls, ds, keys: pa.Table, unique: bool = False
-                   ) -> "KeySet":
+    def from_arrow(cls, ds, keys: pa.Table, unique: str = "") -> "KeySet":
         """Keys the driver holds: bounds by ``pc.min_max``, no Spark
-        job. ``unique`` raises ``UserInputError`` when a key repeats."""
+        job. A ``unique`` message is raised as ``UserInputError`` when a
+        key repeats."""
         pks = ds.primary_keys
-        keys = keys.select(pks).cast(_key_schema(ds))
+        keys = keys.select(pks).cast(_arrow_schema(ds, ds.primary_keys))
         if unique and keys.group_by(pks).aggregate([]).num_rows \
                 < keys.num_rows:
-            raise UserInputError("Input data has duplicate primary keys")
+            raise UserInputError(unique)
         bounds = {}
         for k in pks:
             mm = pc.min_max(keys[k])
@@ -412,33 +374,35 @@ class KeySet(NamedTuple):
             n = int(df.groupBy(*pks).count().agg(F.count(F.lit(1)))
                     .collect()[0][0])
         if n < rows:
-            raise UserInputError("Input data has duplicate primary keys")
+            raise UserInputError(DUPLICATE_KEYS)
         return cls(df, n, ds._keys_range_expr(
             ds._bounds_from_manifest(manifest_rel)), arrow)
 
     @classmethod
-    def from_local(cls, ds, keys: DataFrame) -> "KeySet":
+    def from_local(cls, ds, keys: DataFrame, unique: str = "") -> "KeySet":
         """The keys of a DataFrame holding the PK columns. Keys the
         driver built (a LocalRelation within the driver-write bound, of
         the table's PK types) are collected to Arrow once and bounded by
         ``from_arrow``: one job, where ``from_frame``'s aggregate takes
         two under AQE, and the split then needs no collect of its own.
-        Other frames go to ``from_frame``."""
+        Other frames go to ``from_frame``. ``unique`` as there."""
         pks = ds.primary_keys
         df = keys if keys.columns == pks else keys.select(*pks)
         if all(df.schema[k].dataType == ds.schema[k].dataType
                for k in pks):
             arrow = local_arrow(ds, df)
             if arrow is not None:
-                return cls.from_arrow(ds, arrow)
-        return cls.from_frame(ds, df)
+                return cls.from_arrow(ds, arrow, unique)
+        return cls.from_frame(ds, df, unique)
 
     @classmethod
-    def from_frame(cls, ds, keys: DataFrame) -> "KeySet":
+    def from_frame(cls, ds, keys: DataFrame, unique: str = "") -> "KeySet":
         """The keys of a DataFrame holding the PK columns, counted and
-        bounded by ONE aggregate. A plan other than a LocalRelation is
-        pinned first (``localCheckpoint``, materialized by that
-        aggregate) unless it already reads pinned blocks only, so the
+        bounded by ONE aggregate, which also counts the distinct keys
+        when a ``unique`` message is to be raised on a repeat. A plan
+        other than a LocalRelation is pinned first (``localCheckpoint``,
+        materialized by that aggregate) unless ``_pinned`` finds a pin
+        needless (pinned blocks, a scan of ``ds``'s files), so the
         bounds, the probe and a conflict retry see one evaluation: a
         nondeterministic plan re-run after the bounds could emit a key
         outside them, which pruning would skip. The caller releases the
@@ -446,13 +410,17 @@ class KeySet(NamedTuple):
         reads them."""
         pks = ds.primary_keys
         df = keys if keys.columns == pks else keys.select(*pks)
-        if _local_plan(df) is None and not _pinned(df):
+        if _local_plan(df) is None and not _pinned(ds, df):
             df = df.localCheckpoint(eager=False)
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             *[F.min(k).alias(f"mn_{k}") for k in pks],
             *[F.max(k).alias(f"mx_{k}") for k in pks],
+            *([F.count_distinct(F.struct(*pks)).alias("u")] if unique
+              else []),
         ).collect()[0]
+        if unique and row["u"] < row["n"]:
+            raise UserInputError(unique)
         return cls(df, int(row["n"]), ds._keys_range_expr(row))
 
     def __or__(self, other: "KeySet") -> "KeySet":
@@ -502,8 +470,10 @@ def cow_split(ds, match) -> CowSplit:
     deletes log, never commits; ``NO_MATCH`` when nothing matches.
 
     The split runs on the driver when the candidates fit
-    ``_driver_fits`` (and a key set fits a broadcast): one Spark read of
-    the candidates, split with pyarrow. Otherwise one distributed probe
+    ``_driver_fits`` (and a key set fits a broadcast): ``read_arrow``
+    reads the candidates, delete vectors applied, and pyarrow splits
+    them — by a join against the keys, or by ``match.pred`` evaluated
+    over the read as a LocalRelation. Otherwise one distributed probe
     job writes the deletes and the survivors are a DataFrame."""
     keyed = isinstance(match, KeySet)
     if keyed and not match.n:
@@ -513,28 +483,30 @@ def cow_split(ds, match) -> CowSplit:
     if not files:
         return NO_MATCH
     pks = ds.primary_keys
+    if _driver_fits(ds, files) and not (keyed
+                                        and match.n > BROADCAST_KEYS_MAX):
+        keys_arrow = match.arrow if keyed else None
+        if keyed and keys_arrow is None and all(
+                match.df.schema[k].dataType == ds.schema[k].dataType
+                for k in pks):
+            keys_arrow = match.df.toArrow()
+        if not keyed or keys_arrow is not None:
+            cand = read_arrow(ds, [f for f, _ in files], tag=True,
+                              snapshot=snapshot)
+            if keyed:
+                matched = _keys_match(ds, cand, keys_arrow)
+            else:
+                matched = local_frame(
+                    ds.spark, cand.drop_columns(["__file", "__pos"]),
+                    sc.physical_schema(ds.schema, ds.record_fields)
+                ).select(match.pred).toArrow().column(0)
+            return _split_on_driver(ds, cand, matched)
     probe = probe_frame(ds, snapshot, files)
-    if not keyed:
-        if _driver_fits(ds, files):
-            # One read tags each row with the predicate; the driver
-            # splits it like a keyed delete.
-            cand = probe.withColumn("__del", match.pred).toArrow()
-            return _split_on_driver(ds, cand.drop_columns(["__del"]),
-                                    cand["__del"])
-        split = probe_deletes(ds, probe.where(match.pred))
-    else:
-        if match.n <= BROADCAST_KEYS_MAX and _driver_fits(ds, files):
-            keys_arrow = match.arrow
-            if keys_arrow is None and all(
-                    match.df.schema[k].dataType == ds.schema[k].dataType
-                    for k in pks):
-                keys_arrow = match.df.toArrow()
-            if keys_arrow is not None:
-                cand = probe.toArrow()
-                return _split_on_driver(
-                    ds, cand, _keys_match(ds, cand, keys_arrow))
+    if keyed:
         keys = keys_join_side(match.df, match.n)
         split = probe_deletes(ds, probe.join(keys, on=pks, how="left_semi"))
+    else:
+        split = probe_deletes(ds, probe.where(match.pred))
     if not split.affected:
         return NO_MATCH
     kept = ds._apply_vectors(ds._read_files(split.affected), snapshot)
@@ -570,7 +542,7 @@ def left_join_rows(ds, left: pa.Table, right: pa.Table) -> pa.Table:
     import numpy as np
 
     pks = ds.primary_keys
-    key_types = _key_schema(ds)
+    key_types = _arrow_schema(ds, ds.primary_keys)
 
     def narrow(tbl, name):
         return tbl.select(pks).cast(key_types).append_column(
@@ -583,7 +555,8 @@ def left_join_rows(ds, left: pa.Table, right: pa.Table) -> pa.Table:
 
 def _split_on_driver(ds, cand: pa.Table, matched) -> CowSplit:
     """A CoW delete's split over a candidate read held on the
-    driver (``probe_frame`` rows, ``matched`` a boolean mask): the
+    driver (``read_arrow`` rows tagged with ``__file``/``__pos``,
+    ``matched`` a boolean mask): the
     matched rows become the deletes log, written with pyarrow, and
     the unmatched rows of the files holding a match become the
     survivors, one Arrow table per output file.

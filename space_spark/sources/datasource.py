@@ -8,7 +8,9 @@ This is the DataSourceV2 "escape hatch" SCALE.md describes, working today:
   filters skip whole files, and each ``InputPartition`` is a size-bounded
   file group that EXECUTORS read directly with pyarrow — the driver never
   materializes a ``spark.read.parquet(*paths)`` list, so planning cost is
-  O(manifest rows), not O(path-list bytes).
+  O(manifest rows), not O(path-list bytes). Every reader here reads a
+  file with ``manifests.read_data_file``, the one pyarrow reader of
+  table rows the driver's reads (``write_path.read_arrow``) use too.
 - **Streaming**: offsets are snapshot ids; each micro-batch reads exactly
   the data files ADDED between two snapshots (append-driven, the same
   contract as Spark's file streaming source; CoW survivor rewrites carry
@@ -47,6 +49,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from space_spark.core import bitmaps as bm
 from space_spark.core import manifests as mf
 from space_spark.core import metadata as md
 from space_spark.core import schema as sc
@@ -138,59 +141,24 @@ def _prune(log, meta, snapshot_id: int, expr: Optional[Expr],
 def _bloom_equality_prune_sized(log, meta, snapshot_id: int,
                                 sized: List[tuple],
                                 expr) -> List[tuple]:
-    """Bloom membership pruning for partition planning (round 12):
-    drop (rel, bytes) entries whose per-file filters prove a top-level
-    equality conjunct's literal absent. No SparkSession in this
-    planner, so literals canonicalize driver-side Python
-    (blooms.canonicalize_literal) — timestamps included since round 13:
-    tz-AWARE literals (what variant decode hands pushFilters) are
-    unambiguous instants; NAIVE ones (the prune_expr route) replicate
-    ``TimestampType.toInternal``'s system-tz arithmetic, the SAME
-    conversion their row-level ``F.lit`` anchor uses (NOT the session
-    timezone — see canonicalize_literal's refutation note). Never
-    raises into planning: any failure degrades to the stats-pruned
-    list."""
+    """Bloom membership pruning for partition planning: drop (rel,
+    bytes) entries whose per-file filters prove a top-level equality
+    conjunct's literal absent — ``blooms.probe_values``, the values a
+    ``Dataset`` read probes (``expr``, pushFilters plus prune_expr,
+    already carries PHYSICAL names). Never raises into planning: any
+    failure degrades to the stats-pruned list."""
     from space_spark.core import blooms as _bl
-    from space_spark.core.expressions import equality_conjuncts
 
     try:
         bloom = getattr(meta, "bloom", None)
         if (expr is None or not sized or not bloom
                 or bloom.get("v") != _bl.BLOOM_VERSION):
             return sized
-        indexed = set(bloom.get("pks", ()))
-        if not indexed:
-            return sized
-        # The planner's exprs (pushFilters + prune_expr) already carry
-        # PHYSICAL field names; map back to logical for the schema
-        # dtype lookup.
-        ren = getattr(meta, "renames", {}) or {}
-        to_logical = {p: l for l, p in ren.items()}
-        schema_names = set(meta.schema.fieldNames())
-        probe: dict = {}
-        for phys, vs in equality_conjuncts(expr).items():
-            logical = to_logical.get(phys, phys)
-            if phys not in indexed or logical not in schema_names:
-                continue
-            dt = meta.schema[logical].dataType
-            canons = []
-            for v in vs:
-                ok, canon = _bl.canonicalize_literal(dt, v)
-                if not ok:
-                    canons = None  # one uncanonicalizable member kills
-                    break          # the whole column's prune (IN needs
-                if canon is not None:  # ANY-member semantics)
-                    canons.append(canon)
-            if canons is not None:
-                # All-None (col IN (NULL,...)) matches no row: empty
-                # list -> any() is False -> full prune, correct.
-                probe[phys] = canons
+        # Same probe-size discipline as Dataset.BLOOM_PROBE_MAX_KEYS.
+        probe = _bl.probe_values(expr, meta.schema,
+                                 getattr(meta, "renames", {}) or {},
+                                 set(bloom.get("pks", ())), 10_000)
         if not probe:
-            return sized
-        # Same probe-size discipline as Dataset.BLOOM_PROBE_MAX_KEYS: a
-        # huge IN list hits most files anyway, and the per-file Python
-        # probe is O(values x files x hashes).
-        if sum(len(v) for v in probe.values()) > 10_000:
             return sized
         snap = meta.snapshot(snapshot_id)
         by_file = mf.read_file_blooms(
@@ -317,133 +285,17 @@ def _filters_to_arrow(filters: List[Filter], table_schema: T.StructType,
     return expr, names
 
 
-def _load_vector_masks(log, snap) -> dict:
-    """{abs data-file path: (bitmap blob, file num_rows)} from the
-    snapshot's active merge-on-read delete vectors — the ENCODED blobs
-    ship to executors (O(deleted) bytes, roaring-compact) and decode
-    there. Multiple sidecars masking one file merge positionally."""
-    from space_spark.core import bitmaps as bm
-
-    rels = list(getattr(snap, "delete_vector_files", []) or [])
-    masks: dict = {}
-    if not rels:
-        return masks
-    # One batched Arrow-dataset scan for all sidecars (bitmaps.py) — scan
-    # planning stays O(1) IO even if many trickle-delete sidecars are
-    # live (they are also auto-folded at DELETE_VECTOR_FOLD_MAX).
-    tbl = bm.read_sidecars([log.abs_path(r) for r in rels],
-                           columns=["file", "num_rows", "bitmap"])
-    for f, nr, blob in zip(tbl["file"].to_pylist(),
-                           tbl["num_rows"].to_pylist(),
-                           tbl["bitmap"].to_pylist()):
-        key = log.abs_path(f)
-        if key in masks:
-            prev_blob, _ = masks[key]
-            # merge_blobs short-circuits O(1) when either side is the
-            # all-rows encoding (a whole-file delete vector).
-            blob, _ = bm.merge_blobs([prev_blob, blob], nr)
-        masks[key] = (blob, nr)
-    return masks
-
-
-def _mask_positions(tbl: pa.Table, path: str, row_groups, masks: dict
-                    ) -> pa.Table:
-    """Drop merge-on-read-deleted rows from a freshly read table by file
-    position (must run BEFORE any row filter — filters break positional
-    correspondence, which is why _read_aligned skips the arrow filter on
-    masked files and lets Spark re-apply it)."""
-    import numpy as np
-
-    from space_spark.core import bitmaps as bm
-
-    entry = masks.get(path)
-    if entry is None:
-        return tbl
-    blob, num_rows = entry
-    deleted = bm.decode_positions(blob, num_rows)
-    if row_groups is None:
-        offset, length = 0, num_rows
-    else:
-        meta = pq.ParquetFile(path).metadata
-        rg_rows = [meta.row_group(i).num_rows
-                   for i in range(meta.num_row_groups)]
-        offset = sum(rg_rows[:row_groups[0]])
-        length = sum(rg_rows[i] for i in row_groups)
-    keep = np.ones(length, dtype=bool)
-    local = deleted[(deleted >= offset) & (deleted < offset + length)]
-    keep[(local - offset).astype(np.int64)] = False
-    if keep.all():
-        return tbl
-    return tbl.filter(pa.array(keep))
-
-
-def _read_aligned(
-    abs_paths: List[str],
-    schema: pa.Schema,
-    arrow_filter=None,
-    filter_names: frozenset = frozenset(),
-    masks: Optional[dict] = None,
-    renames: Optional[dict] = None,
-) -> Iterator[pa.RecordBatch]:
-    """Read files and align to ``schema`` (the read schema: the table's
-    physical schema, or the user's narrower one).
-
-    - Column pruning: only ``schema``'s columns are read from each file
-      (parquet is columnar — unselected columns cost zero IO).
-    - Filter pushdown: ``arrow_filter`` runs in the scan (row-group stats
-      skip + row filtering), applied per file only when every referenced
-      column exists there; Spark re-applies all filters afterwards, so
-      skipping is always safe.
-    - Files written before a schema-evolution add_column lack the new
-      columns — fill with nulls, exactly like the Spark read path's fixed
-      physical schema.
-    - ``renames`` (LOGICAL output name -> PHYSICAL file column name, from
-      ``rename_column``): files are accessed under physical names, output
-      batches carry ``schema``'s logical names — the same read-side alias
-      boundary as ``Dataset._read_files``."""
-    import pyarrow.dataset as pads
-
-    renames = renames or {}
-    phys_of = {f.name: renames.get(f.name, f.name) for f in schema}
-
-    for unit in abs_paths:
-        # A unit is a path (whole file) or (path, [row-group indices]) —
-        # an intra-file split of an over-sized file (see _group_files).
-        row_groups = None
-        if isinstance(unit, tuple):
-            path, row_groups = unit
-        else:
-            path = unit
-        dset = pads.dataset(path, format="parquet")
-        avail = set(dset.schema.names)
-        cols = [phys_of[f.name] for f in schema if phys_of[f.name] in avail]
-        masked = bool(masks) and path in masks
-        filt = (
-            arrow_filter
-            if arrow_filter is not None and filter_names <= avail
-            and not masked  # see _mask_positions: filter after masking
-            else None
-        )
-        if row_groups is not None:
-            frag = next(iter(dset.get_fragments()))
-            sub = frag.subset(row_group_ids=row_groups)
-            tbl = sub.to_table(columns=cols, filter=filt)
-        else:
-            tbl = dset.to_table(columns=cols, filter=filt)
-        if masked:
-            tbl = _mask_positions(tbl, path, row_groups, masks)
-        out = []
-        for f in schema:
-            pn = phys_of[f.name]
-            if pn in tbl.column_names:
-                col = tbl.column(pn)
-                if col.type != f.type:
-                    col = col.cast(f.type)
-            else:
-                col = pa.nulls(len(tbl), f.type)
-            out.append(col)
-        yield from pa.table(dict(zip(schema.names, out)),
-                            schema=schema).to_batches()
+def _read_units(units, schema: pa.Schema, renames: dict, masks=None,
+                **kw) -> Iterator[pa.RecordBatch]:
+    """Batches of the file units ``_group_files`` planned (a path, or
+    (path, [row-group indices]) of an over-sized file) under the read
+    schema, each read by ``manifests.read_data_file`` with its delete
+    vector's mask from ``masks``."""
+    for unit in units:
+        path, row_groups = unit if isinstance(unit, tuple) else (unit, None)
+        yield from mf.read_data_file(
+            path, schema, renames, row_groups=row_groups,
+            mask=(masks or {}).get(path), **kw).to_batches()
 
 
 # ------------------------------------------------------------------ batch --
@@ -481,11 +333,11 @@ class SpaceBatchReader(DataSourceReader):
         # HERE: Spark pickles the reader at construction, so state set in
         # partitions() (which runs on a driver-side copy) never reaches
         # executors. The blobs are O(deleted) bytes (roaring-compact) and
-        # decode executor-side in _mask_positions.
+        # decode per file in the executor's read.
         log, meta = _load(location)
         version = int(self.version) if self.version is not None else None
         self.snap_id = meta.resolve_version(version)
-        self._masks = _load_vector_masks(log, meta.snapshot(self.snap_id))
+        self._masks = bm.vector_masks(log, meta.snapshot(self.snap_id))
         # logical -> physical column names (rename_column support); ships
         # in the pickled reader so executors translate without metadata.
         self.renames = dict(getattr(meta, "renames", {}) or {})
@@ -514,14 +366,10 @@ class SpaceBatchReader(DataSourceReader):
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         filt, names = _filters_to_arrow(self._arrow_filter_src,
                                         self.read_schema, self.renames)
-        yield from _read_aligned(
-            partition.value,
-            _arrow_schema(self.read_schema),
-            arrow_filter=filt,
-            filter_names=names,
-            masks=self._masks,
-            renames=self.renames,
-        )
+        yield from _read_units(partition.value,
+                               _arrow_schema(self.read_schema), self.renames,
+                               self._masks, arrow_filter=filt,
+                               filter_names=names)
 
 
 # -------------------------------------------------------------- streaming --
@@ -563,9 +411,8 @@ class SpaceStreamReader(DataSourceStreamReader):
         return [InputPartition(g) for g in groups] or [InputPartition([])]
 
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
-        yield from _read_aligned(partition.value,
-                                 _arrow_schema(self.read_schema),
-                                 renames=self.renames)
+        yield from _read_units(partition.value,
+                               _arrow_schema(self.read_schema), self.renames)
 
     def commit(self, end: dict) -> None:
         pass  # progress is tracked by the stream's own checkpoint
@@ -627,7 +474,7 @@ class SpaceChangeFeedStreamReader(DataSourceStreamReader):
             if snap.deleted_pks_file:
                 parts.append(InputPartition(
                     ("D", snap.snapshot_id,
-                     [log.abs_path(snap.deleted_pks_file)])
+                     mf.parquet_files(log.abs_path(snap.deleted_pks_file)))
                 ))
             added = [log.abs_path(p) for p in snap.added_files]
             for group in _group_files(added, self.max_bytes):
@@ -638,28 +485,15 @@ class SpaceChangeFeedStreamReader(DataSourceStreamReader):
         kind, sid, units = partition.value
         out_schema = _arrow_schema(self.cdf_schema)
         if kind == "D":
-            import pyarrow.dataset as pads
-
-            pk_schema = _arrow_schema(
-                T.StructType([self.table_schema[k]
-                              for k in self.primary_keys])
-            )
-            phys_pks = [self.renames.get(k, k) for k in self.primary_keys]
-            for path in units:
-                tbl = pads.dataset(path, format="parquet").to_table(
-                    columns=phys_pks
-                ).rename_columns(self.primary_keys)
-                yield from _constants_appended(
-                    tbl, pk_schema, out_schema, "DELETE", sid, 0
-                )
+            schema = _arrow_schema(T.StructType(
+                [self.table_schema[k] for k in self.primary_keys]))
+            kind, order = "DELETE", 0
         else:
-            table_arrow = _arrow_schema(self.table_schema)
-            for batch in _read_aligned(units, table_arrow,
-                                       renames=self.renames):
-                tbl = pa.Table.from_batches([batch])
-                yield from _constants_appended(
-                    tbl, table_arrow, out_schema, "ADD", sid, 1
-                )
+            schema = _arrow_schema(self.table_schema)
+            kind, order = "ADD", 1
+        for batch in _read_units(units, schema, self.renames):
+            yield from _constants_appended(
+                pa.Table.from_batches([batch]), out_schema, kind, sid, order)
 
     def commit(self, end: dict) -> None:
         pass  # progress is tracked by the stream's own checkpoint
@@ -667,32 +501,23 @@ class SpaceChangeFeedStreamReader(DataSourceStreamReader):
 
 def _constants_appended(
     tbl: pa.Table,
-    present: pa.Schema,
     out_schema: pa.Schema,
     change_type: str,
     snapshot_id: int,
     order: int,
 ) -> Iterator[pa.RecordBatch]:
-    """Align ``tbl`` (whose columns are a subset described by ``present``)
-    to the CDF output schema: missing table columns become nulls, the
-    three change columns become constants."""
+    """Align ``tbl`` (read-schema columns) to the CDF output schema:
+    missing table columns become nulls, the three change columns become
+    constants."""
     n = len(tbl)
     consts = {
         _CDF_TYPE: pa.array([change_type] * n, pa.string()),
         _CDF_SNAPSHOT: pa.array([snapshot_id] * n, pa.int64()),
         _CDF_ORDER: pa.array([order] * n, pa.int32()),
     }
-    cols = []
-    for f in out_schema:
-        if f.name in consts:
-            cols.append(consts[f.name])
-        elif f.name in tbl.column_names:
-            col = tbl.column(f.name)
-            if col.type != f.type:
-                col = col.cast(f.type)
-            cols.append(col)
-        else:
-            cols.append(pa.nulls(n, f.type))
+    cols = [consts[f.name] if f.name in consts
+            else tbl.column(f.name) if f.name in tbl.column_names
+            else pa.nulls(n, f.type) for f in out_schema]
     yield from pa.table(dict(zip(out_schema.names, cols)),
                         schema=out_schema).to_batches()
 

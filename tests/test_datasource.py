@@ -138,15 +138,15 @@ def test_user_schema_projects_columns(spark, table):
 
 
 def test_read_aligned_prunes_columns_and_filters(table):
-    """Executor-side read: only the requested columns leave the scan, and
+    """Executor-side read (``manifests.read_data_file``, the one reader
+    of table files): only the requested columns leave the scan, and
     the arrow filter drops rows before Spark sees them."""
     import pyarrow as pa
+
     from pyspark.sql.datasource import GreaterThanOrEqual
 
-    from space_spark.sources.datasource import (
-        _filters_to_arrow,
-        _read_aligned,
-    )
+    from space_spark.core.manifests import read_data_file
+    from space_spark.sources.datasource import _filters_to_arrow
 
     files = [
         os.path.join(table.location, p) for p in table.data_files()
@@ -155,17 +155,59 @@ def test_read_aligned_prunes_columns_and_filters(table):
         [GreaterThanOrEqual(("id",), 25)], SIMPLE
     )
     assert filt is not None and names == {"id"}
-    batches = list(
-        _read_aligned(
-            files,
-            pa.schema([pa.field("id", pa.int64())]),
-            arrow_filter=filt,
-            filter_names=names,
-        )
-    )
-    got = pa.Table.from_batches(batches)
+    got = pa.concat_tables([
+        read_data_file(f, pa.schema([pa.field("id", pa.int64())]),
+                       arrow_filter=filt, filter_names=names)
+        for f in files
+    ])
     assert got.column_names == ["id"]
     assert sorted(got["id"].to_pylist()) == list(range(25, 30))
+
+
+def test_one_reader_parity(spark, tmp_location):
+    """``ds.read()``, ``format("space")`` and the driver's pyarrow read
+    (``write_path.read_arrow``) give the same rows of a table with a
+    renamed column, a column added after its first files, a live
+    merge-on-read delete vector and a record field (read as its
+    address)."""
+    import pyarrow as pa
+
+    from space_spark.core import write_path as wp
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("blob", T.BinaryType()),
+    ])
+    ds = Dataset.create(spark, tmp_location, schema, ["id"],
+                        record_fields=["blob"])
+    ds.append(spark.createDataFrame(pa.table({
+        "id": list(range(10)), "name": [f"n{i}" for i in range(10)],
+        "blob": [f"b{i}".encode() for i in range(10)]}), schema))
+    ds.rename_column("name", "label")
+    ds.add_column("y", T.LongType())
+    ds.append(spark.createDataFrame(pa.table({
+        "id": [10, 11], "label": ["a", "b"], "blob": [b"x", b"y"],
+        "y": [1, 2]}), ds.schema))
+    ds.delete(field("id").isin([3, 11]), rewrite=False)
+    register_space_source(spark)
+
+    def rows(dicts):
+        return sorted(dicts, key=lambda r: r["id"])
+
+    snapshot = ds.metadata.snapshot(ds.current_snapshot_id)
+    assert snapshot.delete_vector_files
+    spark_rows = rows(r.asDict(recursive=True)
+                      for r in ds.read(reference_read=True).collect())
+    assert [r["id"] for r in spark_rows] == [0, 1, 2, 4, 5, 6, 7, 8, 9, 10]
+    assert spark_rows[0]["y"] is None and spark_rows[-1]["y"] == 1
+    source_rows = rows(
+        r.asDict(recursive=True) for r in
+        spark.read.format("space").load(ds.location).collect())
+    driver_rows = rows(wp.read_arrow(ds, ds.data_files(),
+                                     snapshot=snapshot).to_pylist())
+    assert source_rows == spark_rows
+    assert driver_rows == spark_rows
 
 
 def test_float_filters_not_pushed_to_arrow(table):

@@ -206,12 +206,16 @@ def _merge_masked_target(spark, loc):
 
 def _merge_dup_keys(spark, loc):
     """Duplicate source keys that update or insert raise the same error
-    on both sides, and nothing commits."""
+    on both sides, and nothing commits; so do two source rows of one
+    matched key that fire different clauses (a delete and an update),
+    as Delta's MERGE does."""
     ds = _seeded(spark, loc)
     head = ds.current_snapshot_id
-    for rows in ([(3, "m", 1), (3, "m", 2)], [(130, "m", 1), (130, "m", 2)]):
-        with pytest.raises(UserInputError,
-                           match="Input data has duplicate primary keys"):
+    for rows, match in (
+            ([(3, "m", 1), (3, "m", 2)], "several source rows matched"),
+            ([(130, "m", 1), (130, "m", 2)], "duplicate primary keys$"),
+            ([(3, "m", 0), (3, "m", 5)], "several source rows matched")):
+        with pytest.raises(UserInputError, match=match):
             ds.merge(_local(spark, rows), **CLAUSES)
         assert ds.reload().current_snapshot_id == head
     return [ds]
@@ -384,7 +388,51 @@ def _mor_upsert_overwrite(spark, loc):
     return [ds]
 
 
+def _evolved_keyed_split(spark, loc):
+    """Keyed splits (an upsert, a delete_by_keys) over files written
+    before a column rename and an add_column: the candidate read maps
+    the physical name and reads the added column as NULL."""
+    ds = _seeded(spark, loc)
+    ds.rename_column("g", "grp")
+    ds.add_column("y", T.LongType())
+    schema = T.StructType([KXG["k"], T.StructField("grp", T.StringType()),
+                           KXG["x"], T.StructField("y", T.LongType())])
+    ds.upsert(_local(spark, [(1, "u", 10, 7), (99, "n", 1, None)], schema))
+    ds.delete_by_keys(_local(spark, [(2,), (5,), (99,)],
+                             T.StructType([KXG["k"]])))
+    return [ds]
+
+
+TSK = T.StructType([
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("x", T.LongType()),
+])
+
+
+def _int96_timestamp_keys(spark, loc):
+    """A timestamp-PK table written under INT96: a keyed split reads
+    the files' nanosecond timestamps as microseconds."""
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        ds = Dataset.create(spark, loc, TSK, ["ts"])
+
+        def rows(minutes, x):
+            return [(T0 + datetime.timedelta(minutes=m), x + m)
+                    for m in minutes]
+
+        ds.append(_local(spark, rows(range(20), 0), TSK))
+        ds.upsert(_local(spark, rows([3, 600], 100), TSK))
+        ds.delete_by_keys(_local(spark, rows([5, 7], 0), TSK).select("ts"))
+    finally:
+        spark.conf.set(conf, prev)
+    return [ds]
+
+
 SCENARIOS = {
+    "evolved_keyed_split": _evolved_keyed_split,
+    "int96_timestamp_keys": _int96_timestamp_keys,
     "apply_changes": _apply_changes,
     "insert": _insert,
     "clustered_append": _clustered_append(None),

@@ -41,16 +41,27 @@ SCHEMA = T.StructType([
 # the driver, 12 -> 3 in either clause shape: the source's collect, one
 # collect of the clause cascade over a pyarrow join of the source and
 # the driver-read candidates, and the split's candidate read.
+#
+# A keyed split within the driver bound reads its candidates with
+# pyarrow (write_path.read_arrow), where a Spark read collected them:
+# upsert 2 -> 1 (the written keys' dup check is pyarrow too, so only
+# the input's collect is left), delete_by_keys 2 -> 1 (the keys'
+# collect), merge and merge_clauses 3 -> 2 (the source's collect, the
+# cascade's collect), apply_changes 3 -> 2 (the adds' and the delete
+# keys' collects), mv_refresh 1 -> 0 (the MV's split was its one job)
+# and agg_mv_refresh 4 -> 3 (the state split). A predicate delete keeps
+# its one job: the predicate runs over the pyarrow read as a
+# LocalRelation, in one collect.
 PINNED_JOBS = {
     "append": 1,
-    "upsert": 2,
-    "mv_refresh": 1,
-    "agg_mv_refresh": 4,
-    "delete_by_keys": 2,
+    "upsert": 1,
+    "mv_refresh": 0,
+    "agg_mv_refresh": 3,
+    "delete_by_keys": 1,
     "delete": 1,
-    "merge": 3,
-    "merge_clauses": 3,
-    "apply_changes": 3,
+    "merge": 2,
+    "merge_clauses": 2,
+    "apply_changes": 2,
     "insert": 5,
     "read_by_keys": 3,
     "overwrite": 1,
@@ -61,7 +72,10 @@ PINNED_JOBS = {
 # is a Spark write on either side. merge and apply_changes each lost a
 # job when the fused dup-check aggregate (a groupBy over the written
 # and delete keys, then a count) became a pyarrow check of the written
-# keys and one aggregate over the delete keys.
+# keys and one aggregate over the delete keys. That aggregate now also
+# counts merge's distinct delete keys, so that several source rows
+# matching one target row raise: the distinct count is one more shuffle
+# stage, merge and merge_clauses 17 -> 18.
 PINNED_JOBS_SPARK = {
     "append": 3,
     "upsert": 5,
@@ -69,8 +83,8 @@ PINNED_JOBS_SPARK = {
     "agg_mv_refresh": 17,
     "delete_by_keys": 6,
     "delete": 2,
-    "merge": 17,
-    "merge_clauses": 17,
+    "merge": 18,
+    "merge_clauses": 18,
     "apply_changes": 7,
     "delete_mor": 1,
     "insert": 5,
@@ -85,6 +99,13 @@ def _rows(spark, triples):
         "SELECT CAST(col1 AS BIGINT) AS k, col2 AS g, "
         f"CAST(col3 AS BIGINT) AS x FROM VALUES {values}"
     )
+
+
+def _jobs(spark, fn):
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    return len(set(tracker.getJobIdsForGroup(None)) - before)
 
 
 def _run_ops(spark, tmp_location, mor=False):
@@ -105,13 +126,6 @@ def _run_ops(spark, tmp_location, mor=False):
                             ).materialize(spark, tmp_location + "_agg")
     mv.refresh()
     agg.refresh()
-
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-
-    def jobs(fn):
-        before = set(tracker.getJobIdsForGroup(None))
-        fn()
-        return len(set(tracker.getJobIdsForGroup(None)) - before)
 
     # The views refresh over two source snapshots: an append and an
     # upsert (a delete plus an add).
@@ -146,7 +160,7 @@ def _run_ops(spark, tmp_location, mor=False):
         _rows(spark, [(8, "", 0)]).select("k")).collect()
     ops["overwrite"] = lambda: ds.overwrite(
         _rows(spark, [(i, "o", i) for i in range(5)]))
-    got = {name: jobs(fn) for name, fn in ops.items()}
+    got = {name: _jobs(spark, fn) for name, fn in ops.items()}
     return got, {r.k for r in mv.read().collect()}
 
 
@@ -172,10 +186,11 @@ def test_spark_side_pins_each_plan_once(spark, tmp_location, monkeypatch):
     """At threshold -1, a key set over a plan that already reads pinned
     blocks only is not pinned again (``KeySet.from_frame``). Counted
     are the persisted RDDs live when the commit starts, and all of them
-    are released once the op returns. The aggregate fold pins the keys
-    its deleted rows are read by (a deletes-log read), its delta
-    aggregate and its projection, once each (the key sets over the last
-    two were two more pins, and the first one outlived the refresh); a
+    are released once the op returns. The aggregate fold pins its
+    delta aggregate and its projection, once each (the key sets over
+    them were two more pins, and the first one outlived the refresh);
+    the keys its deleted rows are read by, a read of the immutable
+    deletes log, are not pinned (they were one more); a
     merge pins its source and its delete keys, which its clauses may
     derive nondeterministically (the probe keys over the source were
     one more)."""
@@ -210,8 +225,30 @@ def test_spark_side_pins_each_plan_once(spark, tmp_location, monkeypatch):
             assert jsc.getPersistentRDDs().size() == before  # released
             return live[0] - before
 
-        assert pinned_at_commit(agg.refresh) == 3
+        assert pinned_at_commit(agg.refresh) == 2
         assert pinned_at_commit(lambda: ds.merge(
             _rows(spark, [(4, "g1", 40), (102, "g0", 3)]))) == 2
     finally:
         spark.conf.set(threshold, prev)
+
+
+def test_bloom_equality_planning_takes_no_job(spark, tmp_location):
+    """Bloom pruning of an equality filter canonicalizes its literals in
+    Python (``blooms.probe_values``): planning a bloom-indexed table's
+    files launches no job (was one, a ``spark.range(1)`` collect of the
+    canonicalized literals), and a read is its scan alone (was two)."""
+    ds = Dataset.create(spark, tmp_location, SCHEMA, ["k"],
+                        bloom_filters=True)
+    for lo in (0, 20, 40):
+        ds.append(_rows(spark, [(i, f"g{i % 3}", i)
+                                for i in range(lo, lo + 20, 2)]))
+        ds.append(_rows(spark, [(i, f"g{i % 3}", i)
+                                for i in range(lo + 1, lo + 20, 2)]))
+    files = []
+    assert _jobs(spark, lambda: files.extend(
+        ds.data_files(field("k") == 49))) == 0
+    assert len(files) == 1 < len(ds.data_files())
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(
+        ds.read(field("k") == 49).toArrow().to_pylist())) == 1
+    assert rows == [{"k": 49, "g": "g1", "x": 49}]
