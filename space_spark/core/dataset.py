@@ -25,6 +25,7 @@ column pruning, AQE and whole-stage codegen all apply unchanged.
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Dict, List, Optional, Sequence, Union
 from urllib.parse import unquote, urlparse
 
@@ -1250,37 +1251,8 @@ class Dataset:
         # start, core/storage.py:587-593) so stale handles re-pin instead of
         # spuriously conflicting.
         self.reload()
-        manifest_rel, files, rows, nbytes = wp.write_input(
-            self, df, cluster_by, zorder_by, target_files)
-        if rows == 0:
-            return self  # empty append: skip commit (test_runners.py:83-92)
-        rec_rel = self._write_record_manifest_for(files)
-        return self._commit_append(manifest_rel, files, rows, nbytes,
-                                   rec_rel, operation=operation)
-
-    def _commit_append(self, manifest_rel, files, rows, nbytes, rec_rel,
-                       operation: str = "APPEND") -> "Dataset":
-        """Commit already-written data files as an append snapshot."""
-        return md.retry_commit(
-            lambda: self._append_attempt(manifest_rel, files, rows, nbytes,
-                                         rec_rel, operation),
-            lambda: self._reload_revalidating(files if rows > 0 else []),
-        )
-
-    def _append_attempt(self, manifest_rel, files, rows, nbytes, rec_rel,
-                        operation: str = "APPEND") -> "Dataset":
-        # Pins the constraint set the rows were validated against: the
-        # loaded one (wp.write_data_files or _reload_revalidating ran
-        # under it).
-        pinned = self.current_snapshot_id
-        snap = md.append_snapshot(
-            self.metadata.snapshot(pinned), manifest_rel, files, rows,
-            nbytes, rec_rel, operation,
-        )
-        self.metadata = self.log.commit_snapshot(
-            pinned, self.branch, snap,
-            pinned_constraints_version=self.metadata.constraints_version,
-        )
+        self._commit_change(operation, written=wp.write_input(
+            self, df, cluster_by, zorder_by, target_files))
         return self
 
     def _write_record_manifest_for(self, new_files: List[str]):
@@ -1329,78 +1301,25 @@ class Dataset:
 
     def insert(self, df: DataFrame) -> "Dataset":
         """Append that FAILS if any input primary key exists
-        (ops/insert.py:38-134), in TWO Spark actions total:
+        (ops/insert.py:38-134): upsert's commit with an existence check.
 
-        1. Blind-write the data files through ``wp.write_input`` (a
-           local input is one driver-written file, as for ``append``;
-           valid under every outcome — on a failed check they are never
-           committed and ``vacuum`` reclaims the orphans). The
-           input's PK min/max bounds then come FREE from the written
-           files' manifest stats (driver-side footer metadata, zero
-           extra jobs).
-        2. ONE fused probe job checks both invariants at once, as a
-           union of two bounded branches: (a) the input-duplicate check
-           groups only the WRITTEN keys (small side shuffles, map-side
-           combined); (b) the clash check left-semi-joins the
-           manifest-range-pruned existing keys against the written keys
-           — broadcast below ``wp.BROADCAST_KEYS_MAX`` written rows, so
-           the table side never exchanges a row. Each branch stops at
-           the first offending key (limit 1). A small insert into a
-           huge clustered table scans only the files whose stats
-           overlap the input keys, never the table. (The reference
-           probes with an O(n) OR-of-AND filter over the full table.)
-
-        Reading the probe keys back from the written parquet (instead of
-        re-evaluating the input plan) also means an expensive input
-        query is computed exactly once."""
+        The input is written first through ``wp.write_input`` (a local
+        input is one driver-written file, as for ``append``; on a failed
+        check the files are never committed and ``vacuum`` reclaims
+        them). ``KeySet.from_written`` reads the written keys back and
+        raises ``UserInputError`` when one repeats. The commit's split
+        against the head is the clash check: a live row with one of the
+        keys raises ``PrimaryKeyExistError`` before anything commits,
+        and a conflict re-splits against the new head. The split runs on
+        the driver within the size rule, else as one Spark probe over
+        the files whose stats overlap the keys' range, so a small insert
+        into a huge clustered table never scans the table."""
         df = self._align(df)
         self.reload()
-        pks = self.primary_keys
-        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
-        if rows == 0:
-            return self  # empty insert: nothing to check or commit
-        bounds = self._bounds_from_manifest(manifest_rel)
-        new_keys = self._read_files(files).select(*pks)
-
-        def clash_branch():
-            old_keys = self.read(
-                filter_=self._keys_range_expr(bounds), fields=pks
-            )
-            return (
-                old_keys.join(wp.keys_join_side(new_keys, rows),
-                              on=pks, how="left_semi")
-                .select(F.lit("clash").alias("__kind")).limit(1)
-            )
-
-        dup_branch = (
-            new_keys.groupBy(*pks).agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .select(F.lit("dup").alias("__kind")).limit(1)
-        )
-        verdicts = {
-            r["__kind"]
-            for r in dup_branch.unionByName(clash_branch()).collect()
-        }
-        if "dup" in verdicts:
-            raise UserInputError("Input data has duplicate primary keys")
-        rec_rel = self._write_record_manifest_for(files)
-
-        def attempt():
-            if "clash" in verdicts:
-                raise PrimaryKeyExistError(
-                    "insert: input primary keys already exist (use upsert)"
-                )
-            return self._append_attempt(manifest_rel, files, rows, nbytes,
-                                        rec_rel, operation="INSERT")
-
-        def on_conflict():
-            # The clash verdict is only valid for the head it read: a
-            # conflicting commit may have inserted one of OUR keys.
-            nonlocal verdicts
-            self._reload_revalidating(files)
-            verdicts = {r["__kind"] for r in clash_branch().collect()}
-
-        return md.retry_commit(attempt, on_conflict)
+        written = wp.write_input(self, df)
+        self._commit_change("INSERT", wp.KeySet.from_written(self, written),
+                            written, matched="raise")
+        return self
 
     def _bounds_from_manifest(self, manifest_rel: str):
         """Per-PK min/max bounds aggregated from a just-written
@@ -1445,12 +1364,13 @@ class Dataset:
         it. That delete stream, the commit's only changelog, is
         inherently O(old-table primary keys) — the price of CDF over a
         full replacement. The driver writes it with pyarrow when the
-        old files fit ``write_path.fits_driver`` and carry no delete
-        vector; otherwise a DISTRIBUTED job writes it, MoR-masked, so
-        rows already hidden by delete vectors do not re-appear as
-        deletes. Like a split's log, each dumped key carries its row's
-        ``__file``/``__pos``. Active vectors are dropped with the files
-        they covered.
+        old files fit ``write_path.fits_driver``; otherwise a
+        DISTRIBUTED job writes it. Either read is MoR-masked, so rows
+        already hidden by delete vectors do not re-appear as deletes.
+        Like a split's log, each dumped key carries its row's
+        ``__file``/``__pos``. The commit is ``_commit_rewrite``'s with
+        every old file affected and no survivors, so active vectors
+        and record manifests are dropped with the files they covered.
 
         New data files are written FIRST (the write-first discipline
         every mutate here uses): the input plan evaluates exactly
@@ -1460,7 +1380,8 @@ class Dataset:
         rows as it does for ``append``, with no layout."""
         df = self._align(df)
         self.reload()
-        manifest_rel, files, rows, nbytes = wp.write_input(self, df)
+        written = wp.write_input(self, df)
+        _, files, rows, _ = written
         rec_rel = self._write_record_manifest_for(files)
 
         def attempt():
@@ -1470,10 +1391,10 @@ class Dataset:
             old_files = sorted(mf.read_manifest_paths(
                 self._manifest_abs_paths(parent)
             ))
-            if old_files and not parent.delete_vector_files \
-                    and wp.fits_driver(self, old_files):
+            if old_files and wp.fits_driver(self, old_files):
                 old = wp.read_arrow(self, old_files,
-                                    columns=self.primary_keys, tag=True)
+                                    columns=self.primary_keys, tag=True,
+                                    snapshot=parent)
                 if old.num_rows:
                     deletes_rel = wp.write_deletes_log(self, old)
             elif old_files:
@@ -1503,28 +1424,15 @@ class Dataset:
                 except OSError:
                     n_old = 0  # zero-partition write: no part files
                 if not n_old:
-                    import shutil
-
                     shutil.rmtree(self.log.abs_path(deletes_rel),
                                   ignore_errors=True)
                     deletes_rel = None
-            snap = md.Snapshot(
-                snapshot_id=-1,
-                parent_snapshot_id=pinned,
-                created_at="",
-                manifest_files=[manifest_rel] if rows > 0 else [],
-                num_rows=rows,
-                data_bytes=nbytes,
-                added_files=list(files) if rows > 0 else [],
-                deleted_pks_file=deletes_rel,
-                delete_vector_files=[],
-                record_manifest_files=[rec_rel] if rec_rel else [],
-                operation="OVERWRITE",
-            )
-            self.metadata = self.log.commit_snapshot(
-                pinned, self.branch, snap,
-                pinned_constraints_version=self.metadata.constraints_version,
-            )
+            self._commit_rewrite(
+                pinned, wp.CowSplit(old_files, None, deletes_rel, None),
+                written, rec_rel,
+                pinned_constraints_version=(
+                    self.metadata.constraints_version),
+                operation="OVERWRITE")
             return self
 
         return md.retry_commit(
@@ -2200,8 +2108,8 @@ class Dataset:
         """A merge-on-read delete vector: a bitmap sidecar
         (metadata.proto:160-191 RowBitmap analog) with one row per
         affected file and its deleted row POSITIONS compactly encoded
-        (core/bitmaps.py) — O(deleted) bytes. ``positions`` is the MoR
-        probe's ``__file``/``__pos`` table, already on the driver;
+        (core/bitmaps.py) — O(deleted) bytes. ``positions`` is the
+        split's ``__file``/``__pos`` table, already on the driver;
         ``man_tbl`` the manifest rows giving each file's row count.
         Returns (sidecar relpath, deleted rows it encodes), (None, 0)
         when no affected file is in ``man_tbl``."""
@@ -2266,35 +2174,12 @@ class Dataset:
             vecs = list(getattr(snapshot, "delete_vector_files", []) or [])
             if len(vecs) <= 1:
                 return self
-            self._commit_vectors(snap_id, [self._fold_vector_rels(vecs)],
-                                 "COMPACT DELETE VECTORS")
+            self._commit_rewrite(snap_id, wp.NO_MATCH,
+                                 vectors=[self._fold_vector_rels(vecs)],
+                                 operation="COMPACT DELETE VECTORS")
             return self
 
         return md.retry_commit(attempt)
-
-    def _commit_vectors(self, snap_id: int, vec_list: List[str],
-                        operation: str, n_masked: int = 0,
-                        deletes_rel: Optional[str] = None) -> None:
-        """Commit snapshot ``snap_id``'s data files unchanged under a new
-        delete-vector list, ``n_masked`` more rows masked, with the
-        optional change log of those rows."""
-        snapshot = self.metadata.snapshot(snap_id)
-        snap = md.Snapshot(
-            snapshot_id=-1,
-            parent_snapshot_id=snap_id,
-            created_at="",
-            manifest_files=list(snapshot.manifest_files),
-            # data_bytes tracks PHYSICAL live bytes — unchanged: the
-            # masked rows still occupy their files until a rewrite.
-            num_rows=snapshot.num_rows - n_masked,
-            data_bytes=snapshot.data_bytes,
-            added_files=[],
-            deleted_pks_file=deletes_rel,
-            delete_vector_files=vec_list,
-            record_manifest_files=list(snapshot.record_manifest_files),
-            operation=operation,
-        )
-        self.metadata = self.log.commit_snapshot(snap_id, self.branch, snap)
 
     def delete(self, filter_: Expr, rewrite: bool = True) -> "Dataset":
         """Delete rows matching ``filter_``.
@@ -2309,10 +2194,16 @@ class Dataset:
         data file is touched: the matched (file, row position) set is
         committed as an active delete-vector sidecar that every read of
         this and descendant snapshots anti-joins out. A 10-row delete on
-        a 100 TB table costs one pruned probe job and a metadata commit.
+        a 100 TB table costs one pruned split and a metadata commit.
         Vectors are retired when their files are rewritten — CoW
         delete/upsert of the same files, or ``compact()``, which applies
-        and clears them."""
+        and clears them.
+
+        Both modes split through ``write_path.cow_split``: on the driver
+        when the pruned candidates fit the size rule (the predicate
+        evaluated over a pyarrow read, one collect), else as one Spark
+        probe job. They differ only in what ``_commit_rewrite`` commits
+        for the matched rows."""
         if filter_ is None:
             raise UserInputError("delete requires a filter")
         self.reload()
@@ -2320,42 +2211,9 @@ class Dataset:
         # deleted — NULL-predicate rows survive AND stay out of the
         # change log, keeping survivors/deleted exactly complementary.
         pred_true = F.coalesce(filter_.to_spark(), F.lit(False))
-        if not rewrite:
-            return self._delete_mor(pred_true, prune_expr=filter_)
-        self._commit_change("DELETE", wp.PredicateSplit(filter_, pred_true))
+        self._commit_change("DELETE", wp.PredicateSplit(filter_, pred_true),
+                            matched="rewrite" if rewrite else "mask")
         return self
-
-    def _delete_mor(self, pred_true, prune_expr: FilterType) -> "Dataset":
-        def attempt():
-            snap_id = self.current_snapshot_id
-            snapshot = self.metadata.snapshot(snap_id)
-            files = self._probe_candidates(snapshot, prune_expr)
-            if not files:
-                return self
-            split = wp.probe_deletes(
-                self, wp.probe_frame(self, snapshot, files).where(pred_true))
-            if not split.affected:
-                return self
-            vector_rel, n_masked = self._write_delete_vector(
-                split.positions, self._manifest_table(snapshot))
-            if vector_rel is None:
-                # Affected files missing from manifest stats: surface a
-                # clean error rather than dereferencing None below.
-                raise SpaceError(
-                    "merge-on-read delete: could not build delete vectors "
-                    f"for affected files {sorted(split.affected)[:5]}...; "
-                    "use delete(rewrite=True) for the copy-on-write path"
-                )
-            vec_list = list(
-                getattr(snapshot, "delete_vector_files", []) or []
-            ) + [vector_rel]
-            if len(vec_list) > self.DELETE_VECTOR_FOLD_MAX:
-                vec_list = [self._fold_vector_rels(vec_list)]
-            self._commit_vectors(snap_id, vec_list, "DELETE", n_masked,
-                                 split.deletes_rel)
-            return self
-
-        return md.retry_commit(attempt, self.reload)
 
     def _probe_candidates(self, snapshot, prune_expr: FilterType):
         """(rel file, manifest size bytes) of the files whose manifest
@@ -2435,34 +2293,51 @@ class Dataset:
         return self
 
     def _commit_change(self, operation: str, match=wp.NO_KEYS,
-                       written=None, mutate=None) -> bool:
-        """Commit one change as ONE snapshot (reference merge_patches,
-        ops/insert.py:93-99): a copy-on-write delete of the rows
-        ``match`` selects (a ``wp.KeySet`` or a ``wp.PredicateSplit``)
-        and the already-written input ``written`` (``wp.write_input``'s
-        (manifest_rel, files, rows, bytes)), re-splitting against the
-        new head on a conflict. Every keyed write and CoW delete commits
-        here.
+                       written=None, mutate=None,
+                       matched: str = "rewrite") -> bool:
+        """Commit one row change as ONE snapshot (reference
+        merge_patches, ops/insert.py:93-99): the rows ``match`` selects
+        (a ``wp.KeySet`` or a ``wp.PredicateSplit``; ``wp.NO_KEYS``
+        selects none, with no I/O) leave the table, and the
+        already-written input ``written`` (``wp.write_input``'s
+        (manifest_rel, files, rows, bytes)) joins it. ``matched`` says
+        what happens to the matched rows: ``"rewrite"`` their files
+        (copy-on-write), ``"mask"`` them with a delete vector
+        (merge-on-read), or ``"raise"`` ``PrimaryKeyExistError`` before
+        anything commits (insert's clash check). A conflict re-splits
+        against the new head.
+
+        Every write that adds or removes rows commits here: ``append``
+        and the zero-copy loads (``sources/loaders.py``), ``insert``,
+        ``upsert``, ``apply_changes`` and a Spark-side ``merge``,
+        ``_merge_on_driver``, ``delete`` in both modes,
+        ``delete_by_keys`` and the view refreshes (``views``,
+        ``agg_views``).
 
         A snapshot is committed only when a row is deleted or added;
         ``mutate`` lands with it, or alone as a metadata update when
         nothing changed (a view's source-synced marker still advances).
         Returns whether a snapshot was committed."""
-        manifest_rel, files, rows, nbytes = written or (None, [], 0, 0)
-        rec_rel = self._write_record_manifest_for(files)
+        _, files, rows, _ = written or (None, [], 0, 0)
+        rec_rel = self._write_record_manifest_for(files) if rows else None
 
         def attempt():
             pinned = self.current_snapshot_id
             split = wp.cow_split(self, match)
+            if split.affected and matched == "raise":
+                # The split's deletes log is never committed.
+                shutil.rmtree(self.log.abs_path(split.deletes_rel),
+                              ignore_errors=True)
+                raise PrimaryKeyExistError(
+                    "insert: input primary keys already exist (use upsert)"
+                )
             if not (split.affected or rows):
                 if mutate is not None:
                     self.metadata = self.log.update_refs(mutate)
                 return False
             self._commit_rewrite(
-                pinned, split,
-                append_manifest=manifest_rel, append_files=files,
-                append_rows=rows, append_bytes=nbytes,
-                append_record_manifest=rec_rel,
+                pinned, split, written, rec_rel,
+                mask=matched == "mask",
                 pinned_constraints_version=(
                     self.metadata.constraints_version if rows else None),
                 mutate=mutate,
@@ -2530,81 +2405,121 @@ class Dataset:
         self,
         pinned: int,
         split: wp.CowSplit,
-        append_manifest: Optional[str] = None,
-        append_files: Optional[List[str]] = None,
-        append_rows: int = 0,
-        append_bytes: int = 0,
-        append_record_manifest: Optional[str] = None,
+        written=None,
+        record_manifest: Optional[str] = None,
+        mask: bool = False,
+        vectors: Optional[List[str]] = None,
         mutate=None,
         pinned_constraints_version: Optional[int] = None,
         operation: Optional[str] = None,
     ) -> None:
-        """One snapshot combining a CoW rewrite of ``split.affected`` files
-        (with its survivors re-written and the pre-written deletes log
-        attached) and an optional already-written append — upsert's
-        delete+add lands as a single commit (reference merge_patches,
-        ops/insert.py:93-99)."""
-        affected, survivors, deletes_rel, _ = split
+        """Build and commit the one data snapshot of a change, the only
+        ``Snapshot`` built in ``core/`` beside a clone's root: a delete
+        of ``split``'s matched rows, then the already-written input
+        ``written`` (``wp.write_input``'s (manifest_rel, files, rows,
+        bytes)) with its ``record_manifest``.
+
+        The matched rows leave in one of two ways. By default the
+        ``split.affected`` files are retired, their ``split.survivors``
+        (None: none) written as new files and the rest of the parent's
+        files carried in one manifest (reference ops/delete.py:56-228).
+        With ``mask`` no data file changes: ``split.positions`` become
+        one more delete vector, and more than
+        ``DELETE_VECTOR_FOLD_MAX`` live vectors fold into one. Either
+        way ``split.deletes_rel`` is the commit's changelog.
+        ``vectors`` replaces the resulting vector list (a fold of the
+        parent's).
+
+        A parent record manifest is carried only while some parent data
+        file is carried or survives: an overwrite (every file affected,
+        no survivors) keeps only its own. With no file affected the
+        snapshot is the parent's plus the input's manifest, as an
+        append."""
+        affected, survivors, deletes_rel, positions = split
+        append_manifest, append_files, append_rows, append_bytes = \
+            written or (None, [], 0, 0)
         parent = self.metadata.snapshot(pinned)
-        removed_rows = removed_bytes = surv_rows = surv_bytes = 0
-        # Rewriting a file retires its merge-on-read vector entries (the
-        # rewrite was produced from a vector-masked read, so the masked
-        # rows are physically gone now); entries for untouched files carry
-        # forward. `masked_removed` corrects the row accounting: manifest
-        # NUM_ROWS is physical, but those masked rows were already
-        # subtracted from snapshot num_rows when the vector was committed.
-        vector_files, masked_removed = self._retire_vectors(
-            parent, affected
-        )
-        if affected:
-            # Rows removed from the table = affected rows - surviving rows.
+        manifest_files = list(parent.manifest_files)
+        num_rows, data_bytes = parent.num_rows, parent.data_bytes
+        vector_files = list(parent.delete_vector_files)
+        carried = True
+        if mask and affected:
+            vector_rel, n_masked = self._write_delete_vector(
+                positions, self._manifest_table(parent))
+            if vector_rel is None:
+                # Affected files missing from manifest stats: surface a
+                # clean error rather than dereferencing None below.
+                raise SpaceError(
+                    "merge-on-read delete: could not build delete vectors "
+                    f"for affected files {sorted(affected)[:5]}...; "
+                    "use delete(rewrite=True) for the copy-on-write path"
+                )
+            vector_files.append(vector_rel)
+            if len(vector_files) > self.DELETE_VECTOR_FOLD_MAX:
+                vector_files = [self._fold_vector_rels(vector_files)]
+            # data_bytes tracks PHYSICAL live bytes — unchanged: the
+            # masked rows still occupy their files until a rewrite.
+            num_rows -= n_masked
+        elif affected:
+            # Rewriting a file retires its merge-on-read vector entries
+            # (the rewrite was produced from a vector-masked read, so the
+            # masked rows are physically gone now); entries for untouched
+            # files carry forward. `masked_removed` corrects the row
+            # accounting: manifest NUM_ROWS is physical, but those masked
+            # rows were already subtracted from snapshot num_rows when
+            # the vector was committed.
+            vector_files, masked_removed = self._retire_vectors(
+                parent, affected)
             man_tbl = self._manifest_table(parent)
             aff_mask = pc.is_in(
                 man_tbl[mf.FILE_PATH_COL], value_set=pa.array(affected)
             )
             removed = man_tbl.filter(aff_mask)
-            removed_rows = pc.sum(removed[mf.NUM_ROWS_COL]).as_py() or 0
-            removed_bytes = pc.sum(removed[mf.SIZE_BYTES_COL]).as_py() or 0
+            num_rows -= (pc.sum(removed[mf.NUM_ROWS_COL]).as_py() or 0) \
+                - masked_removed
+            data_bytes -= pc.sum(removed[mf.SIZE_BYTES_COL]).as_py() or 0
+            manifest_files = []
             carry = man_tbl.filter(pc.invert(aff_mask))
-
-            # Write survivors as new data files (may be zero files/rows);
-            # they are already physical rows (addresses carried over, blobs
-            # intact).
-            surv_rel, _, surv_rows, surv_bytes = wp.write_data_files(
-                self, survivors, physical=True
-            )
-            carry_rel = self.log.new_manifest_relpath()
-            pq.write_table(carry, self.log.abs_path(carry_rel))
-            manifest_files = [carry_rel]
-            if surv_rows > 0:
-                manifest_files.append(surv_rel)
-        else:
-            manifest_files = list(parent.manifest_files)
-        if append_manifest and append_rows > 0:
+            if carry.num_rows:
+                carry_rel = self.log.new_manifest_relpath()
+                pq.write_table(carry, self.log.abs_path(carry_rel))
+                manifest_files.append(carry_rel)
+            if survivors is not None:
+                # Survivors are already physical rows (addresses carried
+                # over, blobs intact).
+                surv_rel, _, surv_rows, surv_bytes = wp.write_data_files(
+                    self, survivors, physical=True
+                )
+                if surv_rows:
+                    manifest_files.append(surv_rel)
+                    num_rows += surv_rows
+                    data_bytes += surv_bytes
+            carried = bool(manifest_files)
+        if vectors is not None:
+            vector_files = vectors
+        if append_rows:
             manifest_files.append(append_manifest)
-        else:
-            append_files, append_rows, append_bytes = [], 0, 0
-        rec_manifests = list(parent.record_manifest_files)
-        if append_record_manifest:
-            rec_manifests.append(append_record_manifest)
+            num_rows += append_rows
+            data_bytes += append_bytes
+        rec_manifests = list(parent.record_manifest_files) if carried else []
+        if record_manifest:
+            rec_manifests.append(record_manifest)
         snap = md.Snapshot(
             snapshot_id=-1,
             parent_snapshot_id=pinned,
             created_at="",
             manifest_files=manifest_files,
-            num_rows=(parent.num_rows - (removed_rows - masked_removed)
-                      + surv_rows + append_rows),
-            data_bytes=(parent.data_bytes - removed_bytes + surv_bytes
-                        + append_bytes),
+            num_rows=num_rows,
+            data_bytes=data_bytes,
             # Survivor-rewrite files are physically new but LOGICALLY
             # carried over: the change feed must emit only the deleted rows
             # plus genuinely appended files (reference delete changelog
             # holds deleted bitmaps only, ops/delete.py:113-115,215-228).
-            added_files=list(append_files or []),
+            added_files=list(append_files) if append_rows else [],
             deleted_pks_file=deletes_rel if affected else None,
             delete_vector_files=vector_files,
-            # Blob files are untouched by CoW deletes; their manifests
-            # carry over (counts become an upper bound on live refs).
+            # Blob files are untouched by deletes; their manifests carry
+            # over (counts become an upper bound on live refs).
             record_manifest_files=rec_manifests,
             operation=operation,
         )
@@ -3056,7 +2971,7 @@ class Dataset:
             )
             self._commit_rewrite(
                 snap_id, wp.CowSplit(affected, survivors, None, None),
-                append_record_manifest=rec_rel,
+                record_manifest=rec_rel,
                 operation="COMPACT RECORDS",
             )
             return self

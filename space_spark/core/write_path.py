@@ -462,12 +462,15 @@ def probe_frame(ds, snapshot, files) -> DataFrame:
 
 
 def cow_split(ds, match) -> CowSplit:
-    """Split a copy-on-write delete over the head snapshot's files whose
+    """Split a change's delete over the head snapshot's files whose
     manifest stats pass ``match.prune``: the rows whose PKs are in
     ``match`` (a ``KeySet``), or else the rows where ``match.pred`` (a
     ``PredicateSplit``) is true, become the deletes log, and the other
     rows of the files holding a match become the survivors. Writes the
-    deletes log, never commits; ``NO_MATCH`` when nothing matches.
+    deletes log, never commits; ``NO_MATCH`` when nothing matches, and
+    with no I/O for ``NO_KEYS``. ``Dataset._commit_change`` rewrites
+    the matched rows' files from the survivors, masks the matched
+    positions with a delete vector, or raises on a match (insert).
 
     The split runs on the driver when the candidates fit
     ``_driver_fits`` (and a key set fits a broadcast): ``read_arrow``
@@ -613,12 +616,12 @@ def affected_files(ds, positions: pa.Table) -> List[str]:
 
 
 def probe_deletes(ds, matches: DataFrame) -> CowSplit:
-    """The distributed probe of a MoR delete, or of a CoW delete over
-    the driver bound. ONE job materializes it: matched rows'
-    (PKs, source file, row position) land directly as the change-log
-    deletes file; the affected files and the deleted positions are
-    then one driver-side read of that output's ``__file``/``__pos``
-    columns, which a MoR delete also encodes as its delete vector.
+    """The distributed probe of a split over the driver bound. ONE job
+    materializes it: matched rows' (PKs, source file, row position)
+    land directly as the change-log deletes file; the affected files
+    and the deleted positions are then one driver-side read of that
+    output's ``__file``/``__pos`` columns, which a MoR delete also
+    encodes as its delete vector.
     Readers of the deletes file select the PK columns, so the
     provenance columns ride along for free. ``survivors`` is left
     None."""
@@ -668,7 +671,7 @@ def _write_arrow_file(ds, abs_path: str, tbl: pa.Table) -> None:
 
 def write_data_files(ds, data, physical: bool = False):
     """Write data files for one commit; returns (manifest_rel, files,
-    rows, bytes).
+    rows, bytes), with no manifest (None) when the output has no row.
 
     ``data`` is a DataFrame or a list of Arrow tables. Spark writes a
     DataFrame, one file per partition (the reference's sharded
@@ -723,6 +726,9 @@ def write_data_files(ds, data, physical: bool = False):
     # just collected carry per-column null counts. (The written
     # files are uncommitted orphans; vacuum reclaims them.)
     ds._reject_null_pks(stats)
+    if not sum(s["num_rows"] for s in stats):
+        # No snapshot links a zero-row output, so write no manifest.
+        return None, rel_files, 0, 0
     manifest_rel = ds.log.new_manifest_relpath()
     rows, nbytes = mf.write_manifest(
         ds.spark,

@@ -166,10 +166,10 @@ def append_parquet(dataset, pattern: str) -> None:
         dataset.spark, dataset.log.abs_path(manifest_rel), rel_paths, stats,
         dataset._stats_fields(), bloom_pks=bloom_pks,
     )
-    # A row-adding commit like any other: the shared append commit
+    # A row-adding commit like any other: the shared change commit
     # pins the constraint set and re-validates on conflict.
-    dataset._commit_append(manifest_rel, rel_paths, rows, nbytes, None,
-                           operation="ZERO-COPY LOAD")
+    dataset._commit_change("ZERO-COPY LOAD",
+                           written=(manifest_rel, rel_paths, rows, nbytes))
 
 
 def append_binary_files(
@@ -269,6 +269,5 @@ def append_binary_files(
                 "zero-copy load rejected (the index files are "
                 "uncommitted orphans — vacuum reclaims them)"
             )
-    rec_rel = dataset._write_record_manifest_for(files)
-    dataset._commit_append(manifest_rel, files, rows, nbytes, rec_rel,
-                           operation="ZERO-COPY LOAD")
+    dataset._commit_change("ZERO-COPY LOAD",
+                           written=(manifest_rel, files, rows, nbytes))

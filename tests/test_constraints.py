@@ -386,7 +386,7 @@ def test_inflight_append_revalidates_after_concurrent_add_constraint(
     # The in-flight commit must conflict on the version pin,
     # re-validate, and refuse the violating rows.
     with pytest.raises(ConstraintViolationError, match="qty_nonneg"):
-        writer._commit_append(man, files, rows, nbytes, None)
+        writer._commit_change("APPEND", written=(man, files, rows, nbytes))
     ds.reload()
     assert sorted(r.id for r in ds.read().collect()) == [1]
 
@@ -406,7 +406,7 @@ def test_inflight_append_of_clean_rows_survives_concurrent_constraint(
     Dataset.load(spark, tmp_location).add_constraint(
         "qty_nonneg", field("qty") >= 0
     )
-    writer._commit_append(man, files, rows, nbytes, None)
+    writer._commit_change("APPEND", written=(man, files, rows, nbytes))
     ds.reload()
     assert sorted(r.id for r in ds.read().collect()) == [1, 2]
     # Enforcement continues on the landed constraint.
@@ -428,7 +428,7 @@ def test_inflight_append_revalidates_after_concurrent_add_not_null(
     )
     Dataset.load(spark, tmp_location).add_not_null("qty")
     with pytest.raises(ConstraintViolationError, match="NOT NULL"):
-        writer._commit_append(man, files, rows, nbytes, None)
+        writer._commit_change("APPEND", written=(man, files, rows, nbytes))
     ds.reload()
     assert sorted(r.id for r in ds.read().collect()) == [1]
 
@@ -478,7 +478,7 @@ def test_zero_copy_load_revalidates_after_concurrent_add_not_null(
 ):
     """Reverse TOCTOU on the zero-copy path: a constraint that lands
     between the load's validation and its commit must send the load
-    through re-validation (loaders now commit via _commit_append with
+    through re-validation (loaders now commit via _commit_change with
     the constraints_version pin — ADVICE r12)."""
     from space_spark.core import manifests as mf
     from space_spark.sources.loaders import append_parquet

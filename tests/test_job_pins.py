@@ -28,8 +28,11 @@ SCHEMA = T.StructType([
 # snapshot's MV candidate read; the aggregate MV collects its fold once
 # and splits its state on the driver. apply_changes writes its local
 # adds as upsert does (one collect, was a Spark write) and checks them
-# for duplicates with pyarrow. An insert's local input is one collect
-# too, then its fused dup+clash job.
+# for duplicates with pyarrow. An insert commits as upsert does, its
+# split the clash check (5 -> 1: its fused dup+clash job and that job's
+# retry loop are gone; the written keys' dup check is pyarrow, and the
+# split reads its candidates with pyarrow), so only the input's collect
+# is left.
 #
 # Keys the driver built (a LocalRelation) are collected to Arrow once
 # and bounded there (KeySet.from_local), where an aggregate took two
@@ -51,7 +54,10 @@ SCHEMA = T.StructType([
 # keys' collects), mv_refresh 1 -> 0 (the MV's split was its one job)
 # and agg_mv_refresh 4 -> 3 (the state split). A predicate delete keeps
 # its one job: the predicate runs over the pyarrow read as a
-# LocalRelation, in one collect.
+# LocalRelation, in one collect. A merge-on-read delete splits the same
+# way and commits the matched positions as a delete vector: the same one
+# collect. The overwrite after it dumps the old keys with pyarrow, delete
+# vector applied.
 PINNED_JOBS = {
     "append": 1,
     "upsert": 1,
@@ -62,14 +68,16 @@ PINNED_JOBS = {
     "merge": 2,
     "merge_clauses": 2,
     "apply_changes": 2,
-    "insert": 5,
+    "delete_mor": 1,
+    "insert": 1,
     "read_by_keys": 3,
     "overwrite": 1,
 }
 
 # The same ops with spark.sql.autoBroadcastJoinThreshold=-1, where every
-# output goes through Spark's writer, plus a merge-on-read delete, which
-# is a Spark write on either side. merge and apply_changes each lost a
+# output goes through Spark's writer. An insert commits through the
+# same split as upsert (5 -> 1, as above). merge and apply_changes each
+# lost a
 # job when the fused dup-check aggregate (a groupBy over the written
 # and delete keys, then a count) became a pyarrow check of the written
 # keys and one aggregate over the delete keys. That aggregate now also
@@ -87,7 +95,7 @@ PINNED_JOBS_SPARK = {
     "merge_clauses": 18,
     "apply_changes": 7,
     "delete_mor": 1,
-    "insert": 5,
+    "insert": 1,
     "read_by_keys": 7,
     "overwrite": 5,
 }
@@ -108,9 +116,11 @@ def _jobs(spark, fn):
     return len(set(tracker.getJobIdsForGroup(None)) - before)
 
 
-def _run_ops(spark, tmp_location, mor=False):
+def _run_ops(spark, tmp_location, mor_before):
     """Job counts of each write op on a fresh clustered table, and the
-    row-wise MV's keys after its last refresh."""
+    row-wise MV's keys after its last refresh. The merge-on-read delete
+    runs right before the op ``mor_before``; the reads after it apply
+    its delete vector."""
     ds = Dataset.create(spark, tmp_location, SCHEMA, ["k"],
                         cluster_by=["k"])
     ds.append(_rows(spark, [(i, f"g{i % 3}", i) for i in range(40)]))
@@ -152,20 +162,20 @@ def _run_ops(spark, tmp_location, mor=False):
             _rows(spark, [(5, "g2", 50)]),
             _rows(spark, [(6, "", 0)]).select("k")),
     }
-    if mor:
-        ops["delete_mor"] = lambda: ds.delete(field("k") == 7,
-                                              rewrite=False)
     ops["insert"] = lambda: ds.insert(_rows(spark, [(103, "g1", 7)]))
     ops["read_by_keys"] = lambda: ds.read_by_keys(
         _rows(spark, [(8, "", 0)]).select("k")).collect()
     ops["overwrite"] = lambda: ds.overwrite(
         _rows(spark, [(i, "o", i) for i in range(5)]))
-    got = {name: _jobs(spark, fn) for name, fn in ops.items()}
+    order = list(ops)
+    order.insert(order.index(mor_before), "delete_mor")
+    ops["delete_mor"] = lambda: ds.delete(field("k") == 7, rewrite=False)
+    got = {name: _jobs(spark, ops[name]) for name in order}
     return got, {r.k for r in mv.read().collect()}
 
 
 def test_write_ops_spark_job_pins(spark, tmp_location):
-    got, mv_keys = _run_ops(spark, tmp_location)
+    got, mv_keys = _run_ops(spark, tmp_location, mor_before="overwrite")
     assert got == PINNED_JOBS, str(got)
     assert mv_keys == set(range(40)) | {100, 101}
 
@@ -175,7 +185,7 @@ def test_write_ops_spark_side_job_pins(spark, tmp_location):
     prev = spark.conf.get(threshold)
     spark.conf.set(threshold, "-1")
     try:
-        got, mv_keys = _run_ops(spark, tmp_location, mor=True)
+        got, mv_keys = _run_ops(spark, tmp_location, mor_before="insert")
     finally:
         spark.conf.set(threshold, prev)
     assert got == PINNED_JOBS_SPARK, str(got)

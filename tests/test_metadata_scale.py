@@ -57,8 +57,8 @@ def _forge_big_snapshot(ds):
 
     os.makedirs(os.path.dirname(ds.log.abs_path(rel)), exist_ok=True)
     pq.write_table(tbl, ds.log.abs_path(rel))
-    ds._commit_append(rel, paths, N_FAKE * ROWS_PER_FILE,
-                      N_FAKE * (64 << 20), None)
+    ds._commit_change("APPEND", written=(
+        rel, paths, N_FAKE * ROWS_PER_FILE, N_FAKE * (64 << 20)))
     return ds.reload()
 
 

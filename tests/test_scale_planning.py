@@ -101,8 +101,9 @@ def test_dml_spark_action_budget(spark, tmp_path):
     """Commit-path job budget: each DML op costs a bounded number of
     Spark jobs (AQE stage materializations included), independent of
     table size — the driver-side overhead lever for trickle-commit
-    workloads. insert = write + one fused dup/clash probe; upsert =
-    write + read-back dup check + probe + survivor rewrite. A regression
+    workloads. insert = write + read-back dup check + probe (its
+    clash check); upsert = write + read-back dup check + probe +
+    survivor rewrite. A regression
     that adds an action per op multiplies streaming-ingest latency."""
     from pyspark.sql import types as T
 
